@@ -278,7 +278,7 @@ object Bench {
       java.nio.file.Files.createDirectories(out.getParent)
       java.nio.file.Files.write(out,
         (summaryLine(3) + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    } catch { case _: java.io.IOException => () } // the stdout line is primary
+    } catch { case scala.util.control.NonFatal(_) => () } // the stdout line is primary
     spark.stop()
     if (errors.nonEmpty) sys.exit(1)
   }

@@ -11,10 +11,11 @@ import java.nio.file.{Files, Paths}
   * Writes <outDir>/<name>_<suffix>.txt. Uses the same session config as
   * Bench so the captured plan is the benched plan.
   *
-  * With `--executed`, each query RUNS to the noop sink first and the dump
-  * appends the post-execution adaptive plan (`AdaptiveSparkPlan
-  * isFinalPlan=true`) — the evidence for claims about AQE stage reuse /
-  * runtime re-optimization that the static explain cannot show.
+  * With `--executed`, each query's plan RUNS first (its rows are dropped
+  * on the executors) and the dump appends the post-execution adaptive plan
+  * (`AdaptiveSparkPlan isFinalPlan=true`) — the evidence for claims about
+  * AQE stage reuse / runtime re-optimization that the static explain
+  * cannot show.
   *
   * Exits 1 if ANY query fails (r17 advice: a swallowed failure leaves a
   * stale or missing dump, silently falsifying committed plan evidence). */
@@ -43,12 +44,12 @@ object PlanDump {
         val body =
           if (!executed) static
           else {
-            // collect() executes the df's OWN QueryExecution (a noop/write
-            // sink plans a cloned QE, leaving this one un-executed and its
+            // run the df's OWN executed plan (a noop/write sink plans a
+            // cloned QE, leaving this one un-executed and its
             // AdaptiveSparkPlan stuck at isFinalPlan=false); afterwards
             // toString prints the AQE FINAL plan including reused stages.
-            // Declared query outputs are small by contract.
-            df.collect()
+            // Rows are dropped on the executors, never brought to the driver.
+            df.queryExecution.executedPlan.execute().foreach(_ => ())
             static + "\n\n=== Executed (AQE final) plan ===\n\n" +
               df.queryExecution.executedPlan.toString
           }

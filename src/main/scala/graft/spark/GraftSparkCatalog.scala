@@ -197,9 +197,11 @@ class GraftSparkCatalog extends TableCatalog with SupportsNamespaces
    * metadata accumulate against an UNPUBLISHED in-memory pointer
    * ([[graft.catalog.StagingShim]] — the full vectorized write path runs
    * unchanged), and `commitStagedChanges` publishes everything in one
-   * `commitTable` CAS. A REPLACE therefore never has a window where the
-   * old table is missing, and a failed source query leaves it untouched —
-   * the exact hazard of the non-atomic drop-then-create path. Staged files
+   * `commitTable` CAS, retried like every table commit and failing with
+   * the last [[CommitConflictError]] once the retries run out. A REPLACE
+   * therefore never has a window where the old table is missing, and a
+   * failed source query or publish leaves it untouched — the exact hazard
+   * of the non-atomic drop-then-create path. Staged files
    * of an aborted attempt are deleted best-effort (anything missed is
    * unreferenced and reclaimed by `remove_orphan_files`).
    *
@@ -244,12 +246,7 @@ class GraftSparkCatalog extends TableCatalog with SupportsNamespaces
         if (backing.tableExists(name)) {
           if (!replace)
             throw new TableAlreadyExistsError(s"Table already exists: $name")
-          var done = false
-          while (!done) {
-            val cur = backing.loadTable(name)
-            try { backing.commitTable(gIdent, cur.metadata, finalMeta); done = true }
-            catch { case _: CommitConflictError => } // re-read, CAS again
-          }
+          backing.loadTable(name).replaceMetadata(finalMeta)
         } else {
           // brief empty-table window (CREATE only — no old data at risk)
           val fresh = backing.createTable(name, gSchema, Some(location), spec,

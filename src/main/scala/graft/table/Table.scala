@@ -132,19 +132,8 @@ final class Table(
 
   /** Append with extra snapshot-summary entries (e.g. a streaming batch id
     * for exactly-once sink bookkeeping). */
-  def append(df: DataFrame, extraSummary: Map[String, String]): Unit = {
-    val cat = catalog.getOrElse(
-      throw new GraftError("this table is read-only"))
-    val schema = meta.currentSchema
-    val aligned = AppendUtil.align(df, schema)
-    val commitUuid = java.util.UUID.randomUUID().toString
-    val dataDir = new Path(meta.location, s"data/$commitUuid")
-    val files = AppendUtil.writeData(aligned, schema, meta.defaultPartitionSpec,
-      meta.defaultSortOrder, dataDir, hadoopConf,
-      targetFileRows = meta.properties.get("write.target-file-rows").map(_.toLong).getOrElse(5000000L))
-    if (files.isEmpty) return
-    commitAppend(cat, files, commitUuid, extraSummary)
-  }
+  def append(df: DataFrame, extraSummary: Map[String, String]): Unit =
+    appendToBranch("main", df, extraSummary)
 
   /** Append row hashes with the reference's per-type coercion rules. */
   def append(rows: Seq[Map[String, Any]], spark: SparkSession): Unit =
@@ -160,17 +149,10 @@ final class Table(
   def appendToBranch(branch: String, df: DataFrame,
                      extraSummary: Map[String, String] = Map.empty): Unit = {
     require(branch.nonEmpty, "branch name required")
-    if (branch == "main") { append(df, extraSummary); return }
-    val cat = catalog.getOrElse(throw new GraftError("this table is read-only"))
-    val schema = meta.currentSchema
-    val aligned = AppendUtil.align(df, schema)
+    writable()
     val commitUuid = java.util.UUID.randomUUID().toString
-    val files = AppendUtil.writeData(aligned, schema, meta.defaultPartitionSpec,
-      meta.defaultSortOrder, new Path(meta.location, s"data/$commitUuid"), hadoopConf,
-      targetFileRows = meta.properties.get("write.target-file-rows")
-        .map(_.toLong).getOrElse(5000000L))
-    if (files.isEmpty) return
-    commitAppend(cat, files, commitUuid, extraSummary, toBranch = branch)
+    val files = writeDataFiles(AppendUtil.align(df, meta.currentSchema), commitUuid)
+    if (files.nonEmpty) commitAppend(files, commitUuid, extraSummary, toBranch = branch)
   }
 
   /**
@@ -180,7 +162,7 @@ final class Table(
    * Fast-forwarding `main` is the atomic publish: one metadata CAS makes
    * every audited branch commit visible to plain readers at once.
    */
-  def fastForward(name: String, from: String): Unit = commitWithRetry() { base =>
+  def fastForward(name: String, from: String): Unit = commitMetadata { base =>
     val target = base.snapshotForRef(from).getOrElse(
       throw new InvalidDataError(s"no ref named '$from'"))
     base.refs.get(name).foreach { r =>
@@ -244,7 +226,9 @@ final class Table(
     // v3 row lineage: rows are new to this branch — ids re-assigned at commit
     val added = new TableScan(this, Some(src), Nil).addedFiles()
       .map(_.file.copy(firstRowId = None))
-    appendFiles(added, Map("source-snapshot-id" -> sourceSnapshotId.toString), toBranch)
+    // the source snapshot still references these files: never deleted here
+    appendFiles(added, Map("source-snapshot-id" -> sourceSnapshotId.toString), toBranch,
+      owned = false)
   }
 
   /**
@@ -267,7 +251,7 @@ final class Table(
   def addFiles(spark: SparkSession, paths: Seq[String],
                extraSummary: Map[String, String] = Map.empty): Unit = {
     import scala.collection.parallel.CollectionConverters._
-    val cat = catalog.getOrElse(throw new GraftError("this table is read-only"))
+    writable()
     require(paths.nonEmpty, "addFiles requires at least one file path")
     // Partitioned targets: identity transforms only, and each file must be
     // PROVABLY single-valued on every partition source (footer min == max,
@@ -321,9 +305,9 @@ final class Table(
           nullCounts = stats.nullCounts))
       }
     }.seq
-    if (files.isEmpty) return
-    commitAppend(cat, files, java.util.UUID.randomUUID().toString,
-      extraSummary + ("operation-detail" -> "add-files"))
+    // the caller's files: a failed commit must never delete them
+    if (files.nonEmpty) commitAppend(files, java.util.UUID.randomUUID().toString,
+      extraSummary + ("operation-detail" -> "add-files"), owned = false)
   }
 
   /**
@@ -371,58 +355,49 @@ final class Table(
     * (the [[deleteWhere]] shape). `predicates` bound the rewrite set via
     * pruning; the full condition decides the rows. */
   private def cowDelete(spark: SparkSession, predicates: Seq[ScanPredicate],
-                        condition: Option[String], branch: String): Unit = {
-    val cat = catalog.getOrElse(throw new GraftError("this table is read-only"))
-    var attempt = 0
-    var committed = false
-    while (!committed) {
-      // always plan against the catalog's CURRENT metadata — a stale handle
-      // must see concurrent commits (and the empty-plan short-circuit below
-      // would otherwise silently no-op before ever reaching the CAS)
-      refresh()
+                        condition: Option[String], branch: String): Unit =
+    commitWithRetry(replan = true) { base =>
       val affectedScan = dmlScan(branch, predicates)
       // one manifest pass yields both the rewrite set and the carried set
       val (affected, kept) = affectedScan.planFilesPartitioned()
-      if (affected.isEmpty) return // nothing can match — no new snapshot
       // DISCOVERY pass: bounds pruning is conservative (and with an
       // arbitrary condition there may be no prunable conjunct at all), so
       // find the files that PROVABLY hold a matching row first. The pass
       // reads only the predicate columns (column-pruned by Catalyst); the
       // rewrite then touches exactly those files — a `DELETE WHERE a OR b`
       // on a 100 TB table rewrites the matching files, never the table.
-      val matchAll = (predicates.map(affectedScan.predicateToColumn) ++
-        condition.map(org.apache.spark.sql.functions.expr))
-        .reduce(_ && _)
-      val matchedFiles = affectedScan
-        .matchedRowsWithPositions(spark, affected,
-          condition.map(org.apache.spark.sql.functions.expr))
-        .select("__file").distinct()
-        .collect().map(_.getString(0)).toSet
-      if (matchedFiles.isEmpty) return // no live row matches — no new snapshot
-      val (rewriteSet, carried) = affected.partition(t => matchedFiles.contains(t.filePath))
-      // rewrite matching files WITHOUT the matching rows (MOR deletes and
-      // schema projection applied by the scan materialization)
-      val rewritten = affectedScan.materializeTasks(spark, rewriteSet)
-        .filter(!matchAll)
-      val commitUuid = java.util.UUID.randomUUID().toString
-      val dataDir = new Path(meta.location, s"data/$commitUuid")
-      val newFiles = AppendUtil.writeData(rewritten, meta.currentSchema,
-        meta.defaultPartitionSpec, meta.defaultSortOrder, dataDir, hadoopConf,
-        targetFileRows = meta.properties.get("write.target-file-rows")
-          .map(_.toLong).getOrElse(5000000L))
-      try {
-        meta = cat.commitTable(ident, meta,
-          buildRewriteMetadata(meta, kept ++ carried, rewriteSet, newFiles, commitUuid,
-            keepParentDeleteManifests = true, toBranch = branch))
-        committed = true
-      } catch {
-        case e: CommitConflictError =>
-          discardFiles(newFiles) // regenerated next attempt
-          attempt += 1
-          if (attempt > 5) throw e
+      val matchedFiles = cowMatchedFiles(spark, affectedScan, affected, condition)
+      if (matchedFiles.isEmpty) None // nothing matches — no new snapshot
+      else {
+        val (rewriteSet, carried) = affected.partition(t => matchedFiles.contains(t.filePath))
+        // rewrite matching files WITHOUT the matching rows (MOR deletes and
+        // schema projection applied by the scan materialization)
+        val rewritten = affectedScan.materializeTasks(spark, rewriteSet)
+          .filter(!cowMatchAll(affectedScan, predicates, condition))
+        val commitUuid = java.util.UUID.randomUUID().toString
+        val newFiles = writeDataFiles(rewritten, commitUuid)
+        Some(buildRewriteMetadata(base, kept ++ carried, rewriteSet, newFiles, commitUuid,
+          keepParentDeleteManifests = true, toBranch = branch) -> newFiles)
       }
     }
-  }
+
+  /** The files of `affected` holding at least one live row that matches
+    * the scan's predicates AND `condition` — empty when `affected` is. */
+  private def cowMatchedFiles(spark: SparkSession, affectedScan: TableScan,
+                              affected: Seq[FileScanTask],
+                              condition: Option[String]): Set[String] =
+    if (affected.isEmpty) Set.empty
+    else affectedScan
+      .matchedRowsWithPositions(spark, affected,
+        condition.map(org.apache.spark.sql.functions.expr))
+      .select("__file").distinct()
+      .collect().map(_.getString(0)).toSet
+
+  /** Row-level match of `predicates` AND `condition`. */
+  private def cowMatchAll(affectedScan: TableScan, predicates: Seq[ScanPredicate],
+                          condition: Option[String]): Column =
+    (predicates.map(affectedScan.predicateToColumn) ++
+      condition.map(org.apache.spark.sql.functions.expr)).reduce(_ && _)
 
   /**
    * Merge-on-read DELETE: instead of rewriting affected data files, write
@@ -465,35 +440,24 @@ final class Table(
   }
 
   private def morDelete(spark: SparkSession, predicates: Seq[ScanPredicate],
-                        condition: Option[String], branch: String): Unit = {
-    val cat = catalog.getOrElse(throw new GraftError("this table is read-only"))
-    val extraCond = condition.map(org.apache.spark.sql.functions.expr)
-    var attempt = 0
-    var committed = false
-    while (!committed) {
-      refresh() // plan against the catalog's CURRENT metadata (stale-handle rule)
+                        condition: Option[String], branch: String): Unit =
+    commitWithRetry(replan = true) { base =>
       val affectedScan = dmlScan(branch, predicates)
       val affected = affectedScan.planFiles()
-      if (affected.isEmpty) return // nothing can match — no new snapshot
-      val matched = affectedScan.matchedRowsWithPositions(spark, affected, extraCond)
-        .select(col("__file").as("file_path"), col("__pos").as("pos"))
-      val commitUuid = java.util.UUID.randomUUID().toString
-      val (delFiles, superseded, newHidden) =
-        writeMorDeletes(matched, affected, commitUuid)
-      if (delFiles.isEmpty) return // pruning kept files, but no live row matched
-      try {
-        meta = cat.commitTable(ident, meta,
-          buildMorDmlMetadata(meta, delFiles, Nil, commitUuid, "delete",
-            supersede = superseded, newPosRecords = newHidden, toBranch = branch))
-        committed = true
-      } catch {
-        case e: CommitConflictError =>
-          discardFiles(delFiles) // regenerated next attempt
-          attempt += 1
-          if (attempt > 5) throw e
+      if (affected.isEmpty) None // nothing can match — no new snapshot
+      else {
+        val matched = affectedScan.matchedRowsWithPositions(spark, affected,
+            condition.map(org.apache.spark.sql.functions.expr))
+          .select(col("__file").as("file_path"), col("__pos").as("pos"))
+        val commitUuid = java.util.UUID.randomUUID().toString
+        val (delFiles, superseded, newHidden) =
+          writeMorDeletes(matched, affected, commitUuid)
+        // pruning kept files, but no live row matched
+        if (delFiles.isEmpty) None
+        else Some(buildMorDmlMetadata(base, delFiles, Nil, commitUuid, "delete",
+          supersede = superseded, newPosRecords = newHidden, toBranch = branch) -> delFiles)
       }
     }
-  }
 
   /**
    * UPDATE: rows matching ALL `predicates` get `assignments` applied
@@ -528,58 +492,33 @@ final class Table(
                         assignments: Map[String, String],
                         branch: String): Unit = {
     validateAssignments(assignments)
-    val cat = catalog.getOrElse(throw new GraftError("this table is read-only"))
-    var attempt = 0
-    var committed = false
-    while (!committed) {
-      // always plan against the catalog's CURRENT metadata — a stale handle
-      // must see concurrent commits (and the empty-plan short-circuit below
-      // would otherwise silently no-op before ever reaching the CAS)
-      refresh()
+    commitWithRetry(replan = true) { base =>
       val affectedScan = dmlScan(branch, predicates)
       // one manifest pass yields both the rewrite set and the carried set
       val (affected, kept) = affectedScan.planFilesPartitioned()
-      if (affected.isEmpty) return
-      val matchAll = (predicates.map(affectedScan.predicateToColumn) ++
-        condition.map(org.apache.spark.sql.functions.expr))
-        .reduce(_ && _)
       // same discovery pass as [[cowDelete]]: only files that provably
       // hold a matching row are rewritten; the rest are carried verbatim
-      val matchedFiles = affectedScan
-        .matchedRowsWithPositions(spark, affected,
-          condition.map(org.apache.spark.sql.functions.expr))
-        .select("__file").distinct()
-        .collect().map(_.getString(0)).toSet
-      if (matchedFiles.isEmpty) return // no live row matches — no new snapshot
-      val (rewriteSet, carried) = affected.partition(t => matchedFiles.contains(t.filePath))
-      val base = affectedScan.materializeTasks(spark, rewriteSet)
-      val rewritten = meta.currentSchema.fields.foldLeft(base) { (d, f) =>
-        assignments.get(f.name) match {
-          case Some(exprStr) =>
-            d.withColumn(f.name,
-              org.apache.spark.sql.functions.when(matchAll,
-                org.apache.spark.sql.functions.expr(exprStr)
-                  .cast(graft.types.SparkSchemaConverter.toSparkType(f.fieldType)))
-                .otherwise(org.apache.spark.sql.functions.col(f.name)))
-          case None => d
+      val matchedFiles = cowMatchedFiles(spark, affectedScan, affected, condition)
+      if (matchedFiles.isEmpty) None // no live row matches — no new snapshot
+      else {
+        val (rewriteSet, carried) = affected.partition(t => matchedFiles.contains(t.filePath))
+        val matchAll = cowMatchAll(affectedScan, predicates, condition)
+        val rows = affectedScan.materializeTasks(spark, rewriteSet)
+        val rewritten = base.currentSchema.fields.foldLeft(rows) { (d, f) =>
+          assignments.get(f.name) match {
+            case Some(exprStr) =>
+              d.withColumn(f.name,
+                org.apache.spark.sql.functions.when(matchAll,
+                  org.apache.spark.sql.functions.expr(exprStr)
+                    .cast(graft.types.SparkSchemaConverter.toSparkType(f.fieldType)))
+                  .otherwise(org.apache.spark.sql.functions.col(f.name)))
+            case None => d
+          }
         }
-      }
-      val commitUuid = java.util.UUID.randomUUID().toString
-      val dataDir = new Path(meta.location, s"data/$commitUuid")
-      val newFiles = AppendUtil.writeData(rewritten, meta.currentSchema,
-        meta.defaultPartitionSpec, meta.defaultSortOrder, dataDir, hadoopConf,
-        targetFileRows = meta.properties.get("write.target-file-rows")
-          .map(_.toLong).getOrElse(5000000L))
-      try {
-        meta = cat.commitTable(ident, meta,
-          buildRewriteMetadata(meta, kept ++ carried, rewriteSet, newFiles, commitUuid,
-            keepParentDeleteManifests = true, toBranch = branch))
-        committed = true
-      } catch {
-        case e: CommitConflictError =>
-          discardFiles(newFiles) // regenerated next attempt
-          attempt += 1
-          if (attempt > 5) throw e
+        val commitUuid = java.util.UUID.randomUUID().toString
+        val newFiles = writeDataFiles(rewritten, commitUuid)
+        Some(buildRewriteMetadata(base, kept ++ carried, rewriteSet, newFiles, commitUuid,
+          keepParentDeleteManifests = true, toBranch = branch) -> newFiles)
       }
     }
   }
@@ -624,52 +563,40 @@ final class Table(
                         assignments: Map[String, String],
                         branch: String): Unit = {
     validateAssignments(assignments)
-    val cat = catalog.getOrElse(throw new GraftError("this table is read-only"))
-    val extraCond = condition.map(org.apache.spark.sql.functions.expr)
-    var attempt = 0
-    var committed = false
-    while (!committed) {
-      refresh()
+    commitWithRetry(replan = true) { base =>
       val affectedScan = dmlScan(branch, predicates)
       val affected = affectedScan.planFiles()
-      if (affected.isEmpty) return
-      // matched rows feed two writes (positions + updated images); persist
-      // so the scan+anti-join doesn't run twice. Matched rows only — small
-      // relative to the affected files, and disk-backed if not.
-      val matched = affectedScan.matchedRowsWithPositions(spark, affected, extraCond)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        val commitUuid = java.util.UUID.randomUUID().toString
-        val (delFiles, superseded, newHidden) = writeMorDeletes(
-          matched.select(col("__file").as("file_path"), col("__pos").as("pos")),
-          affected, commitUuid)
-        if (delFiles.isEmpty) return
-        val base = matched.drop("__file", "__pos")
-        val updatedRows = meta.currentSchema.fields.foldLeft(base) { (d, f) =>
-          assignments.get(f.name) match {
-            case Some(exprStr) =>
-              d.withColumn(f.name, org.apache.spark.sql.functions.expr(exprStr)
-                .cast(graft.types.SparkSchemaConverter.toSparkType(f.fieldType)))
-            case None => d
-          }
-        }
-        val dataDir = new Path(meta.location, s"data/$commitUuid")
-        val newFiles = AppendUtil.writeData(updatedRows, meta.currentSchema,
-          meta.defaultPartitionSpec, meta.defaultSortOrder, dataDir, hadoopConf,
-          targetFileRows = meta.properties.get("write.target-file-rows")
-            .map(_.toLong).getOrElse(5000000L))
+      if (affected.isEmpty) None
+      else {
+        // matched rows feed two writes (positions + updated images); persist
+        // so the scan+anti-join doesn't run twice. Matched rows only — small
+        // relative to the affected files, and disk-backed if not.
+        val matched = affectedScan.matchedRowsWithPositions(spark, affected,
+            condition.map(org.apache.spark.sql.functions.expr))
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try {
-          meta = cat.commitTable(ident, meta,
-            buildMorDmlMetadata(meta, delFiles, newFiles, commitUuid, "overwrite",
-              supersede = superseded, newPosRecords = newHidden, toBranch = branch))
-          committed = true
-        } catch {
-          case e: CommitConflictError =>
-            discardFiles(delFiles ++ newFiles) // regenerated next attempt
-            attempt += 1
-            if (attempt > 5) throw e
-        }
-      } finally matched.unpersist()
+          val commitUuid = java.util.UUID.randomUUID().toString
+          val (delFiles, superseded, newHidden) = writeMorDeletes(
+            matched.select(col("__file").as("file_path"), col("__pos").as("pos")),
+            affected, commitUuid)
+          if (delFiles.isEmpty) None
+          else {
+            val rows = matched.drop("__file", "__pos")
+            val updatedRows = base.currentSchema.fields.foldLeft(rows) { (d, f) =>
+              assignments.get(f.name) match {
+                case Some(exprStr) =>
+                  d.withColumn(f.name, org.apache.spark.sql.functions.expr(exprStr)
+                    .cast(graft.types.SparkSchemaConverter.toSparkType(f.fieldType)))
+                case None => d
+              }
+            }
+            val newFiles = writeDataFiles(updatedRows, commitUuid)
+            Some(buildMorDmlMetadata(base, delFiles, newFiles, commitUuid, "overwrite",
+              supersede = superseded, newPosRecords = newHidden, toBranch = branch) ->
+              (delFiles ++ newFiles))
+          }
+        } finally matched.unpersist()
+      }
     }
   }
 
@@ -703,124 +630,101 @@ final class Table(
                        whenMatched: WhenMatched = WhenMatched.UpdateAll,
                        whenNotMatched: WhenNotMatched = WhenNotMatched.InsertAll,
                        bySource: WhenNotMatchedBySource = WhenNotMatchedBySource.Ignore): Unit = {
-    val cat = catalog.getOrElse(throw new GraftError("this table is read-only"))
+    writable()
     mergePrep(spark, source, on, whenMatched, bySource) match {
       case None => // empty source: nothing can match or insert
       case Some((srcAligned, preds)) => try {
-        var attempt = 0
-        var committed = false
-        while (!committed) {
-          refresh()
+        commitWithRetry(replan = true) { base =>
           val sc = scan(None, preds)
           val (affected, kept) = sc.planFilesPartitioned()
           val commitUuid = java.util.UUID.randomUUID().toString
-          if (affected.isEmpty) {
-            // no target file intersects the source key range: pure insert
-            if (whenNotMatched == WhenNotMatched.Ignore) return
-            val newFiles = writeDataFiles(srcAligned, commitUuid)
-            if (newFiles.nonEmpty) commitAppend(cat, newFiles, commitUuid,
-              Map("operation-detail" -> "merge-insert"))
-            return
-          }
-          val targetRows = sc.materializeTasks(spark, affected)
-          val result = mergeResult(
-            mergeJoined(targetRows, srcAligned, on), whenMatched, whenNotMatched, bySource)
-          val newFiles = writeDataFiles(result, commitUuid)
-          try {
-            meta = cat.commitTable(ident, meta,
-              buildRewriteMetadata(meta, kept, affected, newFiles, commitUuid,
-                keepParentDeleteManifests = true))
-            committed = true
-          } catch {
-            case e: CommitConflictError =>
-              discardFiles(newFiles) // regenerated next attempt
-              attempt += 1
-              if (attempt > 5) throw e
+          if (affected.isEmpty) { mergeInsert(srcAligned, whenNotMatched, commitUuid); None }
+          else {
+            val targetRows = sc.materializeTasks(spark, affected)
+            val result = mergeResult(
+              mergeJoined(targetRows, srcAligned, on), whenMatched, whenNotMatched, bySource)
+            val newFiles = writeDataFiles(result, commitUuid)
+            Some(buildRewriteMetadata(base, kept, affected, newFiles, commitUuid,
+              keepParentDeleteManifests = true) -> newFiles)
           }
         }
       } finally srcAligned.unpersist()
     }
   }
 
+  /** A merge whose key range intersects no target file is a pure insert:
+    * fast-append the source as its own commit. */
+  private def mergeInsert(srcAligned: DataFrame, whenNotMatched: WhenNotMatched,
+                          commitUuid: String): Unit =
+    if (whenNotMatched != WhenNotMatched.Ignore) {
+      val newFiles = writeDataFiles(srcAligned, commitUuid)
+      if (newFiles.nonEmpty)
+        commitAppend(newFiles, commitUuid, Map("operation-detail" -> "merge-insert"))
+    }
+
   def mergeMergeOnRead(spark: SparkSession, source: DataFrame, on: Seq[String],
                        whenMatched: WhenMatched = WhenMatched.UpdateAll,
                        whenNotMatched: WhenNotMatched = WhenNotMatched.InsertAll,
                        bySource: WhenNotMatchedBySource = WhenNotMatchedBySource.Ignore): Unit = {
     import org.apache.spark.sql.functions.{expr, lit, when}
-    val cat = catalog.getOrElse(throw new GraftError("this table is read-only"))
+    writable()
     mergePrep(spark, source, on, whenMatched, bySource) match {
       case None =>
       case Some((srcAligned, preds)) => try {
-        var attempt = 0
-        var committed = false
-        while (!committed) {
-          refresh()
+        commitWithRetry(replan = true) { base =>
           val sc = scan(None, preds)
           val affected = sc.planFiles()
           val commitUuid = java.util.UUID.randomUUID().toString
-          if (affected.isEmpty) {
-            if (whenNotMatched == WhenNotMatched.Ignore) return
-            val newFiles = writeDataFiles(srcAligned, commitUuid)
-            if (newFiles.nonEmpty) commitAppend(cat, newFiles, commitUuid,
-              Map("operation-detail" -> "merge-insert"))
-            return
-          }
-          // live target rows in the key range, with (file, pos) riding along
-          val joined = mergeJoined(
-            sc.matchedRowsWithPositions(spark, affected), srcAligned, on)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          try {
-            val isM = col("__t").isNotNull && col("__s").isNotNull
-            val fields = meta.currentSchema.fields
-            def proj(d: DataFrame, value: graft.types.NestedField => Column): DataFrame =
-              d.select(fields.map(f => value(f)
-                .cast(graft.types.SparkSchemaConverter.toSparkType(f.fieldType))
-                .as(f.name)): _*)
-            val matched = joined.filter(isM)
-            val tOnly = joined.filter(col("__t").isNotNull && col("__s").isNull)
-            val images: Option[DataFrame] = whenMatched match {
-              case WhenMatched.UpdateAll => Some(proj(matched, f => col(s"__src_${f.name}")))
-              case WhenMatched.UpdateSet(a) =>
-                Some(proj(matched, f => a.get(f.name).map(expr).getOrElse(col(f.name))))
-              case _ => None // Delete: positions only; Ignore: untouched
-            }
-            // BY SOURCE actions hide the old target-only row (a position
-            // delete) and, for UpdateSet, re-insert its new image — write
-            // cost stays O(affected rows), the point of MOR full-sync
-            val bySourceImages: Option[DataFrame] = bySource match {
-              case WhenNotMatchedBySource.UpdateSet(a) =>
-                Some(proj(tOnly, f => a.get(f.name).map(expr).getOrElse(col(f.name))))
-              case _ => None // Delete: positions only; Ignore: untouched
-            }
-            val inserts: Option[DataFrame] = whenNotMatched match {
-              case WhenNotMatched.InsertAll =>
-                Some(proj(joined.filter(col("__t").isNull), f => col(s"__src_${f.name}")))
-              case WhenNotMatched.Ignore => None
-            }
-            val posFrames =
-              (if (whenMatched != WhenMatched.Ignore) Seq(matched) else Nil) ++
-                (if (bySource != WhenNotMatchedBySource.Ignore) Seq(tOnly) else Nil)
-            val (delFiles, superseded, newHidden) =
-              posFrames.map(_.select(col("__file").as("file_path"), col("__pos").as("pos")))
-                .reduceOption(_ unionAll _) match {
-                case None => (Nil, Set.empty[(String, Long)], None: Option[Long])
-                case Some(pos) => writeMorDeletes(pos, affected, commitUuid)
-              }
-            val newFiles = (images ++ bySourceImages ++ inserts).reduceOption(_ unionAll _)
-              .map(writeDataFiles(_, commitUuid)).getOrElse(Nil)
-            if (delFiles.isEmpty && newFiles.isEmpty) return // no-op merge
+          if (affected.isEmpty) { mergeInsert(srcAligned, whenNotMatched, commitUuid); None }
+          else {
+            // live target rows in the key range, with (file, pos) riding along
+            val joined = mergeJoined(
+              sc.matchedRowsWithPositions(spark, affected), srcAligned, on)
+              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
             try {
-              meta = cat.commitTable(ident, meta,
-                buildMorDmlMetadata(meta, delFiles, newFiles, commitUuid, "overwrite",
-                  supersede = superseded, newPosRecords = newHidden))
-              committed = true
-            } catch {
-              case e: CommitConflictError =>
-                discardFiles(delFiles ++ newFiles) // regenerated next attempt
-                attempt += 1
-                if (attempt > 5) throw e
-            }
-          } finally joined.unpersist()
+              val isM = col("__t").isNotNull && col("__s").isNotNull
+              val fields = meta.currentSchema.fields
+              def proj(d: DataFrame, value: graft.types.NestedField => Column): DataFrame =
+                d.select(fields.map(f => value(f)
+                  .cast(graft.types.SparkSchemaConverter.toSparkType(f.fieldType))
+                  .as(f.name)): _*)
+              val matched = joined.filter(isM)
+              val tOnly = joined.filter(col("__t").isNotNull && col("__s").isNull)
+              val images: Option[DataFrame] = whenMatched match {
+                case WhenMatched.UpdateAll => Some(proj(matched, f => col(s"__src_${f.name}")))
+                case WhenMatched.UpdateSet(a) =>
+                  Some(proj(matched, f => a.get(f.name).map(expr).getOrElse(col(f.name))))
+                case _ => None // Delete: positions only; Ignore: untouched
+              }
+              // BY SOURCE actions hide the old target-only row (a position
+              // delete) and, for UpdateSet, re-insert its new image — write
+              // cost stays O(affected rows), the point of MOR full-sync
+              val bySourceImages: Option[DataFrame] = bySource match {
+                case WhenNotMatchedBySource.UpdateSet(a) =>
+                  Some(proj(tOnly, f => a.get(f.name).map(expr).getOrElse(col(f.name))))
+                case _ => None // Delete: positions only; Ignore: untouched
+              }
+              val inserts: Option[DataFrame] = whenNotMatched match {
+                case WhenNotMatched.InsertAll =>
+                  Some(proj(joined.filter(col("__t").isNull), f => col(s"__src_${f.name}")))
+                case WhenNotMatched.Ignore => None
+              }
+              val posFrames =
+                (if (whenMatched != WhenMatched.Ignore) Seq(matched) else Nil) ++
+                  (if (bySource != WhenNotMatchedBySource.Ignore) Seq(tOnly) else Nil)
+              val (delFiles, superseded, newHidden) =
+                posFrames.map(_.select(col("__file").as("file_path"), col("__pos").as("pos")))
+                  .reduceOption(_ unionAll _) match {
+                  case None => (Nil, Set.empty[(String, Long)], None: Option[Long])
+                  case Some(pos) => writeMorDeletes(pos, affected, commitUuid)
+                }
+              val newFiles = (images ++ bySourceImages ++ inserts).reduceOption(_ unionAll _)
+                .map(writeDataFiles(_, commitUuid)).getOrElse(Nil)
+              if (delFiles.isEmpty && newFiles.isEmpty) None // no-op merge
+              else Some(buildMorDmlMetadata(base, delFiles, newFiles, commitUuid, "overwrite",
+                supersede = superseded, newPosRecords = newHidden) -> (delFiles ++ newFiles))
+            } finally joined.unpersist()
+          }
         }
       } finally srcAligned.unpersist()
     }
@@ -1098,7 +1002,7 @@ final class Table(
              extraSummary: Map[String, String] = Map.empty,
              branch: String = "main"): Unit = {
     import org.apache.spark.sql.functions.{col, count, lit}
-    val cat = catalog.getOrElse(throw new GraftError("this table is read-only"))
+    writable()
     require(keys.nonEmpty, "upsert requires key columns")
     val keyFields = keys.map(k => meta.currentSchema.fieldByName(k).getOrElse(
       throw new InvalidDataError(s"upsert key not in table schema: $k")))
@@ -1133,23 +1037,8 @@ final class Table(
       val delFiles = AppendUtil.writeEqualityDeletes(aligned, keyFields,
         new Path(meta.location, s"data/$commitUuid-eqdel"), hadoopConf)
       val dataFiles = writeDataFiles(aligned, commitUuid)
-      var attempt = 0
-      var committed = false
-      while (!committed) {
-        val base = if (attempt == 0) meta else cat.currentMetadata(ident)
-        try {
-          meta = cat.commitTable(ident, base,
-            buildMorDmlMetadata(base, delFiles, dataFiles, s"$commitUuid-$attempt",
-              "overwrite", extraSummary,
-              writeSchemaId = Some(writeSchemaId), writeSpecId = Some(writeSpecId),
-              toBranch = branch))
-          committed = true
-        } catch {
-          case e: CommitConflictError =>
-            attempt += 1
-            if (attempt > 5) { discardFiles(delFiles ++ dataFiles); throw e }
-        }
-      }
+      commitRowDelta(delFiles, dataFiles, extraSummary, branch,
+        Some(writeSchemaId), Some(writeSpecId))
     } finally aligned.unpersist()
   }
 
@@ -1162,7 +1051,7 @@ final class Table(
     * identical schemas so repeated no-op evolutions don't grow metadata),
     * advance last-column-id, CAS through the catalog. Metadata-only. */
   private[table] def commitSchemaUpdate(build: TableMetadata => (Schema, Int)): Unit =
-    commitWithRetry() { base =>
+    commitMetadata { base =>
       val (draft, lastCol) = build(base)
       val existing = base.schemas.find(s =>
         s.fields == draft.fields && s.identifierFieldIds == draft.identifierFieldIds)
@@ -1191,7 +1080,7 @@ final class Table(
     * last-partition-id, CAS. Metadata-only — no data file moves. */
   private[table] def commitSpecUpdate(
       build: TableMetadata => (Seq[graft.meta.PartitionField], Int)): Unit =
-    commitWithRetry() { base =>
+    commitMetadata { base =>
       val (fields, lastPart) = build(base)
       val existing = base.partitionSpecs.find(_.fields == fields)
       val now = System.currentTimeMillis()
@@ -1218,7 +1107,7 @@ final class Table(
    * only shape FUTURE writes — same contract as partition evolution).
    */
   def replaceSortOrder(columns: Seq[(String, String, Option[String])]): Unit =
-    commitWithRetry() { base =>
+    commitMetadata { base =>
       val schema = base.currentSchema
       val fields = columns.map { case (name, dir, nullOrder) =>
         val f = schema.fieldByName(name).getOrElse(
@@ -1260,37 +1149,21 @@ final class Table(
    * don't need them. Pays down the merge-on-read anti-join debt; scans are
    * delete-free afterwards. No-op when no deletes apply.
    */
-  def applyPendingDeletes(spark: SparkSession): Unit = {
-    val cat = catalog.getOrElse(throw new GraftError("this table is read-only"))
-    var attempt = 0
-    var committed = false
-    while (!committed) {
-      refresh()
+  def applyPendingDeletes(spark: SparkSession): Unit =
+    commitWithRetry(replan = true) { base =>
       val all = scan().planFiles()
       val affected = all.filter(_.deleteFiles.nonEmpty)
-      if (affected.isEmpty) return
-      val affectedPaths = affected.map(_.filePath).toSet
-      val kept = all.filterNot(t => affectedPaths.contains(t.filePath))
-      val rewritten = scan().materializeTasks(spark, affected) // deletes applied
-      val commitUuid = java.util.UUID.randomUUID().toString
-      val dataDir = new Path(meta.location, s"data/$commitUuid")
-      val newFiles = AppendUtil.writeData(rewritten, meta.currentSchema,
-        meta.defaultPartitionSpec, meta.defaultSortOrder, dataDir, hadoopConf,
-        targetFileRows = meta.properties.get("write.target-file-rows")
-          .map(_.toLong).getOrElse(5000000L))
-      try {
-        meta = cat.commitTable(ident, meta,
-          buildRewriteMetadata(meta, kept, affected, newFiles, commitUuid,
-            keepParentDeleteManifests = false))
-        committed = true
-      } catch {
-        case e: CommitConflictError =>
-          discardFiles(newFiles) // regenerated next attempt
-          attempt += 1
-          if (attempt > 5) throw e
+      if (affected.isEmpty) None
+      else {
+        val affectedPaths = affected.map(_.filePath).toSet
+        val kept = all.filterNot(t => affectedPaths.contains(t.filePath))
+        val commitUuid = java.util.UUID.randomUUID().toString
+        // deletes applied by the scan materialization
+        val newFiles = writeDataFiles(scan().materializeTasks(spark, affected), commitUuid)
+        Some(buildRewriteMetadata(base, kept, affected, newFiles, commitUuid,
+          keepParentDeleteManifests = false) -> newFiles)
       }
     }
-  }
 
   /**
    * Compaction (`rewrite_data_files`): bin-pack data files smaller than
@@ -1301,75 +1174,88 @@ final class Table(
    * many streaming micro-appends.
    */
   def compact(spark: SparkSession, smallFileBytes: Long = 64L * 1024 * 1024,
-              minInputFiles: Int = 2): Unit = {
-    val cat = catalog.getOrElse(throw new GraftError("this table is read-only"))
-    var attempt = 0
-    var committed = false
-    while (!committed) {
-      // always plan against the catalog's CURRENT metadata — a stale handle
-      // must see concurrent commits (and the empty-plan short-circuit below
-      // would otherwise silently no-op before ever reaching the CAS)
-      refresh()
+              minInputFiles: Int = 2): Unit =
+    commitWithRetry(replan = true) { base =>
       val all = scan().planFiles()
       val small = all.filter(_.file.fileSizeInBytes < smallFileBytes)
-      if (small.size < minInputFiles) return
-      val kept = all.filterNot(t => small.map(_.filePath).toSet.contains(t.filePath))
-      // bin-pack: target as few output files as the combined bytes allow
-      // (for partitioned specs writeData re-shuffles by partition anyway)
-      val nOut = math.max(1, math.ceil(
-        small.map(_.file.fileSizeInBytes).sum.toDouble / smallFileBytes).toInt)
-      val rewritten = scan().materializeTasks(spark, small).repartition(nOut)
-      val commitUuid = java.util.UUID.randomUUID().toString
-      val dataDir = new Path(meta.location, s"data/$commitUuid")
-      val newFiles = AppendUtil.writeData(rewritten, meta.currentSchema,
-        meta.defaultPartitionSpec, meta.defaultSortOrder, dataDir, hadoopConf,
-        targetFileRows = meta.properties.get("write.target-file-rows")
-          .map(_.toLong).getOrElse(5000000L))
-      try {
-        meta = cat.commitTable(ident, meta,
-          buildRewriteMetadata(meta, kept, small, newFiles, commitUuid,
-            keepParentDeleteManifests = true))
-        committed = true
-      } catch {
-        case e: CommitConflictError =>
-          discardFiles(newFiles) // regenerated next attempt
-          attempt += 1
-          if (attempt > 5) throw e
+      if (small.size < minInputFiles) None
+      else {
+        val kept = all.filterNot(t => small.map(_.filePath).toSet.contains(t.filePath))
+        // bin-pack: target as few output files as the combined bytes allow
+        // (for partitioned specs writeData re-shuffles by partition anyway)
+        val nOut = math.max(1, math.ceil(
+          small.map(_.file.fileSizeInBytes).sum.toDouble / smallFileBytes).toInt)
+        val rewritten = scan().materializeTasks(spark, small).repartition(nOut)
+        val commitUuid = java.util.UUID.randomUUID().toString
+        val newFiles = writeDataFiles(rewritten, commitUuid)
+        Some(buildRewriteMetadata(base, kept, small, newFiles, commitUuid,
+          keepParentDeleteManifests = true) -> newFiles)
+      }
+    }
+
+  /** The catalog commits go through; fails on a read-only table. */
+  private def writable(): Catalog =
+    catalog.getOrElse(throw new GraftError("this table is read-only"))
+
+  /**
+   * The one optimistic-commit (CAS) loop: every write, DML, maintenance
+   * and metadata commit goes through it. Each attempt runs `body` against
+   * a base version, which is also adopted as the handle's metadata: the
+   * handle's own version on the first try, the catalog's current one on
+   * every retry — and on every try when `replan` is set, so DML that
+   * plans from a scan sees concurrent commits (a stale handle's empty
+   * plan would otherwise silently no-op before ever reaching the CAS).
+   *
+   * `body` returns the metadata to commit plus the files that attempt
+   * wrote, or None to commit nothing. A lost CAS deletes that attempt's
+   * files and retries, at most [[Table.MaxCommitRetries]] times;
+   * `writtenOnce` — files written before the loop and reused by every
+   * attempt — are deleted only when the last retry fails. Only the CAS
+   * itself is retried: an error from `body` propagates untouched.
+   */
+  private def commitWithRetry(replan: Boolean = false,
+                              writtenOnce: Seq[graft.manifest.DataFile] = Nil)
+                             (body: TableMetadata =>
+                               Option[(TableMetadata, Seq[graft.manifest.DataFile])]): Unit = {
+    val cat = writable()
+    var retries = 0
+    var done = false
+    while (!done) {
+      if (replan || retries > 0) meta = cat.currentMetadata(ident)
+      val base = meta
+      body(base) match {
+        case None => done = true
+        case Some((updated, written)) =>
+          try {
+            meta = cat.commitTable(ident, base, updated)
+            done = true
+          } catch {
+            case e: CommitConflictError =>
+              discardFiles(written)
+              retries += 1
+              if (retries > Table.MaxCommitRetries) { discardFiles(writtenOnce); throw e }
+          }
       }
     }
   }
 
-  /** Commit a metadata-only change with the same refresh-and-retry loop the
-    * write path uses: on [[CommitConflictError]] rebuild against the
-    * catalog's current metadata (the builder re-validates per attempt).
-    * A builder returning None aborts without committing anything. */
-  private def commitWithRetry(maxRetries: Int = 5)
-                             (build: TableMetadata => Option[TableMetadata]): Unit = {
-    val cat = catalog.getOrElse(throw new GraftError("this table is read-only"))
-    var attempt = 0
-    var committed = false
-    while (!committed) {
-      val base = if (attempt == 0) meta else cat.currentMetadata(ident)
-      try {
-        build(base) match {
-          case Some(updated) => meta = cat.commitTable(ident, base, updated)
-          case None => meta = base // nothing to commit; adopt the fresh view
-        }
-        committed = true
-      } catch {
-        case e: CommitConflictError =>
-          attempt += 1
-          if (attempt > maxRetries) throw e
-      }
-    }
-  }
+  /** [[commitWithRetry]] for a metadata-only change: the builder
+    * re-validates against each attempt's base; None commits nothing. */
+  private def commitMetadata(build: TableMetadata => Option[TableMetadata]): Unit =
+    commitWithRetry()(build(_).map(_ -> Nil))
+
+  /** Swap in wholly new metadata over whatever version is current — the
+    * publish of a staged `REPLACE TABLE … AS SELECT`, whose data and
+    * metadata were committed to an unpublished pointer. */
+  private[graft] def replaceMetadata(staged: TableMetadata): Unit =
+    commitMetadata(_ => Some(staged))
 
   /** Metadata-only property update (ALTER TABLE SET/UNSET TBLPROPERTIES via
     * the DSv2 catalog; also usable programmatically). CAS-retried like every
     * other commit; a no-op change commits nothing. */
   def updateProperties(set: Map[String, String],
                        remove: Seq[String] = Nil): Unit =
-    commitWithRetry() { base =>
+    commitMetadata { base =>
       val p = (base.properties -- remove) ++ set
       if (p == base.properties) None
       else Some(base.copy(properties = p,
@@ -1437,7 +1323,7 @@ final class Table(
         "sequence-number" -> m.sequenceNumber,
         "fields" -> m.fields,
         "properties" -> m.properties)))
-    commitWithRetry() { base =>
+    commitMetadata { base =>
       Some(base.copy(
         statistics = base.statistics.filterNot(_.snapshotId == snap.snapshotId)
           :+ entry,
@@ -1474,7 +1360,7 @@ final class Table(
     fs.delete(tmp, true)
     val entry = PartitionStatisticsFile(snap.snapshotId, statsPath.toString,
       fs.getFileStatus(statsPath).getLen)
-    commitWithRetry() { base =>
+    commitMetadata { base =>
       Some(base.copy(
         partitionStatistics =
           base.partitionStatistics.filterNot(_.snapshotId == snap.snapshotId)
@@ -1489,7 +1375,7 @@ final class Table(
   def rollback(snapshotId: Long): Unit = {
     if (meta.snapshotById(snapshotId).isEmpty)
       throw new InvalidDataError(s"no snapshot with id $snapshotId")
-    commitWithRetry() { base =>
+    commitMetadata { base =>
       if (base.snapshotById(snapshotId).isEmpty)
         throw new InvalidDataError(s"no snapshot with id $snapshotId")
       val now = System.currentTimeMillis()
@@ -1558,7 +1444,7 @@ final class Table(
                                     retainLast: Int): (Seq[Snapshot], Seq[Snapshot]) = {
     var committedSplit: (Seq[Snapshot], Seq[Snapshot]) = (Nil, Nil)
     var droppedStats: Seq[String] = Nil
-    commitWithRetry() { base =>
+    commitMetadata { base =>
       // reset per attempt: a failed attempt's droppedStats must not drive
       // deletes when the retry finds nothing left to expire (a concurrent
       // expire/rollback may have re-protected those snapshots' stats files)
@@ -1647,48 +1533,34 @@ final class Table(
   def zorder(spark: SparkSession, columns: Seq[String],
              targetFileBytes: Long = 128L * 1024 * 1024): Unit = {
     import org.apache.spark.sql.functions.{col, max, min}
-    val cat = catalog.getOrElse(throw new GraftError("this table is read-only"))
+    writable()
     require(columns.nonEmpty && columns.size <= 4, "zorder takes 1-4 columns")
     val missing = columns.filterNot(c => meta.currentSchema.fieldByName(c).isDefined)
     if (missing.nonEmpty)
       throw new InvalidDataError(s"zorder columns not in schema: ${missing.mkString(", ")}")
     if (meta.defaultPartitionSpec.fields.nonEmpty)
       throw new InvalidDataError("zorder supports unpartitioned tables only")
-    var attempt = 0
-    var committed = false
-    while (!committed) {
-      refresh()
+    commitWithRetry(replan = true) { base =>
       val sc = scan()
       val all = sc.planFiles()
-      if (all.isEmpty) return
-      val rows = sc.materializeTasks(spark, all)
-      // global per-column range from ONE tiny aggregate (the normalization
-      // grid); clamping makes stale ranges safe, just less discriminating
-      val aggs = columns.flatMap(c =>
-        Seq(min(col(c).cast("double")), max(col(c).cast("double"))))
-      val mm = rows.agg(aggs.head, aggs.tail: _*).collect().head
-      val mins = columns.indices.map(i => if (mm.isNullAt(2 * i)) 0.0 else mm.getDouble(2 * i))
-      val maxs = columns.indices.map(i => if (mm.isNullAt(2 * i + 1)) 0.0 else mm.getDouble(2 * i + 1))
-      val z = AppendUtil.zorderColumn(columns.map(col), mins, maxs)
-      val nOut = math.max(1, math.ceil(
-        all.map(_.file.fileSizeInBytes).sum.toDouble / targetFileBytes).toInt)
-      val clustered = rows.repartitionByRange(nOut, z).sortWithinPartitions(z)
-      val commitUuid = java.util.UUID.randomUUID().toString
-      val newFiles = AppendUtil.writeData(clustered, meta.currentSchema,
-        meta.defaultPartitionSpec, meta.defaultSortOrder,
-        new Path(meta.location, s"data/$commitUuid"), hadoopConf,
-        targetFileRows = meta.properties.get("write.target-file-rows")
-          .map(_.toLong).getOrElse(5000000L))
-      try {
-        meta = cat.commitTable(ident, meta,
-          buildRewriteMetadata(meta, Nil, all, newFiles, commitUuid,
-            keepParentDeleteManifests = false))
-        committed = true
-      } catch {
-        case e: CommitConflictError =>
-          discardFiles(newFiles) // regenerated next attempt
-          attempt += 1
-          if (attempt > 5) throw e
+      if (all.isEmpty) None
+      else {
+        val rows = sc.materializeTasks(spark, all)
+        // global per-column range from ONE tiny aggregate (the normalization
+        // grid); clamping makes stale ranges safe, just less discriminating
+        val aggs = columns.flatMap(c =>
+          Seq(min(col(c).cast("double")), max(col(c).cast("double"))))
+        val mm = rows.agg(aggs.head, aggs.tail: _*).collect().head
+        val mins = columns.indices.map(i => if (mm.isNullAt(2 * i)) 0.0 else mm.getDouble(2 * i))
+        val maxs = columns.indices.map(i => if (mm.isNullAt(2 * i + 1)) 0.0 else mm.getDouble(2 * i + 1))
+        val z = AppendUtil.zorderColumn(columns.map(col), mins, maxs)
+        val nOut = math.max(1, math.ceil(
+          all.map(_.file.fileSizeInBytes).sum.toDouble / targetFileBytes).toInt)
+        val clustered = rows.repartitionByRange(nOut, z).sortWithinPartitions(z)
+        val commitUuid = java.util.UUID.randomUUID().toString
+        val newFiles = writeDataFiles(clustered, commitUuid)
+        Some(buildRewriteMetadata(base, Nil, all, newFiles, commitUuid,
+          keepParentDeleteManifests = false) -> newFiles)
       }
     }
   }
@@ -1722,7 +1594,7 @@ final class Table(
 
   private def rewriteManifestsImpl(distributed: Option[(SparkSession, Int)],
                                    minInputManifests: Int): Unit =
-    commitWithRetry() { base =>
+    commitMetadata { base =>
       base.currentSnapshot.flatMap { parent =>
         val metadataDir = new Path(base.location, "metadata")
         val fs = metadataDir.getFileSystem(hadoopConf)
@@ -1833,7 +1705,7 @@ final class Table(
    * Remove orphan files (`remove_orphan_files`): physically delete files
    * under the table's `data/` and `metadata/` directories that no
    * snapshot references — leftovers of crashed writers and lost commit
-   * races (the in-line discard in the DML retry loops is best-effort; a
+   * races (the commit loop's discard of failed attempts is best-effort; a
    * killed JVM never runs it). Only files last modified before
    * `olderThanMs` are touched, so an in-flight commit — files written,
    * CAS not yet won — is never swept. Returns the deleted paths.
@@ -1976,7 +1848,7 @@ final class Table(
       throw new InvalidDataError("table has no snapshot to reference"))
     if (meta.snapshotById(sid).isEmpty)
       throw new InvalidDataError(s"no snapshot with id $sid")
-    commitWithRetry() { base =>
+    commitMetadata { base =>
       if (base.snapshotById(sid).isEmpty)
         throw new InvalidDataError(s"no snapshot with id $sid")
       Some(base.copy(refs = base.refs.updated(name, SnapshotRef(sid, refType))))
@@ -1990,7 +1862,7 @@ final class Table(
       throw new InvalidDataError("cannot drop the main branch")
     if (!meta.refs.contains(name))
       throw new InvalidDataError(s"no ref named $name")
-    commitWithRetry() { base =>
+    commitMetadata { base =>
       if (!base.refs.contains(name)) None
       else Some(base.copy(refs = base.refs - name))
     }
@@ -2011,29 +1883,14 @@ final class Table(
     * query/batch stamps [[graft.streaming.StreamingOps]] uses for
     * exactly-once replay detection). */
   def overwrite(df: DataFrame, extraSummary: Map[String, String]): Unit = {
-    val cat = catalog.getOrElse(throw new GraftError("this table is read-only"))
-    val aligned = AppendUtil.align(df, meta.currentSchema)
+    writable()
     val commitUuid = java.util.UUID.randomUUID().toString
-    val dataDir = new Path(meta.location, s"data/$commitUuid")
-    val newFiles = AppendUtil.writeData(aligned, meta.currentSchema,
-      meta.defaultPartitionSpec, meta.defaultSortOrder, dataDir, hadoopConf,
-      targetFileRows = meta.properties.get("write.target-file-rows")
-        .map(_.toLong).getOrElse(5000000L))
-    var attempt = 0
-    var committed = false
-    while (!committed) {
-      val base = if (attempt == 0) meta else cat.currentMetadata(ident)
+    val newFiles = writeDataFiles(AppendUtil.align(df, meta.currentSchema), commitUuid)
+    val attemptIds = Iterator.from(0).map(i => s"$commitUuid-$i")
+    commitWithRetry(writtenOnce = newFiles) { base =>
       val affected = new TableScan(this, base.currentSnapshot, Nil).planFiles()
-      try {
-        meta = cat.commitTable(ident, base,
-          buildRewriteMetadata(base, Nil, affected, newFiles, s"$commitUuid-$attempt",
-            keepParentDeleteManifests = false, extraSummary = extraSummary))
-        committed = true
-      } catch {
-        case e: CommitConflictError =>
-          attempt += 1
-          if (attempt > 5) { discardFiles(newFiles); throw e } // written once
-      }
+      Some(buildRewriteMetadata(base, Nil, affected, newFiles, attemptIds.next(),
+        keepParentDeleteManifests = false, extraSummary = extraSummary) -> Nil)
     }
   }
 
@@ -2062,19 +1919,10 @@ final class Table(
   def overwriteWhere(spark: SparkSession, predicates: Seq[ScanPredicate], df: DataFrame,
                      condition: Option[String] = None): Unit = {
     if (predicates.isEmpty && condition.isEmpty) { overwrite(df); return }
-    val cat = catalog.getOrElse(throw new GraftError("this table is read-only"))
-    val aligned = AppendUtil.align(df, meta.currentSchema)
-    val targetRows = meta.properties.get("write.target-file-rows")
-      .map(_.toLong).getOrElse(5000000L)
+    writable()
     val appendUuid = java.util.UUID.randomUUID().toString
-    val appended = AppendUtil.writeData(aligned, meta.currentSchema,
-      meta.defaultPartitionSpec, meta.defaultSortOrder,
-      new Path(meta.location, s"data/$appendUuid"), hadoopConf,
-      targetFileRows = targetRows)
-    var attempt = 0
-    var committed = false
-    while (!committed) {
-      refresh()
+    val appended = writeDataFiles(AppendUtil.align(df, meta.currentSchema), appendUuid)
+    commitWithRetry(replan = true, writtenOnce = appended) { base =>
       val affectedScan = scan(None, predicates)
       val (affected0, kept) = affectedScan.planFilesPartitioned()
       // tier 1: strict full-file matches drop unread (predicates only — an
@@ -2082,40 +1930,23 @@ final class Table(
       val (dropped, affected) =
         if (condition.isDefined) (Nil, affected0)
         else affected0.partition(t => ScanPruning.strictFileEvolved(predicates, t.file,
-          meta.partitionSpecById(t.specId).getOrElse(meta.defaultPartitionSpec),
-          meta.schemaById(t.schemaId).getOrElse(meta.currentSchema), meta.currentSchema))
+          base.partitionSpecById(t.specId).getOrElse(base.defaultPartitionSpec),
+          base.schemaById(t.schemaId).getOrElse(base.currentSchema), base.currentSchema))
       // tier 2: discovery — which remaining files hold at least one match
-      val extraCond = condition.map(org.apache.spark.sql.functions.expr)
-      val matchedFiles: Set[String] =
-        if (affected.isEmpty) Set.empty
-        else affectedScan.matchedRowsWithPositions(spark, affected, extraCond)
-          .select("__file").distinct().collect().map(_.getString(0)).toSet
+      val matchedFiles = cowMatchedFiles(spark, affectedScan, affected, condition)
       if (dropped.isEmpty && matchedFiles.isEmpty) {
         // pure append — no rows to remove anywhere; O(commit) fast-append
-        if (appended.nonEmpty) commitAppend(cat, appended, appendUuid)
-        return
-      }
-      val (rewriteSet, carried) = affected.partition(t => matchedFiles.contains(t.filePath))
-      val matchAll = (predicates.map(affectedScan.predicateToColumn) ++ extraCond)
-        .reduce(_ && _)
-      val commitUuid = java.util.UUID.randomUUID().toString
-      val newFiles =
-        if (rewriteSet.isEmpty) Nil
-        else AppendUtil.writeData(
-          affectedScan.materializeTasks(spark, rewriteSet).filter(!matchAll),
-          meta.currentSchema, meta.defaultPartitionSpec, meta.defaultSortOrder,
-          new Path(meta.location, s"data/$commitUuid"), hadoopConf,
-          targetFileRows = targetRows)
-      try {
-        meta = cat.commitTable(ident, meta,
-          buildRewriteMetadata(meta, kept ++ carried, dropped ++ rewriteSet,
-            newFiles ++ appended, commitUuid, keepParentDeleteManifests = true))
-        committed = true
-      } catch {
-        case e: CommitConflictError =>
-          discardFiles(newFiles) // rewrite side regenerated next attempt
-          attempt += 1
-          if (attempt > 5) { discardFiles(appended); throw e } // append side written once
+        if (appended.nonEmpty) commitAppend(appended, appendUuid)
+        None
+      } else {
+        val (rewriteSet, carried) = affected.partition(t => matchedFiles.contains(t.filePath))
+        val commitUuid = java.util.UUID.randomUUID().toString
+        val newFiles =
+          if (rewriteSet.isEmpty) Nil
+          else writeDataFiles(affectedScan.materializeTasks(spark, rewriteSet)
+            .filter(!cowMatchAll(affectedScan, predicates, condition)), commitUuid)
+        Some(buildRewriteMetadata(base, kept ++ carried, dropped ++ rewriteSet,
+          newFiles ++ appended, commitUuid, keepParentDeleteManifests = true) -> newFiles)
       }
     }
   }
@@ -2129,15 +1960,9 @@ final class Table(
    * one empty tuple matches everything) — same semantics as Iceberg.
    */
   def overwritePartitions(df: DataFrame): Unit = {
-    catalog.getOrElse(throw new GraftError("this table is read-only"))
-    val aligned = AppendUtil.align(df, meta.currentSchema)
-    val commitUuid = java.util.UUID.randomUUID().toString
-    val newFiles = AppendUtil.writeData(aligned, meta.currentSchema,
-      meta.defaultPartitionSpec, meta.defaultSortOrder,
-      new Path(meta.location, s"data/$commitUuid"), hadoopConf,
-      targetFileRows = meta.properties.get("write.target-file-rows")
-        .map(_.toLong).getOrElse(5000000L))
-    commitDynamicOverwrite(newFiles)
+    writable()
+    commitDynamicOverwrite(writeDataFiles(AppendUtil.align(df, meta.currentSchema),
+      java.util.UUID.randomUUID().toString))
   }
 
   /**
@@ -2151,27 +1976,15 @@ final class Table(
    * no data ⇒ no partitions to replace.
    */
   private[graft] def commitDynamicOverwrite(newFiles: Seq[graft.manifest.DataFile]): Unit = {
-    val cat = catalog.getOrElse(throw new GraftError("this table is read-only"))
+    writable()
     if (newFiles.isEmpty) return
     val tuples = newFiles.map(_.partition).toSet
-    var attempt = 0
-    var committed = false
-    while (!committed) {
-      refresh()
-      val all = new TableScan(this, meta.currentSnapshot, Nil).planFiles()
+    commitWithRetry(replan = true, writtenOnce = newFiles) { base =>
+      val all = new TableScan(this, base.currentSnapshot, Nil).planFiles()
       val (replaced, kept) = all.partition(t =>
-        t.specId == meta.defaultSpecId && tuples.contains(t.file.partition))
-      val commitUuid = java.util.UUID.randomUUID().toString
-      try {
-        meta = cat.commitTable(ident, meta,
-          buildRewriteMetadata(meta, kept, replaced, newFiles, commitUuid,
-            keepParentDeleteManifests = true))
-        committed = true
-      } catch {
-        case e: CommitConflictError =>
-          attempt += 1
-          if (attempt > 5) { discardFiles(newFiles); throw e } // written once
-      }
+        t.specId == base.defaultSpecId && tuples.contains(t.file.partition))
+      Some(buildRewriteMetadata(base, kept, replaced, newFiles,
+        java.util.UUID.randomUUID().toString, keepParentDeleteManifests = true) -> Nil)
     }
   }
 
@@ -2179,14 +1992,15 @@ final class Table(
     * `files` were already written by executors; this only commits
     * metadata — O(files) driver work per micro-batch. Empty epochs
     * commit nothing (and need no replay bookkeeping: replaying a
-    * no-op is a no-op). */
+    * no-op is a no-op). Files that are not `owned` survive a failed
+    * commit (see [[commitAppend]]). */
   private[graft] def appendFiles(files: Seq[graft.manifest.DataFile],
                                  extraSummary: Map[String, String] = Map.empty,
-                                 toBranch: String = "main"): Unit = {
-    val cat = catalog.getOrElse(throw new GraftError("this table is read-only"))
-    if (files.isEmpty) return
-    commitAppend(cat, files, java.util.UUID.randomUUID().toString,
-      extraSummary, toBranch = toBranch)
+                                 toBranch: String = "main",
+                                 owned: Boolean = true): Unit = {
+    writable()
+    if (files.nonEmpty)
+      commitAppend(files, java.util.UUID.randomUUID().toString, extraSummary, toBranch, owned)
   }
 
   /** File-level MOR row delta (the V2 streaming UPSERT sink's per-epoch
@@ -2202,25 +2016,14 @@ final class Table(
                                     toBranch: String = "main",
                                     writeSchemaId: Option[Int] = None,
                                     writeSpecId: Option[Int] = None): Unit = {
-    val cat = catalog.getOrElse(throw new GraftError("this table is read-only"))
+    writable()
     if (deleteFiles.isEmpty && dataFiles.isEmpty) return
     val commitUuid = java.util.UUID.randomUUID().toString
-    var attempt = 0
-    var committed = false
-    while (!committed) {
-      val base = if (attempt == 0) meta else cat.currentMetadata(ident)
-      try {
-        meta = cat.commitTable(ident, base,
-          buildMorDmlMetadata(base, deleteFiles, dataFiles, s"$commitUuid-$attempt",
-            "overwrite", extraSummary,
-            writeSchemaId = writeSchemaId, writeSpecId = writeSpecId,
-            toBranch = toBranch))
-        committed = true
-      } catch {
-        case e: CommitConflictError =>
-          attempt += 1
-          if (attempt > 5) { discardFiles(deleteFiles ++ dataFiles); throw e }
-      }
+    val attemptIds = Iterator.from(0).map(i => s"$commitUuid-$i")
+    commitWithRetry(writtenOnce = deleteFiles ++ dataFiles) { base =>
+      Some(buildMorDmlMetadata(base, deleteFiles, dataFiles, attemptIds.next(),
+        "overwrite", extraSummary, writeSchemaId = writeSchemaId,
+        writeSpecId = writeSpecId, toBranch = toBranch) -> Nil)
     }
   }
 
@@ -2229,26 +2032,12 @@ final class Table(
     * `files` still commits — Complete mode's contract is "the table equals
     * this epoch's result", even when that result has no rows. */
   private[graft] def overwriteAllWithFiles(files: Seq[graft.manifest.DataFile],
-                                           extraSummary: Map[String, String] = Map.empty): Unit = {
-    val cat = catalog.getOrElse(throw new GraftError("this table is read-only"))
-    var attempt = 0
-    var committed = false
-    while (!committed) {
-      refresh()
-      val all = new TableScan(this, meta.currentSnapshot, Nil).planFiles()
-      try {
-        meta = cat.commitTable(ident, meta,
-          buildRewriteMetadata(meta, Nil, all, files,
-            java.util.UUID.randomUUID().toString,
-            keepParentDeleteManifests = false, extraSummary = extraSummary))
-        committed = true
-      } catch {
-        case e: CommitConflictError =>
-          attempt += 1
-          if (attempt > 5) { discardFiles(files); throw e } // written once
-      }
+                                           extraSummary: Map[String, String] = Map.empty): Unit =
+    commitWithRetry(replan = true, writtenOnce = files) { base =>
+      val all = new TableScan(this, base.currentSnapshot, Nil).planFiles()
+      Some(buildRewriteMetadata(base, Nil, all, files, java.util.UUID.randomUUID().toString,
+        keepParentDeleteManifests = false, extraSummary = extraSummary) -> Nil)
     }
-  }
 
   /** Snapshot for a rewrite: ONE data manifest holding kept (original
     * sequence numbers) + added entries; parent delete manifests carried
@@ -2523,26 +2312,18 @@ final class Table(
 
   /** Fast-append commit: new manifest + manifest-list + metadata, CAS'd
     * through the catalog; on conflict, refresh and rebuild (the data files
-    * are already safely on disk — only metadata is retried). */
-  private def commitAppend(cat: Catalog, files: Seq[graft.manifest.DataFile],
+    * are already safely on disk — only metadata is retried). `owned` files
+    * were written for this commit and are deleted if it finally fails;
+    * files that are not owned (a caller's imported Parquet, a cherry-picked
+    * snapshot's data) are never deleted. */
+  private def commitAppend(files: Seq[graft.manifest.DataFile],
                            commitUuid: String,
                            extraSummary: Map[String, String] = Map.empty,
-                           maxRetries: Int = 5,
-                           toBranch: String = "main"): Unit = {
-    var attempt = 0
-    var committed = false
-    while (!committed) {
-      val base = if (attempt == 0) meta else cat.currentMetadata(ident)
-      try {
-        val updated = buildAppendMetadata(base, files, s"$commitUuid-$attempt",
-          extraSummary, toBranch)
-        meta = cat.commitTable(ident, base, updated)
-        committed = true
-      } catch {
-        case e: CommitConflictError =>
-          attempt += 1
-          if (attempt > maxRetries) { discardFiles(files); throw e } // written once
-      }
+                           toBranch: String = "main",
+                           owned: Boolean = true): Unit = {
+    val attemptIds = Iterator.from(0).map(i => s"$commitUuid-$i")
+    commitWithRetry(writtenOnce = if (owned) files else Nil) { base =>
+      Some(buildAppendMetadata(base, files, attemptIds.next(), extraSummary, toBranch) -> Nil)
     }
   }
 
@@ -2621,6 +2402,10 @@ final class Table(
 }
 
 object Table {
+  /** Retries after the first CAS attempt before a commit gives up with
+    * the last [[CommitConflictError]] — six attempts in all. */
+  val MaxCommitRetries: Int = 5
+
   /** Footer-stats bound string → the external partition-tuple rendering
     * the scan's partition parsing expects (identity transforms only; the
     * same forms AppendUtil's Hive-style directories produce). */

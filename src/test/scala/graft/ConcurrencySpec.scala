@@ -1,8 +1,10 @@
 package graft
 
 import graft.catalog.MemoryCatalog
-import graft.table.EqPred
+import graft.table.{EqPred, Table}
 import graft.types._
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Optimistic-commit behavior under contention: stale table handles must
@@ -132,5 +134,78 @@ class ConcurrencySpec extends AnyFunSuite {
     h1.overwritePartitions(Seq((9L, "b")).toDF("id", "k"))
     assert(cat.loadTable("c5").toDF(spark).select("id").collect()
       .map(_.getLong(0)).sorted.toSeq == Seq(1L, 9L))
+  }
+
+  /** Data and delete files under `location/data` (commit markers such as
+    * `_SUCCESS` and checksum files excluded, as the orphan sweep does). */
+  private def dataFiles(location: String): Set[String] = {
+    val dir = new Path(location, "data")
+    val fs = dir.getFileSystem(new Configuration())
+    if (!fs.exists(dir)) Set.empty
+    else {
+      val it = fs.listFiles(dir, true)
+      Iterator.continually(()).takeWhile(_ => it.hasNext).map(_ => it.next())
+        .map(_.getPath).filterNot(p => p.getName.startsWith("_") || p.getName.startsWith("."))
+        .map(_.toString).toSet
+    }
+  }
+
+  private def exists(path: String): Boolean = {
+    val p = new Path(path)
+    p.getFileSystem(new Configuration()).exists(p)
+  }
+
+  test("a commit that always loses its CAS gives up after 6 attempts, leaving no new files") {
+    import spark.implicits._
+    val ops: Seq[(String, Table => Unit)] = Seq(
+      "append" -> (_.append(Seq((9L, "n")).toDF("id", "k"))),
+      "overwrite" -> (_.overwrite(Seq((9L, "n")).toDF("id", "k"))),
+      "MOR deleteWhere" -> (_.deleteWhere(spark, "id = 1")),
+      "COW update" -> (_.update(spark, Seq(EqPred("k", "b")), Map("id" -> "id + 100"))),
+      "updateProperties" -> (_.updateProperties(Map("owner" -> "x"))))
+    for ((label, op) <- ops) withClue(s"$label: ") {
+      val inner = new MemoryCatalog()
+      inner.createTable("t", schema, properties = Map("write.delete.mode" -> "merge-on-read"))
+      inner.loadTable("t").append(Seq((1L, "a"), (2L, "b")).toDF("id", "k"))
+      val before = inner.loadTable("t")
+      val filesBefore = dataFiles(before.location)
+      val cat = new ConflictingCatalog(inner)
+      intercept[CommitConflictError](op(cat.loadTable("t")))
+      assert(cat.commitCalls.get == 6)
+      assert(dataFiles(before.location) == filesBefore)
+      val after = inner.loadTable("t")
+      assert(after.currentSnapshotId == before.currentSnapshotId)
+      assert(after.properties == before.properties)
+    }
+  }
+
+  test("a failed fast-append keeps files it does not own: addFiles sources, cherry-picked data") {
+    import spark.implicits._
+    val inner = new MemoryCatalog()
+    inner.createTable("t", schema)
+    val cat = new ConflictingCatalog(inner)
+
+    val src = java.nio.file.Files.createTempDirectory("graft-addfiles").resolve("src").toString
+    Seq((1L, "a"), (2L, "b")).toDF("id", "k").write.parquet(src)
+    val imported = new java.io.File(src).listFiles().map(_.getPath)
+      .filter(_.endsWith(".parquet")).toSeq
+    assert(imported.nonEmpty)
+    intercept[CommitConflictError](cat.loadTable("t").addFiles(spark, imported))
+    assert(cat.commitCalls.get == 6)
+    assert(imported.forall(exists), "addFiles deleted the caller's Parquet files")
+
+    inner.loadTable("t").appendToBranch("audit", Seq((5L, "x"), (6L, "y")).toDF("id", "k"))
+    val staged = inner.loadTable("t")
+    val srcId = staged.snapshotForRef("audit").get.snapshotId
+    val referenced = staged.scan(Some(srcId)).planFiles().map(_.filePath)
+    def rowsOf(t: Table) = t.toDF(spark, Some(srcId)).as[(Long, String)].collect().toSet
+    val rowsBefore = rowsOf(staged)
+    intercept[CommitConflictError](cat.loadTable("t").cherrypickSnapshot(srcId))
+    assert(cat.commitCalls.get == 12)
+    assert(referenced.nonEmpty && referenced.forall(exists),
+      "cherry-pick deleted data files its source snapshot still references")
+    assert(rowsOf(inner.loadTable("t")) == rowsBefore)
+    assert(rowsBefore == Set((5L, "x"), (6L, "y")))
+    assert(inner.loadTable("t").currentSnapshotId.isEmpty)
   }
 }

@@ -56,6 +56,24 @@ class StagedRtasSpec extends AnyFunSuite {
     assert(rows.toSeq == Seq((1L, "precious"), (2L, "data")))
   }
 
+  test("a REPLACE whose publish always conflicts fails after bounded retries; old table intact") {
+    init
+    sql(s"CREATE TABLE $C.s.contested (id BIGINT, v STRING)")
+    sql(s"INSERT INTO $C.s.contested VALUES (1, 'old')")
+    // a second Spark catalog over the same tables whose every CAS loses
+    val conflicting = new ConflictingCatalog(cat)
+    GraftSparkCatalog.register(spark, "grtasc", conflicting)
+    val e = intercept[Exception] {
+      sql("REPLACE TABLE grtasc.s.contested AS SELECT CAST(9 AS BIGINT) AS id, 'new' AS v")
+    }
+    val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+    assert(causes.exists(_.isInstanceOf[CommitConflictError]), s"unexpected failure: $e")
+    assert(conflicting.commitCalls.get == 6)
+    val rows = sql(s"SELECT id, v FROM $C.s.contested").collect()
+      .map(r => (r.getLong(0), r.getString(1)))
+    assert(rows.toSeq == Seq((1L, "old")))
+  }
+
   test("CREATE OR REPLACE works for both the missing and existing cases") {
     init
     sql(s"CREATE OR REPLACE TABLE $C.s.cor AS SELECT CAST(1 AS BIGINT) AS id")
