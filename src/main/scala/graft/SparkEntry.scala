@@ -2178,6 +2178,10 @@ object SparkEntry {
       // text), so gate → dedup → tokenize run exactly once and every
       // downstream reference reads the bounded materialization — the
       // guide's decide-on-small-rows rule applied to the pipeline spine.
+      // Trade-off: localCheckpoint() is eager, so merely building this
+      // query (PlanDump's static mode, anything enumerating `queries`)
+      // runs the gate-and-dedup job; and it cuts lineage, so a lost
+      // executor block cannot be recomputed and the query fails instead.
       val withTok = deduped.select(col("doc_id"), col("lang"), col("n_chars"),
         TextOps.tokenCount(col("text")).cast("long").as("n_tokens"))
         .localCheckpoint()

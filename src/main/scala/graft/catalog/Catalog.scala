@@ -3,6 +3,7 @@ package graft.catalog
 import graft._
 import graft.meta._
 import graft.types.Schema
+import org.apache.spark.sql.SparkSession
 
 /** Multi-level table identifier. Resolution rules mirror the reference
   * (`ext/iceberg/src/utils.rs:25-52`): dotted single strings split into
@@ -78,9 +79,17 @@ trait Catalog {
   // -- SQL surface (§2.7) ----------------------------------------------------
   /** `catalog.sql(query, params)` parity (ref `lib/iceberg/catalog.rb:103-108`):
     * Spark SQL over this catalog's tables, positional `$1..$n` params. */
-  def sql(spark: org.apache.spark.sql.SparkSession, query: String,
+  def sql(spark: SparkSession, query: String,
           params: Seq[Any] = Nil): graft.table.Result =
     graft.sql.GraftSql.sql(this, spark, query, params)
+
+  private val sqlSessions = new java.util.WeakHashMap[SparkSession, SparkSession]()
+
+  /** The session [[sql]] runs in for `caller`, made on first use
+    * ([[graft.sql.GraftSql.newSession]]) and kept while `caller` lives. */
+  private[graft] def sqlSession(caller: SparkSession): SparkSession = sqlSessions.synchronized {
+    sqlSessions.computeIfAbsent(caller, graft.sql.GraftSql.newSession(this, _))
+  }
 
   // -- commit protocol (used by Table.append) --------------------------------
   /** Atomically replace the table's metadata; `base` is the version the

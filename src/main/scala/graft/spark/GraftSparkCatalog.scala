@@ -4,10 +4,11 @@ import graft._
 import graft.catalog.{Catalog => GCatalog, HadoopCatalog}
 import graft.meta.SortOrder
 import graft.types.SparkSchemaConverter
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.{NamespaceAlreadyExistsException, NoSuchNamespaceException, NoSuchTableException, TableAlreadyExistsException}
 import org.apache.spark.sql.connector.catalog.{Table => SparkTableApi, _}
 import org.apache.spark.sql.connector.expressions.Transform
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
@@ -85,14 +86,16 @@ class GraftSparkCatalog extends TableCatalog with SupportsNamespaces
         metadataTable(ident).getOrElse(throw new NoSuchTableException(ident))
     }
 
+  private def graftTable(ident: Identifier): graft.table.Table =
+    try backing.loadTable(nameOf(ident)) catch {
+      case _: NoSuchTableError | _: NoSuchNamespaceError => throw new NoSuchTableException(ident)
+    }
+
   /** `VERSION AS OF <snapshot-id | 'branch' | 'tag'>` — a ref name reads
     * that ref's head, so WAP audit branches are SQL-readable:
     * `SELECT … FROM graft.ns.t VERSION AS OF 'audit'`. */
   override def loadTable(ident: Identifier, version: String): SparkTableApi = {
-    val t = try backing.loadTable(nameOf(ident)) catch {
-      case _: NoSuchTableError | _: NoSuchNamespaceError =>
-        throw new NoSuchTableException(ident)
-    }
+    val t = graftTable(ident)
     val sid = version.toLongOption match {
       case Some(id) =>
         if (t.snapshotById(id).isEmpty)
@@ -106,10 +109,7 @@ class GraftSparkCatalog extends TableCatalog with SupportsNamespaces
 
   /** `TIMESTAMP AS OF` — Spark hands micros since epoch. */
   override def loadTable(ident: Identifier, timestampMicros: Long): SparkTableApi = {
-    val t = try backing.loadTable(nameOf(ident)) catch {
-      case _: NoSuchTableError | _: NoSuchNamespaceError =>
-        throw new NoSuchTableException(ident)
-    }
+    val t = graftTable(ident)
     val snap = t.snapshotAsOf(timestampMicros / 1000L).getOrElse(
       throw new InvalidDataError(
         s"no snapshot at or before timestamp ${timestampMicros / 1000L}"))
@@ -117,40 +117,21 @@ class GraftSparkCatalog extends TableCatalog with SupportsNamespaces
   }
 
   /** `ns.t.snapshots` / `.history` / `.refs` / `.manifests` / `.files` /
-    * `.partitions` resolve as read-only metadata tables when `ns.t` exists. */
+    * `.partitions` resolve as read-only metadata tables when `ns.t` exists,
+    * and so do the SQL wrapper's `ns.t_snapshots` / `_history` / `_refs`.
+    * Both are reached only when no table has the name itself. */
   private def metadataTable(ident: Identifier): Option[SparkTableApi] = {
-    val ns = ident.namespace
-    if (ns.isEmpty) return None
-    // `ns.t.snapshots` → parent table is the identifier's namespace path
-    val parentName = ns.mkString(".")
-    if (!backing.tableExists(parentName)) return None
-    val t = backing.loadTable(parentName)
-    val label = s"$parentName.${ident.name}"
-    ident.name match {
-      case "snapshots" => Some(new GraftMetadataSparkTable(label, t.refresh().snapshotsDF(_)))
-      case "history" => Some(new GraftMetadataSparkTable(label, t.refresh().historyDF(_)))
-      case "refs" => Some(new GraftMetadataSparkTable(label, t.refresh().refsDF(_)))
-      case "manifests" => Some(new GraftMetadataSparkTable(label, t.refresh().manifestsDF(_)))
-      case "files" => Some(new GraftMetadataSparkTable(label, t.refresh().filesDF(_)))
-      case "partitions" => Some(new GraftMetadataSparkTable(label, t.refresh().partitionsDF(_)))
-      case "entries" => Some(new GraftMetadataSparkTable(label, t.refresh().entriesDF(_)))
-      case "all_manifests" => Some(new GraftMetadataSparkTable(label, t.refresh().allManifestsDF(_)))
-      case "all_files" => Some(new GraftMetadataSparkTable(label, t.refresh().allFilesDF(_)))
-      case "all_data_files" => Some(new GraftMetadataSparkTable(label,
-        s => t.refresh().allFilesDF(s).where(org.apache.spark.sql.functions.col("content") === 0)))
-      case "all_delete_files" => Some(new GraftMetadataSparkTable(label,
-        s => t.refresh().allFilesDF(s).where(org.apache.spark.sql.functions.col("content") =!= 0)))
-      case "data_files" => Some(new GraftMetadataSparkTable(label,
-        s => t.refresh().filesDF(s).where(org.apache.spark.sql.functions.col("content") === 0)))
-      case "delete_files" => Some(new GraftMetadataSparkTable(label,
-        s => t.refresh().filesDF(s).where(org.apache.spark.sql.functions.col("content") =!= 0)))
-      case "metadata_log_entries" => Some(new GraftMetadataSparkTable(label,
-        t.refresh().metadataLogEntriesDF(_)))
-      case "statistics" => Some(new GraftMetadataSparkTable(label,
-        t.refresh().statisticsDF(_)))
-      case "partition_statistics" => Some(new GraftMetadataSparkTable(label,
-        t.refresh().partitionStatisticsDF(_)))
+    val ns = ident.namespace.toSeq
+    val dotted = if (ns.isEmpty) None else Some(ns.mkString(".") -> ident.name)
+    val aliased = ident.name match {
+      case GraftSparkCatalog.MetadataAlias(base, kind) => Some((ns :+ base).mkString(".") -> kind)
       case _ => None
+    }
+    (dotted ++ aliased).collectFirst {
+      case (parent, kind) if GraftSparkCatalog.metadataDFs.contains(kind) && backing.tableExists(parent) =>
+        val t = backing.loadTable(parent)
+        new GraftMetadataSparkTable(s"$parent.$kind",
+          s => GraftSparkCatalog.metadataDFs(kind)(t.refresh(), s))
     }
   }
 
@@ -265,10 +246,7 @@ class GraftSparkCatalog extends TableCatalog with SupportsNamespaces
   }
 
   override def alterTable(ident: Identifier, changes: TableChange*): SparkTableApi = {
-    val t = try backing.loadTable(nameOf(ident)) catch {
-      case _: NoSuchTableError | _: NoSuchNamespaceError =>
-        throw new NoSuchTableException(ident)
-    }
+    val t = graftTable(ident)
     val sets = changes.collect { case s: TableChange.SetProperty => s.property -> s.value }
     val removes = changes.collect { case r: TableChange.RemoveProperty => r.property }
     val schemaChanges = changes.filter {
@@ -396,21 +374,56 @@ class GraftSparkCatalog extends TableCatalog with SupportsNamespaces
 }
 
 object GraftSparkCatalog {
-  private val refs = TrieMap[String, GCatalog]()
+  private val MetadataAlias = "(.+)_(snapshots|history|refs)".r
+
+  private val metadataDFs: Map[String, (graft.table.Table, SparkSession) => DataFrame] = {
+    val data = col("content") === 0
+    Map(
+      "snapshots" -> (_.snapshotsDF(_)),
+      "history" -> (_.historyDF(_)),
+      "refs" -> (_.refsDF(_)),
+      "manifests" -> (_.manifestsDF(_)),
+      "files" -> (_.filesDF(_)),
+      "partitions" -> (_.partitionsDF(_)),
+      "entries" -> (_.entriesDF(_)),
+      "all_manifests" -> (_.allManifestsDF(_)),
+      "all_files" -> (_.allFilesDF(_)),
+      "all_data_files" -> ((t, s) => t.allFilesDF(s).where(data)),
+      "all_delete_files" -> ((t, s) => t.allFilesDF(s).where(!data)),
+      "data_files" -> ((t, s) => t.filesDF(s).where(data)),
+      "delete_files" -> ((t, s) => t.filesDF(s).where(!data)),
+      "metadata_log_entries" -> (_.metadataLogEntriesDF(_)),
+      "statistics" -> (_.statisticsDF(_)),
+      "partition_statistics" -> (_.partitionStatisticsDF(_)))
+  }
+
+  private val refs = TrieMap[String, () => Option[GCatalog]]()
 
   /** Pre-register a catalog instance for the `ref=<key>` option (tests and
     * programmatic Memory/REST/JDBC catalogs, which have no string-only
     * construction). */
-  def bind(key: String, catalog: GCatalog): Unit = refs.put(key, catalog)
+  def bind(key: String, catalog: GCatalog): Unit = refs.put(key, () => Some(catalog))
   def unbind(key: String): Unit = refs.remove(key)
   private def resolve(key: String): GCatalog =
-    refs.getOrElse(key, throw new IllegalArgumentException(
+    refs.get(key).flatMap(_()).getOrElse(throw new IllegalArgumentException(
       s"no graft catalog bound under ref '$key' — call GraftSparkCatalog.bind first"))
 
   /** Convenience: register `catalog` on `spark` under `name` (must happen
     * before the catalog name is first referenced in SQL). */
   def register(spark: SparkSession, name: String, catalog: GCatalog): Unit = {
     bind(name, catalog)
+    configure(spark, name)
+  }
+
+  /** [[register]] without keeping `catalog` alive: the binding lapses once
+    * nothing else holds the catalog (a catalog's own SQL session). */
+  private[graft] def registerWeakly(spark: SparkSession, name: String, catalog: GCatalog): Unit = {
+    val ref = new java.lang.ref.WeakReference(catalog)
+    refs.put(name, () => Option(ref.get))
+    configure(spark, name)
+  }
+
+  private def configure(spark: SparkSession, name: String): Unit = {
     spark.conf.set(s"spark.sql.catalog.$name", classOf[GraftSparkCatalog].getName)
     spark.conf.set(s"spark.sql.catalog.$name.ref", name)
   }

@@ -50,6 +50,10 @@ class GraftSparkTable(
 
   override def name(): String = graftTable.ident.toString
 
+  /** This table read at a fixed snapshot: its own pin, else the current one. */
+  private[graft] def pinned: GraftSparkTable = new GraftSparkTable(graftTable,
+    pinnedSnapshotId.orElse(graftTable.currentSnapshotId), streamOptions)
+
   /** CDC path loads (`format("graft").option("read-changes", true)
     * .load(dir)`) resolve with the change-metadata columns appended, so
     * the V2 stream's rows type-check against the relation. Such an

@@ -2,217 +2,179 @@ package graft.sql
 
 import graft._
 import graft.catalog.Catalog
+import graft.spark.{GraftSparkCatalog, GraftSparkTable}
 import graft.table.Result
 import graft.types.{NestedField, Schema}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.{DeleteFromTable, InsertIntoStatement, LogicalPlan, MergeIntoTable, UpdateTable}
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
+import org.apache.spark.sql.graftbridge.CatalystBridge
 
-import scala.collection.mutable
+import java.util.concurrent.atomic.AtomicLong
+import scala.util.matching.Regex
 
 /**
  * The reference's SQL surface (`catalog.sql(query, params)`,
  * `lib/iceberg/catalog.rb:103-108` → `ext/iceberg/src/catalog.rs:443-508`)
- * re-expressed on Spark SQL: catalog tables are registered as temp views
- * (refreshed to the current snapshot on every call), Catalyst plays
- * DataFusion's role, and the reference's semantics are enforced at the
- * wrapper: single statement only, unique output column names, positional
- * `$1..$n` params, UPDATE/DELETE rejected (`test/sql_test.rb`).
+ * on Spark SQL. As the reference makes the catalog DataFusion's default
+ * catalog and schema (`catalog.rs:449-455`), each [[Catalog]] runs its
+ * statements in a session of its own ([[Catalog.sqlSession]]) where that
+ * instance is the default catalog, through [[GraftSparkCatalog]]. Names
+ * resolve lazily: a statement loads only the tables it names, at their
+ * current snapshot, and `<t>_snapshots` / `_history` / `_refs` are metadata
+ * tables when no table has that name. The wrapper keeps what Spark does not
+ * do: one statement per call, `$1..$n` params, unique output names, UPDATE /
+ * DELETE / MERGE rejected (`test/sql_test.rb`), CREATE TABLE through the
+ * reference type table, INSERT of fewer values than columns, and CREATE
+ * VIEW as a temp view of the catalog's session, pinned to the data it saw.
+ * Every other statement (DROP TABLE, CALL, …) acts on the catalog exactly
+ * as it does through [[GraftSparkCatalog]]. The caller's temp views and
+ * functions are not visible, and no view reaches the caller's session.
  */
 object GraftSql {
 
-  /** View names created via CREATE VIEW, per (session, catalog) — these are
-    * not clobbered by the per-call table-view refresh. */
-  private val userViews = mutable.Map[(String, String), mutable.Set[String]]()
-
   def sql(catalog: Catalog, spark: SparkSession, query: String,
-          params: Seq[Any] = Nil): Result = {
-    val stmt = singleStatement(query)
-    val bound = bindParams(stmt, params)
-    val trimmed = bound.trim
-    val head = trimmed.split("\\s+").headOption.map(_.toLowerCase).getOrElse("")
+          params: Seq[Any] = Nil): Result =
+    toResult(sqlDF(catalog, spark, query, params))
 
-    head match {
-      case "update" | "delete" =>
-        throw new UnsupportedFeatureError(s"$head is not supported")
-      case "create" => createStatement(catalog, spark, trimmed)
-      case "insert" => insertStatement(catalog, spark, trimmed)
-      case _ =>
-        refreshTableViews(catalog, spark)
-        toResult(spark.sql(trimmed))
+  /** The same statement as a DataFrame (the Spark-idiomatic entry —
+    * `Result` is the row-API parity wrapper). */
+  def sqlDF(catalog: Catalog, spark: SparkSession, query: String,
+            params: Seq[Any] = Nil): DataFrame = {
+    val stmt = bindParams(singleStatement(query), params)
+    val session = catalog.sqlSession(spark)
+    stmt match {
+      case CreateTableRe(name, colsRaw) =>
+        catalog.createTable(name, Schema(0, columns(colsRaw)))
+        session.emptyDataFrame
+      case CreateViewRe(name, body) =>
+        // the view reads the data it saw (as the reference's DataFusion
+        // views do, sql_test.rb:71-86); Spark re-resolves the catalog tables
+        // of a temp view on every use, so each is pinned to its snapshot
+        val pinned = run(session, body).queryExecution.analyzed.transformWithSubqueries {
+          case r @ DataSourceV2Relation(t: GraftSparkTable, _, _, _, _, _) =>
+            r.copy(table = t.pinned, identifier = None)
+        }
+        CatalystBridge.dataFrame(session, pinned).createOrReplaceTempView(name)
+        session.emptyDataFrame
+      case _ => run(session, stmt)
     }
   }
 
-  /** SELECT via spark with catalog views registered; DataFrame out (the
-    * Spark-idiomatic entry — `Result` is the row-API parity wrapper). */
-  def sqlDF(catalog: Catalog, spark: SparkSession, query: String,
-            params: Seq[Any] = Nil): DataFrame = {
-    refreshTableViews(catalog, spark)
-    spark.sql(bindParams(singleStatement(query), params))
+  /** A new session with `caller`'s SQL conf at this moment and `catalog`
+    * as its default catalog, bound under a key unique to the instance
+    * (names are not unique: every MemoryCatalog is "memory"). */
+  private[graft] def newSession(catalog: Catalog, caller: SparkSession): SparkSession = {
+    val session = caller.newSession()
+    caller.sessionState.conf.getAllConfs.foreach { case (k, v) =>
+      session.sessionState.conf.setConfString(k, v)
+    }
+    val key = s"graft_sql_${sessionKeys.incrementAndGet()}"
+    GraftSparkCatalog.registerWeakly(session, key, catalog)
+    session.conf.set("spark.sql.defaultCatalog", key)
+    session
   }
 
-  // ------------------------------------------------------------- routing
+  private val sessionKeys = new AtomicLong()
 
   private val CreateTableRe =
     """(?is)^\s*create\s+table\s+([\w.]+)\s*\((.*)\)\s*$""".r
   private val CreateViewRe =
     """(?is)^\s*create\s+(?:or\s+replace\s+)?view\s+([\w.]+)\s+as\s+(.+)$""".r
-  private val InsertRe =
-    """(?is)^\s*insert\s+into\s+([\w.]+)\s*(\([\w\s,]*\))?\s*(values\s*.+|select\s+.+|with\s+.+)$""".r
 
-  private def createStatement(catalog: Catalog, spark: SparkSession,
-                              stmt: String): Result = stmt match {
-    case CreateTableRe(name, colsRaw) =>
-      val fields = splitTopLevel(colsRaw).zipWithIndex.map { case (defRaw, i) =>
-        val d = defRaw.trim
-        val notNull = d.toLowerCase.endsWith("not null")
-        val core = if (notNull) d.substring(0, d.length - "not null".length).trim else d
-        val sp = core.indexOf(' ')
-        if (sp < 0) throw new InvalidDataError(s"bad column definition: $defRaw")
-        val colName = core.substring(0, sp).trim.stripPrefix("\"").stripSuffix("\"")
-        val typeName = core.substring(sp + 1).trim
-        NestedField(i + 1, colName, Schema.parseTypeName(typeName), required = notNull)
-      }
-      catalog.createTable(name, Schema(0, fields))
-      Result(Nil, Nil)
-    case CreateViewRe(name, body) =>
-      refreshTableViews(catalog, spark)
-      // materialized at creation time: the view pins the data it saw (the
-      // reference's DataFusion views behave the same, sql_test.rb:71-86)
-      val df = spark.sql(body)
-      df.createOrReplaceTempView(name)
-      userViews.getOrElseUpdate(key(catalog, spark), mutable.Set.empty) += name
-      Result(Nil, Nil)
-    case _ =>
-      throw new UnsupportedFeatureError(s"unsupported DDL: ${stmt.take(60)}")
-  }
-
-  private def insertStatement(catalog: Catalog, spark: SparkSession,
-                              stmt: String): Result = stmt match {
-    case InsertRe(name, colListRaw, body) =>
-      val t = catalog.loadTable(name)
-      refreshTableViews(catalog, spark)
-      val src =
-        if (body.trim.toLowerCase.startsWith("values"))
-          spark.sql(s"SELECT * FROM ($body)")
-        else spark.sql(body)
-      val schema = t.currentSchema
-      val targetCols: Seq[String] = Option(colListRaw) match {
-        case Some(list) =>
-          list.stripPrefix("(").stripSuffix(")").split(',').map(_.trim).toSeq
-        case None => schema.fields.map(_.name).take(src.columns.length)
-      }
-      if (targetCols.length != src.columns.length)
-        throw new InvalidDataError(
-          s"INSERT has ${src.columns.length} expressions but ${targetCols.length} target columns")
-      val renamed = src.toDF(targetCols: _*)
-      t.append(renamed)
-      Result(Nil, Nil)
-    case _ =>
-      throw new UnsupportedFeatureError(s"unsupported INSERT: ${stmt.take(60)}")
-  }
-
-  // ------------------------------------------------------------ plumbing
-
-  private def key(catalog: Catalog, spark: SparkSession): (String, String) =
-    (String.valueOf(System.identityHashCode(spark)), catalog.name)
-
-  /** Register every catalog table as a temp view over its CURRENT snapshot.
-    * Default-namespace tables get their bare name (the reference sets the
-    * session's default catalog+schema the same way, `catalog.rs:449-455`).
-    * Metadata views `<name>_snapshots` / `<name>_history` / `<name>_refs`
-    * ride along (driver-memory only — no manifest IO at registration). */
-  private def refreshTableViews(catalog: Catalog, spark: SparkSession): Unit = {
-    val views = userViews.getOrElse(key(catalog, spark), mutable.Set.empty)
-    val ns = catalog.defaultNamespace
-    catalog.listTables(Some(ns)).foreach { parts =>
-      val tableName = parts.last
-      if (!views.contains(tableName)) {
-        val t = catalog.loadTable((ns :+ tableName).mkString("."))
-        t.toDF(spark).createOrReplaceTempView(tableName)
-        t.snapshotsDF(spark).createOrReplaceTempView(s"${tableName}_snapshots")
-        t.historyDF(spark).createOrReplaceTempView(s"${tableName}_history")
-        t.refsDF(spark).createOrReplaceTempView(s"${tableName}_refs")
-        // partitionsDF/filesDF/manifestsDF are NOT auto-registered: they
-        // plan manifests, and registration must stay metadata-memory-only
-      }
+  private def columns(colsRaw: String): Seq[NestedField] =
+    splitTopLevel(colsRaw).zipWithIndex.map { case (defRaw, i) =>
+      val d = defRaw.trim
+      val notNull = d.toLowerCase.endsWith("not null")
+      val core = if (notNull) d.substring(0, d.length - "not null".length).trim else d
+      val sp = core.indexOf(' ')
+      if (sp < 0) throw new InvalidDataError(s"bad column definition: $defRaw")
+      val colName = core.substring(0, sp).trim.stripPrefix("\"").stripSuffix("\"")
+      NestedField(i + 1, colName, Schema.parseTypeName(core.substring(sp + 1)), required = notNull)
     }
+
+  /** Parse, check and run one statement. Reference parity: no row-level
+    * DML (`sql_test.rb`), decided on the parsed plan before anything runs —
+    * the tables are writable DSv2 tables, and a comment can precede the verb. */
+  private def run(session: SparkSession, stmt: String): DataFrame = {
+    val plan = session.sessionState.sqlParser.parsePlan(stmt)
+    plan.collectFirst {
+      case _: UpdateTable => "UPDATE"
+      case _: DeleteFromTable => "DELETE"
+      case _: MergeIntoTable => "MERGE"
+    }.foreach(verb => throw new UnsupportedFeatureError(s"$verb is not supported"))
+    CatalystBridge.dataFrame(session, leadingColumns(session, plan))
+  }
+
+  /** Reference parity: an INSERT without a column list may give fewer
+    * values than the table has columns, filling the leading ones; Spark
+    * NULL-fills the rest only for an explicit column list, so name them. */
+  private def leadingColumns(session: SparkSession, plan: LogicalPlan): LogicalPlan = plan match {
+    case i: InsertIntoStatement if i.userSpecifiedCols.isEmpty && !i.byName && i.partitionSpec.isEmpty =>
+      val width = CatalystBridge.dataFrame(session, i.query).columns.length
+      val cols = CatalystBridge.dataFrame(session, i.table).columns
+      if (width < cols.length) i.copy(userSpecifiedCols = cols.take(width).toSeq) else i
+    case other => other
   }
 
   /** Reference parity: exactly one statement per call (`sql_test.rb:95-101`). */
   private def singleStatement(query: String): String = {
-    val parts = splitStatements(query)
-    if (parts.length != 1)
-      throw new InvalidDataError("expected exactly one statement")
-    parts.head
-  }
-
-  private def splitStatements(q: String): Seq[String] = {
-    val out = mutable.ArrayBuffer[String]()
-    val sb = new StringBuilder
-    var inS = false; var inD = false
-    var i = 0
-    while (i < q.length) {
-      val c = q.charAt(i)
-      c match {
-        case '\\' if (inS || inD) && i + 1 < q.length => // escaped char, see bindParams
-          sb += c; sb += q.charAt(i + 1); i += 1
-        case '\'' if !inD => inS = !inS; sb += c
-        case '"' if !inS => inD = !inD; sb += c
-        case ';' if !inS && !inD => out += sb.toString; sb.clear()
-        case c2 => sb += c2
-      }
-      i += 1
+    val free = unquoted(query)
+    splitAt(query, query.indices.filter(i => query.charAt(i) == ';' && free(i))) match {
+      case Seq(one) => one
+      case _ => throw new InvalidDataError("expected exactly one statement")
     }
-    out += sb.toString
-    out.map(_.trim).filter(_.nonEmpty).toSeq
   }
 
   /** Split "a int, d decimal(10, 2)" on top-level commas only. */
   private def splitTopLevel(s: String): Seq[String] = {
-    val out = mutable.ArrayBuffer[String]()
-    val sb = new StringBuilder
-    var depth = 0
-    for (c <- s) c match {
-      case '(' => depth += 1; sb += c
-      case ')' => depth -= 1; sb += c
-      case ',' if depth == 0 => out += sb.toString; sb.clear()
-      case c2 => sb += c2
-    }
-    if (sb.nonEmpty) out += sb.toString
-    out.toSeq.map(_.trim).filter(_.nonEmpty)
+    val depth = s.scanLeft(0)((d, c) => d + (if (c == '(') 1 else if (c == ')') -1 else 0))
+    splitAt(s, s.indices.filter(i => s.charAt(i) == ',' && depth(i) == 0))
   }
 
-  /** Positional `$1..$n` binding by literal splice, with the reference's
-    * type table (`catalog.rs:467-495`); extra params are ignored. Quote-aware
-    * like [[splitStatements]]: a literal dollar-number INSIDE a string
-    * (`WHERE note = 'costs $1'`) is data, not a placeholder. */
-  private[graft] def bindParams(stmt: String, params: Seq[Any]): String = {
-    if (params.isEmpty) return stmt
-    val sb = new StringBuilder
+  /** `s` cut at the given indices; pieces trimmed, empty ones dropped. */
+  private def splitAt(s: String, cuts: Seq[Int]): Seq[String] = {
+    val bounds = -1 +: cuts :+ s.length
+    bounds.zip(bounds.tail).map { case (a, b) => s.substring(a + 1, b).trim }.filter(_.nonEmpty)
+  }
+
+  /** The indices of `s` outside '…' and "…" literals. Spark SQL string
+    * literals accept backslash escapes by default, so `\'` / `\"` inside a
+    * literal does not end it. */
+  private def unquoted(s: String): Set[Int] = {
+    val out = Set.newBuilder[Int]
     var inS = false; var inD = false
     var i = 0
-    while (i < stmt.length) {
-      val c = stmt.charAt(i)
-      c match {
-        // Spark SQL string literals accept backslash escapes by default, so
-        // `\'` / `\"` inside a literal must not toggle the in-string state
-        // (else a `$n` inside the literal would be spliced, or a real
-        // placeholder after it treated as data). Consume the escaped char.
-        case '\\' if (inS || inD) && i + 1 < stmt.length =>
-          sb += c; sb += stmt.charAt(i + 1); i += 2
-        case '\'' if !inD => inS = !inS; sb += c; i += 1
-        case '"' if !inS => inD = !inD; sb += c; i += 1
-        case '$' if !inS && !inD && i + 1 < stmt.length && stmt.charAt(i + 1).isDigit =>
-          var j = i + 1
-          while (j < stmt.length && stmt.charAt(j).isDigit) j += 1
-          val n = stmt.substring(i + 1, j).toInt
-          if (n < 1 || n > params.length)
-            throw new InvalidDataError(s"no value for placeholder $$$n")
-          sb ++= literal(params(n - 1))
-          i = j
-        case other => sb += other; i += 1
+    while (i < s.length) {
+      s.charAt(i) match {
+        case '\\' if inS || inD => i += 1
+        case '\'' if !inD => inS = !inS
+        case '"' if !inS => inD = !inD
+        case _ if !inS && !inD => out += i
+        case _ =>
       }
+      i += 1
     }
-    sb.toString
+    out.result()
+  }
+
+  private val Placeholder = """\$(\d+)""".r
+
+  /** Positional `$1..$n` binding by literal splice, with the reference's
+    * type table (`catalog.rs:467-495`); extra params are ignored. A
+    * dollar-number INSIDE a string literal (`WHERE note = 'costs $1'`) is
+    * data, not a placeholder. */
+  private[graft] def bindParams(stmt: String, params: Seq[Any]): String = {
+    if (params.isEmpty) return stmt
+    val free = unquoted(stmt)
+    Placeholder.replaceAllIn(stmt, m => Regex.quoteReplacement(
+      if (!free(m.start)) m.matched
+      else {
+        val n = m.group(1).toInt
+        if (n < 1 || n > params.length)
+          throw new InvalidDataError(s"no value for placeholder $$$n")
+        literal(params(n - 1))
+      }))
   }
 
   private def literal(v: Any): String = v match {

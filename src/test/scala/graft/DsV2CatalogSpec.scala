@@ -112,6 +112,14 @@ class DsV2CatalogSpec extends AnyFunSuite {
     assert(snapCount == gt.refresh().snapshots.length)
     assert(sql(s"SELECT * FROM $C.sales.orders.refs").collect().nonEmpty)
     assert(sql(s"SELECT * FROM $C.sales.orders.history").collect().nonEmpty)
+    // the SQL wrapper's `<t>_snapshots` / `_refs` aliases resolve here too
+    assert(sql(s"SELECT count(*) FROM $C.sales.orders_snapshots").head().getLong(0) == snapCount)
+    assert(sql(s"SELECT name FROM $C.sales.orders_refs").collect().map(_.getString(0)).contains("main"))
+    // a real table named like a `<t>_history` alias wins over the alias
+    sql(s"CREATE TABLE $C.sales.hx (a INT)")
+    sql(s"CREATE TABLE $C.sales.hx_history (a INT, b STRING)")
+    sql(s"INSERT INTO $C.sales.hx_history VALUES (1, 'real')")
+    assert(sql(s"SELECT b FROM $C.sales.hx_history").collect().map(_.getString(0)).toSeq == Seq("real"))
   }
 
   test("ALTER TABLE: properties and schema evolution") {

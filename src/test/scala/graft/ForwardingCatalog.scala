@@ -5,16 +5,13 @@ import graft.meta.{PartitionSpec, SortOrder, TableMetadata}
 import graft.table.Table
 import graft.types.Schema
 
+import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.concurrent.atomic.AtomicInteger
 
-/** A catalog that forwards every call to `inner` except commits: each
-  * `commitTable` is counted and loses its CAS with [[CommitConflictError]],
-  * as if another writer always committed first. Tables it hands out name
+/** A catalog that forwards every call to `inner`. Tables it hands out name
   * it as their catalog, so every commit a [[Table]] makes comes back
-  * through here. Drives the terminal-failure path of the commit loop. */
-final class ConflictingCatalog(inner: Catalog) extends Catalog {
-  val commitCalls = new AtomicInteger()
-
+  * through here; subclasses override the calls they observe or break. */
+class ForwardingCatalog(inner: Catalog) extends Catalog {
   def name: String = inner.name
   def defaultNamespace: Seq[String] = inner.defaultNamespace
 
@@ -44,13 +41,36 @@ final class ConflictingCatalog(inner: Catalog) extends Catalog {
     own(inner.registerTable(name, metadataLocation))
 
   private[graft] def commitTable(ident: TableIdent, base: TableMetadata,
-                                 updated: TableMetadata): TableMetadata = {
-    commitCalls.incrementAndGet()
-    throw new CommitConflictError(s"injected conflict on $ident")
-  }
+                                 updated: TableMetadata): TableMetadata =
+    inner.commitTable(ident, base, updated)
   private[graft] def currentMetadata(ident: TableIdent): TableMetadata =
     inner.currentMetadata(ident)
   private[graft] override def supportsStagedPublish: Boolean = inner.supportsStagedPublish
   private[graft] override def defaultTableLocation(ident: TableIdent): String =
     inner.defaultTableLocation(ident)
+}
+
+/** Every `commitTable` is counted and loses its CAS with
+  * [[CommitConflictError]], as if another writer always committed first.
+  * Drives the terminal-failure path of the commit loop. */
+final class ConflictingCatalog(inner: Catalog) extends ForwardingCatalog(inner) {
+  val commitCalls = new AtomicInteger()
+
+  private[graft] override def commitTable(ident: TableIdent, base: TableMetadata,
+                                          updated: TableMetadata): TableMetadata = {
+    commitCalls.incrementAndGet()
+    throw new CommitConflictError(s"injected conflict on $ident")
+  }
+}
+
+/** Records the names passed to `loadTable` and counts `listTables` calls. */
+final class CountingCatalog(inner: Catalog) extends ForwardingCatalog(inner) {
+  val loads = new ConcurrentLinkedQueue[String]()
+  val lists = new AtomicInteger()
+
+  override def loadTable(name: String): Table = { loads.add(name); super.loadTable(name) }
+  override def listTables(ns: Option[Seq[String]]): Seq[Seq[String]] = {
+    lists.incrementAndGet()
+    super.listTables(ns)
+  }
 }

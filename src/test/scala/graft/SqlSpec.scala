@@ -1,7 +1,10 @@
 package graft
 
 import graft.catalog.MemoryCatalog
+import org.apache.spark.sql.AnalysisException
 import org.scalatest.funsuite.AnyFunSuite
+
+import scala.jdk.CollectionConverters._
 
 /** SQL-surface parity with `test/sql_test.rb` (SURVEY.md §2.7). */
 class SqlSpec extends AnyFunSuite {
@@ -17,6 +20,13 @@ class SqlSpec extends AnyFunSuite {
     assert(res.columns == Seq("a", "b"))
     assert(res.rows == Seq(Seq(1, "one"), Seq(2, "two"), Seq(3, "three")))
     assert(res.toA.head == Map("a" -> 1, "b" -> "one"))
+    // column types go through the reference type table, not Spark's DDL
+    // parser (which rejects `text`/`bool` and reads `timestamp` as LTZ)
+    cat.sql(spark, "CREATE TABLE typed (s text, f bool, ts timestamp, d decimal(10, 2) not null)")
+    assert(cat.loadTable("typed").currentSchema.fields
+      .map(f => (f.name, f.fieldType, f.required)) == Seq(
+        ("s", types.IString, false), ("f", types.IBoolean, false),
+        ("ts", types.ITimestamp, false), ("d", types.IDecimal(10, 2), true)))
   }
 
   test("literals and types") {
@@ -43,6 +53,9 @@ class SqlSpec extends AnyFunSuite {
     assert(more(0) == null && more(1) == true)
     assert(more(2) == java.time.LocalDateTime.of(2024, 1, 2, 3, 4, 5))
     assert(more(3) == new java.math.BigDecimal("12.34"))
+    val instant = cat.sql(spark, "SELECT $1 AS ts",
+      Seq(java.time.Instant.parse("2024-01-02T03:04:05Z"))).rows.head.head
+    assert(instant == java.sql.Timestamp.from(java.time.Instant.parse("2024-01-02T03:04:05Z")))
     assertThrows[InvalidDataError](cat.sql(spark, "SELECT $3", Seq(1)))
   }
 
@@ -78,6 +91,10 @@ class SqlSpec extends AnyFunSuite {
     cat.sql(spark, "CREATE VIEW v2 AS SELECT a AS x, b AS y FROM v_src")
     val r = cat.sql(spark, "SELECT x, y FROM v2")
     assert(r.rows == Seq(Seq(1, "one")))
+    // the view pins the data it saw when it was created
+    cat.sql(spark, "INSERT INTO v_src VALUES (2, 'two')")
+    assert(cat.sql(spark, "SELECT x, y FROM v2").rows == Seq(Seq(1, "one")))
+    assert(cat.sql(spark, "SELECT count(*) AS n FROM v_src").rows == Seq(Seq(2L)))
   }
 
   test("UPDATE and DELETE are rejected") {
@@ -85,6 +102,15 @@ class SqlSpec extends AnyFunSuite {
     cat.sql(spark, "CREATE TABLE ud (a int)")
     assertThrows[UnsupportedFeatureError](cat.sql(spark, "UPDATE ud SET a = 1"))
     assertThrows[UnsupportedFeatureError](cat.sql(spark, "DELETE FROM ud"))
+    // decided on the parsed statement, before it runs: a leading comment
+    // does not hide the verb, and MERGE is DML too
+    cat.sql(spark, "INSERT INTO ud VALUES (1)")
+    Seq("/* c */ DELETE FROM ud",
+      "MERGE INTO ud USING (SELECT 2 AS a) s ON ud.a = s.a WHEN NOT MATCHED THEN INSERT *"
+    ).foreach { dml =>
+      assertThrows[UnsupportedFeatureError](cat.sql(spark, dml))
+      assert(cat.sql(spark, "SELECT count(*) AS n FROM ud").rows == Seq(Seq(1L)), dml)
+    }
   }
 
   test("single statement only; duplicate output names rejected") {
@@ -108,6 +134,9 @@ class SqlSpec extends AnyFunSuite {
     cat.sql(spark, "INSERT INTO dst2 (b, a) VALUES ('z', 3)")
     val r = cat.sql(spark, "SELECT * FROM dst2 ORDER BY a")
     assert(r.rows == Seq(Seq(2, "y"), Seq(3, "z")))
+    // fewer values than columns: the trailing columns are NULL
+    cat.sql(spark, "INSERT INTO dst2 VALUES (4)")
+    assert(cat.sql(spark, "SELECT a, b FROM dst2 WHERE a = 4").rows == Seq(Seq(4, null)))
   }
 
   test("sql sees committed appends from the table API") {
@@ -118,6 +147,46 @@ class SqlSpec extends AnyFunSuite {
     assert(cat.sql(spark, "SELECT count(*) AS n FROM mix").rows == Seq(Seq(1L)))
     t.append(Seq(Map("a" -> 6)), spark)
     assert(cat.sql(spark, "SELECT count(*) AS n FROM mix").rows == Seq(Seq(2L)))
+  }
+
+  test("each catalog sees only its own tables, and drops and renames at once") {
+    def tempViews = spark.catalog.listTables().collect().filter(_.isTemporary).map(_.name)
+    val a = freshCatalog()
+    val b = freshCatalog()
+    a.sql(spark, "CREATE TABLE xcat_events (v string)")
+    a.sql(spark, "INSERT INTO xcat_events VALUES ('a')")
+    a.sql(spark, "CREATE TABLE xcat_only_a (v string)")
+    a.sql(spark, "CREATE VIEW xcat_view AS SELECT v FROM xcat_events")
+    b.sql(spark, "CREATE TABLE xcat_events (v string)")
+    b.sql(spark, "INSERT INTO xcat_events VALUES ('b')")
+    assert(a.sql(spark, "SELECT v FROM xcat_events").rows == Seq(Seq("a")))
+    assert(b.sql(spark, "SELECT v FROM xcat_events").rows == Seq(Seq("b")))
+    assert(a.sql(spark, "SELECT v FROM xcat_view").rows == Seq(Seq("a")))
+    intercept[AnalysisException](b.sql(spark, "SELECT * FROM xcat_only_a"))
+    intercept[AnalysisException](b.sql(spark, "SELECT * FROM xcat_view"))
+    // nothing reaches the caller's session
+    assert(!tempViews.exists(_.startsWith("xcat_")), tempViews.toSeq)
+
+    a.dropTable("xcat_events")
+    intercept[AnalysisException](a.sql(spark, "SELECT * FROM xcat_events"))
+    a.renameTable("xcat_only_a", "xcat_renamed")
+    intercept[AnalysisException](a.sql(spark, "SELECT * FROM xcat_only_a"))
+    assert(a.sql(spark, "SELECT count(*) AS n FROM xcat_renamed").rows == Seq(Seq(0L)))
+    assert(b.sql(spark, "SELECT v FROM xcat_events").rows == Seq(Seq("b")))
+  }
+
+  test("a statement loads only the tables it names") {
+    val cat = new CountingCatalog(freshCatalog())
+    cat.sql(spark, "CREATE TABLE t0 (a int)")
+    cat.sql(spark, "INSERT INTO t0 VALUES (1), (2)")
+    (1 to 25).foreach(i => cat.createTable(s"sibling$i",
+      types.Schema(0, Seq(types.NestedField(1, "a", types.IInt)))))
+    cat.loads.clear()
+    cat.lists.set(0)
+    assert(cat.sql(spark, "SELECT count(*) AS n FROM t0").rows == Seq(Seq(2L)))
+    assert(cat.lists.get == 0)
+    val loads = cat.loads.asScala.toSeq
+    assert(loads.nonEmpty && loads.size <= 2 && loads.forall(_.split('.').last == "t0"), loads)
   }
 
   test("metadata views queryable from SQL") {
