@@ -862,15 +862,16 @@ object StreamingOps extends Serializable {
       if (tasks.isEmpty) emptyDf
       else table.scan().materializeTasks(spark, tasks)
     } else {
-      val currentFiles = table.scan().planFilesDistributed(spark).map(_.filePath).toSet
+      val currentFiles = table.scan().planFilesDistributed(spark).map(_.file)
       val baseFiles: Set[String] = fromSnapshotId match {
         case None => Set.empty
         case Some(id) =>
           table.scan(Some(id)).planFilesDistributed(spark).map(_.filePath).toSet
       }
-      val added = (currentFiles -- baseFiles).toSeq.sorted
+      val added = currentFiles.filterNot(f => baseFiles(f.filePath)).distinctBy(_.filePath)
+        .sortBy(_.filePath)
       if (added.isEmpty) emptyDf
-      else spark.read.schema(schema).parquet(added: _*)
+      else graft.table.ManifestFileIndex.read(spark, added, schema)
     }
   }
 
@@ -991,10 +992,12 @@ object StreamingOps extends Serializable {
             // for an update that rewrote a row to an identical value —
             // the delete-file semantics, matching what a changelog
             // consumer keyed on the equality ids expects.
-            val idCols = eqIdSets.head.toSeq.sorted
-              .map(id => table.metadata.currentSchema.fieldById(id).get.name)
+            val idFields = eqIdSets.head.toSeq.sorted
+              .map(id => table.metadata.currentSchema.fieldById(id).get)
+            val idCols = idFields.map(_.name)
             val delFiles = newDeletes.values.flatten.toSeq.distinctBy(_.filePath)
-            val keyFrame = spark.read.parquet(delFiles.map(_.filePath): _*)
+            val keyFrame = graft.table.ManifestFileIndex.read(spark, delFiles,
+                SparkSchemaConverter.toSpark(graft.types.Schema(0, idFields)))
               .select(idCols.map(c => col(c).as(s"__d_$c")): _*).distinct()
             val keys =
               if (delFiles.map(_.fileSizeInBytes).sum <= 32L * 1024 * 1024)
@@ -1141,16 +1144,16 @@ object StreamingOps extends Serializable {
           if (added.isEmpty) emptyDf
           else table.scan(Some(sid)).materializeTasks(spark, added)
         } else {
-          val nowFiles = table.scan(Some(sid)).planFilesDistributed(spark)
-            .map(_.filePath).toSet
+          val nowFiles = table.scan(Some(sid)).planFilesDistributed(spark).map(_.file)
           val prevFiles = prev match {
             case None => Set.empty[String]
             case Some(p) =>
               table.scan(Some(p)).planFilesDistributed(spark).map(_.filePath).toSet
           }
-          val added = (nowFiles -- prevFiles).toSeq.sorted
+          val added = nowFiles.filterNot(f => prevFiles(f.filePath)).distinctBy(_.filePath)
+            .sortBy(_.filePath)
           if (added.isEmpty) emptyDf
-          else spark.read.schema(schema).parquet(added: _*)
+          else graft.table.ManifestFileIndex.read(spark, added, schema)
         }
       process(batch, sid)
       last = Some(sid)

@@ -40,6 +40,11 @@ final case class FileScanTask(file: DataFile, schemaId: Int,
  * (recorded per-manifest) and projected to the current schema BY FIELD ID,
  * so renamed/dropped columns resolve correctly (SURVEY.md §7.4).
  *
+ * Materialization ([[materializeTasks]]) reads one relation per writer
+ * schema over the files as the manifests list them, with no listing, and
+ * scopes deletes by the planned (delete file, data file) pairs, so the
+ * plan's size does not depend on the number of files or delete sets.
+ *
  * Planning runs on the driver with parallel manifest reads; beyond
  * [[TableScan.DistributedPlanThreshold]] manifests, [[planFilesDistributed]]
  * fans the manifest reads + pruning out as a Spark job so a snapshot with
@@ -212,10 +217,9 @@ final class TableScan(
 
   // ------------------------------------------------------- materialization
 
-  /** Materialize as a DataFrame: group files by (writer schema, applicable
-    * delete set), project each group to the current schema by field id,
-    * apply that group's merge-on-read deletes, union, and re-apply
-    * predicates (for in-file parquet row-group pushdown). */
+  /** Materialize as a DataFrame (see [[materializeTasks]]) and re-apply the
+    * scan predicates row-level, which also reaches parquet row-group
+    * pushdown inside each file. */
   def toDF(spark: SparkSession): DataFrame =
     predicates.foldLeft(materializeTasks(spark, planFilesDistributed(spark)))(
       (d, p) => d.filter(predicateToColumn(p)))
@@ -223,9 +227,18 @@ final class TableScan(
   /** Materialize an explicit task list to the current schema WITHOUT the
     * scan predicates (used by copy-on-write rewrites, which need every row
     * of the affected files, not just matching ones). With `withPositions`,
-    * two extra columns ride along: `__file` (normalized source path) and
+    * two extra columns ride along: `__file` (the manifest path) and
     * `__pos` (row ordinal in that file) — what a merge-on-read DML writer
-    * needs to emit position deletes. */
+    * needs to emit position deletes.
+    *
+    * One relation per writer schema reads the tasks' files through a
+    * [[ManifestFileIndex]] — no listing, no existence checks, no schema
+    * inference — projected to the current schema by field id, then
+    * unioned. Deletes apply as data, not plan shape: one anti-join on
+    * (`__file`, `__pos`) for every position delete and deletion vector,
+    * one per equality-ID set, each delete side restricted to exactly the
+    * (delete file, data file) pairs planning put in `deleteFiles`. So the
+    * plan has the same size for 1 or 1000 delete sets. */
   private[graft] def materializeTasks(spark: SparkSession,
                                       tasks: Seq[FileScanTask],
                                       withPositions: Boolean = false): DataFrame = {
@@ -239,63 +252,45 @@ final class TableScan(
           .add("__pos", org.apache.spark.sql.types.LongType)
       return spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), empty)
     }
-    // delete scoping is per data file; group by the applicable delete set so
-    // each group gets exactly its own anti-joins. The key must include the
-    // blob offset: deletion-vector entries of one commit share a single
-    // Puffin FILE path but are distinct deletes (one blob per data file) —
-    // path alone would collapse them into one group and silently apply
-    // only the first task's DV.
-    val byDeletes = tasks.groupBy(
-      _.deleteFiles.map(d => (d.filePath, d.contentOffset.getOrElse(-1L))).toSet)
-    val deleteGroups: Seq[DataFrame] = byDeletes.toSeq.map { case (_, delGroup) =>
-      val parts: Seq[DataFrame] = delGroup.groupBy(_.schemaId).toSeq.map { case (schemaId, group) =>
-        val writeSchema = meta.schemaById(schemaId).getOrElse(current)
-        val writeSpark = SparkSchemaConverter.toSpark(writeSchema)
-        val raw = spark.read.schema(writeSpark).parquet(group.map(_.filePath): _*)
-        // field-id projection: current field -> column name at write time
-        val byId = writeSchema.fields.map(f => f.id -> f).toMap
-        val projection = current.fields.map { cf =>
-          byId.get(cf.id) match {
-            case Some(wf) =>
-              col(wf.name).cast(SparkSchemaConverter.toSparkType(cf.fieldType)).as(cf.name)
-            case None =>
-              // column added after these files were written: rows read the
-              // initial-default (spec v3 semantics), else null
-              cf.initialDefault.map(lit).getOrElse(lit(null))
-                .cast(SparkSchemaConverter.toSparkType(cf.fieldType)).as(cf.name)
-          }
+    val pairs = tasks.flatMap(t => t.deleteFiles.map(_ -> t.file))
+    val positioned = withPositions || pairs.nonEmpty
+    val parts = tasks.groupBy(_.schemaId).toSeq.sortBy(_._1).map { case (schemaId, group) =>
+      val writeSchema = meta.schemaById(schemaId).getOrElse(current)
+      val raw = ManifestFileIndex.read(spark, group.map(_.file),
+        SparkSchemaConverter.toSpark(writeSchema), if (positioned) Some("__file") else None)
+      // field-id projection: current field -> column name at write time
+      val byId = writeSchema.fields.map(f => f.id -> f).toMap
+      val projection = current.fields.map { cf =>
+        byId.get(cf.id) match {
+          case Some(wf) =>
+            col(wf.name).cast(SparkSchemaConverter.toSparkType(cf.fieldType)).as(cf.name)
+          case None =>
+            // column added after these files were written: rows read the
+            // initial-default (spec v3 semantics), else null
+            cf.initialDefault.map(lit).getOrElse(lit(null))
+              .cast(SparkSchemaConverter.toSparkType(cf.fieldType)).as(cf.name)
         }
-        val posCols =
-          if (!withPositions) Nil
-          else Seq(normPath(col("_metadata.file_path")).as("__file"),
-            col("_metadata.row_index").as("__pos"))
-        raw.select(projection ++ posCols: _*)
       }
-      val unioned = parts.reduce(_ unionAll _)
-      if (withPositions) applyDeletesPositioned(spark, unioned, delGroup.head.deleteFiles)
-      else applyDeletes(spark, unioned, delGroup.head.deleteFiles)
+      val posCols =
+        if (!positioned) Nil
+        else Seq(col("__file"), col("_metadata.row_index").as("__pos"))
+      raw.select(projection ++ posCols: _*)
     }
-    deleteGroups.reduce(_ unionAll _)
+    val deleted = applyDeletes(spark, parts.reduce(_ unionAll _), pairs)
+    if (positioned && !withPositions) deleted.drop("__file", "__pos") else deleted
   }
 
   /** Rows of `tasks` matching the scan predicates, with live MOR deletes
-    * applied, as current-schema columns plus `__file` (the MANIFEST-form
-    * source path, not Spark's rendered form) and `__pos`. The input to a
-    * merge-on-read DELETE/UPDATE: only matched (file, pos) pairs and row
-    * content ever leave the scan — no data file is rewritten. */
+    * applied, as current-schema columns plus `__file` (the manifest path)
+    * and `__pos`. The input to a merge-on-read DELETE/UPDATE: only matched
+    * (file, pos) pairs and row content ever leave the scan — no data file
+    * is rewritten. */
   private[graft] def matchedRowsWithPositions(spark: SparkSession,
                                               tasks: Seq[FileScanTask],
                                               extraCondition: Option[Column] = None): DataFrame = {
     val all = materializeTasks(spark, tasks, withPositions = true)
     val predFiltered = predicates.foldLeft(all)((d, p) => d.filter(predicateToColumn(p)))
-    val filtered = extraCondition.foldLeft(predFiltered)(_ filter _)
-    // translate the rendered path back to the manifest-form path so the
-    // recorded position deletes are spec-shaped (scheme-slash variance!)
-    import spark.implicits._
-    val mapping = tasks.map(t => (normPathStr(t.filePath), t.filePath))
-      .distinct.toDF("__file", "__mpath")
-    filtered.join(broadcast(mapping), Seq("__file"))
-      .drop("__file").withColumnRenamed("__mpath", "__file")
+    extraCondition.foldLeft(predFiltered)(_ filter _)
   }
 
   private[graft] def predicateToColumn(p: ScanPredicate): Column = p match {
@@ -307,89 +302,93 @@ final class TableScan(
     case InPred(c, vs) => col(c).isin(vs.map(lit(_)): _*)
   }
 
-  /** Merge-on-read: equality deletes anti-join on their identifier columns
-    * (grouped by equality-ID set — two delete files keyed on different
-    * columns each get their own anti-join); position deletes anti-join on
-    * (file, row ordinal) via metadata columns. Small delete sets broadcast;
-    * large ones fall back to a shuffled anti-join so a big delete set never
-    * OOMs the driver. The reference reads (but never writes) delete files. */
+  /** Merge-on-read over data carrying `__file` / `__pos`, given the planned
+    * (delete file, data file) pairs. Equality deletes anti-join on
+    * (`__file`, identifier columns), one anti-join per equality-ID set;
+    * position deletes and deletion vectors share one anti-join on
+    * (`__file`, `__pos`). A delete side at most 32 MB after expansion to
+    * its pairs broadcasts; a larger one takes a shuffled anti-join so a big
+    * delete set never OOMs the driver. The reference reads (but never
+    * writes) delete files. */
   private val BroadcastDeleteBytes = 32L * 1024 * 1024
 
   private def applyDeletes(spark: SparkSession, data: DataFrame,
-                           deletes: Seq[DataFile]): DataFrame = {
-    if (deletes.isEmpty) return data
-    val withMeta =
-      if (deletes.forall(_.content != 1)) data
-      else data.withColumn("__file", normPath(col("_metadata.file_path")))
-        .withColumn("__pos", col("_metadata.row_index"))
-    applyDeletesPositioned(spark, withMeta, deletes).drop("__file", "__pos")
-  }
-
-  /** Delete application over data that already carries normalized `__file`
-    * / `__pos` columns (or needs none: no position deletes present). */
-  private def applyDeletesPositioned(spark: SparkSession, data: DataFrame,
-                                     deletes: Seq[DataFile]): DataFrame = {
-    if (deletes.isEmpty) return data
+                           pairs: Seq[(DataFile, DataFile)]): DataFrame = {
+    import spark.implicits._
     val current = table.metadata.currentSchema
-    def maybeBroadcast(df: DataFrame, files: Seq[DataFile]): DataFrame =
-      if (files.map(_.fileSizeInBytes).sum <= BroadcastDeleteBytes) broadcast(df) else df
-    var out = data
-    for ((ids, group) <- deletes.filter(_.content == 2).groupBy(_.equalityIds.toSet)) {
-      val idCols = ids.toSeq.sorted.flatMap(id => current.fieldById(id)).map(_.name)
-      if (idCols.nonEmpty) {
-        // Iceberg equality deletes treat NULL as a value: a delete row with
-        // a null key hides null-key data rows. SQL equality would never
-        // match them, so the anti-join must be null-safe (<=>) per column.
-        val delDf = spark.read.parquet(group.map(_.filePath): _*)
-          .select(idCols.map(c => col(c).as(s"__d_$c")): _*)
-        val cond = idCols.map(c => out(c) <=> delDf(s"__d_$c")).reduce(_ && _)
-        out = out.join(maybeBroadcast(delDf, group), cond, "left_anti")
+    def sized(df: DataFrame, bytes: Long): DataFrame =
+      if (bytes <= BroadcastDeleteBytes) broadcast(df) else df
+    val (eqPairs, posPairs) = pairs.partition(_._1.content == 2)
+    val eqApplied = eqPairs.groupBy(_._1.equalityIds.toSet).toSeq.foldLeft(data) {
+      case (out, (ids, group)) =>
+        val idFields = ids.toSeq.sorted.flatMap(id => current.fieldById(id))
+        if (idFields.isEmpty) out
+        else {
+          val scope = group.map { case (d, f) => (d.filePath, f.filePath) }.distinct
+            .toDF("__delfile", "__dfile")
+          // each delete row is repeated once per data file it applies to
+          val keys = ManifestFileIndex.read(spark, group.map(_._1).distinctBy(_.filePath),
+              SparkSchemaConverter.toSpark(Schema(0, idFields)), Some("__delfile"))
+            .join(broadcast(scope), "__delfile")
+            .select(col("__dfile") +: idFields.map(f => col(f.name).as(s"__d_${f.name}")): _*)
+          // Iceberg equality deletes treat NULL as a value: a delete row with
+          // a null key hides null-key data rows. SQL equality would never
+          // match them, so the anti-join must be null-safe (<=>) per column.
+          val cond = idFields.map(f => out(f.name) <=> keys(s"__d_${f.name}"))
+            .foldLeft(out("__file") === keys("__dfile"))(_ && _)
+          out.join(sized(keys, group.map(_._1.fileSizeInBytes).sum), cond, "left_anti")
+        }
+    }
+    if (posPairs.isEmpty) return eqApplied
+    val (dvPairs, filePairs) = posPairs.partition(_._1.isDeletionVector)
+    val posFiles = filePairs.map(_._1).distinctBy(_.filePath)
+    // position delete files carry (file_path, pos) in whatever URI form
+    // their writer used; the planned pairs map them to the manifest path.
+    // Delete-side columns are renamed so a table column named
+    // "file_path"/"pos" can never collide.
+    val fileDel =
+      if (posFiles.isEmpty) None
+      else {
+        val scope = filePairs.map { case (d, f) => (d.filePath, normPathStr(f.filePath), f.filePath) }
+          .distinct.toDF("__delfile", "__dref", "__dfile")
+        Some(ManifestFileIndex.read(spark, posFiles, TableScan.PositionDeleteSchema, Some("__delfile"))
+          .select(col("__delfile"), normPath(col("file_path")).as("__dref"), col("pos").as("__dpos"))
+          .join(broadcast(scope), Seq("__delfile", "__dref"))
+          .select("__dfile", "__dpos"))
       }
-    }
-    val (dvs, posDeletes) = deletes.filter(_.content == 1).partition(_.isDeletionVector)
-    if (posDeletes.nonEmpty || dvs.nonEmpty) {
-      // position delete files carry (file_path, pos); renamed on the delete
-      // side so a table column named "file_path"/"pos" can never collide
-      val parquetDel =
-        if (posDeletes.isEmpty) None
-        else Some(spark.read.parquet(posDeletes.map(_.filePath): _*)
-          .select(normPath(col("file_path")).as("__dfile"), col("pos").as("__dpos")))
-      val dvDel = if (dvs.isEmpty) None else Some(dvPositions(spark, dvs))
-      val delDf = (parquetDel.toSeq ++ dvDel.toSeq).reduce(_ unionAll _)
-      // broadcast sizing: a DV blob expands ~8-30× from compressed bitmap
-      // to (string, long) rows, so its byte budget is its content size ×32
-      val weighted = posDeletes.map(_.fileSizeInBytes).sum +
-        dvs.map(d => d.contentSizeInBytes.getOrElse(d.fileSizeInBytes) * 32).sum
-      val sized = if (weighted <= BroadcastDeleteBytes) broadcast(delDf) else delDf
-      out = out.join(sized,
-          out("__file") === delDf("__dfile") && out("__pos") === delDf("__dpos"),
-          "left_anti")
-    }
-    out
+    val dvDel = if (dvPairs.isEmpty) None else Some(dvPositions(spark, dvPairs))
+    val delDf = (fileDel.toSeq ++ dvDel.toSeq).reduce(_ unionAll _)
+    // broadcast sizing: a DV blob expands ~8-30× from compressed bitmap
+    // to (string, long) rows, so its byte budget is its content size ×32
+    val bytes = posFiles.map(_.fileSizeInBytes).sum +
+      dvPairs.map { case (d, _) => d.contentSizeInBytes.getOrElse(d.fileSizeInBytes) * 32 }.sum
+    eqApplied.join(sized(delDf, bytes),
+      eqApplied("__file") === delDf("__dfile") && eqApplied("__pos") === delDf("__dpos"),
+      "left_anti")
   }
 
-  /** Expand deletion-vector blobs (v3) into `(__dfile, __dpos)` rows. The
-    * blob reads happen INSIDE a Spark job — each task does one ranged read
-    * of its blob and iterates the roaring bitmap, so a scan over many
-    * DV'd files never serializes blob IO on the driver and expanded
-    * positions never materialize driver-side. */
-  private def dvPositions(spark: SparkSession, dvs: Seq[DataFile]): DataFrame = {
+  /** Expand deletion-vector blobs (v3) into `(__dfile, __dpos)` rows, each
+    * only for the data file planning paired it with. The blob reads happen
+    * INSIDE a Spark job — each task does one ranged read of its blob and
+    * iterates the roaring bitmap, so a scan over many DV'd files never
+    * serializes blob IO on the driver and expanded positions never
+    * materialize driver-side. */
+  private def dvPositions(spark: SparkSession, dvPairs: Seq[(DataFile, DataFile)]): DataFrame = {
     import graft.puffin.{DeletionVector, Puffin}
     import spark.implicits._
     val confSer = new SerializableHadoopConf(table.hadoopConf)
-    val descs = dvs.map(d => (d.filePath, d.contentOffset.getOrElse(0L),
-      d.contentSizeInBytes.getOrElse(d.fileSizeInBytes),
-      normPathStr(d.referencedDataFile.getOrElse(""))))
+    val descs = dvPairs.map { case (d, f) => (d.filePath, d.contentOffset.getOrElse(0L),
+      d.contentSizeInBytes.getOrElse(d.fileSizeInBytes), f.filePath) }.distinct
     spark.createDataset(descs)
       .repartition(math.min(descs.size, spark.sparkContext.defaultParallelism))
-      .flatMap { case (path, off, len, ref) =>
+      .flatMap { case (path, off, len, dataPath) =>
         val p = new Path(path)
         val fs = p.getFileSystem(confSer.value)
         val bitmap = DeletionVector.deserialize(Puffin.readBlob(fs, p, off, len))
         val it = bitmap.getLongIterator
         new Iterator[(String, Long)] {
           def hasNext: Boolean = it.hasNext
-          def next(): (String, Long) = (ref, it.next())
+          def next(): (String, Long) = (dataPath, it.next())
         }
       }.toDF("__dfile", "__dpos")
   }
@@ -406,7 +405,7 @@ final class TableScan(
     val tasks = planFilesDistributed(spark)
     val all = materializeTasks(spark, tasks, withPositions = true)
     val filtered = predicates.foldLeft(all)((d, p) => d.filter(predicateToColumn(p)))
-    val mapping = tasks.map(t => (normPathStr(t.filePath),
+    val mapping = tasks.map(t => (t.filePath,
         t.file.firstRowId.map(java.lang.Long.valueOf).orNull))
       .distinct.toDF("__file", "__first_row_id")
     filtered.join(broadcast(mapping), Seq("__file"), "left")
@@ -414,10 +413,10 @@ final class TableScan(
       .drop("__file", "__pos", "__first_row_id")
   }
 
-  /** URI scheme-slash normalization: Spark's `_metadata.file_path` renders
-    * local paths as "file:///x" while Hadoop Path.toString (the manifest
-    * form a spec-correct delete writer records) is "file:/x" — normalize
-    * both sides or position deletes silently stop applying. */
+  /** URI scheme-slash normalization: a position delete file's `file_path`
+    * may name a local file as "file:///x" while Hadoop Path.toString (the
+    * manifest form) is "file:/x" — normalize both sides or position
+    * deletes silently stop applying. */
   private def normPath(c: Column): Column = regexp_replace(c, "^file:/+", "file:/")
   private def normPathStr(s: String): String = s.replaceFirst("^file:/+", "file:/")
 
@@ -439,6 +438,11 @@ final class TableScan(
 object TableScan {
   /** Data-manifest count beyond which planning fans out as a Spark job. */
   val DistributedPlanThreshold = 64
+
+  /** The columns of a position delete file that a scan reads. */
+  private val PositionDeleteSchema = org.apache.spark.sql.types.StructType(Seq(
+    org.apache.spark.sql.types.StructField("file_path", org.apache.spark.sql.types.StringType),
+    org.apache.spark.sql.types.StructField("pos", org.apache.spark.sql.types.LongType)))
 }
 
 /** Manifest-level file pruning, separated from [[TableScan]] so the

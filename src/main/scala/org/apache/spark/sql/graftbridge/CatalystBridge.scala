@@ -5,14 +5,21 @@ import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic
 
-/** Two more `private[sql]` re-exports (see [[ColumnBridge]] for why this
+/** More `private[sql]` re-exports (see [[ColumnBridge]] for why this
   * file lives in the spark namespace): materializing a resolved logical
-  * plan as a DataFrame (the MERGE source), and converting a Catalyst
+  * plan as a DataFrame (the MERGE source, manifest-listed file reads),
+  * a nullable copy of a file schema, and converting a Catalyst
   * literal's internal value (UTF8String, day-int, micros-long) to the
   * external Scala value our scan predicates carry. */
 object CatalystBridge {
   def dataFrame(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** A file relation's data schema with every field nullable, as
+    * `DataFrameReader` builds it (private[spark] `asNullable`): a file
+    * need not honour the table's required flags. */
+  def asNullable(schema: org.apache.spark.sql.types.StructType): org.apache.spark.sql.types.StructType =
+    schema.asNullable
 
   def literalToScala(value: Any, dataType: org.apache.spark.sql.types.DataType): Any =
     CatalystTypeConverters.convertToScala(value, dataType)

@@ -2,7 +2,7 @@ package graft
 
 import graft.catalog.MemoryCatalog
 import graft.manifest.{DataFile, ManifestEntry, ManifestFile, Manifests}
-import graft.meta.{Snapshot, SnapshotLogEntry, SnapshotRef}
+import graft.meta.{PartitionField, PartitionSpec, Snapshot, SnapshotLogEntry, SnapshotRef}
 import graft.table.Table
 import graft.types.{ILong, IString, NestedField, Schema}
 import org.apache.hadoop.fs.Path
@@ -137,5 +137,54 @@ class MorSpec extends AnyFunSuite {
 
     assert(tbl.toDF(spark).select("id").collect().map(_.getLong(0)).sorted.toSeq ==
       Seq(10L, 12L))
+  }
+
+  test("position delete scoping: a path live again at a later sequence keeps its rows") {
+    import spark.implicits._
+    val cat = new MemoryCatalog()
+    val tbl = cat.createTable("mor_pos_readd", schema)
+    tbl.append(Seq(10L -> "x", 11L -> "y", 12L -> "z")
+      .toDF("id", "name").coalesce(1)) // seq 1: file F
+    tbl.append(Seq(20L -> "u", 21L -> "v", 22L -> "w")
+      .toDF("id", "name").coalesce(1)) // seq 2: file G
+    def ids() = tbl.toDF(spark).select("id").collect().map(_.getLong(0)).sorted.toSeq
+    val byFirstId = tbl.scan().planFiles().map(t =>
+      spark.read.parquet(t.filePath).select("id").collect().map(_.getLong(0)).min -> t.filePath).toMap
+    val (f, g) = (byFirstId(10L), byFirstId(20L))
+
+    // one position delete file naming rows of both F and G (seq 3)
+    val posDel = writeDeleteParquet(tbl, "pos-fg",
+      Seq((f, 1L), (g, 0L)).toDF("file_path", "pos"), content = 1, eqIds = Nil)
+    commitDeletes(cat, tbl, Seq(posDel))
+    assert(ids() == Seq(10L, 12L, 21L, 22L))
+
+    // F leaves the table (seq 4) and its path is added back (seq 5): the
+    // seq-3 delete is older than F's new entry, so it no longer applies to
+    // F, while it still hides G's row
+    tbl.deleteWhere(spark, "id >= 10 AND id <= 12")
+    assert(ids() == Seq(21L, 22L))
+    tbl.addFiles(spark, Seq(f))
+    assert(tbl.scan().planFiles().exists(t => t.filePath.endsWith(new Path(f).getName) &&
+      t.deleteFiles.isEmpty))
+    assert(ids() == Seq(10L, 11L, 12L, 21L, 22L))
+  }
+
+  test("equality delete with a partition tuple leaves other partitions' keys alone") {
+    import spark.implicits._
+    val cat = new MemoryCatalog()
+    val pschema = Schema(0, Seq(
+      NestedField(1, "id", ILong, required = false),
+      NestedField(2, "p", IString, required = false)))
+    val tbl = cat.createTable("mor_eq_part", pschema,
+      partitionSpec = PartitionSpec(0, Seq(PartitionField(2, 1000, "p", "identity"))))
+    tbl.append(Seq(1L -> "a", 2L -> "a", 1L -> "b", 2L -> "b").toDF("id", "p")) // seq 1
+    val aPartition = tbl.scan().planFiles().map(_.file.partition)
+      .find(_.values.toSeq == Seq("a")).get
+    // delete id 1 within partition p=a only (seq 2)
+    val del = writeDeleteParquet(tbl, "eq-a", Seq(1L).toDF("id"), content = 2, eqIds = Seq(1))
+      .copy(partition = aPartition)
+    commitDeletes(cat, tbl, Seq(del))
+    assert(tbl.toDF(spark).as[(Long, String)].collect().toSet ==
+      Set(2L -> "a", 1L -> "b", 2L -> "b"))
   }
 }

@@ -187,4 +187,20 @@ class TableSpec extends AnyFunSuite {
     val xs = t.toDF(spark).collect().map(_.getInt(0)).toSeq
     assert(xs == Seq(3, 2, 1)) // one file, sorted desc within it
   }
+
+  test("a location holding glob characters appends, deletes on read and reads back") {
+    val wh = java.nio.file.Files.createTempDirectory("wh[1]").toString
+    val cat = new MemoryCatalog(warehouse = wh)
+    val t = cat.createTable("globbed", abSchema,
+      properties = Map("write.delete.mode" -> "merge-on-read"))
+    t.append(Seq(Map("a" -> 1, "b" -> "one"), Map("a" -> 2, "b" -> "two"),
+      Map("a" -> 3, "b" -> "three")), spark)
+    assert(t.scan().toDF(spark).count() == 3)
+    t.deleteWhere(spark, "a = 2")
+    assert(t.refresh().scan().planFiles().exists(_.deleteFiles.nonEmpty))
+    assert(t.scan().toDF(spark).collect().map(_.getInt(0)).sorted.toSeq == Seq(1, 3))
+    graft.spark.GraftSparkCatalog.register(spark, "globcat", cat)
+    assert(spark.table("globcat.default.globbed").collect().map(_.getInt(0)).sorted.toSeq ==
+      Seq(1, 3))
+  }
 }
