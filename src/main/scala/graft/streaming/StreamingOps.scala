@@ -996,9 +996,8 @@ object StreamingOps extends Serializable {
               .map(id => table.metadata.currentSchema.fieldById(id).get)
             val idCols = idFields.map(_.name)
             val delFiles = newDeletes.values.flatten.toSeq.distinctBy(_.filePath)
-            val keyFrame = graft.table.ManifestFileIndex.read(spark, delFiles,
-                SparkSchemaConverter.toSpark(graft.types.Schema(0, idFields)))
-              .select(idCols.map(c => col(c).as(s"__d_$c")): _*).distinct()
+            val keyFrame = scanS.equalityKeys(spark, delFiles,
+              tasksS.flatMap(_.deleteSchemaIds).toMap, idFields).distinct()
             val keys =
               if (delFiles.map(_.fileSizeInBytes).sum <= 32L * 1024 * 1024)
                 broadcast(keyFrame)

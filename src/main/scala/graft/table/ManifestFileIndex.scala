@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, Bound
 import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, LogicalRelation, PartitionDirectory}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.graftbridge.CatalystBridge
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.sql.types.{DataType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** A Spark file index over files the manifests already list, with the
@@ -17,37 +17,45 @@ import org.apache.spark.unsafe.types.UTF8String
   * glob or lists a directory for it, so a location holding `[`, `*` or
   * `?` reads like any other.
   *
-  * With `fileColumn`, each file is its own partition whose single string
-  * value is the file's manifest path: every row carries the exact path
-  * its delete files name, as a per-file constant rather than a
-  * per-row rewrite of `_metadata.file_path`. */
-private[graft] final class ManifestFileIndex(files: Seq[DataFile], fileColumn: Option[String])
+  * With `constants`, each file is its own partition whose values are the
+  * file's constants (its manifest path, its data sequence number, …):
+  * every row carries them as per-file values rather than per-row
+  * rewrites of `_metadata`. */
+private[graft] final class ManifestFileIndex(files: Seq[DataFile],
+                                             constants: Seq[ManifestFileIndex.Constant])
     extends FileIndex {
 
   private val statuses = files.map(f =>
     new FileStatus(f.fileSizeInBytes, false, 0, 0, 0, new Path(f.filePath)))
 
   override val partitionSchema: StructType =
-    StructType(fileColumn.toSeq.map(StructField(_, StringType, nullable = false)))
+    StructType(constants.map(c => StructField(c.name, c.dataType, c.nullable)))
+
+  private lazy val directories = files.zip(statuses).map { case (f, s) =>
+    PartitionDirectory(InternalRow.fromSeq(constants.map(c => c.value(f) match {
+      case v: String => UTF8String.fromString(v)
+      case v => v
+    })), Array(s))
+  }
 
   override def rootPaths: Seq[Path] = statuses.map(_.getPath)
 
   override def listFiles(partitionFilters: Seq[Expression],
                          dataFilters: Seq[Expression]): Seq[PartitionDirectory] =
-    if (fileColumn.isEmpty) Seq(PartitionDirectory(InternalRow.empty, statuses.toArray))
+    if (constants.isEmpty) Seq(PartitionDirectory(InternalRow.empty, statuses.toArray))
     else {
       // Spark does not re-check partition filters after the scan, so the
-      // index must apply them; the one partition column is ordinal 0
+      // index must apply them, binding each column to its ordinal
       val keep = partitionFilters.reduceOption(And).map { cond =>
         val p = Predicate.createInterpreted(cond.transform {
-          case _: AttributeReference => BoundReference(0, StringType, nullable = false)
+          case a: AttributeReference =>
+            val i = partitionSchema.fieldIndex(a.name)
+            BoundReference(i, partitionSchema(i).dataType, partitionSchema(i).nullable)
         })
         p.initialize(0)
         p
       }
-      files.zip(statuses).map { case (f, s) =>
-        PartitionDirectory(InternalRow(UTF8String.fromString(f.filePath)), Array(s))
-      }.filter(d => keep.forall(_.eval(d.values)))
+      directories.filter(d => keep.forall(_.eval(d.values)))
     }
 
   override def inputFiles: Array[String] = files.map(_.filePath).toArray
@@ -56,12 +64,17 @@ private[graft] final class ManifestFileIndex(files: Seq[DataFile], fileColumn: O
 }
 
 private[graft] object ManifestFileIndex {
+  /** A per-file constant column: every row of a file reads `value(file)`
+    * (a `String`, `Long` or `Int`, or null when `nullable`). */
+  final case class Constant(name: String, dataType: DataType, value: DataFile => Any,
+                            nullable: Boolean = false)
+
   /** Parquet `files` read as `schema` (columns bind by name), plus the
-    * `fileColumn` path column when given. Hidden `_metadata` columns
-    * (`row_index`, …) resolve as on any parquet read. */
+    * `constants` columns. Hidden `_metadata` columns (`row_index`, …)
+    * resolve as on any parquet read. */
   def read(spark: SparkSession, files: Seq[DataFile], schema: StructType,
-           fileColumn: Option[String] = None): DataFrame = {
-    val index = new ManifestFileIndex(files, fileColumn)
+           constants: Seq[Constant] = Nil): DataFrame = {
+    val index = new ManifestFileIndex(files, constants)
     val relation = HadoopFsRelation(index, index.partitionSchema, CatalystBridge.asNullable(schema),
       bucketSpec = None, new ParquetFileFormat, Map.empty)(spark)
     CatalystBridge.dataFrame(spark, LogicalRelation(relation))

@@ -23,10 +23,14 @@ final case class InPred(column: String, values: Seq[Any]) extends ScanPredicate
 /** One unit of scan work: a data file + the delete files that apply to it
   * (ref `scan.rs:82-109`). Spec scoping: an equality delete applies only to
   * data files with STRICTLY smaller data sequence number (rows re-inserted
-  * after the delete survive); a position delete applies at equal-or-smaller. */
+  * after the delete survive); a position delete applies at equal-or-smaller.
+  * `deleteSchemaIds` maps each equality-delete file's path to the schema
+  * that wrote it (its delete manifest's), so its key columns resolve by
+  * field id like a data file's. */
 final case class FileScanTask(file: DataFile, schemaId: Int,
                               sequenceNumber: Long, deleteFiles: Seq[DataFile],
-                              specId: Int = 0) {
+                              specId: Int = 0,
+                              deleteSchemaIds: Map[String, Int] = Map.empty) {
   def filePath: String = file.filePath
   def recordCount: Long = file.recordCount
 }
@@ -96,24 +100,36 @@ final class TableScan(
     // Manifests are read in parallel: planning a snapshot with thousands of
     // manifests (one per commit at minimum) must not serialize on the
     // driver's metadata round-trips — the per-manifest work is independent.
-    // (delete file, its data sequence number)
-    val deleteEntries: Seq[(DataFile, Long)] = deleteManifests.par.flatMap { mf =>
-      Manifests.readManifest(fs, new Path(mf.manifestPath)).filter(_.isLive)
-        .map(e => (e.dataFile, e.sequenceNumber))
-    }.seq
-    def applicableDeletes(dataFile: DataFile, dataSeq: Long): Seq[DataFile] =
-      deleteEntries.collect {
-        case (d, delSeq) if ScanPruning.deleteApplies(d, delSeq, dataFile, dataSeq) => d
-      }
+    val deletes = readDeleteEntries(fs, deleteManifests)
     dataManifests.par.flatMap { mf =>
       val spec = meta.partitionSpecById(mf.partitionSpecId).getOrElse(PartitionSpec.Unpartitioned)
       val writeSchema = meta.schemaById(mf.schemaId).getOrElse(meta.currentSchema)
       Manifests.readManifest(fs, new Path(mf.manifestPath))
         .filter(_.isLive)
-        .map(e => (FileScanTask(e.dataFile, mf.schemaId, e.sequenceNumber,
-          applicableDeletes(e.dataFile, e.sequenceNumber), mf.partitionSpecId),
+        .map(e => (deletes.task(e.dataFile, mf.schemaId, e.sequenceNumber, mf.partitionSpecId),
           ScanPruning.keepFileEvolved(predicates, e.dataFile, spec, writeSchema, meta.currentSchema)))
     }.seq
+  }
+
+  /** The live entries of the delete manifests: (delete file, its data
+    * sequence number, the schema id that wrote it). */
+  private final class DeleteEntries(entries: Seq[(DataFile, Long, Int)]) {
+    /** A task for `dataFile` carrying exactly the deletes that apply to it. */
+    def task(dataFile: DataFile, schemaId: Int, dataSeq: Long, specId: Int): FileScanTask = {
+      val applicable = entries.filter { case (d, delSeq, _) =>
+        ScanPruning.deleteApplies(d, delSeq, dataFile, dataSeq) }
+      FileScanTask(dataFile, schemaId, dataSeq, applicable.map(_._1), specId,
+        applicable.collect { case (d, _, sid) if d.content == 2 => d.filePath -> sid }.toMap)
+    }
+  }
+
+  private def readDeleteEntries(fs: org.apache.hadoop.fs.FileSystem,
+                                deleteManifests: Seq[graft.manifest.ManifestFile]): DeleteEntries = {
+    import scala.collection.parallel.CollectionConverters._
+    new DeleteEntries(deleteManifests.par.flatMap { mf =>
+      Manifests.readManifest(fs, new Path(mf.manifestPath)).filter(_.isLive)
+        .map(e => (e.dataFile, e.sequenceNumber, mf.schemaId))
+    }.seq)
   }
 
   /**
@@ -161,7 +177,6 @@ final class TableScan(
    */
   def planFilesDistributed(spark: SparkSession,
                            threshold: Int = TableScan.DistributedPlanThreshold): Seq[FileScanTask] = {
-    import scala.collection.parallel.CollectionConverters._
     val snap = snapshot.getOrElse(return Nil)
     val conf = table.hadoopConf
     val listPath = new Path(snap.manifestList)
@@ -180,14 +195,7 @@ final class TableScan(
     if (dataManifests.size < threshold) return planFiles()
 
     // delete manifests are few relative to data manifests; driver-parallel
-    val deleteEntries: Seq[(DataFile, Long)] = deleteManifests.par.flatMap { mf =>
-      Manifests.readManifest(fs, new Path(mf.manifestPath)).filter(_.isLive)
-        .map(e => (e.dataFile, e.sequenceNumber))
-    }.seq
-    def applicableDeletes(dataFile: DataFile, dataSeq: Long): Seq[DataFile] =
-      deleteEntries.collect {
-        case (d, delSeq) if ScanPruning.deleteApplies(d, delSeq, dataFile, dataSeq) => d
-      }
+    val deletes = readDeleteEntries(fs, deleteManifests)
 
     // only immutable, serializable state enters the closure
     val preds = predicates
@@ -211,7 +219,7 @@ final class TableScan(
       }
       .collect()
     kept.toSeq.map { case (schemaId, specId, seqNum, df) =>
-      FileScanTask(df, schemaId, seqNum, applicableDeletes(df, seqNum), specId)
+      deletes.task(df, schemaId, seqNum, specId)
     }
   }
 
@@ -236,28 +244,39 @@ final class TableScan(
     * inference — projected to the current schema by field id, then
     * unioned. Deletes apply as data, not plan shape: one anti-join on
     * (`__file`, `__pos`) for every position delete and deletion vector,
-    * one per equality-ID set, each delete side restricted to exactly the
-    * (delete file, data file) pairs planning put in `deleteFiles`. So the
-    * plan has the same size for 1 or 1000 delete sets. */
+    * one per equality-ID set, each scoped to exactly the (delete file,
+    * data file) pairs planning put in `deleteFiles`. So the plan has the
+    * same size for 1 or 1000 delete sets, and each delete row is read
+    * once however many data files it applies to. */
   private[graft] def materializeTasks(spark: SparkSession,
                                       tasks: Seq[FileScanTask],
                                       withPositions: Boolean = false): DataFrame = {
+    import ManifestFileIndex.Constant
+    import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
     val meta = table.metadata
     val current = meta.currentSchema
     val currentSpark = SparkSchemaConverter.toSpark(current)
     if (tasks.isEmpty) {
       val empty =
         if (!withPositions) currentSpark
-        else currentSpark.add("__file", org.apache.spark.sql.types.StringType)
-          .add("__pos", org.apache.spark.sql.types.LongType)
+        else currentSpark.add("__file", StringType).add("__pos", LongType)
       return spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), empty)
     }
-    val pairs = tasks.flatMap(t => t.deleteFiles.map(_ -> t.file))
-    val positioned = withPositions || pairs.nonEmpty
+    val (eqPairs, posPairs) = tasks.flatMap(t => t.deleteFiles.map(_ -> t)).partition(_._1.content == 2)
+    val positioned = withPositions || posPairs.nonEmpty
+    // equality scoping rides on per-file constants: the data sequence
+    // number and an id for the partition tuple (see applyEqualityDeletes)
+    val partIds = (tasks.map(_.file.partition) ++ eqPairs.map(_._1.partition)).distinct.zipWithIndex.toMap
+    val seqByPath = tasks.map(t => t.filePath -> t.sequenceNumber).toMap
+    val constants =
+      (if (positioned) Seq(Constant("__file", StringType, _.filePath)) else Nil) ++
+        (if (eqPairs.isEmpty) Nil
+         else Seq(Constant("__seq", LongType, f => seqByPath(f.filePath)),
+           Constant("__part", IntegerType, f => partIds(f.partition))))
     val parts = tasks.groupBy(_.schemaId).toSeq.sortBy(_._1).map { case (schemaId, group) =>
       val writeSchema = meta.schemaById(schemaId).getOrElse(current)
       val raw = ManifestFileIndex.read(spark, group.map(_.file),
-        SparkSchemaConverter.toSpark(writeSchema), if (positioned) Some("__file") else None)
+        SparkSchemaConverter.toSpark(writeSchema), constants)
       // field-id projection: current field -> column name at write time
       val byId = writeSchema.fields.map(f => f.id -> f).toMap
       val projection = current.fields.map { cf =>
@@ -271,12 +290,15 @@ final class TableScan(
               .cast(SparkSchemaConverter.toSparkType(cf.fieldType)).as(cf.name)
         }
       }
-      val posCols =
-        if (!positioned) Nil
-        else Seq(col("__file"), col("_metadata.row_index").as("__pos"))
-      raw.select(projection ++ posCols: _*)
+      val posCols = if (!positioned) Nil else Seq(col("_metadata.row_index").as("__pos"))
+      raw.select(projection ++ constants.map(c => col(c.name)) ++ posCols: _*)
     }
-    val deleted = applyDeletes(spark, parts.reduce(_ unionAll _), pairs)
+    val data = parts.reduce(_ unionAll _)
+    val eqApplied = eqPairs.groupBy(_._1.equalityIds.toSet).toSeq.sortBy(_._1.toSeq.sorted.mkString(","))
+      .foldLeft(data) { case (out, (ids, group)) =>
+        applyEqualityDeletes(spark, out, ids, group, tasks, partIds)
+      }.drop("__seq", "__part")
+    val deleted = applyPositionDeletes(spark, eqApplied, posPairs)
     if (positioned && !withPositions) deleted.drop("__file", "__pos") else deleted
   }
 
@@ -302,45 +324,89 @@ final class TableScan(
     case InPred(c, vs) => col(c).isin(vs.map(lit(_)): _*)
   }
 
-  /** Merge-on-read over data carrying `__file` / `__pos`, given the planned
-    * (delete file, data file) pairs. Equality deletes anti-join on
-    * (`__file`, identifier columns), one anti-join per equality-ID set;
-    * position deletes and deletion vectors share one anti-join on
-    * (`__file`, `__pos`). A delete side at most 32 MB after expansion to
-    * its pairs broadcasts; a larger one takes a shuffled anti-join so a big
-    * delete set never OOMs the driver. The reference reads (but never
-    * writes) delete files. */
+  /** A delete side at most 32 MB (counted once per delete row) broadcasts;
+    * a larger one takes a shuffled anti-join so a big delete set never
+    * OOMs the driver. The reference reads (but never writes) delete files. */
   private val BroadcastDeleteBytes = 32L * 1024 * 1024
 
-  private def applyDeletes(spark: SparkSession, data: DataFrame,
-                           pairs: Seq[(DataFile, DataFile)]): DataFrame = {
+  private def sized(df: DataFrame, bytes: Long): DataFrame =
+    if (bytes <= BroadcastDeleteBytes) broadcast(df) else df
+
+  /** Equality deletes of one equality-ID set over data carrying `__seq`
+    * and `__part`, as one null-safe anti-join that reads each delete file
+    * once. Scoping is data, not plan shape: delete file D carries the
+    * highest data sequence number among the files planning paired it with
+    * and, when D has a partition tuple, that tuple's id; a data row is
+    * hidden only when its file's `__seq` is at most that and its `__part`
+    * matches. The sequence and partition rules of
+    * [[ScanPruning.deleteApplies]] make that exactly the planned pairs,
+    * which is checked here before the plan is built. */
+  private def applyEqualityDeletes(spark: SparkSession, data: DataFrame, ids: Set[Int],
+                                   pairs: Seq[(DataFile, FileScanTask)], tasks: Seq[FileScanTask],
+                                   partIds: Map[Map[String, String], Int]): DataFrame = {
+    import ManifestFileIndex.Constant
+    import org.apache.spark.sql.types.{IntegerType, LongType}
+    val idFields = ids.toSeq.sorted.flatMap(id => table.metadata.currentSchema.fieldById(id))
+    if (idFields.isEmpty) return data
+    val dels = pairs.map(_._1).distinctBy(_.filePath)
+    val maxSeq = pairs.groupMapReduce(_._1.filePath)(_._2.sequenceNumber)(math.max)
+    val partId = dels.map(d => d.filePath ->
+      (if (d.partition.exists(_._2.nonEmpty)) Some(partIds(d.partition)) else None)).toMap
+    // (sequence, partition id) of each data file, against which every
+    // delete file must select exactly the files planning paired it with
+    val dataKeys = tasks.distinctBy(_.filePath).map(t => (t.sequenceNumber, partIds(t.file.partition)))
+    val planned = pairs.map { case (d, t) => (d.filePath, t) }.distinctBy { case (d, t) => (d, t.filePath) }
+    def scoped(d: String, seq: Long, part: Int): Boolean =
+      seq <= maxSeq(d) && partId(d).forall(_ == part)
+    require(planned.forall { case (d, t) => scoped(d, t.sequenceNumber, partIds(t.file.partition)) } &&
+      planned.groupMapReduce(_._1)(_ => 1)(_ + _).forall { case (d, n) =>
+        dataKeys.count { case (seq, part) => scoped(d, seq, part) } == n },
+      "equality-delete pairs do not follow the sequence and partition scoping rules")
+    val keys = equalityKeys(spark, dels, tasks.flatMap(_.deleteSchemaIds).toMap, idFields, Seq(
+      Constant("__dseq", LongType, d => maxSeq(d.filePath)),
+      Constant("__dpart", IntegerType, d => partId(d.filePath).map(Int.box).orNull, nullable = true)))
+    // Iceberg equality deletes treat NULL as a value: a delete row with a
+    // null key hides null-key data rows. SQL equality would never match
+    // them, so the anti-join must be null-safe (<=>) per column.
+    val cond = idFields.map(f => data(f.name) <=> keys(s"__d_${f.name}")).reduce(_ && _) &&
+      data("__seq") <= keys("__dseq") &&
+      (keys("__dpart").isNull || keys("__dpart") === data("__part"))
+    data.join(sized(keys, dels.map(_.fileSizeInBytes).sum), cond, "left_anti")
+  }
+
+  /** The key rows of equality-delete files `dels` as `__d_<name>` columns
+    * named and typed by the current schema's `idFields`, plus the
+    * `constants` columns. Each file's key columns resolve by field id
+    * through the schema that wrote it (`schemaIds`, by path; the current
+    * schema when absent), so a renamed key column still reads its values. */
+  private[graft] def equalityKeys(spark: SparkSession, dels: Seq[DataFile],
+                                  schemaIds: Map[String, Int], idFields: Seq[NestedField],
+                                  constants: Seq[ManifestFileIndex.Constant] = Nil): DataFrame = {
+    val meta = table.metadata
+    dels.groupBy(d => schemaIds.getOrElse(d.filePath, meta.currentSchemaId)).toSeq.sortBy(_._1)
+      .map { case (schemaId, group) =>
+        val writeSchema = meta.schemaById(schemaId).getOrElse(meta.currentSchema)
+        val writeFields = idFields.map(f => writeSchema.fieldById(f.id).getOrElse(
+          throw new IllegalStateException(s"equality-delete key field ${f.id} (${f.name}) " +
+            s"is not in schema $schemaId that wrote ${group.head.filePath}")))
+        ManifestFileIndex.read(spark, group,
+            SparkSchemaConverter.toSpark(Schema(0, writeFields)), constants)
+          .select(idFields.zip(writeFields).map { case (cf, wf) =>
+            col(wf.name).cast(SparkSchemaConverter.toSparkType(cf.fieldType)).as(s"__d_${cf.name}")
+          } ++ constants.map(c => col(c.name)): _*)
+      }.reduce(_ unionAll _)
+  }
+
+  /** Position deletes and deletion vectors over data carrying `__file` /
+    * `__pos`, as one anti-join. Each delete side is restricted to the
+    * (delete file, data file) pairs planning produced: a position delete
+    * file's rows by a semi-join with those pairs, a DV by expanding it
+    * only for its paired data file. */
+  private def applyPositionDeletes(spark: SparkSession, data: DataFrame,
+                                   pairs: Seq[(DataFile, FileScanTask)]): DataFrame = {
     import spark.implicits._
-    val current = table.metadata.currentSchema
-    def sized(df: DataFrame, bytes: Long): DataFrame =
-      if (bytes <= BroadcastDeleteBytes) broadcast(df) else df
-    val (eqPairs, posPairs) = pairs.partition(_._1.content == 2)
-    val eqApplied = eqPairs.groupBy(_._1.equalityIds.toSet).toSeq.foldLeft(data) {
-      case (out, (ids, group)) =>
-        val idFields = ids.toSeq.sorted.flatMap(id => current.fieldById(id))
-        if (idFields.isEmpty) out
-        else {
-          val scope = group.map { case (d, f) => (d.filePath, f.filePath) }.distinct
-            .toDF("__delfile", "__dfile")
-          // each delete row is repeated once per data file it applies to
-          val keys = ManifestFileIndex.read(spark, group.map(_._1).distinctBy(_.filePath),
-              SparkSchemaConverter.toSpark(Schema(0, idFields)), Some("__delfile"))
-            .join(broadcast(scope), "__delfile")
-            .select(col("__dfile") +: idFields.map(f => col(f.name).as(s"__d_${f.name}")): _*)
-          // Iceberg equality deletes treat NULL as a value: a delete row with
-          // a null key hides null-key data rows. SQL equality would never
-          // match them, so the anti-join must be null-safe (<=>) per column.
-          val cond = idFields.map(f => out(f.name) <=> keys(s"__d_${f.name}"))
-            .foldLeft(out("__file") === keys("__dfile"))(_ && _)
-          out.join(sized(keys, group.map(_._1.fileSizeInBytes).sum), cond, "left_anti")
-        }
-    }
-    if (posPairs.isEmpty) return eqApplied
-    val (dvPairs, filePairs) = posPairs.partition(_._1.isDeletionVector)
+    if (pairs.isEmpty) return data
+    val (dvPairs, filePairs) = pairs.map { case (d, t) => (d, t.file) }.partition(_._1.isDeletionVector)
     val posFiles = filePairs.map(_._1).distinctBy(_.filePath)
     // position delete files carry (file_path, pos) in whatever URI form
     // their writer used; the planned pairs map them to the manifest path.
@@ -350,10 +416,13 @@ final class TableScan(
       if (posFiles.isEmpty) None
       else {
         val scope = filePairs.map { case (d, f) => (d.filePath, normPathStr(f.filePath), f.filePath) }
-          .distinct.toDF("__delfile", "__dref", "__dfile")
-        Some(ManifestFileIndex.read(spark, posFiles, TableScan.PositionDeleteSchema, Some("__delfile"))
+          .distinct
+        Some(ManifestFileIndex.read(spark, posFiles, TableScan.PositionDeleteSchema,
+            Seq(ManifestFileIndex.Constant("__delfile", org.apache.spark.sql.types.StringType, _.filePath)))
           .select(col("__delfile"), normPath(col("file_path")).as("__dref"), col("pos").as("__dpos"))
-          .join(broadcast(scope), Seq("__delfile", "__dref"))
+          .join(sized(scope.toDF("__delfile", "__dref", "__dfile"),
+            scope.map { case (a, b, c) => a.length + b.length + c.length }.sum.toLong),
+            Seq("__delfile", "__dref"))
           .select("__dfile", "__dpos"))
       }
     val dvDel = if (dvPairs.isEmpty) None else Some(dvPositions(spark, dvPairs))
@@ -362,8 +431,8 @@ final class TableScan(
     // to (string, long) rows, so its byte budget is its content size ×32
     val bytes = posFiles.map(_.fileSizeInBytes).sum +
       dvPairs.map { case (d, _) => d.contentSizeInBytes.getOrElse(d.fileSizeInBytes) * 32 }.sum
-    eqApplied.join(sized(delDf, bytes),
-      eqApplied("__file") === delDf("__dfile") && eqApplied("__pos") === delDf("__dpos"),
+    data.join(sized(delDf, bytes),
+      data("__file") === delDf("__dfile") && data("__pos") === delDf("__dpos"),
       "left_anti")
   }
 

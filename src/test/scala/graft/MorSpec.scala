@@ -187,4 +187,50 @@ class MorSpec extends AnyFunSuite {
     assert(tbl.toDF(spark).as[(Long, String)].collect().toSet ==
       Set(2L -> "a", 1L -> "b", 2L -> "b"))
   }
+
+  test("a filter on the file column keeps exactly that file's live rows") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.functions.col
+    import spark.implicits._
+    object PlanNodes extends AdaptiveSparkPlanHelper
+    val cat = new MemoryCatalog()
+    val tbl = cat.createTable("mor_file_filter", schema,
+      properties = Map("write.delete.mode" -> "merge-on-read"))
+    (0 until 3).foreach(a => tbl.append(((a * 10L) until (a * 10L + 10L))
+      .map(i => (i, s"n$i")).toDF("id", "name").coalesce(1)))
+    tbl.deleteWhere(spark, "id % 3 = 0")
+    assert(tbl.refresh().scan().planFiles().forall(_.deleteFiles.nonEmpty))
+
+    // native: the index prunes on its per-file path column
+    val tasks = tbl.scan().planFiles()
+    val all = tbl.scan().materializeTasks(spark, tasks, withPositions = true)
+      .select("id", "__file").as[(Long, String)].collect().toSeq
+    assert(all.map(_._1).sorted == (0L until 30L).filterNot(_ % 3 == 0))
+    val f = tasks.map(_.filePath).sorted.apply(1)
+    val one = tbl.scan().materializeTasks(spark, tasks, withPositions = true)
+      .where(col("__file") === f).select("id", "__file")
+    assert(one.as[(Long, String)].collect().toSet == all.filter(_._2 == f).toSet)
+    // the data scan reads only f's ten rows
+    one.collect()
+    val rowsRead = PlanNodes.collect(one.queryExecution.executedPlan) {
+      case s: FileSourceScanExec if s.relation.partitionSchema.fieldNames.contains("__file") =>
+        s.metrics("numOutputRows").value
+    }
+    assert(rowsRead == Seq(10L))
+    val others = tbl.scan().materializeTasks(spark, tasks, withPositions = true)
+      .where(col("__file") =!= f && col("id") > 5)
+    assert(others.select("id", "__file").as[(Long, String)].collect().toSet ==
+      all.filter { case (id, p) => p != f && id > 5 }.toSet)
+
+    // through Spark SQL's `_file` metadata column
+    graft.spark.GraftSparkCatalog.register(spark, "morfile", cat)
+    val sqlAll = spark.sql("SELECT id, _file FROM morfile.default.mor_file_filter")
+      .as[(Long, String)].collect().toSeq
+    assert(sqlAll.map(_._1).sorted == all.map(_._1).sorted)
+    val sqlOne = spark.sql(
+      s"SELECT id, _file FROM morfile.default.mor_file_filter WHERE _file = '$f'")
+      .as[(Long, String)].collect().toSet
+    assert(sqlOne.nonEmpty && sqlOne == sqlAll.filter(_._2 == f).toSet)
+  }
 }

@@ -3,6 +3,8 @@ package graft
 import graft.catalog.MemoryCatalog
 import graft.streaming.StreamingOps
 import graft.types._
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
@@ -12,6 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * prior key versions without reading or rewriting any existing data. */
 class UpsertSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
+  private object PlanRows extends AdaptiveSparkPlanHelper
 
   private val schema = Schema(0, Seq(
     NestedField(1, "id", ILong, required = false),
@@ -41,6 +44,47 @@ class UpsertSpec extends AnyFunSuite {
     assert(contents(tbl) == Map(1L -> "A2", 2L -> "B3", 3L -> "c", 4L -> "d"))
     // same-commit data is NOT hidden by the same commit's deletes
     assert(tbl.toDF(spark).count() == 4)
+  }
+
+  test("an upsert's keys reach the read's delete side once, however many files they cover") {
+    import spark.implicits._
+    val cat = new MemoryCatalog()
+    val tbl = cat.createTable("u_wide", schema)
+    tbl.append(spark.range(0, 600, 1, 6).selectExpr("id", "cast(id AS string) AS v"))
+    assert(tbl.scan().planFiles().size == 6)
+    tbl.upsert(spark, (0L until 600L by 6).map(i => (i, s"new$i")).toDF("id", "v"), Seq("id"))
+    assert(tbl.scan().planFiles().count(_.deleteFiles.nonEmpty) == 6)
+    val df = tbl.toDF(spark)
+    val rows = df.collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    assert(rows == (0L until 600L).map(i => i -> (if (i % 6 == 0) s"new$i" else i.toString)).toMap)
+    // the anti-join's delete side holds the 100 keys once, not once per
+    // data file they apply to
+    val broadcastRows = PlanRows.collect(df.queryExecution.executedPlan) {
+      case b: BroadcastExchangeExec => b.metrics("numOutputRows").value
+    }
+    assert(broadcastRows == Seq(100L))
+  }
+
+  test("a renamed key column still hides the rows its upserts replaced") {
+    import spark.implicits._
+    val cat = new MemoryCatalog()
+    val tbl = cat.createTable("u_rename", schema)
+    tbl.append(Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "v"))
+    tbl.upsert(spark, Seq((2L, "B")).toDF("id", "v"), Seq("id"))
+    val upsertSnap = tbl.currentSnapshot.get.snapshotId
+    tbl.updateSchema().renameColumn("id", "key").commit()
+    assert(tbl.toDF(spark).columns.toSeq == Seq("key", "v"))
+    assert(contents(tbl) == Map(1L -> "a", 2L -> "B", 3L -> "c"))
+    assert(tbl.toDF(spark).count() == 3)
+    // keys written under both names apply together
+    tbl.upsert(spark, Seq((3L, "C")).toDF("key", "v"), Seq("key"))
+    assert(contents(tbl) == Map(1L -> "a", 2L -> "B", 3L -> "C"))
+    assert(tbl.toDF(spark).count() == 3)
+    // the changelog of the pre-rename upsert reads its keys too
+    val first = tbl.snapshotById(upsertSnap).get.parentSnapshotId
+    val changes = StreamingOps.changesBetween(spark, tbl, first, Some(upsertSnap))
+      .select("key", "v", "_change_type").as[(Long, String, String)].collect().toSet
+    assert(changes == Set((2L, "b", "delete"), (2L, "B", "insert")))
   }
 
   test("upsert validation: duplicate batch keys, unknown key, empty batch no-op") {
