@@ -595,7 +595,11 @@ object BucketUtil {
     * spaces (0x20) ONLY (so a sentence led by '\t'/'\n' yields a leading
     * empty token), Spark `split` is Java-regex split with limit -1
     * (trailing empty tokens KEPT), and empty-after-trim short-circuits to
-    * 0 via the `when` guard in TextOps.tokens. */
+    * 0 via the `when` guard in TextOps.tokens. A change to
+    * [[graft.ops.TextOps.tokens]] must change this too: the property test
+    * `RetrievalPropertySpec` "chunkBySentences (map-only kernel) ==
+    * window/groupBy reference on whitespace-hostile docs" pins the two
+    * equal. */
   def sparkTokenCount(s: UTF8String): Int = {
     val t = s.trim() // UTF8String.trim: removes ' ' from both ends, like Spark trim()
     if (t.numBytes == 0) 0

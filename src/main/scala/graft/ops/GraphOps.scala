@@ -75,6 +75,11 @@ object GraphOps {
    * materialization stays eager (via the dm aggregate) so the previous
    * round's cache can be dropped deterministically.
    *
+   * Graph size limit: at most 2^20 (1,048,576) distinct nodes
+   * ([[NodeCeiling]]); a larger graph fails with an
+   * `IllegalArgumentException` rather than losing its ranks below the
+   * 2^-24 grid.
+   *
    * Returns `(id, rank)` with ranks summing to 1 (up to float wobble).
    */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,

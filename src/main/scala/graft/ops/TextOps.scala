@@ -15,7 +15,12 @@ import org.apache.spark.sql.functions._
  */
 object TextOps {
 
-  /** Whitespace tokens of trimmed text; empty text → empty array. */
+  /** Whitespace tokens of trimmed text; empty text → empty array.
+    * `BucketUtil.sparkTokenCount` replicates this count row-locally
+    * for `CorpusOps.chunkBySentences`; change both together. The property
+    * test `RetrievalPropertySpec` "chunkBySentences (map-only kernel) ==
+    * window/groupBy reference on whitespace-hostile docs" pins them
+    * equal. */
   def tokens(text: Column): Column =
     when(length(trim(text)) === 0, array().cast("array<string>"))
       .otherwise(split(trim(text), "\\s+"))

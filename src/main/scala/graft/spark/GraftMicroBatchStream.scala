@@ -251,11 +251,8 @@ class GraftMicroBatchStream(
               spark, t, prevId, Some(s.snapshotId))
             val dir = new Path(t.location,
               s"_cdc_scratch/${java.util.UUID.randomUUID().toString}")
-            diff.write.parquet(dir.toString)
-            val fs = dir.getFileSystem(conf).listStatus(dir)
-              .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet")
-                && st.getLen > 0)
-              .map(_.getPath.toString).toSeq
+            val fs = graft.table.DataFileWriter.write(diff, dir, conf, Long.MaxValue)
+              .map(_.filePath)
             scratch.put(s.sequenceNumber, (dir, fs))
             fs
         }

@@ -176,7 +176,7 @@ class GraftSparkCatalog extends TableCatalog with SupportsNamespaces
   /**
    * Atomic `CREATE/REPLACE TABLE … AS SELECT`: the staged table's data and
    * metadata accumulate against an UNPUBLISHED in-memory pointer
-   * ([[graft.catalog.StagingShim]] — the full vectorized write path runs
+   * ([[graft.catalog.StagingShim]] — the full batch write path runs
    * unchanged), and `commitStagedChanges` publishes everything in one
    * `commitTable` CAS, retried like every table commit and failing with
    * the last [[CommitConflictError]] once the retries run out. A REPLACE

@@ -2,461 +2,156 @@ package graft.spark
 
 import graft.UnsupportedFeatureError
 import graft.manifest.DataFile
-import graft.meta.PartitionSpec
-import graft.table.{ParquetStats, SerializableHadoopConf, Table => GTable}
+import graft.table.{DataFileWriter, SerializableHadoopConf, Table => GTable}
 import graft.transforms.Transform
-import graft.types._
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.ParquetWriter
-import org.apache.parquet.hadoop.api.WriteSupport
-import org.apache.parquet.hadoop.metadata.CompressionCodecName
-import org.apache.parquet.hadoop.util.HadoopOutputFile
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
+import org.apache.spark.sql.connector.expressions.{Expression, Expressions, SortDirection, SortOrder}
 import org.apache.spark.sql.connector.write._
-import org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory
-import org.apache.spark.sql.execution.datasources.parquet.ParquetWriteSupport
+import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
 import org.apache.spark.sql.types._
 
-import scala.collection.mutable
-
 /**
- * Executor-side partitioned parquet writer for the DSv2 write paths that
- * cannot ride the V1 whole-DataFrame bridge: dynamic-partition
- * `INSERT OVERWRITE` (Spark has no V1 fallback exec for it) and the
- * streaming `writeStream.toTable` path. Plain appends/overwrites stay on
- * the V1 write deliberately — a whole-DataFrame batch reuses the table's
- * vectorized parquet pipeline, which beats any row-at-a-time writer.
- *
- * Scale design: each task fans its rows out to one open parquet writer
- * per partition tuple (files roll at `write.target-file-rows`), so a
- * 1000-executor write produces correctly-partitioned files with no extra
- * shuffle; executors ship only [[DataFile]] descriptors (path + footer
- * stats) back, and the driver commits metadata — driver work is O(files),
- * never O(rows). Failed/speculative tasks abort their own files (the
- * commit coordinator admits one winner per partition); files orphaned by
- * a dead executor are invisible to readers (never committed) and are
- * reclaimed by `removeOrphanFiles`.
+ * The DSv2 writes Spark drives itself: dynamic-partition `INSERT
+ * OVERWRITE` (Spark has no V1 fallback exec for it) and both
+ * `writeStream.toTable` sinks. Their tasks run [[DataFileWriter]] — the
+ * same writer every batch append, overwrite, DML and compaction uses
+ * through `AppendUtil.writeData` — so every table write produces files
+ * and stats the same way. Plain appends and overwrites stay on the V1
+ * write (`InsertableRelation` → `Table.append`) only because it prepares
+ * the plan first: the salted partition shuffle a requested distribution
+ * cannot express. Both routes write rows one at a time through Spark's
+ * `ParquetWriteSupport`, as Spark's own file writer does.
  */
 private[spark] object GraftV2Write {
 
-  /** Per-partition-field evaluator: catalyst row value → transform result
-    * (JVM form). Serializable by construction (case class of case objects). */
-  final case class PartFieldEval(name: String, ordinal: Int, sparkType: DataType,
-                                 transform: Transform, srcType: IType) extends Serializable {
-    def apply(row: InternalRow): Any =
-      if (row.isNullAt(ordinal)) null
-      else transform(jvmValue(row), srcType)
-
-    private def jvmValue(row: InternalRow): Any = sparkType match {
-      case StringType => row.getUTF8String(ordinal).toString
-      case IntegerType => row.getInt(ordinal)
-      case LongType => row.getLong(ordinal)
-      case BooleanType => row.getBoolean(ordinal)
-      case DateType => java.time.LocalDate.ofEpochDay(row.getInt(ordinal).toLong)
-      case TimestampType | TimestampNTZType =>
-        val micros = row.getLong(ordinal)
-        java.time.LocalDateTime.ofEpochSecond(Math.floorDiv(micros, 1000000L),
-          (Math.floorMod(micros, 1000000L) * 1000L).toInt, java.time.ZoneOffset.UTC)
-      case d: DecimalType => row.getDecimal(ordinal, d.precision, d.scale).toJavaBigDecimal
-      case BinaryType => row.getBinary(ordinal)
-      case other => throw new UnsupportedFeatureError(
-        s"unsupported partition source type for the V2 writer: $other")
-    }
-  }
-
-  /** Tuple-value stringification — must match what [[graft.table.AppendUtil
-    * .writeData]] parses back from Hive-style partition directories, so
-    * tuples compare equal across the two write paths. */
-  def stringify(v: Any): String = v match {
-    case null => ""
-    case d: java.time.LocalDate => d.toString
-    case d: java.math.BigDecimal => d.toString
-    case other => other.toString
-  }
-
-  /** Gate: every partition field's RESULT type must stringify
-    * unambiguously (identical to the Hive-dir form the V1 path produces)
-    * or tuple equality across write paths breaks silently. */
-  def checkWritableSpec(spec: PartitionSpec, schema: Schema): Unit =
-    spec.fields.foreach { pf =>
-      val src = schema.fieldById(pf.sourceId).getOrElse(
-        throw new UnsupportedFeatureError(s"partition source id ${pf.sourceId} not in schema"))
-      val result = Transform.parse(pf.transform).resultType(src.fieldType)
-      result match {
-        case IInt | ILong | IString | IDate | IBoolean | IDecimal(_, _) => ()
-        case other => throw new UnsupportedFeatureError(
-          s"partition field ${pf.name}: result type $other has no unambiguous " +
-            "string form for the executor-side writer; use an int/long/string/" +
-            "date/decimal-valued transform (day/hour/bucket/truncate) instead")
-      }
-    }
-
-  /** Hadoop conf wired for [[ParquetWriteSupport]] writing `schema` —
-    * identical knobs for data files and equality-delete (key-only) files. */
-  def parquetConf(sconf: SerializableHadoopConf, schema: StructType): Configuration = {
-    val c = new Configuration(sconf.value)
-    ParquetWriteSupport.setSchema(schema, c)
-    c.set("spark.sql.parquet.writeLegacyFormat", "false")
-    c.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-    c.set("spark.sql.parquet.datetimeRebaseModeInWrite", "CORRECTED")
-    c.set("spark.sql.parquet.int96RebaseModeInWrite", "CORRECTED")
-    c.set("spark.sql.parquet.fieldId.write.enabled", "false")
-    c.set("spark.sql.parquet.variant.annotateLogicalType.enabled", "false")
-    c
-  }
-
-  private[spark] class RowWriterBuilder(out: org.apache.parquet.io.OutputFile)
-    extends ParquetWriter.Builder[InternalRow, RowWriterBuilder](out) {
-    override def self(): RowWriterBuilder = this
-    override def getWriteSupport(c: Configuration): WriteSupport[InternalRow] =
-      new ParquetWriteSupport().asInstanceOf[WriteSupport[InternalRow]]
-  }
-
   /** Build the serializable writer factory for one write of `gt`. */
-  def factory(gt: GTable, writeSchema: StructType, dataDir: String): GraftWriterFactory = {
+  def factory(gt: GTable, writeSchema: StructType, dataDir: String): DataFileWriter.Factory = {
     val schema = gt.currentSchema
     val spec = gt.defaultPartitionSpec
-    checkWritableSpec(spec, schema)
+    DataFileWriter.checkWritableSpec(spec, schema)
     val ordinalByName = writeSchema.fieldNames.zipWithIndex.toMap
-    val partFields = spec.fields.map { pf =>
+    val partition = spec.fields.map { pf =>
       val src = schema.fieldById(pf.sourceId).get
       val ord = ordinalByName.getOrElse(src.name, throw new UnsupportedFeatureError(
         s"partition source column ${src.name} missing from write schema"))
-      PartFieldEval(pf.name, ord, writeSchema.fields(ord).dataType,
+      DataFileWriter.Evaluated(pf.name, ord, writeSchema.fields(ord).dataType,
         Transform.parse(pf.transform), src.fieldType)
     }
-    val targetRows = gt.properties.get("write.target-file-rows")
-      .map(_.toLong).getOrElse(5000000L)
-    GraftWriterFactory(dataDir, writeSchema,
-      new SerializableHadoopConf(gt.hadoopConf), partFields, targetRows)
+    DataFileWriter.Factory(
+      dir = DataFileWriter.qualify(new Path(dataDir), gt.hadoopConf),
+      schema = writeSchema,
+      sconf = new SerializableHadoopConf(gt.hadoopConf),
+      targetFileRows = gt.properties.get("write.target-file-rows").map(_.toLong).getOrElse(5000000L),
+      partition = partition)
   }
 
-  /** Delete the files named by (possibly partial) commit messages — the
-    * abort path; a file that never made it to a manifest is invisible. */
-  def deleteFiles(conf: Configuration, messages: Seq[WriterCommitMessage]): Unit =
-    messages.foreach {
-      case GraftWriteCommit(files) => files.foreach { f =>
-        val p = new Path(f.filePath)
-        try p.getFileSystem(conf).delete(p, false) catch { case _: Exception => }
-      }
-      case _ =>
-    }
-
+  /** The files named by (possibly partial or null) commit messages. */
   def collectFiles(messages: Array[WriterCommitMessage]): Seq[DataFile] =
-    messages.toSeq.flatMap { case GraftWriteCommit(files) => files; case _ => Nil }
+    messages.toSeq.flatMap(DataFileWriter.files)
 
-  /**
-   * Requested write distribution: cluster incoming rows by the partition
-   * SOURCE columns (identity references resolve without a FunctionCatalog;
-   * same-source-value rows share a tuple, so each tuple lands in few
-   * tasks) — without this a 1000-task write of a 365-partition table
-   * could fan out 365k small files. The fanout writer stays correct under
-   * ANY distribution, so `write.distribution-mode=none` opts a skewed
-   * workload out (one hot partition otherwise serializes into one task —
-   * the V1 path's salt, which a requested distribution cannot express).
-   * Within tasks, rows sort by the table's identity sort-order fields so
-   * rolled files keep tight bounds.
-   */
-  def requestedDistribution(gt: GTable)
-      : (org.apache.spark.sql.connector.distributions.Distribution,
-         Array[org.apache.spark.sql.connector.expressions.SortOrder]) = {
-    import org.apache.spark.sql.connector.distributions.Distributions
-    import org.apache.spark.sql.connector.expressions.{Expressions, SortDirection}
-    val spec = gt.defaultPartitionSpec
-    val mode = gt.properties.getOrElse("write.distribution-mode", "hash")
-    val fieldById = gt.currentSchema.fields.map(f => f.id -> f).toMap
-    val dist =
-      if (spec.isUnpartitioned || mode == "none") Distributions.unspecified()
-      else Distributions.clustered(
-        spec.fields.flatMap(pf => fieldById.get(pf.sourceId))
-          .map(f => Expressions.column(f.name):
-            org.apache.spark.sql.connector.expressions.Expression).toArray)
-    val ordering = gt.metadata.defaultSortOrder.fields.flatMap { sf =>
-      fieldById.get(sf.sourceId).collect {
-        case f if sf.transform == "identity" =>
-          Expressions.sort(Expressions.column(f.name),
-            if (sf.direction == "desc") SortDirection.DESCENDING
-            else SortDirection.ASCENDING)
-      }
-    }.toArray
-    (dist, ordering)
-  }
-}
+  /** Delete the files named by commit messages — the abort path; a file
+    * that never made it to a manifest is invisible. */
+  def deleteFiles(gt: GTable, messages: Array[WriterCommitMessage]): Unit =
+    collectFiles(messages).foreach(f => DataFileWriter.delete(gt.hadoopConf, f.filePath))
 
-/** The files one task wrote, with footer-derived stats — all the driver
-  * ever sees of the data. */
-private[spark] final case class GraftWriteCommit(files: Seq[DataFile])
-  extends WriterCommitMessage
-
-/** Per-task upsert configuration for [[GraftUpsertFanoutWriter]]: which
-  * write-schema ordinals form the merge key, and the field ids the
-  * resulting equality-delete files declare. */
-private[spark] final case class UpsertSpec(keyNames: Seq[String],
-                                           keyOrdinals: Seq[Int],
-                                           keyIds: Seq[Int]) extends Serializable
-
-/** Serializable factory: one [[GraftFanoutWriter]] per task (and per epoch
-  * for streaming); with an [[UpsertSpec]], a [[GraftUpsertFanoutWriter]]
-  * that also emits equality-delete files for the batch's keys. */
-private[spark] final case class GraftWriterFactory(
-    dataDir: String,
-    writeSchema: StructType,
-    sconf: SerializableHadoopConf,
-    partFields: Seq[GraftV2Write.PartFieldEval],
-    targetFileRows: Long,
-    upsert: Option[UpsertSpec] = None)
-  extends DataWriterFactory with StreamingDataWriterFactory {
-
-  private def make(uid: String): DataWriter[InternalRow] = upsert match {
-    case Some(spec) => new GraftUpsertFanoutWriter(uid, this, spec)
-    case None => new GraftFanoutWriter(uid, this)
-  }
-
-  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    make(s"$partitionId-$taskId")
-
-  override def createWriter(partitionId: Int, taskId: Long, epochId: Long): DataWriter[InternalRow] =
-    make(s"$epochId-$partitionId-$taskId")
-}
-
-/** Executor-side fanout writer: routes each row to the parquet writer of
-  * its partition tuple via [[ParquetWriteSupport]] (Spark's own
-  * InternalRow → parquet converter, so types/nesting match the vectorized
-  * path bit-for-bit), rolling files at `targetFileRows`. */
-private[spark] final class GraftFanoutWriter(taskUid: String, f: GraftWriterFactory)
-  extends DataWriter[InternalRow] {
-
-  private val conf: Configuration = GraftV2Write.parquetConf(f.sconf, f.writeSchema)
-
-  private final class Open(val path: Path, val writer: ParquetWriter[InternalRow],
-                           val partition: Map[String, String]) { var rows = 0L }
-
-  private val open = mutable.HashMap.empty[Seq[String], Open]
-  private val closed = mutable.Buffer.empty[(Path, Map[String, String])]
-  private var fileNo = 0
-
-  private def newOpen(tuple: Seq[String]): Open = {
-    val p = new Path(f.dataDir, s"part-$taskUid-$fileNo.parquet")
-    fileNo += 1
-    val w = new GraftV2Write.RowWriterBuilder(HadoopOutputFile.fromPath(p, conf))
-      .withConf(conf)
-      .withCompressionCodec(CompressionCodecName.SNAPPY)
-      .build()
-    new Open(p, w, f.partFields.map(_.name).zip(tuple).toMap)
-  }
-
-  override def write(row: InternalRow): Unit = {
-    val tuple = f.partFields.map(pe => GraftV2Write.stringify(pe(row)))
-    val o = open.getOrElseUpdate(tuple, newOpen(tuple))
-    o.writer.write(row)
-    o.rows += 1
-    if (o.rows >= f.targetFileRows) {
-      o.writer.close()
-      closed += ((o.path, o.partition))
-      open.remove(tuple)
-    }
-  }
-
-  override def commit(): WriterCommitMessage = {
-    open.values.foreach { o => o.writer.close(); closed += ((o.path, o.partition)) }
-    open.clear()
-    val all = closed.toSeq.map { case (p, partition) =>
-      val fs = p.getFileSystem(conf)
-      val stats = ParquetStats.read(conf, p)
-      DataFile(
-        filePath = p.toString,
-        fileFormat = "PARQUET",
-        partition = partition,
-        recordCount = stats.recordCount,
-        fileSizeInBytes = fs.getFileStatus(p).getLen,
-        lowerBounds = stats.lowerBounds,
-        upperBounds = stats.upperBounds,
-        nullCounts = stats.nullCounts)
-    }
-    // zero-record files are dropped from the commit AND deleted — leaving
-    // them on disk orphans them until removeOrphanFiles (the abort path
-    // already deletes everything it wrote)
-    val (files, empty) = all.partition(_.recordCount > 0L)
-    empty.foreach { d =>
-      val p = new Path(d.filePath)
-      try p.getFileSystem(conf).delete(p, false) catch { case _: Exception => }
-    }
-    GraftWriteCommit(files)
-  }
-
-  override def abort(): Unit = {
-    open.values.foreach(o => try o.writer.close() catch { case _: Exception => })
-    val paths = open.values.map(_.path) ++ closed.map(_._1)
-    open.clear()
-    paths.foreach { p => try p.getFileSystem(conf).delete(p, false) catch { case _: Exception => } }
-  }
-
-  override def close(): Unit = ()
-}
-
-/** Upsert-mode task writer: data rows fan out to partition files exactly
-  * like [[GraftFanoutWriter]], and the merge KEY of every row is also
-  * written to per-task equality-delete parquet files (key columns only,
-  * global partition scope — the same shape [[graft.table.AppendUtil
-  * .writeEqualityDeletes]] produces for the batch upsert). The write
-  * requests a strict clustering + ordering on the keys, so same-key rows
-  * are task-local AND adjacent: NULL keys and duplicate keys in one epoch
-  * are rejected loudly with O(1) per-row state, matching
-  * [[graft.table.Table.upsert]]'s batch-side contract. */
-private[spark] final class GraftUpsertFanoutWriter(taskUid: String,
-    f: GraftWriterFactory, spec: UpsertSpec)
-  extends DataWriter[InternalRow] {
-
-  private val data = new GraftFanoutWriter(taskUid, f)
-  private val keySchema = StructType(spec.keyOrdinals.map(f.writeSchema.fields(_)).toArray)
-  private val keyConf: Configuration = GraftV2Write.parquetConf(f.sconf, keySchema)
-  private val keyProj = org.apache.spark.sql.catalyst.expressions.UnsafeProjection.create(
-    spec.keyOrdinals.zip(keySchema.fields).map { case (ord, fl) =>
-      org.apache.spark.sql.catalyst.expressions.BoundReference(ord, fl.dataType,
-        nullable = true): org.apache.spark.sql.catalyst.expressions.Expression
-    })
-  private var prevKey: org.apache.spark.sql.catalyst.expressions.UnsafeRow = null
-  private var eqWriter: ParquetWriter[InternalRow] = null
-  private var eqPath: Path = null
-  private var eqRows = 0L
-  private var eqFileNo = 0
-  private val eqClosed = mutable.Buffer.empty[Path]
-
-  private def rollEq(): Unit = {
-    eqPath = new Path(f.dataDir, s"eqdel-$taskUid-$eqFileNo.parquet")
-    eqFileNo += 1
-    eqWriter = new GraftV2Write.RowWriterBuilder(HadoopOutputFile.fromPath(eqPath, keyConf))
-      .withConf(keyConf)
-      .withCompressionCodec(CompressionCodecName.SNAPPY)
-      .build()
-    eqRows = 0L
-  }
-
-  override def write(row: InternalRow): Unit = {
-    var i = 0
-    while (i < spec.keyOrdinals.length) {
-      if (row.isNullAt(spec.keyOrdinals(i)))
-        throw new graft.InvalidDataError(
-          s"upsert key contains NULL (keys: ${spec.keyNames.mkString(", ")}): " +
-            "filter null-key rows out of the stream first")
-      i += 1
-    }
-    val key = keyProj(row)
-    if (prevKey != null && key == prevKey)
-      throw new graft.InvalidDataError(
-        "streaming upsert epoch has duplicate keys: reduce to one row per key " +
-          "per trigger first (last-wins is undefined within a batch)")
-    prevKey = key.copy()
-    if (eqWriter == null) rollEq()
-    eqWriter.write(key)
-    eqRows += 1
-    if (eqRows >= f.targetFileRows) {
-      eqWriter.close(); eqClosed += eqPath; eqWriter = null
-    }
-    data.write(row)
-  }
-
-  override def commit(): WriterCommitMessage = {
-    if (eqWriter != null) { eqWriter.close(); eqClosed += eqPath; eqWriter = null }
-    val keyNameSet = spec.keyNames.toSet
-    val eqFiles = eqClosed.toSeq.flatMap { p =>
-      val fs = p.getFileSystem(keyConf)
-      val stats = ParquetStats.read(keyConf, p)
-      if (stats.recordCount == 0L) {
-        try fs.delete(p, false) catch { case _: Exception => }
-        None
-      } else Some(DataFile(
-        filePath = p.toString,
-        fileFormat = "PARQUET",
-        partition = Map.empty,
-        recordCount = stats.recordCount,
-        fileSizeInBytes = fs.getFileStatus(p).getLen,
-        lowerBounds = stats.lowerBounds.view.filterKeys(keyNameSet).toMap,
-        upperBounds = stats.upperBounds.view.filterKeys(keyNameSet).toMap,
-        content = 2,
-        equalityIds = spec.keyIds))
-    }
-    val dataFiles = data.commit() match {
-      case GraftWriteCommit(files) => files
-      case _ => Nil
-    }
-    GraftWriteCommit(dataFiles ++ eqFiles)
-  }
-
-  override def abort(): Unit = {
-    if (eqWriter != null) {
-      try eqWriter.close() catch { case _: Exception => }
-      eqClosed += eqPath; eqWriter = null
-    }
-    eqClosed.foreach { p =>
-      try p.getFileSystem(keyConf).delete(p, false) catch { case _: Exception => }
-    }
-    data.abort()
-  }
-
-  override def close(): Unit = data.close()
+  def freshDataDir(gt: GTable): String =
+    new Path(gt.location, s"data/${java.util.UUID.randomUUID()}").toString
 }
 
 /**
- * Native V2 streaming SINK (`df.writeStream.toTable("cat.db.t")`): each
- * micro-batch epoch is written partition-fanout by the executors and
- * committed as ONE atomic snapshot by the driver — metadata-only driver
- * work, same scale shape as the batch paths. Exactly-once per epoch: the
- * epoch id and the STABLE streaming query id (Spark's checkpoint-metadata
- * id, which `LogicalWriteInfo.queryId` carries into every restart) land
- * in the snapshot summary, so a replayed epoch after recovery is detected
- * and skipped — the same `streaming-query-id`/`streaming-batch-id`
- * bookkeeping (and therefore the same dedup scope) as the V1
- * `format("graft")` sink.
- *
- * Append mode appends (optionally staging on a WAP `branch`); Complete
- * mode replaces the table's whole content each epoch (the V2 truncate
- * contract). Update-mode upserts need merge keys and stay on the V1 sink
- * (`writeStream.format("graft").option("merge-keys", …)`), whose
- * whole-DataFrame batches can write equality deletes.
+ * Requested write distribution: cluster incoming rows by the partition
+ * SOURCE columns (identity references resolve without a FunctionCatalog;
+ * same-source-value rows share a tuple, so each tuple lands in few
+ * tasks) — without this a 1000-task write of a 365-partition table
+ * could fan out 365k small files. The fanout writer stays correct under
+ * ANY distribution, so `write.distribution-mode=none` opts a skewed
+ * workload out (one hot partition otherwise serializes into one task —
+ * the batch path's salt, which a requested distribution cannot express).
+ * Within tasks, rows sort by the table's identity sort-order fields so
+ * rolled files keep tight bounds.
+ */
+private[spark] trait PartitionClustered extends RequiresDistributionAndOrdering {
+  protected def gt: GTable
+
+  override def requiredDistribution(): Distribution = {
+    val fieldById = gt.currentSchema.fields.map(f => f.id -> f).toMap
+    if (gt.defaultPartitionSpec.isUnpartitioned ||
+      gt.properties.getOrElse("write.distribution-mode", "hash") == "none") Distributions.unspecified()
+    else Distributions.clustered(gt.defaultPartitionSpec.fields
+      .flatMap(pf => fieldById.get(pf.sourceId)).map(f => Expressions.column(f.name): Expression).toArray)
+  }
+
+  override def requiredOrdering(): Array[SortOrder] = {
+    val fieldById = gt.currentSchema.fields.map(f => f.id -> f).toMap
+    gt.metadata.defaultSortOrder.fields.flatMap { sf =>
+      fieldById.get(sf.sourceId).collect {
+        case f if sf.transform == "identity" =>
+          Expressions.sort(Expressions.column(f.name),
+            if (sf.direction == "desc") SortDirection.DESCENDING else SortDirection.ASCENDING)
+      }
+    }.toArray
+  }
+
+  override def distributionStrictlyRequired(): Boolean = false
+}
+
+/**
+ * A native V2 streaming sink: each micro-batch epoch is written by the
+ * executors and committed as ONE atomic snapshot by the driver —
+ * metadata-only driver work, same scale shape as the batch paths.
+ * Exactly-once per epoch: the epoch id and the STABLE streaming query id
+ * (Spark's checkpoint-metadata id, which `LogicalWriteInfo.queryId`
+ * carries into every restart) land in the snapshot summary, so a replayed
+ * epoch after recovery is detected and its files deleted — the same
+ * `streaming-query-id`/`streaming-batch-id` bookkeeping (and therefore
+ * the same dedup scope) as the V1 `format("graft")` sink.
+ */
+private[spark] abstract class GraftEpochWrite(protected val gt: GTable, queryId: String)
+  extends Write with StreamingWrite {
+
+  protected val dataDir: String = GraftV2Write.freshDataDir(gt)
+
+  /** Commit one epoch's files, with the replay bookkeeping `summary`. */
+  protected def commitEpoch(t: GTable, files: Seq[DataFile], summary: Map[String, String]): Unit
+
+  override def toStreaming: StreamingWrite = this
+
+  override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
+    val t = gt.refresh()
+    if (graft.streaming.StreamingOps.lastCommittedBatchId(t, queryId).exists(_ >= epochId))
+      GraftV2Write.deleteFiles(t, messages)
+    else commitEpoch(t, GraftV2Write.collectFiles(messages), Map(
+      "streaming-query-id" -> queryId, "streaming-batch-id" -> epochId.toString))
+  }
+
+  override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
+    GraftV2Write.deleteFiles(gt, messages)
+}
+
+/**
+ * `df.writeStream.toTable("cat.db.t")`: Append mode appends (optionally
+ * staging on a WAP `branch`); Complete mode replaces the table's whole
+ * content each epoch (the V2 truncate contract). Merge-key upserts go to
+ * [[GraftStreamingUpsertWrite]].
  */
 private[spark] final class GraftStreamingWrite(
-    gt: GTable, writeSchema: StructType, queryId: String,
+    gtable: GTable, writeSchema: StructType, queryId: String,
     replaceEachEpoch: Boolean, branch: String)
-  extends Write with org.apache.spark.sql.connector.write.streaming.StreamingWrite
-    with RequiresDistributionAndOrdering {
-
-  private val distAndOrder = GraftV2Write.requestedDistribution(gt)
-  override def requiredDistribution(): org.apache.spark.sql.connector.distributions.Distribution =
-    distAndOrder._1
-  override def requiredOrdering(): Array[org.apache.spark.sql.connector.expressions.SortOrder] =
-    distAndOrder._2
-  override def distributionStrictlyRequired(): Boolean = false
+  extends GraftEpochWrite(gtable, queryId) with PartitionClustered {
 
   if (replaceEachEpoch && branch != "main")
     throw new UnsupportedFeatureError(
       "Complete-mode streaming cannot stage on a branch: each epoch replaces " +
         "the published table; use Append mode for write-audit-publish")
 
-  private val dataDir = new Path(gt.location,
-    s"data/${java.util.UUID.randomUUID().toString}").toString
-
-  override def toStreaming: org.apache.spark.sql.connector.write.streaming.StreamingWrite = this
-
   override def createStreamingWriterFactory(info: PhysicalWriteInfo): StreamingDataWriterFactory =
     GraftV2Write.factory(gt, writeSchema, dataDir)
 
-  override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
-    val t = gt.refresh()
-    val replayed = graft.streaming.StreamingOps
-      .lastCommittedBatchId(t, queryId).exists(_ >= epochId)
-    if (replayed) { GraftV2Write.deleteFiles(t.hadoopConf, messages.toSeq); return }
-    val summary = Map(
-      "streaming-query-id" -> queryId,
-      "streaming-batch-id" -> epochId.toString)
-    val files = GraftV2Write.collectFiles(messages)
+  override protected def commitEpoch(t: GTable, files: Seq[DataFile],
+                                     summary: Map[String, String]): Unit =
     if (replaceEachEpoch) t.overwriteAllWithFiles(files, summary)
     else t.appendFiles(files, summary, toBranch = branch)
-  }
-
-  override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
-    GraftV2Write.deleteFiles(gt.hadoopConf, messages.toSeq.filter(_ != null))
 
   override def description(): String = s"graft streaming write ${gt.ident}"
 }
@@ -478,10 +173,9 @@ private[spark] final class GraftStreamingWrite(
  * the streaming analogue of the batch upsert's driver-side checks.
  */
 private[spark] final class GraftStreamingUpsertWrite(
-    gt: GTable, writeSchema: StructType, queryId: String,
+    gtable: GTable, writeSchema: StructType, queryId: String,
     keys: Seq[String], branch: String)
-  extends Write with org.apache.spark.sql.connector.write.streaming.StreamingWrite
-    with RequiresDistributionAndOrdering {
+  extends GraftEpochWrite(gtable, queryId) with RequiresDistributionAndOrdering {
 
   private val keyFields = keys.map(k => gt.currentSchema.fieldByName(k).getOrElse(
     throw new graft.InvalidDataError(s"merge key not in table schema: $k")))
@@ -494,40 +188,22 @@ private[spark] final class GraftStreamingUpsertWrite(
   private val writeSchemaId = gt.metadata.currentSchemaId
   private val writeSpecId = gt.metadata.defaultSpecId
 
-  override def requiredDistribution(): org.apache.spark.sql.connector.distributions.Distribution =
-    org.apache.spark.sql.connector.distributions.Distributions.clustered(
-      keys.map(k => org.apache.spark.sql.connector.expressions.Expressions.column(k):
-        org.apache.spark.sql.connector.expressions.Expression).toArray)
-  override def requiredOrdering(): Array[org.apache.spark.sql.connector.expressions.SortOrder] =
-    keys.map(k => org.apache.spark.sql.connector.expressions.Expressions.sort(
-      org.apache.spark.sql.connector.expressions.Expressions.column(k),
-      org.apache.spark.sql.connector.expressions.SortDirection.ASCENDING)).toArray
+  override def requiredDistribution(): Distribution =
+    Distributions.clustered(keys.map(k => Expressions.column(k): Expression).toArray)
+  override def requiredOrdering(): Array[SortOrder] =
+    keys.map(k => Expressions.sort(Expressions.column(k), SortDirection.ASCENDING)).toArray
   override def distributionStrictlyRequired(): Boolean = true
-
-  private val dataDir = new Path(gt.location,
-    s"data/${java.util.UUID.randomUUID().toString}").toString
-
-  override def toStreaming: org.apache.spark.sql.connector.write.streaming.StreamingWrite = this
 
   override def createStreamingWriterFactory(info: PhysicalWriteInfo): StreamingDataWriterFactory =
     GraftV2Write.factory(gt, writeSchema, dataDir)
-      .copy(upsert = Some(UpsertSpec(keys, keyOrdinals, keyFields.map(_.id))))
+      .copy(upsert = Some(DataFileWriter.UpsertKeys(keys, keyOrdinals, keyFields.map(_.id))))
 
-  override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
-    val t = gt.refresh()
-    val replayed = graft.streaming.StreamingOps
-      .lastCommittedBatchId(t, queryId).exists(_ >= epochId)
-    if (replayed) { GraftV2Write.deleteFiles(t.hadoopConf, messages.toSeq); return }
-    val summary = Map(
-      "streaming-query-id" -> queryId,
-      "streaming-batch-id" -> epochId.toString)
-    val (delFiles, dataFiles) = GraftV2Write.collectFiles(messages).partition(_.content == 2)
+  override protected def commitEpoch(t: GTable, files: Seq[DataFile],
+                                     summary: Map[String, String]): Unit = {
+    val (delFiles, dataFiles) = files.partition(_.content == 2)
     t.commitRowDelta(delFiles, dataFiles, summary, toBranch = branch,
       writeSchemaId = Some(writeSchemaId), writeSpecId = Some(writeSpecId))
   }
-
-  override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
-    GraftV2Write.deleteFiles(gt.hadoopConf, messages.toSeq.filter(_ != null))
 
   override def description(): String =
     s"graft streaming upsert ${gt.ident} on (${keys.mkString(", ")})"
@@ -542,18 +218,10 @@ private[spark] final class GraftStreamingUpsertWrite(
  * their files, and replacing N days of a 100 TB table costs O(N days
  * written) + a metadata swap, never a table rewrite.
  */
-private[spark] final class GraftDynamicOverwriteWrite(gt: GTable, writeSchema: StructType)
-  extends Write with BatchWrite with RequiresDistributionAndOrdering {
+private[spark] final class GraftDynamicOverwriteWrite(protected val gt: GTable, writeSchema: StructType)
+  extends Write with BatchWrite with PartitionClustered {
 
-  private val distAndOrder = GraftV2Write.requestedDistribution(gt)
-  override def requiredDistribution(): org.apache.spark.sql.connector.distributions.Distribution =
-    distAndOrder._1
-  override def requiredOrdering(): Array[org.apache.spark.sql.connector.expressions.SortOrder] =
-    distAndOrder._2
-  override def distributionStrictlyRequired(): Boolean = false
-
-  private val commitUuid = java.util.UUID.randomUUID().toString
-  private val dataDir = new Path(gt.location, s"data/$commitUuid").toString
+  private val dataDir = GraftV2Write.freshDataDir(gt)
 
   override def toBatch: BatchWrite = this
 
@@ -564,7 +232,7 @@ private[spark] final class GraftDynamicOverwriteWrite(gt: GTable, writeSchema: S
     gt.refresh().commitDynamicOverwrite(GraftV2Write.collectFiles(messages))
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
-    GraftV2Write.deleteFiles(gt.hadoopConf, messages.toSeq.filter(_ != null))
+    GraftV2Write.deleteFiles(gt, messages)
 
   override def description(): String = s"graft dynamic overwrite ${gt.ident}"
 }

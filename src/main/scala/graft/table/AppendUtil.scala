@@ -12,8 +12,9 @@ import org.apache.spark.sql.functions._
 import scala.jdk.CollectionConverters._
 
 /** Write-path helpers: schema alignment (name-based binding + casts, ref
-  * `table.rs:343-384`), partition-transform columns, the Parquet write
-  * itself, and row-hash → DataFrame coercion (ref `batch.rs:60-174`). */
+  * `table.rs:343-384`), partition-transform columns, the plan preparation
+  * in front of [[DataFileWriter]], and row-hash → DataFrame coercion (ref
+  * `batch.rs:60-174`). */
 object AppendUtil {
 
   /** Bind df columns to the table schema by NAME (column order independent —
@@ -62,18 +63,20 @@ object AppendUtil {
   private val PartColPrefix = "_p_"
 
   /**
-   * Write the aligned DataFrame as Parquet data files and return manifest
-   * entries with footer-derived stats.
+   * Write the aligned DataFrame as Parquet data files under `dataDir` and
+   * return their manifest entries, with stats from each file's writer
+   * footer — nothing is listed or re-opened afterwards.
    *
    * Scale notes: partitioned writes shuffle on (transform columns, salt) so
    * a hot partition tuple (one day, one bucket) is produced by up to
    * `saltBuckets` tasks instead of one straggler/OOM task, while small
    * partitions still collapse to few files; sort order applies within
-   * partitions only (no global sort / range shuffle); files stay where they
-   * are written (no rename pass — object-store friendly), the manifest is
-   * the source of truth for file paths. The caller passes a fresh
-   * per-commit directory so inventorying new files lists only this job's
-   * output, never the whole table (O(commit), not O(table)).
+   * partitions only (no global sort / range shuffle). Each transform value
+   * is carried to the writer as Spark's cast to string — the tuple string
+   * the manifest records. Files stay where they are written (no rename
+   * pass — object-store friendly); the manifest is the source of truth for
+   * file paths. `dataDir` must be fresh to this call: a failed job deletes
+   * it (see [[DataFileWriter.write]]).
    */
   def writeData(aligned: DataFrame, schema: Schema, spec: PartitionSpec,
                 sortOrder: SortOrder, dataDir: Path, conf: Configuration,
@@ -98,61 +101,24 @@ object AppendUtil {
       }
     }
 
-    val writer =
+    val prepared =
       if (spec.isUnpartitioned) {
-        val sorted = if (sortCols.nonEmpty) aligned.sortWithinPartitions(sortCols: _*) else aligned
-        sorted.write.option("maxRecordsPerFile", targetFileRows)
+        if (sortCols.nonEmpty) aligned.sortWithinPartitions(sortCols: _*) else aligned
       } else {
         val withParts = partCols.foldLeft(aligned) { case (d, (pf, c)) =>
           d.withColumn(PartColPrefix + pf.fieldId, c)
         }
         val partNames = partCols.map { case (pf, _) => PartColPrefix + pf.fieldId }
         // deterministic salt: spreads a skewed partition tuple over up to
-        // saltBuckets tasks; maxRecordsPerFile still bounds file size
+        // saltBuckets tasks; targetFileRows still bounds file size
         val salt = pmod(xxhash64(aligned.columns.map(col).toSeq: _*), lit(saltBuckets.toLong))
         val shuffled = withParts.repartition(partNames.map(col) :+ salt: _*)
         val sorted = if (sortCols.nonEmpty) shuffled.sortWithinPartitions(sortCols: _*) else shuffled
-        sorted.write.partitionBy(partNames: _*).option("maxRecordsPerFile", targetFileRows)
+        sorted.select(aligned.columns.map(col).toSeq ++
+          partNames.map(n => col(n).cast("string").as(n)): _*)
       }
-    writer.parquet(dataDir.toString)
-
-    // Inventory what was written; parse partition tuples back from the
-    // Hive-style directory names. Listing is scoped to THIS commit's
-    // directory (O(files written), not O(table)); footer-stat reads are
-    // independent per file and run in parallel — a 10k-file append must
-    // not serialize 10k footer round-trips on the driver.
-    import scala.collection.parallel.CollectionConverters._
-    val fs = dataDir.getFileSystem(conf)
-    val nameByFieldId = spec.fields.map(pf => (PartColPrefix + pf.fieldId) -> pf.name).toMap
-    val it = fs.listFiles(dataDir, true)
-    val listed = scala.collection.mutable.ArrayBuffer[(Path, Long)]()
-    while (it.hasNext) {
-      val st = it.next()
-      if (st.isFile && st.getPath.getName.endsWith(".parquet"))
-        listed += ((st.getPath, st.getLen))
-    }
-    listed.toSeq.par.map { case (p, len) =>
-      val partition = p.toString.split('/').flatMap { seg =>
-        val i = seg.indexOf('=')
-        if (i > 0) {
-          val k = seg.substring(0, i)
-          nameByFieldId.get(k).map { humanName =>
-            val raw = unescapePathName(seg.substring(i + 1))
-            humanName -> (if (raw == "__HIVE_DEFAULT_PARTITION__") "" else raw)
-          }
-        } else None
-      }.toMap
-      val stats = ParquetStats.read(conf, p)
-      graft.manifest.DataFile(
-        filePath = p.toString,
-        fileFormat = "PARQUET",
-        partition = partition,
-        recordCount = stats.recordCount,
-        fileSizeInBytes = len,
-        lowerBounds = stats.lowerBounds,
-        upperBounds = stats.upperBounds,
-        nullCounts = stats.nullCounts)
-    }.seq
+    DataFileWriter.write(prepared, dataDir, conf, targetFileRows,
+      partitionColumns = spec.fields.map(_.name))
   }
 
   /** Write position-delete files (spec content=1: rows of `(file_path,
@@ -161,10 +127,9 @@ object AppendUtil {
     * read-side anti-join stream-matches instead of spraying. Cost is
     * O(matched rows) — the whole point of merge-on-read DML: a selective
     * DELETE on a 100 TB table writes kilobytes, not rewritten gigabytes.
-    * Empty parts are dropped from the inventory (no rows ⇒ no commit). */
+    * Tasks with no rows write no file (no rows ⇒ no commit). */
   def writePositionDeletes(posDf: DataFrame, dir: Path, conf: Configuration,
                            targetFileRows: Long = 5000000L): Seq[graft.manifest.DataFile] = {
-    import scala.collection.parallel.CollectionConverters._
     // RANGE partitioning (not hash): each delete file then covers a
     // lexicographically contiguous run of data-file paths, so the recorded
     // file_path bounds are tight and plan-time delete scoping
@@ -175,30 +140,7 @@ object AppendUtil {
       .select(col("file_path").cast("string").as("file_path"), col("pos").cast("long").as("pos"))
       .repartitionByRange(col("file_path"), col("pos"))
       .sortWithinPartitions("file_path", "pos")
-    shaped.write.option("maxRecordsPerFile", targetFileRows).parquet(dir.toString)
-    val fs = dir.getFileSystem(conf)
-    val it = fs.listFiles(dir, true)
-    val listed = scala.collection.mutable.ArrayBuffer[(Path, Long)]()
-    while (it.hasNext) {
-      val st = it.next()
-      if (st.isFile && st.getPath.getName.endsWith(".parquet"))
-        listed += ((st.getPath, st.getLen))
-    }
-    listed.toSeq.par.flatMap { case (p, len) =>
-      val stats = ParquetStats.read(conf, p)
-      if (stats.recordCount == 0L) None
-      else Some(graft.manifest.DataFile(
-        filePath = p.toString,
-        fileFormat = "PARQUET",
-        partition = Map.empty,
-        recordCount = stats.recordCount,
-        fileSizeInBytes = len,
-        // referenced-data-file bounds (spec reserved field 2147483546):
-        // the only bounds a position-delete file carries
-        lowerBounds = stats.lowerBounds.view.filterKeys(_ == "file_path").toMap,
-        upperBounds = stats.upperBounds.view.filterKeys(_ == "file_path").toMap,
-        content = 1))
-    }.seq
+    DataFileWriter.write(shaped, dir, conf, targetFileRows, DataFileWriter.PositionDeletes)
   }
 
   /** Write equality-delete files (spec content=2): rows are the key tuples
@@ -211,33 +153,9 @@ object AppendUtil {
   def writeEqualityDeletes(keysDf: DataFrame, keyFields: Seq[graft.types.NestedField],
                            dir: Path, conf: Configuration,
                            targetFileRows: Long = 5000000L): Seq[graft.manifest.DataFile] = {
-    import scala.collection.parallel.CollectionConverters._
     val keyNames = keyFields.map(_.name)
-    keysDf.select(keyNames.map(col): _*).distinct()
-      .write.option("maxRecordsPerFile", targetFileRows).parquet(dir.toString)
-    val fs = dir.getFileSystem(conf)
-    val it = fs.listFiles(dir, true)
-    val listed = scala.collection.mutable.ArrayBuffer[(Path, Long)]()
-    while (it.hasNext) {
-      val st = it.next()
-      if (st.isFile && st.getPath.getName.endsWith(".parquet"))
-        listed += ((st.getPath, st.getLen))
-    }
-    val keySet = keyNames.toSet
-    listed.toSeq.par.flatMap { case (p, len) =>
-      val stats = ParquetStats.read(conf, p)
-      if (stats.recordCount == 0L) None
-      else Some(graft.manifest.DataFile(
-        filePath = p.toString,
-        fileFormat = "PARQUET",
-        partition = Map.empty,
-        recordCount = stats.recordCount,
-        fileSizeInBytes = len,
-        lowerBounds = stats.lowerBounds.view.filterKeys(keySet).toMap,
-        upperBounds = stats.upperBounds.view.filterKeys(keySet).toMap,
-        content = 2,
-        equalityIds = keyFields.map(_.id)))
-    }.seq
+    DataFileWriter.write(keysDf.select(keyNames.map(col): _*).distinct(), dir, conf,
+      targetFileRows, DataFileWriter.equalityDeletes(keyNames, keyFields.map(_.id)))
   }
 
   /**
@@ -264,23 +182,6 @@ object AppendUtil {
       i <- 0 until k
     } yield shiftleft(shiftright(norms(i), j).bitwiseAND(lit(1L)), j * k + i)
     terms.reduce(_ bitwiseOR _)
-  }
-
-  /** Inverse of Hive's escapePathName (%xx sequences). */
-  def unescapePathName(s: String): String = {
-    if (!s.contains('%')) return s
-    val sb = new StringBuilder(s.length)
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '%' && i + 2 < s.length) {
-        try {
-          sb.append(Integer.parseInt(s.substring(i + 1, i + 3), 16).toChar)
-          i += 3
-        } catch { case _: NumberFormatException => sb.append(c); i += 1 }
-      } else { sb.append(c); i += 1 }
-    }
-    sb.toString
   }
 
   // ------------------------------------------------- row-hash append path

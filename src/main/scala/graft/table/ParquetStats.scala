@@ -3,6 +3,7 @@ package graft.table
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.LogicalTypeAnnotation
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
@@ -12,10 +13,12 @@ import scala.jdk.CollectionConverters._
 import scala.language.existentials
 import scala.util.Try
 
-/** Per-file stats pulled from Parquet footers after a write — row count plus
-  * per-column min/max/null-count, recorded into the manifest so scans can
-  * skip files without opening them (the same role as Iceberg's data-file
-  * stats; ref `table.rs:83-112` collects these from its writer).
+/** Per-file stats from a Parquet footer — row count plus per-column
+  * min/max/null-count, recorded into the manifest so scans can skip files
+  * without opening them (the same role as Iceberg's data-file stats). Files
+  * this engine writes take them from the footer the writer hands back after
+  * close ([[fromFooter]], ref `table.rs:83-112`), so no written file is ever
+  * re-opened; only foreign files registered by `addFiles` are [[read]].
   *
   * Bound representation contract (everything downstream depends on it):
   *  - int/long/date/timestamp: decimal integer string of the physical value;
@@ -36,6 +39,10 @@ import scala.util.Try
   * A column whose stats are missing or unusable in ANY row group gets no
   * file-level bounds at all (and no null count if stats are absent): a
   * partial merge would under-cover the file and make pruning wrong.
+  * Parquet-java writes no stats for a column chunk whose min and max
+  * together reach [[MaxStatsBytes]]; the writer's in-memory footer still
+  * has them, so [[fromFooter]] applies that cut itself and both entry
+  * points agree.
   */
 object ParquetStats {
   final case class FileStats(
@@ -44,51 +51,68 @@ object ParquetStats {
       upperBounds: Map[String, String],
       nullCounts: Map[String, Long])
 
+  /** Parquet-java's `ParquetMetadataConverter.MAX_STATS_SIZE`: a column
+    * chunk's stats are written only when its min and max together are
+    * smaller. */
+  val MaxStatsBytes = 4096
+
+  /** Stats of a file this engine did not write: one footer read. */
   def read(conf: Configuration, file: Path): FileStats = {
     val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
-    try {
-      val blocks = reader.getFooter.getBlocks.asScala
-      val recordCount = blocks.map(_.getRowCount).sum
-      val lower = scala.collection.mutable.Map[String, String]()
-      val upper = scala.collection.mutable.Map[String, String]()
-      val nulls = scala.collection.mutable.Map[String, Long]()
-      val poisonedBounds = scala.collection.mutable.Set[String]()
-      val poisonedNulls = scala.collection.mutable.Set[String]()
-      for (block <- blocks; col <- block.getColumns.asScala) {
-        // only top-level primitive columns
-        if (col.getPath.size == 1) {
-          val name = col.getPath.toDotString
-          val st = col.getStatistics
-          if (st != null && !st.isEmpty) {
-            // foreign writers (the addFiles path) can leave num_nulls unset;
-            // getNumNulls then returns the -1 sentinel, which would corrupt
-            // the file's null count (and everything downstream of it:
-            // COUNT(col) metadata-aggregate pushdown, addFiles' zero-null
-            // partition-tuple proof) — a row group without a SET null count
-            // poisons the column's count entirely
-            if (st.isNumNullsSet) nulls(name) = nulls.getOrElse(name, 0L) + st.getNumNulls
-            else poisonedNulls += name
-            if (st.hasNonNullValue) {
-              boundsOf(col.getPrimitiveType, st) match {
-                case Usable(mn, mx, isNum) =>
-                  lower(name) = lower.get(name).fold(mn)(prev => if (lt(isNum, mn, prev)) mn else prev)
-                  upper(name) = upper.get(name).fold(mx)(prev => if (lt(isNum, prev, mx)) mx else prev)
-                case Unusable => poisonedBounds += name
-                case Unsupported => ()
-              }
+    try fromFooter(reader.getFooter) finally reader.close()
+  }
+
+  /** Stats from a footer in hand — the one `ParquetWriter.getFooter`
+    * returns after close, or one just read. */
+  def fromFooter(footer: ParquetMetadata): FileStats = {
+    val blocks = footer.getBlocks.asScala
+    val recordCount = blocks.map(_.getRowCount).sum
+    val lower = scala.collection.mutable.Map[String, String]()
+    val upper = scala.collection.mutable.Map[String, String]()
+    val nulls = scala.collection.mutable.Map[String, Long]()
+    val poisonedBounds = scala.collection.mutable.Set[String]()
+    val poisonedNulls = scala.collection.mutable.Set[String]()
+    for (block <- blocks; col <- block.getColumns.asScala) {
+      // only top-level primitive columns
+      if (col.getPath.size == 1) {
+        val name = col.getPath.toDotString
+        // parquet-java writes no stats for a chunk whose min + max reach
+        // MaxStatsBytes; a writer's in-memory footer still holds them
+        val st = Option(col.getStatistics).filter(_.isSmallerThan(MaxStatsBytes)).orNull
+        if (st != null && !st.isEmpty) {
+          // foreign writers (the addFiles path) can leave num_nulls unset;
+          // getNumNulls then returns the -1 sentinel, which would corrupt
+          // the file's null count (and everything downstream of it:
+          // COUNT(col) metadata-aggregate pushdown, addFiles' zero-null
+          // partition-tuple proof) — a row group without a SET null count
+          // poisons the column's count entirely
+          if (st.isNumNullsSet) nulls(name) = nulls.getOrElse(name, 0L) + st.getNumNulls
+          else poisonedNulls += name
+          if (st.hasNonNullValue) {
+            boundsOf(col.getPrimitiveType, st) match {
+              case Usable(mn, mx, isNum) =>
+                lower(name) = lower.get(name).fold(mn)(prev => if (lt(isNum, mn, prev)) mn else prev)
+                upper(name) = upper.get(name).fold(mx)(prev => if (lt(isNum, prev, mx)) mx else prev)
+              case Unusable => poisonedBounds += name
+              case Unsupported => ()
             }
-          } else {
-            // a row group with no stats for this column: any merged bound or
-            // null count would silently exclude its rows
+          } else if (st.getNumNulls < block.getRowCount) {
+            // values without a min/max — parquet-java's footer reader drops
+            // a float/double chunk's min/max when it saw a NaN: no bound
+            // may claim to cover them
             poisonedBounds += name
-            poisonedNulls += name
           }
+        } else {
+          // a row group with no stats for this column: any merged bound or
+          // null count would silently exclude its rows
+          poisonedBounds += name
+          poisonedNulls += name
         }
       }
-      poisonedBounds.foreach { n => lower -= n; upper -= n }
-      poisonedNulls.foreach(nulls -= _)
-      FileStats(recordCount, lower.toMap, upper.toMap, nulls.toMap)
-    } finally reader.close()
+    }
+    poisonedBounds.foreach { n => lower -= n; upper -= n }
+    poisonedNulls.foreach(nulls -= _)
+    FileStats(recordCount, lower.toMap, upper.toMap, nulls.toMap)
   }
 
   private sealed trait ColBounds
@@ -118,9 +142,12 @@ object ParquetStats {
           val mn = st.genericGetMin.asInstanceOf[Number].doubleValue()
           val mx = st.genericGetMax.asInstanceOf[Number].doubleValue()
           // parquet-mr's float stats can propagate NaN into min/max; a NaN
-          // bound orders arbitrarily, so the whole column's bounds are out
+          // bound orders arbitrarily, so the whole column's bounds are out.
+          // A zero bound widens to cover both zeros, as parquet-java's
+          // footer reader does (PARQUET-1222).
           if (mn.isNaN || mx.isNaN) Unusable
-          else Usable(mn.toString, mx.toString, numeric = true)
+          else Usable((if (mn == 0.0) -0.0 else mn).toString,
+                      (if (mx == 0.0) 0.0 else mx).toString, numeric = true)
         case BOOLEAN =>
           // "false" < "true" lexicographically, matching boolean order
           Usable(st.genericGetMin.toString, st.genericGetMax.toString, numeric = false)

@@ -980,12 +980,7 @@ final class Table(
     * them — without this they leak on every lost race. Failures are
     * swallowed: a leaked file is benign, a failed DML is not. */
   private def discardFiles(files: Seq[graft.manifest.DataFile]): Unit =
-    files.foreach { f =>
-      try {
-        val p = new Path(f.filePath)
-        p.getFileSystem(hadoopConf).delete(p, false)
-      } catch { case scala.util.control.NonFatal(_) => }
-    }
+    files.foreach(f => DataFileWriter.delete(hadoopConf, f.filePath))
 
   /**
    * UPSERT one batch (last-wins by `keys`): commit equality-delete files
@@ -1953,7 +1948,7 @@ final class Table(
 
   /**
    * Dynamic-partition overwrite, DataFrame form (Iceberg's
-   * `overwritePartitions()`): write `df` through the vectorized partitioned
+   * `overwritePartitions()`): write `df` through the batch partitioned
    * path, then atomically replace exactly the CURRENT-spec partitions the
    * new files landed in. Partitions `df` does not touch keep their files;
    * on an unpartitioned table this degenerates to a full overwrite (the
@@ -2408,7 +2403,7 @@ object Table {
 
   /** Footer-stats bound string → the external partition-tuple rendering
     * the scan's partition parsing expects (identity transforms only; the
-    * same forms AppendUtil's Hive-style directories produce). */
+    * same forms the batch write's cast-to-string tuples take). */
   private[table] def partitionValueString(raw: String, t: graft.types.IType,
                                           file: String): String = t match {
     case graft.types.IInt | graft.types.ILong | graft.types.IString |

@@ -11,10 +11,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /** Where does a small-table append's wall time go? (r17 verdict item 4:
   * e62/e63's ~0.9 s per append is "table-format commit overhead" — but
   * WHICH leg?) Splits each append into:
-  *   - writeData/job: the Spark parquet write job (plan + tasks + commit
-  *     protocol) — AppendUtil.writeData up to the listing
-  *   - writeData/stats: the post-job listing + per-file footer stat reads
-  *     (bundled with the job leg here; separated by file count)
+  *   - writeData: the write job (plan + tasks; each task's file stats
+  *     come from its writer's footers) — AppendUtil.writeData
   *   - commit: manifest + manifest list + metadata JSON + catalog CAS
   *     (Table.appendFiles)
   * Run: Test/runMain graft.AppendLegProbe [sfDir] [reps]

@@ -135,7 +135,7 @@ class OverwriteSpec extends AnyFunSuite {
     Seq((20L, "b")).toDF("id", "p").writeTo(s"$C.s.dyn2").overwritePartitions()
     assert(sql(s"SELECT id, p FROM $C.s.dyn2 ORDER BY id").collect()
       .map(r => (r.getLong(0), r.getString(1))).toSeq == Seq((1L, "a"), (20L, "b")))
-    // the DataFrame-side path (vectorized writeData) — same tuple space
+    // the DataFrame-side path (writeData) — same tuple space
     cat.loadTable("s.dyn2").overwritePartitions(Seq((10L, "a"), (11L, "a")).toDF("id", "p"))
     assert(sql(s"SELECT id, p FROM $C.s.dyn2 ORDER BY id").collect()
       .map(r => (r.getLong(0), r.getString(1))).toSeq ==
@@ -151,7 +151,7 @@ class OverwriteSpec extends AnyFunSuite {
       .collect().map(_.getString(0)).toSet
     withDynamicMode {
       // executor-side day(ts) must produce the same tuple string the
-      // Hive-dir inventory produced for the existing 2024-01-02 file
+      // batch write recorded for the existing 2024-01-02 file
       sql(s"INSERT OVERWRITE $C.s.dynday VALUES (TIMESTAMP'2024-01-02 23:59:59', 20)")
     }
     val rows = sql(s"SELECT v FROM $C.s.dynday ORDER BY v").collect().map(_.getLong(0))

@@ -93,4 +93,46 @@ class ParquetStatsSpec extends AnyFunSuite {
     val stBin = ParquetStats.read(conf, new Path(onlyParquet(s"$dir/bin")))
     assert(!stBin.lowerBounds.contains("b") && !stBin.upperBounds.contains("b"))
   }
+
+  test("stats from the writer's footer equal stats re-read from the written file") {
+    // (column, expression over id in [0, 1200), whether the file carries bounds)
+    val cases = Seq(
+      ("i", "CAST(id AS INT) - 600", true),
+      ("l", "id * 10000000000", true),
+      ("d", "DATE_ADD(DATE'1969-06-01', CAST(id AS INT))", true),
+      ("ts", "TIMESTAMP_SECONDS(id * 3601 - 86400)", true),
+      ("dec", "CAST(id / 7 - 50 AS DECIMAL(10,2))", true),
+      ("s", "CONCAT('k', id)", true),
+      ("u", "CONCAT('\u00e9', id % 13, '\u65e5\u672c')", true),
+      ("f", "CAST(id AS FLOAT) / 3 - 10", true),
+      ("dn", "IF(id = 555, CAST('NaN' AS DOUBLE), id / 3.0D)", false),
+      ("dz", "CAST(id % 7 AS DOUBLE)", true),
+      ("b", "id % 3 = 0", true),
+      ("bin", "CAST(CONCAT('x', id) AS BINARY)", false),
+      ("n", "CAST(NULL AS STRING)", false),
+      // min + max past parquet-java's 4 KiB stats cut in one row group
+      ("big", "IF(id = 1100, REPEAT('z', 5000), CONCAT('a', id))", false))
+    val df = spark.range(0, 1200, 1, 1).selectExpr(cases.map { case (c, e, _) => s"$e AS $c" }: _*)
+    for ((label, blockSize) <- Seq("one row group" -> 128L * 1024 * 1024, "many row groups" -> 1024L)) {
+      val c = new org.apache.hadoop.conf.Configuration(conf)
+      c.setLong("parquet.block.size", blockSize)
+      val dir = java.nio.file.Files.createTempDirectory("graft-pqfooter").toString
+      val files = graft.table.DataFileWriter.write(df, new Path(dir, "d"), c, 5000000L)
+      assert(files.size == 1, label)
+      val f = files.head
+      assert(rowGroups(f.filePath) > 1 == (blockSize == 1024L), s"$label: row groups")
+      val reread = ParquetStats.read(c, new Path(f.filePath))
+      assert(f.recordCount == 1200 && reread.recordCount == 1200, label)
+      for ((col, _, bounded) <- cases) withClue(s"$label, $col: ") {
+        assert(f.lowerBounds.get(col) == reread.lowerBounds.get(col))
+        assert(f.upperBounds.get(col) == reread.upperBounds.get(col))
+        assert(f.nullCounts.get(col) == reread.nullCounts.get(col))
+        assert(f.lowerBounds.contains(col) == bounded && f.upperBounds.contains(col) == bounded)
+      }
+      assert(f.nullCounts("n") == 1200 && f.nullCounts("s") == 0, label)
+      assert(f.lowerBounds("b") == "false" && f.upperBounds("b") == "true", label)
+      assert(f.lowerBounds("i") == "-600" && f.upperBounds("i") == "599", label)
+      assert(f.lowerBounds("dz") == "-0.0" && f.upperBounds("dz") == "6.0", label)
+    }
+  }
 }
