@@ -383,8 +383,7 @@ class GraftGroupReader(part: GraftStreamInputPartition, streamSchema: Schema,
                        extra: Array[Any] = Array.empty)
     extends PartitionReader[InternalRow] {
   import org.apache.parquet.example.data.Group
-  import org.apache.parquet.hadoop.ParquetReader
-  import org.apache.parquet.hadoop.example.GroupReadSupport
+  import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
   import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Type => PType}
   import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
   import scala.jdk.CollectionConverters._
@@ -398,21 +397,23 @@ class GraftGroupReader(part: GraftStreamInputPartition, streamSchema: Schema,
   private val plans: Array[(NestedField, Option[NestedField])] =
     streamSchema.fields.map(cf => (cf, writeById.get(cf.id))).toArray
 
+  // one open, with read options from the task's conf: the file schema
+  // comes from the footer, then only the projected columns' chunks are read
   private val (reader, requested) = {
-    val inFile = org.apache.parquet.hadoop.ParquetFileReader
-      .open(org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(path, conf))
-    val fileSchema = try inFile.getFooter.getFileMetaData.getSchema finally inFile.close()
+    val in = graft.table.ParquetFiles.open(conf, path)
+    val fileSchema = in.getFooter.getFileMetaData.getSchema
     val needed = plans.flatMap(_._2).map(_.name).toSet
     val kept = fileSchema.getFields.asScala.filter(f => needed(f.getName))
     // pathological all-defaults projection: still need the row COUNT, so
     // read the narrowest file column as a carrier
     val req = new MessageType(fileSchema.getName,
       (if (kept.nonEmpty) kept else fileSchema.getFields.asScala.take(1)).asJava)
-    val readConf = new Configuration(conf)
-    readConf.set(org.apache.parquet.hadoop.api.ReadSupport.PARQUET_READ_SCHEMA, req.toString)
-    (ParquetReader.builder(new GroupReadSupport(), path).withConf(readConf).build(),
-      req)
+    in.setRequestedSchema(req)
+    (in, req)
   }
+  private val columnIO = new org.apache.parquet.io.ColumnIOFactory().getColumnIO(requested)
+  private var rows: org.apache.parquet.io.RecordReader[Group] = _
+  private var rowsLeft = 0L
   private val idxByName: Map[String, Int] =
     requested.getFields.asScala.zipWithIndex.map { case (f, i) => f.getName -> i }.toMap
 
@@ -425,7 +426,17 @@ class GraftGroupReader(part: GraftStreamInputPartition, streamSchema: Schema,
 
   private var current: Group = _
 
-  override def next(): Boolean = { current = reader.read(); current != null }
+  override def next(): Boolean = {
+    while (rowsLeft == 0) {
+      val pages = reader.readNextRowGroup()
+      if (pages == null) return false
+      rows = columnIO.getRecordReader(pages, new GroupRecordConverter(requested))
+      rowsLeft = pages.getRowCount
+    }
+    current = rows.read()
+    rowsLeft -= 1
+    true
+  }
 
   override def get(): InternalRow = {
     val row = new GenericInternalRow(plans.length + extra.length)

@@ -6,6 +6,7 @@ import graft.transforms._
 import graft.types._
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -48,6 +49,8 @@ final case class FileScanTask(file: DataFile, schemaId: Int,
  * schema over the files as the manifests list them, with no listing, and
  * scopes deletes by the planned (delete file, data file) pairs, so the
  * plan's size does not depend on the number of files or delete sets.
+ * Position deletes and deletion vectors apply inside the tasks that read
+ * the data files; equality deletes take an anti-join.
  *
  * Planning runs on the driver with parallel manifest reads; beyond
  * [[TableScan.DistributedPlanThreshold]] manifests, [[planFilesDistributed]]
@@ -197,19 +200,20 @@ final class TableScan(
     // delete manifests are few relative to data manifests; driver-parallel
     val deletes = readDeleteEntries(fs, deleteManifests)
 
-    // only immutable, serializable state enters the closure
+    // only immutable, serializable state enters the closure; the conf
+    // travels in the scan's broadcast
     val preds = predicates
     val specById = meta.partitionSpecs.map(s => s.specId -> s).toMap
     val schemaById = meta.schemas.map(s => s.schemaId -> s).toMap
     val currentSchema = meta.currentSchema
-    val confSer = new SerializableHadoopConf(conf)
+    val confBc = taskConf(spark)
     val work = dataManifests.map(mf => (mf.manifestPath, mf.partitionSpecId, mf.schemaId))
     val slices = math.max(1, math.min(work.size,
       spark.sparkContext.defaultParallelism * 4))
     val kept = spark.sparkContext.parallelize(work, slices)
       .flatMap { case (path, specId, schemaId) =>
         val p = new Path(path)
-        val f = p.getFileSystem(confSer.value)
+        val f = p.getFileSystem(confBc.value.value)
         val spec = specById.getOrElse(specId, PartitionSpec.Unpartitioned)
         val writeSchema = schemaById.getOrElse(schemaId, currentSchema)
         Manifests.readManifest(f, p)
@@ -220,6 +224,19 @@ final class TableScan(
       .collect()
     kept.toSeq.map { case (schemaId, specId, seqNum, df) =>
       deletes.task(df, schemaId, seqNum, specId)
+    }
+  }
+
+  /** The table's Hadoop conf, sent to this scan's tasks as one broadcast:
+    * a task reads it from its executor's copy instead of deserializing
+    * it with its closure. */
+  private var confBroadcast: Option[(org.apache.spark.SparkContext, Broadcast[SerializableHadoopConf])] = None
+
+  private def taskConf(spark: SparkSession): Broadcast[SerializableHadoopConf] = synchronized {
+    confBroadcast.filter(_._1 eq spark.sparkContext).map(_._2).getOrElse {
+      val b = spark.sparkContext.broadcast(new SerializableHadoopConf(table.hadoopConf))
+      confBroadcast = Some(spark.sparkContext -> b)
+      b
     }
   }
 
@@ -242,12 +259,14 @@ final class TableScan(
     * One relation per writer schema reads the tasks' files through a
     * [[ManifestFileIndex]] — no listing, no existence checks, no schema
     * inference — projected to the current schema by field id, then
-    * unioned. Deletes apply as data, not plan shape: one anti-join on
-    * (`__file`, `__pos`) for every position delete and deletion vector,
-    * one per equality-ID set, each scoped to exactly the (delete file,
-    * data file) pairs planning put in `deleteFiles`. So the plan has the
-    * same size for 1 or 1000 delete sets, and each delete row is read
-    * once however many data files it applies to. */
+    * unioned. Deletes apply as data, not plan shape, each scoped to
+    * exactly the (delete file, data file) pairs planning put in
+    * `deleteFiles`: position deletes and deletion vectors as one
+    * [[NotDeleted]] filter on (`__file`, `__pos`) that the reading tasks
+    * evaluate against each file's deleted-position bitmap, and equality
+    * deletes as one anti-join per equality-ID set. So the plan has the
+    * same size for 1 or 1000 delete sets, and no delete side is joined
+    * for position deletes. */
   private[graft] def materializeTasks(spark: SparkSession,
                                       tasks: Seq[FileScanTask],
                                       withPositions: Boolean = false): DataFrame = {
@@ -294,12 +313,28 @@ final class TableScan(
       raw.select(projection ++ constants.map(c => col(c.name)) ++ posCols: _*)
     }
     val data = parts.reduce(_ unionAll _)
-    val eqApplied = eqPairs.groupBy(_._1.equalityIds.toSet).toSeq.sortBy(_._1.toSeq.sorted.mkString(","))
-      .foldLeft(data) { case (out, (ids, group)) =>
+    val live = if (posPairs.isEmpty) data else data.filter(notDeleted(spark, posPairs))
+    val deleted = eqPairs.groupBy(_._1.equalityIds.toSet).toSeq.sortBy(_._1.toSeq.sorted.mkString(","))
+      .foldLeft(live) { case (out, (ids, group)) =>
         applyEqualityDeletes(spark, out, ids, group, tasks, partIds)
       }.drop("__seq", "__part")
-    val deleted = applyPositionDeletes(spark, eqApplied, posPairs)
     if (positioned && !withPositions) deleted.drop("__file", "__pos") else deleted
+  }
+
+  /** Position deletes and deletion vectors over data carrying `__file` /
+    * `__pos`, as a filter the scan's tasks evaluate: each data file's
+    * deleted positions come from exactly the delete files planning paired
+    * it with, sent to the tasks in a broadcast with the scan's conf. */
+  private def notDeleted(spark: SparkSession, pairs: Seq[(DataFile, FileScanTask)]): Column = {
+    import org.apache.spark.sql.graftbridge.ColumnBridge
+    val scope = pairs.groupMap { case (_, t) => PositionDeleteRef.normalize(t.filePath) } {
+      case (d, _) => PositionDeleteRef.of(d) }.map { case (f, refs) => f -> refs.distinct.toArray }
+    val refs = scope.values.flatten.toSeq.distinct
+    val deletes = new DeletedPositions(taskConf(spark), spark.sparkContext.broadcast(scope),
+      deleteFiles = refs.count(!_.isDeletionVector), deletionVectors = refs.count(_.isDeletionVector),
+      dataFiles = scope.size)
+    ColumnBridge.column(NotDeleted(ColumnBridge.expression(col("__file")),
+      ColumnBridge.expression(col("__pos")), deletes))
   }
 
   /** Rows of `tasks` matching the scan predicates, with live MOR deletes
@@ -324,9 +359,10 @@ final class TableScan(
     case InPred(c, vs) => col(c).isin(vs.map(lit(_)): _*)
   }
 
-  /** A delete side at most 32 MB (counted once per delete row) broadcasts;
-    * a larger one takes a shuffled anti-join so a big delete set never
-    * OOMs the driver. The reference reads (but never writes) delete files. */
+  /** An equality-delete side at most 32 MB (counted once per delete row)
+    * broadcasts; a larger one takes a shuffled anti-join so a big delete
+    * set never OOMs the driver. The reference reads (but never writes)
+    * delete files. */
   private val BroadcastDeleteBytes = 32L * 1024 * 1024
 
   private def sized(df: DataFrame, bytes: Long): DataFrame =
@@ -397,71 +433,6 @@ final class TableScan(
       }.reduce(_ unionAll _)
   }
 
-  /** Position deletes and deletion vectors over data carrying `__file` /
-    * `__pos`, as one anti-join. Each delete side is restricted to the
-    * (delete file, data file) pairs planning produced: a position delete
-    * file's rows by a semi-join with those pairs, a DV by expanding it
-    * only for its paired data file. */
-  private def applyPositionDeletes(spark: SparkSession, data: DataFrame,
-                                   pairs: Seq[(DataFile, FileScanTask)]): DataFrame = {
-    import spark.implicits._
-    if (pairs.isEmpty) return data
-    val (dvPairs, filePairs) = pairs.map { case (d, t) => (d, t.file) }.partition(_._1.isDeletionVector)
-    val posFiles = filePairs.map(_._1).distinctBy(_.filePath)
-    // position delete files carry (file_path, pos) in whatever URI form
-    // their writer used; the planned pairs map them to the manifest path.
-    // Delete-side columns are renamed so a table column named
-    // "file_path"/"pos" can never collide.
-    val fileDel =
-      if (posFiles.isEmpty) None
-      else {
-        val scope = filePairs.map { case (d, f) => (d.filePath, normPathStr(f.filePath), f.filePath) }
-          .distinct
-        Some(ManifestFileIndex.read(spark, posFiles, TableScan.PositionDeleteSchema,
-            Seq(ManifestFileIndex.Constant("__delfile", org.apache.spark.sql.types.StringType, _.filePath)))
-          .select(col("__delfile"), normPath(col("file_path")).as("__dref"), col("pos").as("__dpos"))
-          .join(sized(scope.toDF("__delfile", "__dref", "__dfile"),
-            scope.map { case (a, b, c) => a.length + b.length + c.length }.sum.toLong),
-            Seq("__delfile", "__dref"))
-          .select("__dfile", "__dpos"))
-      }
-    val dvDel = if (dvPairs.isEmpty) None else Some(dvPositions(spark, dvPairs))
-    val delDf = (fileDel.toSeq ++ dvDel.toSeq).reduce(_ unionAll _)
-    // broadcast sizing: a DV blob expands ~8-30× from compressed bitmap
-    // to (string, long) rows, so its byte budget is its content size ×32
-    val bytes = posFiles.map(_.fileSizeInBytes).sum +
-      dvPairs.map { case (d, _) => d.contentSizeInBytes.getOrElse(d.fileSizeInBytes) * 32 }.sum
-    data.join(sized(delDf, bytes),
-      data("__file") === delDf("__dfile") && data("__pos") === delDf("__dpos"),
-      "left_anti")
-  }
-
-  /** Expand deletion-vector blobs (v3) into `(__dfile, __dpos)` rows, each
-    * only for the data file planning paired it with. The blob reads happen
-    * INSIDE a Spark job — each task does one ranged read of its blob and
-    * iterates the roaring bitmap, so a scan over many DV'd files never
-    * serializes blob IO on the driver and expanded positions never
-    * materialize driver-side. */
-  private def dvPositions(spark: SparkSession, dvPairs: Seq[(DataFile, DataFile)]): DataFrame = {
-    import graft.puffin.{DeletionVector, Puffin}
-    import spark.implicits._
-    val confSer = new SerializableHadoopConf(table.hadoopConf)
-    val descs = dvPairs.map { case (d, f) => (d.filePath, d.contentOffset.getOrElse(0L),
-      d.contentSizeInBytes.getOrElse(d.fileSizeInBytes), f.filePath) }.distinct
-    spark.createDataset(descs)
-      .repartition(math.min(descs.size, spark.sparkContext.defaultParallelism))
-      .flatMap { case (path, off, len, dataPath) =>
-        val p = new Path(path)
-        val fs = p.getFileSystem(confSer.value)
-        val bitmap = DeletionVector.deserialize(Puffin.readBlob(fs, p, off, len))
-        val it = bitmap.getLongIterator
-        new Iterator[(String, Long)] {
-          def hasNext: Boolean = it.hasNext
-          def next(): (String, Long) = (dataPath, it.next())
-        }
-      }.toDF("__dfile", "__dpos")
-  }
-
   /**
    * Format-v3 row lineage surface: the scan's rows plus a `_row_id`
    * column (the file's explicit `first_row_id` + the row's ordinal).
@@ -482,13 +453,6 @@ final class TableScan(
       .drop("__file", "__pos", "__first_row_id")
   }
 
-  /** URI scheme-slash normalization: a position delete file's `file_path`
-    * may name a local file as "file:///x" while Hadoop Path.toString (the
-    * manifest form) is "file:/x" — normalize both sides or position
-    * deletes silently stop applying. */
-  private def normPath(c: Column): Column = regexp_replace(c, "^file:/+", "file:/")
-  private def normPathStr(s: String): String = s.replaceFirst("^file:/+", "file:/")
-
   /** Execute → row-oriented Result (ref `scan.rs:57-63` + `result.rs`). */
   def collect(spark: SparkSession): Result = {
     val df = toDF(spark)
@@ -507,11 +471,6 @@ final class TableScan(
 object TableScan {
   /** Data-manifest count beyond which planning fans out as a Spark job. */
   val DistributedPlanThreshold = 64
-
-  /** The columns of a position delete file that a scan reads. */
-  private val PositionDeleteSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("file_path", org.apache.spark.sql.types.StringType),
-    org.apache.spark.sql.types.StructField("pos", org.apache.spark.sql.types.LongType)))
 }
 
 /** Manifest-level file pruning, separated from [[TableScan]] so the
@@ -752,6 +711,7 @@ private[graft] object ScanPruning extends Serializable {
     * are conservative: absent metadata means "applies". */
   def deleteApplies(del: DataFile, delSeq: Long,
                     data: DataFile, dataSeq: Long): Boolean = {
+    import PositionDeleteRef.{normalize => normPath}
     val seqOk = if (del.content == 2) delSeq > dataSeq else delSeq >= dataSeq
     if (!seqOk) return false
     // a deletion vector (v3) names its ONE data file exactly — no
@@ -768,8 +728,6 @@ private[graft] object ScanPruning extends Serializable {
         del.upperBounds.get("file_path").forall(hi => p <= normPath(hi))
     } else true
   }
-
-  private def normPath(s: String): String = s.replaceFirst("^file:/+", "file:/")
 
   /** Partition pruning: rewrite the predicate through each partition
     * transform over the predicate's source column. */

@@ -233,4 +233,123 @@ class MorSpec extends AnyFunSuite {
       .as[(Long, String)].collect().toSet
     assert(sqlOne.nonEmpty && sqlOne == sqlAll.filter(_._2 == f).toSet)
   }
+
+  // ------------------------------------------- position deletes in the scan's tasks
+
+  private def withSqlConf[T](kv: (String, String)*)(body: => T): T = {
+    val old = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally old.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  /** Scan tasks of `df`'s data-file reads (those carrying `__file`). */
+  private def scanTasks(df: org.apache.spark.sql.DataFrame): Int = {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    object PlanNodes extends AdaptiveSparkPlanHelper
+    PlanNodes.collect(df.queryExecution.executedPlan) {
+      case s: FileSourceScanExec if s.relation.partitionSchema.fieldNames.contains("__file") =>
+        s.inputRDDs().map(_.getNumPartitions).sum
+    }.sum
+  }
+
+  /** Ids of `tbl`'s files by (manifest path, file-global row index), read
+    * one task per file. */
+  private def idsByPosition(tbl: Table): Map[(String, Long), Long] = {
+    import spark.implicits._
+    tbl.scan().materializeTasks(spark, tbl.scan().planFiles(), withPositions = true)
+      .select("__file", "__pos", "id").as[(String, Long, Long)].collect()
+      .map { case (f, p, id) => (f, p) -> id }.toMap
+  }
+
+  test("position deletes in a later row group of a file split over several tasks") {
+    import spark.implicits._
+    val conf = new org.apache.hadoop.conf.Configuration()
+    conf.setLong("parquet.block.size", 1024)
+    val cat = new MemoryCatalog(hadoopConf = conf)
+    val tbl = cat.createTable("mor_split", schema)
+    tbl.append(spark.range(0, 6000, 1, 1).selectExpr("id", "cast(id AS string) AS name"))
+    val path = tbl.scan().planFiles().map(_.filePath) match { case Seq(p) => p }
+    val reader = graft.table.ParquetFiles.open(conf, new Path(path))
+    val rowGroups = try reader.getRowGroups.size finally reader.close()
+    assert(rowGroups > 4, "the file needs several row groups")
+    val ids = idsByPosition(tbl)
+    val deleted = Seq(5999L, 5993L, 5500L, 4000L)
+    commitDeletes(cat, tbl, Seq(writeDeleteParquet(tbl, "split",
+      deleted.map(p => (path, p)).toDF("file_path", "pos"), content = 1, eqIds = Nil)))
+    withSqlConf("spark.sql.files.maxPartitionBytes" -> "4096",
+        "spark.sql.files.openCostInBytes" -> "0") {
+      val df = tbl.toDF(spark)
+      val got = df.select("id").as[Long].collect().sorted.toSeq
+      assert(scanTasks(df) > 2, "the file must be read by several tasks")
+      assert(got == (ids -- deleted.map(path -> _)).values.toSeq.sorted)
+    }
+  }
+
+  test("one position delete file over data files read by different tasks") {
+    import spark.implicits._
+    val cat = new MemoryCatalog()
+    val tbl = cat.createTable("mor_shared_delete", schema)
+    (0 until 4).foreach(a => tbl.append(((a * 100L) until (a * 100L + 100L))
+      .map(i => (i, s"n$i")).toDF("id", "name").coalesce(1)))
+    val ids = idsByPosition(tbl)
+    val paths = ids.keys.map(_._1).toSeq.distinct.sorted
+    assert(paths.size == 4)
+    // rows of three of the four files, in one delete file
+    val deleted = paths.take(3).flatMap(p => Seq(p -> 0L, p -> 42L, p -> 99L))
+    commitDeletes(cat, tbl, Seq(writeDeleteParquet(tbl, "shared",
+      deleted.toDF("file_path", "pos"), content = 1, eqIds = Nil)))
+    assert(tbl.scan().planFiles().flatMap(_.deleteFiles).map(_.filePath).distinct.size == 1)
+    withSqlConf("spark.sql.files.maxPartitionBytes" -> "1024",
+        "spark.sql.files.openCostInBytes" -> "0") {
+      val df = tbl.toDF(spark)
+      val got = df.select("id").as[Long].collect().sorted.toSeq
+      assert(scanTasks(df) >= 4, "each file must be read by its own task")
+      assert(got == (ids -- deleted).values.toSeq.sorted)
+    }
+  }
+
+  test("position delete rows naming file:///x apply to the manifest's file:/x") {
+    import spark.implicits._
+    val cat = new MemoryCatalog()
+    val tbl = cat.createTable("mor_slashes", schema)
+    tbl.append(Seq(10L -> "x", 11L -> "y", 12L -> "z").toDF("id", "name").coalesce(1))
+    tbl.append(Seq(20L -> "u", 21L -> "v").toDF("id", "name").coalesce(1))
+    val ids = idsByPosition(tbl)
+    val byId = ids.map(_.swap)
+    val manifestPaths = ids.keys.map(_._1).toSet
+    assert(manifestPaths.forall(p => p.startsWith("file:/") && !p.startsWith("file:///")))
+    def uri(p: String): String = "file:///" + p.stripPrefix("file:").dropWhile(_ == '/')
+    val deleted = Seq(11L, 20L).map(byId)
+    commitDeletes(cat, tbl, Seq(writeDeleteParquet(tbl, "slashes",
+      deleted.map { case (f, p) => (uri(f), p) }.toDF("file_path", "pos"), content = 1, eqIds = Nil)))
+    assert(tbl.toDF(spark).select("id").as[Long].collect().sorted.toSeq == Seq(10L, 12L, 21L))
+  }
+
+  test("merge-on-read UPDATE and DELETE after earlier deletes keep deleted rows hidden") {
+    import spark.implicits._
+    for (version <- Seq(2, 3)) withClue(s"format v$version: ") {
+      val cat = new MemoryCatalog()
+      val tbl = cat.createTable(s"mor_dml_after_$version", schema, properties = Map(
+        "format-version" -> version.toString,
+        "write.delete.mode" -> "merge-on-read", "write.update.mode" -> "merge-on-read"))
+      (0 until 3).foreach(a => tbl.append(((a * 20L) until (a * 20L + 20L))
+        .map(i => (i, s"n$i")).toDF("id", "name").coalesce(1)))
+      tbl.deleteWhere(spark, "id % 4 = 0")
+      // the update's predicate covers deleted rows: none may come back
+      tbl.updateWhere(spark, "id < 30", Map("name" -> "'u'"))
+      tbl.deleteWhere(spark, "id % 5 = 0")
+      val live = (0L until 60L).filterNot(i => i % 4 == 0 || i % 5 == 0)
+      val rows = tbl.refresh().toDF(spark).select("id", "name").as[(Long, String)].collect().sorted.toSeq
+      assert(rows == live.map(i => i -> (if (i < 30) "u" else s"n$i")))
+      if (version == 3) {
+        val withIds = tbl.scan().toDFWithRowIds(spark).select("id", "_row_id").as[(Long, Long)].collect()
+        assert(withIds.map(_._1).sorted.toSeq == live)
+        assert(withIds.map(_._2).distinct.length == live.size)
+      }
+    }
+  }
 }

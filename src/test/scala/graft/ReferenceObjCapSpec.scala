@@ -42,7 +42,9 @@ class ReferenceObjCapSpec extends AnyFunSuite {
     "SyntheticBmpBumpedExpr" -> "fixture cells <= MaxBumpCells",
     "AnyInSet" -> "BROADCAST (user-data-sized membership set)",
     "CountInSet" -> "BROADCAST (user-data-sized membership set)",
-    "DecodeFeaturesExpr" -> "stateless codec instance, carries no data")
+    "DecodeFeaturesExpr" -> "stateless codec instance, carries no data",
+    "NotDeleted" -> ("BROADCAST (the scan's conf and data-file -> delete-file map); " +
+      "the plan holds two handles and three counts (ScanPlanSpec checks its size)"))
 
   test("every addReferenceObj call site is inside an audited carrier") {
     val srcRoot = new java.io.File("src/main/scala")
