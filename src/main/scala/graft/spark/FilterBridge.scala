@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions.{col, lit, not}
 import org.apache.spark.sql.sources
 
 /**
- * Bridges Spark DSv1 [[sources.Filter]]s (the currency of `V1Scan` /
+ * Bridges Spark DSv1 [[sources.Filter]]s (the currency of
  * `SupportsPushDownFilters` / `SupportsDelete`) to graft's scan model.
  *
  * Each filter converts two ways, used together:

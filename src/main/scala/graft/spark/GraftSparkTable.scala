@@ -3,14 +3,15 @@ package graft.spark
 import graft.UnsupportedFeatureError
 import graft.table.{Table => GTable}
 import graft.types.SparkSchemaConverter
-import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Row, SparkSession, SQLContext}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
 import org.apache.spark.sql.connector.catalog.{SupportsDelete, SupportsRead, SupportsWrite, TableCapability, Table => SparkTable}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.expressions.aggregate
-import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns, V1Scan}
+import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns}
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, SupportsDynamicOverwrite, SupportsOverwrite, SupportsTruncate, V1Write, Write, WriteBuilder}
-import org.apache.spark.sql.sources.{BaseRelation, Filter, InsertableRelation, TableScan => V1TableScan}
+import org.apache.spark.sql.graftbridge.CatalystBridge
+import org.apache.spark.sql.sources.{Filter, InsertableRelation}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
@@ -23,13 +24,14 @@ import scala.jdk.CollectionConverters._
  * sanctioned optional step; the wrapper-level [[graft.sql.GraftSql]] stays
  * as the reference-parity surface).
  *
- * The read path is a [[V1Scan]] bridge: the scan's `buildScan` re-enters
- * [[GTable.scan]], so everything the native path does — manifest-level
- * partition-transform + column-bounds pruning from the pushed filters,
- * distributed planning past 64 manifests, MOR delete application, deletion
- * vectors, schema-evolution field-id projection — applies identically under
- * SQL. Pushed filters are also re-applied as Catalyst filters inside the
- * produced DataFrame, so parquet row-group pushdown still happens per file.
+ * A batch read is a [[GraftScan]]: its pushdown outcome (filters, pruned
+ * columns, limit) becomes the graft table scan's own logical plan, which
+ * [[GraftScanStrategy]] plans inside the caller's query. So everything the
+ * native path does — manifest-level partition-transform + column-bounds
+ * pruning from the pushed filters, distributed planning past 64 manifests,
+ * MOR delete application, deletion vectors, schema-evolution field-id
+ * projection — applies identically under SQL, and the parquet scan, delete
+ * filter and the query's own operators share one physical plan.
  */
 class GraftSparkTable(
     val graftTable: GTable,
@@ -109,7 +111,8 @@ class GraftSparkTable(
 
   // ---------------------------------------------------------------- read
 
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
+  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
+    GraftScanStrategy.install(SparkSession.active)
     new ScanBuilder with SupportsPushDownFilters with SupportsPushDownRequiredColumns
         with org.apache.spark.sql.connector.read.SupportsPushDownAggregates
         with org.apache.spark.sql.connector.read.SupportsPushDownLimit {
@@ -174,10 +177,11 @@ class GraftSparkTable(
             options.asCaseSensitiveMap().forEach((k, v) => b += (k.toLowerCase -> v))
             b.result()
           }
-          new GraftV1Scan(graftTable, pinnedSnapshotId, pushed, required,
+          new GraftScan(graftTable, pinnedSnapshotId, pushed, required,
             limitHint, streamOptions ++ scanOpts)
       }
     }
+  }
 
   // --------------------------------------------------------------- write
 
@@ -303,8 +307,10 @@ class GraftSparkTable(
   }
 }
 
-/** Snapshot-pinned V1 scan bridge; one instance per (pushdown, pruning)
-  * outcome. `readSchema` is the pruned schema — Spark plans on it.
+/** A snapshot-pinned graft read; one instance per (pushdown, pruning)
+  * outcome. `readSchema` is the pruned schema — Spark plans on it — and
+  * [[plan]] is the table scan's logical plan for exactly that outcome,
+  * which [[GraftScanStrategy]] plans inside the caller's query.
   *
   * Reports REAL statistics from manifest planning (post-pruning file
   * bytes + record counts), so Catalyst's join sizing sees the true scan
@@ -313,14 +319,14 @@ class GraftSparkTable(
   * = sort-merge-join everything). Planning runs once, lazily, only when
   * the optimizer asks — and it is the same manifest planning the scan
   * itself needs, distributed past 64 manifests. */
-private[spark] class GraftV1Scan(
+private[spark] class GraftScan(
     gt: GTable,
     snapshotId: Option[Long],
     pushed: Array[Filter],
     required: StructType,
     limitHint: Option[Int] = None,
     streamOptions: Map[String, String] = Map.empty)
-  extends V1Scan with org.apache.spark.sql.connector.read.SupportsReportStatistics {
+  extends GraftPlannedScan with org.apache.spark.sql.connector.read.SupportsReportStatistics {
 
   /** Micro-batch streaming entry (MicroBatchExecution builds this scan with
     * no pushdown calls, so `required` is the full schema here). The stream
@@ -356,9 +362,9 @@ private[spark] class GraftV1Scan(
   /** The graft scan, pinned once; pruning predicates reach its manifest
     * planning. ONE planning pass (distributed past 64 manifests) is shared
     * by statistics, the limit prefix, and the actual read. */
-  private[spark] val graftScan =
+  private val graftScan =
     gt.scan(snapshotId, pushed.flatMap(FilterBridge.toPredicate).toSeq)
-  private[spark] lazy val plannedTasks =
+  private lazy val plannedTasks =
     graftScan.planFilesDistributed(SparkSession.active)
 
   override def estimateStatistics(): org.apache.spark.sql.connector.read.Statistics =
@@ -412,50 +418,28 @@ private[spark] class GraftV1Scan(
 
   override def readSchema(): StructType = required
 
-  override def toV1TableScan[T <: BaseRelation with V1TableScan](
-      context: SQLContext): T =
-    new GraftV1Relation(this, gt, pushed, required, limitHint, context).asInstanceOf[T]
-
-  override def description(): String =
-    s"graft ${gt.ident} pushed=${pushed.mkString(",")}" +
-      limitHint.map(n => s" limit=$n").getOrElse("")
-}
-
-private[spark] class GraftV1Relation(
-    owner: GraftV1Scan,
-    gt: GTable,
-    pushed: Array[Filter],
-    required: StructType,
-    limitHint: Option[Int],
-    context: SQLContext) extends BaseRelation with V1TableScan {
-
-  override def sqlContext: SQLContext = context
-  override def schema: StructType = required
-
-  override def toString: String =
-    s"GraftV1Relation(${gt.ident}${limitHint.map(n => s", limit=$n").getOrElse("")})"
-
-  override def buildScan(): RDD[Row] = {
-    val spark = context.sparkSession
-    val tasks = owner.plannedTasks
-    // metadata columns ride the positions channel (__file/__pos)
-    val needPositions = required.fieldNames.exists(n => n == "_file" || n == "_pos")
-    def materialize(ts: Seq[graft.table.FileScanTask]) = {
-      val base = owner.graftScan.materializeTasks(spark, ts, withPositions = needPositions)
-      if (needPositions)
-        base.withColumnRenamed("__file", "_file").withColumnRenamed("__pos", "_pos")
-      else base
+  /** The table scan's plan over the planned tasks, analysed once: the
+    * pushed filters re-applied row-level inside each file's read
+    * (manifest pruning is only conservative, and this reaches parquet
+    * row-group pushdown), or for an unfiltered LIMIT only a file prefix.
+    * The metadata columns ride the positions channel (`__file`/`__pos`). */
+  override lazy val plan: LogicalPlan = {
+    val spark = SparkSession.active
+    val (tasks, filter) = limitPrefix(plannedTasks) match {
+      case Some(picked) => (picked, None)
+      case None => (plannedTasks, pushed.flatMap(FilterBridge.toColumn).reduceOption(_ && _))
     }
-    val df = limitPrefix(tasks) match {
-      case Some(picked) => materialize(picked)
-      case None =>
-        val all = materialize(tasks)
-        // the pushed filters are re-applied row-level (manifest pruning is
-        // only conservative), which also reaches parquet row-group pushdown
-        val conds = pushed.flatMap(FilterBridge.toColumn)
-        if (conds.isEmpty) all else all.filter(conds.reduce(_ && _))
-    }
-    project(df).rdd
+    val metadata = Set("_file", "_pos")
+    val positions = required.fieldNames.exists(metadata)
+    val read = graftScan.readPlan(spark, tasks, withPositions = positions, filter = filter,
+      columns = Some(required.fieldNames.filterNot(metadata).toSeq), label = description())
+    val ordered =
+      if (!positions) read
+      else Project(required.fieldNames.toSeq.map { n =>
+        val name = if (metadata(n)) "_" + n else n
+        read.output.find(_.name == name).get
+      }, read)
+    CatalystBridge.analyzed(spark, ordered)
   }
 
   /** Unfiltered LIMIT n: only a file prefix covering n rows. Safe exactly
@@ -472,12 +456,9 @@ private[spark] class GraftV1Relation(
     if (picked.exists(_.deleteFiles.nonEmpty)) None else Some(picked)
   }
 
-  private def project(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    if (required.isEmpty) df.select()
-    else df.select(required.fieldNames.toIndexedSeq.map(df(_)): _*)
-
-  override def unhandledFilters(filters: Array[Filter]): Array[Filter] =
-    filters.filter(f => FilterBridge.toColumn(f).isEmpty)
+  override def description(): String =
+    s"${graftScan.description} pushed=${pushed.mkString(",")}" +
+      limitHint.map(n => s" limit=$n").getOrElse("")
 }
 
 object GraftSparkTable {
@@ -511,30 +492,28 @@ private[spark] class GraftMetadataSparkTable(
   override def capabilities(): java.util.Set[TableCapability] =
     java.util.EnumSet.of(TableCapability.BATCH_READ)
 
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
+  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
+    GraftScanStrategy.install(SparkSession.active)
     new ScanBuilder with SupportsPushDownRequiredColumns {
       private var required: StructType = schema()
       override def pruneColumns(requiredSchema: StructType): Unit =
         required = requiredSchema
-      override def build(): Scan = new V1Scan {
-        override def readSchema(): StructType = required
-        override def toV1TableScan[T <: BaseRelation with V1TableScan](
-            context: SQLContext): T = {
-          val req = required
-          new BaseRelation with V1TableScan {
-            override def sqlContext: SQLContext = context
-            override def schema: StructType = req
-            override def buildScan(): RDD[Row] = {
-              val df = load(context.sparkSession)
-              val out =
-                if (req.isEmpty) df.select()
-                else df.select(req.fieldNames.toIndexedSeq.map(df(_)): _*)
-              out.rdd
-            }
-          }.asInstanceOf[T]
+      override def build(): Scan = {
+        val req = required
+        new GraftPlannedScan {
+          override def readSchema(): StructType = req
+          override def description(): String = tableName
+          // the metadata frame's own optimized plan, pruned to the read
+          override lazy val plan: LogicalPlan = {
+            val df = load(SparkSession.active)
+            CatalystBridge.optimized(
+              if (req.isEmpty) df.select()
+              else df.select(req.fieldNames.toIndexedSeq.map(df(_)): _*))
+          }
         }
       }
     }
+  }
 }
 
 /** A staged (unpublished) table for atomic CREATE/REPLACE TABLE AS SELECT:

@@ -2,7 +2,6 @@ package graft.spark
 
 import graft.UnsupportedFeatureError
 import graft.table.{EqPred, GePred, GtPred, InPred, LePred, LtPred, ScanPredicate, Table => GTable, WhenMatched, WhenNotMatched, WhenNotMatchedBySource}
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.execution.SparkStrategy
 import org.apache.spark.sql.catalyst.InternalRow
@@ -32,13 +31,15 @@ import org.apache.spark.sql.graftbridge.CatalystBridge
  *  - `MERGE INTO t USING src ON t.k = src.k [AND …] WHEN MATCHED THEN
  *    UPDATE SET * | UPDATE SET c = expr | DELETE WHEN NOT MATCHED THEN
  *    INSERT * | INSERT (cols) VALUES (src exprs)`
- * DELETE already routes through the DSv2 `SupportsDelete` path.
+ * DELETE already routes through the DSv2 `SupportsDelete` path. Reads of
+ * graft tables plan through [[GraftScanStrategy]].
  */
 class GraftSqlExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectParser((_, delegate) => new GraftSqlParser(delegate))
     ext.injectResolutionRule(session => new GraftDmlResolution(session))
     ext.injectPlannerStrategy(session => new GraftDmlStrategy(session))
+    ext.injectPlannerStrategy(_ => GraftScanStrategy)
   }
 }
 
@@ -158,9 +159,9 @@ class GraftDmlStrategy(session: SparkSession) extends SparkStrategy {
 
 case class GraftDmlExec(body: () => Unit) extends LeafExecNode {
   override def output: Seq[Attribute] = Nil
-  override protected def doExecute(): RDD[InternalRow] = {
+  override protected def doExecute() = {
     body()
-    sparkContext.emptyRDD
+    sparkContext.emptyRDD[InternalRow]
   }
 }
 

@@ -2,12 +2,16 @@ package graft.spark
 
 import graft.table.{Table => GTable}
 import graft.types._
-import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Row, SQLContext}
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.connector.expressions.NamedReference
 import org.apache.spark.sql.connector.expressions.aggregate._
-import org.apache.spark.sql.connector.read.V1Scan
-import org.apache.spark.sql.sources.{BaseRelation, Filter, TableScan => V1TableScan}
+import org.apache.spark.sql.connector.read.Scan
+import org.apache.spark.sql.connector.read.streaming.SparkDataStream
+import org.apache.spark.sql.execution.{LocalTableScanExec, SparkPlan}
+import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types._
 
 /**
@@ -173,20 +177,22 @@ private[spark] object MetadataAggregates {
 
 /** One-row scan carrying metadata-computed aggregate values. */
 private[spark] class GraftMetadataAggScan(
-    gt: GTable, aggSchema: StructType, values: Seq[Any]) extends V1Scan {
+    gt: GTable, aggSchema: StructType, values: Seq[Any]) extends Scan {
 
   override def readSchema(): StructType = aggSchema
 
-  override def toV1TableScan[T <: BaseRelation with V1TableScan](
-      context: SQLContext): T =
-    new BaseRelation with V1TableScan {
-      override def sqlContext: SQLContext = context
-      override def schema: StructType = aggSchema
-      override def buildScan(): RDD[Row] =
-        context.sparkSession.sparkContext.parallelize(
-          Seq(Row.fromSeq(values)), 1)
-    }.asInstanceOf[T]
+  /** The row as the one-row local relation [[GraftScanStrategy]] plans in
+    * place of the scan's relation, whose attributes are `output`. */
+  def exec(output: Seq[Attribute]): SparkPlan =
+    new GraftMetadataAggScanExec(output,
+      LocalRelation.fromExternalRows(output, Seq(Row.fromSeq(values))).data, None)
 
   override def description(): String =
     s"graft metadata-only aggregate over ${gt.ident}"
 }
+
+/** A one-row local table scan, named in plans for the metadata aggregate
+  * it answers. */
+private[spark] class GraftMetadataAggScanExec(
+    output: Seq[Attribute], rows: Seq[InternalRow], stream: Option[SparkDataStream])
+  extends LocalTableScanExec(output, rows, stream)

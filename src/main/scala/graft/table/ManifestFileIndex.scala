@@ -73,10 +73,23 @@ private[graft] object ManifestFileIndex {
     * `constants` columns. Hidden `_metadata` columns (`row_index`, …)
     * resolve as on any parquet read. */
   def read(spark: SparkSession, files: Seq[DataFile], schema: StructType,
-           constants: Seq[Constant] = Nil): DataFrame = {
+           constants: Seq[Constant] = Nil): DataFrame =
+    CatalystBridge.dataFrame(spark, relation(spark, files, schema, constants))
+
+  /** The relation [[read]] wraps; with `label`, plans name its scan by the
+    * label in place of "parquet". Its `_metadata` column joins the output
+    * through `withMetadataColumns()`. */
+  def relation(spark: SparkSession, files: Seq[DataFile], schema: StructType,
+               constants: Seq[Constant] = Nil, label: Option[String] = None): LogicalRelation = {
     val index = new ManifestFileIndex(files, constants)
-    val relation = HadoopFsRelation(index, index.partitionSchema, CatalystBridge.asNullable(schema),
-      bucketSpec = None, new ParquetFileFormat, Map.empty)(spark)
-    CatalystBridge.dataFrame(spark, LogicalRelation(relation))
+    val format = label.fold(new ParquetFileFormat)(new LabelledParquet(_))
+    LogicalRelation(HadoopFsRelation(index, index.partitionSchema, CatalystBridge.asNullable(schema),
+      bucketSpec = None, format, Map.empty)(spark))
+  }
+
+  /** Parquet whose scans show `label` (the graft table and snapshot they
+    * read) as their name in EXPLAIN and the SQL UI. */
+  private final class LabelledParquet(label: String) extends ParquetFileFormat {
+    override def shortName(): String = label
   }
 }

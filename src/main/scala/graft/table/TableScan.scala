@@ -6,9 +6,17 @@ import graft.transforms._
 import graft.types._
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.spark.SparkContext
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+import org.apache.spark.sql.catalyst.expressions.{Alias, And, Attribute, Cast, EqualNullSafe, EqualTo, Expression, GetStructField, IsNull, LessThanOrEqual, Or}
+import org.apache.spark.sql.catalyst.plans.LeftAnti
+import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, Filter, HintInfo, Join, JoinHint, LocalRelation, LogicalPlan, Project, Union}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.{CatalystBridge, ColumnBridge}
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType, StructType}
 
 /** Simple scan predicates used for manifest-level pruning (before Spark ever
   * sees the file list). The same predicates are re-applied as Catalyst
@@ -201,12 +209,12 @@ final class TableScan(
     val deletes = readDeleteEntries(fs, deleteManifests)
 
     // only immutable, serializable state enters the closure; the conf
-    // travels in the scan's broadcast
+    // travels in the catalog conf's broadcast
     val preds = predicates
     val specById = meta.partitionSpecs.map(s => s.specId -> s).toMap
     val schemaById = meta.schemas.map(s => s.schemaId -> s).toMap
     val currentSchema = meta.currentSchema
-    val confBc = taskConf(spark)
+    val confBc = TableScan.taskConf(spark, table.hadoopConf)
     val work = dataManifests.map(mf => (mf.manifestPath, mf.partitionSpecId, mf.schemaId))
     val slices = math.max(1, math.min(work.size,
       spark.sparkContext.defaultParallelism * 4))
@@ -227,64 +235,76 @@ final class TableScan(
     }
   }
 
-  /** The table's Hadoop conf, sent to this scan's tasks as one broadcast:
-    * a task reads it from its executor's copy instead of deserializing
-    * it with its closure. */
-  private var confBroadcast: Option[(org.apache.spark.SparkContext, Broadcast[SerializableHadoopConf])] = None
-
-  private def taskConf(spark: SparkSession): Broadcast[SerializableHadoopConf] = synchronized {
-    confBroadcast.filter(_._1 eq spark.sparkContext).map(_._2).getOrElse {
-      val b = spark.sparkContext.broadcast(new SerializableHadoopConf(table.hadoopConf))
-      confBroadcast = Some(spark.sparkContext -> b)
-      b
-    }
-  }
-
   // ------------------------------------------------------- materialization
 
-  /** Materialize as a DataFrame (see [[materializeTasks]]) and re-apply the
-    * scan predicates row-level, which also reaches parquet row-group
-    * pushdown inside each file. */
+  /** Materialize as a DataFrame (see [[readPlan]]) keeping only the rows
+    * that match the scan predicates; each file's read evaluates them, so
+    * they reach parquet row-group pushdown. */
   def toDF(spark: SparkSession): DataFrame =
-    predicates.foldLeft(materializeTasks(spark, planFilesDistributed(spark)))(
-      (d, p) => d.filter(predicateToColumn(p)))
+    CatalystBridge.dataFrame(spark,
+      readPlan(spark, planFilesDistributed(spark), filter = predicateFilter))
+
+  /** The scan predicates as one row condition. */
+  private[graft] def predicateFilter: Option[Column] =
+    predicates.map(predicateToColumn).reduceOption(_ && _)
+
+  /** How plans name this scan's reads: table and snapshot. */
+  private[graft] def description: String =
+    s"graft ${table.ident}" + snapshot.map(s => s" snapshot=${s.snapshotId}").getOrElse("")
 
   /** Materialize an explicit task list to the current schema WITHOUT the
     * scan predicates (used by copy-on-write rewrites, which need every row
     * of the affected files, not just matching ones). With `withPositions`,
     * two extra columns ride along: `__file` (the manifest path) and
     * `__pos` (row ordinal in that file) — what a merge-on-read DML writer
-    * needs to emit position deletes.
+    * needs to emit position deletes. See [[readPlan]]. */
+  private[graft] def materializeTasks(spark: SparkSession,
+                                      tasks: Seq[FileScanTask],
+                                      withPositions: Boolean = false): DataFrame =
+    CatalystBridge.dataFrame(spark, readPlan(spark, tasks, withPositions))
+
+  /** The logical plan that reads `tasks` to the current schema, built as
+    * one tree of resolved operators, so it is analysed once: by the
+    * DataFrame that wraps it, or inside the SQL query that plans it.
     *
     * One relation per writer schema reads the tasks' files through a
     * [[ManifestFileIndex]] — no listing, no existence checks, no schema
     * inference — projected to the current schema by field id, then
-    * unioned. Deletes apply as data, not plan shape, each scoped to
-    * exactly the (delete file, data file) pairs planning put in
+    * unioned. `filter` (a condition on current-schema columns) applies in
+    * each relation's read, above the projection only, so the planner
+    * pushes it into parquet. Deletes apply as data, not plan shape, each
+    * scoped to exactly the (delete file, data file) pairs planning put in
     * `deleteFiles`: position deletes and deletion vectors as one
     * [[NotDeleted]] filter on (`__file`, `__pos`) that the reading tasks
     * evaluate against each file's deleted-position bitmap, and equality
     * deletes as one anti-join per equality-ID set. So the plan has the
     * same size for 1 or 1000 delete sets, and no delete side is joined
-    * for position deletes. */
-  private[graft] def materializeTasks(spark: SparkSession,
-                                      tasks: Seq[FileScanTask],
-                                      withPositions: Boolean = false): DataFrame = {
+    * for position deletes.
+    *
+    * The output is `columns` (all current-schema columns when None), plus
+    * `__file` and `__pos` with `withPositions`; the reads take only the
+    * columns the output, `filter` and the equality keys need. `label`
+    * names the data relations in plans. */
+  private[graft] def readPlan(spark: SparkSession,
+                              tasks: Seq[FileScanTask],
+                              withPositions: Boolean = false,
+                              filter: Option[Column] = None,
+                              columns: Option[Seq[String]] = None,
+                              label: String = description): LogicalPlan = {
     import ManifestFileIndex.Constant
-    import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
     val meta = table.metadata
     val current = meta.currentSchema
-    val currentSpark = SparkSchemaConverter.toSpark(current)
+    val wanted = columns.getOrElse(current.fields.map(_.name)) ++
+      (if (withPositions) Seq("__file", "__pos") else Nil)
     if (tasks.isEmpty) {
-      val empty =
-        if (!withPositions) currentSpark
-        else currentSpark.add("__file", StringType).add("__pos", LongType)
-      return spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), empty)
+      val schema = SparkSchemaConverter.toSpark(current)
+        .add("__file", StringType).add("__pos", LongType)
+      return LocalRelation(StructType(wanted.map(schema(_))))
     }
     val (eqPairs, posPairs) = tasks.flatMap(t => t.deleteFiles.map(_ -> t)).partition(_._1.content == 2)
     val positioned = withPositions || posPairs.nonEmpty
     // equality scoping rides on per-file constants: the data sequence
-    // number and an id for the partition tuple (see applyEqualityDeletes)
+    // number and an id for the partition tuple (see antiJoinEqualityDeletes)
     val partIds = (tasks.map(_.file.partition) ++ eqPairs.map(_._1.partition)).distinct.zipWithIndex.toMap
     val seqByPath = tasks.map(t => t.filePath -> t.sequenceNumber).toMap
     val constants =
@@ -292,49 +312,71 @@ final class TableScan(
         (if (eqPairs.isEmpty) Nil
          else Seq(Constant("__seq", LongType, f => seqByPath(f.filePath)),
            Constant("__part", IntegerType, f => partIds(f.partition))))
-    val parts = tasks.groupBy(_.schemaId).toSeq.sortBy(_._1).map { case (schemaId, group) =>
+    // one anti-join per equality-ID set whose key columns the current
+    // schema still has
+    val eqSets = eqPairs.groupBy(_._1.equalityIds.toSet).toSeq.sortBy(_._1.toSeq.sorted.mkString(","))
+      .map { case (ids, group) => (ids.toSeq.sorted.flatMap(current.fieldById), group) }
+      .filter(_._1.nonEmpty)
+    val condition = filter.map(ColumnBridge.expression(spark, _))
+    val needed = (wanted ++ eqSets.flatMap(_._1.map(_.name)) ++
+      condition.toSeq.flatMap(_.collect { case a: UnresolvedAttribute => a.nameParts.head })).toSet
+    val fields = current.fields.filter(f => needed.contains(f.name))
+    val deletes = if (posPairs.isEmpty) None else Some(deletedPositions(spark, posPairs))
+    val reads = tasks.groupBy(_.schemaId).toSeq.sortBy(_._1).map { case (schemaId, group) =>
       val writeSchema = meta.schemaById(schemaId).getOrElse(current)
-      val raw = ManifestFileIndex.read(spark, group.map(_.file),
-        SparkSchemaConverter.toSpark(writeSchema), constants)
+      val files = ManifestFileIndex.relation(spark, group.map(_.file),
+        SparkSchemaConverter.toSpark(writeSchema), constants, Some(label))
+      // the hidden `_metadata` column narrowed to `row_index`, so the scan
+      // produces no other file metadata per row
+      val relation = if (!positioned) files else {
+        val withMetadata = files.withMetadataColumns()
+        withMetadata.copy(output = withMetadata.output.map {
+          case a if a.name == "_metadata" =>
+            a.withDataType(StructType(a.dataType.asInstanceOf[StructType].filter(_.name == "row_index")))
+          case a => a
+        })
+      }
+      def column(name: String): Attribute = relation.output.find(_.name == name).get
       // field-id projection: current field -> column name at write time
       val byId = writeSchema.fields.map(f => f.id -> f).toMap
-      val projection = current.fields.map { cf =>
-        byId.get(cf.id) match {
-          case Some(wf) =>
-            col(wf.name).cast(SparkSchemaConverter.toSparkType(cf.fieldType)).as(cf.name)
-          case None =>
-            // column added after these files were written: rows read the
-            // initial-default (spec v3 semantics), else null
-            cf.initialDefault.map(lit).getOrElse(lit(null))
-              .cast(SparkSchemaConverter.toSparkType(cf.fieldType)).as(cf.name)
+      val projection = fields.map { cf =>
+        val value = byId.get(cf.id) match {
+          case Some(wf) => column(wf.name)
+          // column added after these files were written: rows read the
+          // initial-default (spec v3 semantics), else null
+          case None => ColumnBridge.expression(spark, cf.initialDefault.map(lit).getOrElse(lit(null)))
         }
+        Alias(castTo(value, SparkSchemaConverter.toSparkType(cf.fieldType)), cf.name)()
       }
-      val posCols = if (!positioned) Nil else Seq(col("_metadata.row_index").as("__pos"))
-      raw.select(projection ++ constants.map(c => col(c.name)) ++ posCols: _*)
+      val pos = if (!positioned) Nil
+        else Seq(Alias(GetStructField(column("_metadata"), 0, Some("row_index")), "__pos")())
+      val read = Project(projection ++ constants.map(c => column(c.name)) ++ pos, relation)
+      def out(name: String): Attribute = read.output.find(_.name == name).get
+      (condition.toSeq ++ deletes.map(NotDeleted(out("__file"), out("__pos"), _)))
+        .reduceOption(And).fold[LogicalPlan](read)(Filter(_, read))
     }
-    val data = parts.reduce(_ unionAll _)
-    val live = if (posPairs.isEmpty) data else data.filter(notDeleted(spark, posPairs))
-    val deleted = eqPairs.groupBy(_._1.equalityIds.toSet).toSeq.sortBy(_._1.toSeq.sorted.mkString(","))
-      .foldLeft(live) { case (out, (ids, group)) =>
-        applyEqualityDeletes(spark, out, ids, group, tasks, partIds)
-      }.drop("__seq", "__part")
-    if (positioned && !withPositions) deleted.drop("__file", "__pos") else deleted
+    val data = if (reads.size == 1) reads.head else Union(reads)
+    val live = eqSets.foldLeft(data) { case (plan, (idFields, group)) =>
+      antiJoinEqualityDeletes(spark, plan, idFields, group, tasks, partIds)
+    }
+    Project(wanted.map(n => live.output.find(_.name == n).get), live)
   }
 
-  /** Position deletes and deletion vectors over data carrying `__file` /
-    * `__pos`, as a filter the scan's tasks evaluate: each data file's
-    * deleted positions come from exactly the delete files planning paired
-    * it with, sent to the tasks in a broadcast with the scan's conf. */
-  private def notDeleted(spark: SparkSession, pairs: Seq[(DataFile, FileScanTask)]): Column = {
-    import org.apache.spark.sql.graftbridge.ColumnBridge
+  /** `e` as type `to`, with no cast when it already is. */
+  private def castTo(e: Expression, to: DataType): Expression =
+    if (e.dataType == to) e else Cast(e, to, Some(SQLConf.get.sessionLocalTimeZone))
+
+  /** The deleted positions of the data files in `pairs`: each data file's
+    * come from exactly the position deletes and deletion vectors planning
+    * paired it with, sent to the tasks in a broadcast with the catalog's
+    * conf. */
+  private def deletedPositions(spark: SparkSession, pairs: Seq[(DataFile, FileScanTask)]): DeletedPositions = {
     val scope = pairs.groupMap { case (_, t) => PositionDeleteRef.normalize(t.filePath) } {
       case (d, _) => PositionDeleteRef.of(d) }.map { case (f, refs) => f -> refs.distinct.toArray }
     val refs = scope.values.flatten.toSeq.distinct
-    val deletes = new DeletedPositions(taskConf(spark), spark.sparkContext.broadcast(scope),
+    new DeletedPositions(TableScan.taskConf(spark, table.hadoopConf), spark.sparkContext.broadcast(scope),
       deleteFiles = refs.count(!_.isDeletionVector), deletionVectors = refs.count(_.isDeletionVector),
       dataFiles = scope.size)
-    ColumnBridge.column(NotDeleted(ColumnBridge.expression(col("__file")),
-      ColumnBridge.expression(col("__pos")), deletes))
   }
 
   /** Rows of `tasks` matching the scan predicates, with live MOR deletes
@@ -345,9 +387,9 @@ final class TableScan(
   private[graft] def matchedRowsWithPositions(spark: SparkSession,
                                               tasks: Seq[FileScanTask],
                                               extraCondition: Option[Column] = None): DataFrame = {
-    val all = materializeTasks(spark, tasks, withPositions = true)
-    val predFiltered = predicates.foldLeft(all)((d, p) => d.filter(predicateToColumn(p)))
-    extraCondition.foldLeft(predFiltered)(_ filter _)
+    val plan = readPlan(spark, tasks, withPositions = true, filter = predicateFilter)
+    CatalystBridge.dataFrame(spark,
+      extraCondition.fold(plan)(c => Filter(ColumnBridge.expression(spark, c), plan)))
   }
 
   private[graft] def predicateToColumn(p: ScanPredicate): Column = p match {
@@ -365,25 +407,19 @@ final class TableScan(
     * delete files. */
   private val BroadcastDeleteBytes = 32L * 1024 * 1024
 
-  private def sized(df: DataFrame, bytes: Long): DataFrame =
-    if (bytes <= BroadcastDeleteBytes) broadcast(df) else df
-
-  /** Equality deletes of one equality-ID set over data carrying `__seq`
-    * and `__part`, as one null-safe anti-join that reads each delete file
-    * once. Scoping is data, not plan shape: delete file D carries the
-    * highest data sequence number among the files planning paired it with
-    * and, when D has a partition tuple, that tuple's id; a data row is
-    * hidden only when its file's `__seq` is at most that and its `__part`
-    * matches. The sequence and partition rules of
+  /** Equality deletes of one equality-ID set (`idFields`) over data
+    * carrying `__seq` and `__part`, as one null-safe anti-join that reads
+    * each delete file once. Scoping is data, not plan shape: delete file D
+    * carries the highest data sequence number among the files planning
+    * paired it with and, when D has a partition tuple, that tuple's id; a
+    * data row is hidden only when its file's `__seq` is at most that and
+    * its `__part` matches. The sequence and partition rules of
     * [[ScanPruning.deleteApplies]] make that exactly the planned pairs,
     * which is checked here before the plan is built. */
-  private def applyEqualityDeletes(spark: SparkSession, data: DataFrame, ids: Set[Int],
-                                   pairs: Seq[(DataFile, FileScanTask)], tasks: Seq[FileScanTask],
-                                   partIds: Map[Map[String, String], Int]): DataFrame = {
+  private def antiJoinEqualityDeletes(spark: SparkSession, data: LogicalPlan, idFields: Seq[NestedField],
+                                      pairs: Seq[(DataFile, FileScanTask)], tasks: Seq[FileScanTask],
+                                      partIds: Map[Map[String, String], Int]): LogicalPlan = {
     import ManifestFileIndex.Constant
-    import org.apache.spark.sql.types.{IntegerType, LongType}
-    val idFields = ids.toSeq.sorted.flatMap(id => table.metadata.currentSchema.fieldById(id))
-    if (idFields.isEmpty) return data
     val dels = pairs.map(_._1).distinctBy(_.filePath)
     val maxSeq = pairs.groupMapReduce(_._1.filePath)(_._2.sequenceNumber)(math.max)
     val partId = dels.map(d => d.filePath ->
@@ -398,16 +434,21 @@ final class TableScan(
       planned.groupMapReduce(_._1)(_ => 1)(_ + _).forall { case (d, n) =>
         dataKeys.count { case (seq, part) => scoped(d, seq, part) } == n },
       "equality-delete pairs do not follow the sequence and partition scoping rules")
-    val keys = equalityKeys(spark, dels, tasks.flatMap(_.deleteSchemaIds).toMap, idFields, Seq(
+    val keys = equalityKeysPlan(spark, dels, tasks.flatMap(_.deleteSchemaIds).toMap, idFields, Seq(
       Constant("__dseq", LongType, d => maxSeq(d.filePath)),
       Constant("__dpart", IntegerType, d => partId(d.filePath).map(Int.box).orNull, nullable = true)))
+    def left(name: String): Attribute = data.output.find(_.name == name).get
+    def right(name: String): Attribute = keys.output.find(_.name == name).get
     // Iceberg equality deletes treat NULL as a value: a delete row with a
     // null key hides null-key data rows. SQL equality would never match
     // them, so the anti-join must be null-safe (<=>) per column.
-    val cond = idFields.map(f => data(f.name) <=> keys(s"__d_${f.name}")).reduce(_ && _) &&
-      data("__seq") <= keys("__dseq") &&
-      (keys("__dpart").isNull || keys("__dpart") === data("__part"))
-    data.join(sized(keys, dels.map(_.fileSizeInBytes).sum), cond, "left_anti")
+    val cond = (idFields.map(f => EqualNullSafe(left(f.name), right(s"__d_${f.name}"))) ++ Seq(
+      LessThanOrEqual(left("__seq"), right("__dseq")),
+      Or(IsNull(right("__dpart")), EqualTo(right("__dpart"), left("__part"))))).reduce(And)
+    val hint =
+      if (dels.map(_.fileSizeInBytes).sum <= BroadcastDeleteBytes) JoinHint(None, Some(HintInfo(Some(BROADCAST))))
+      else JoinHint.NONE
+    Join(data, keys, LeftAnti, Some(cond), hint)
   }
 
   /** The key rows of equality-delete files `dels` as `__d_<name>` columns
@@ -416,21 +457,27 @@ final class TableScan(
     * through the schema that wrote it (`schemaIds`, by path; the current
     * schema when absent), so a renamed key column still reads its values. */
   private[graft] def equalityKeys(spark: SparkSession, dels: Seq[DataFile],
-                                  schemaIds: Map[String, Int], idFields: Seq[NestedField],
-                                  constants: Seq[ManifestFileIndex.Constant] = Nil): DataFrame = {
+                                  schemaIds: Map[String, Int], idFields: Seq[NestedField]): DataFrame =
+    CatalystBridge.dataFrame(spark, equalityKeysPlan(spark, dels, schemaIds, idFields, Nil))
+
+  private def equalityKeysPlan(spark: SparkSession, dels: Seq[DataFile], schemaIds: Map[String, Int],
+                               idFields: Seq[NestedField],
+                               constants: Seq[ManifestFileIndex.Constant]): LogicalPlan = {
     val meta = table.metadata
-    dels.groupBy(d => schemaIds.getOrElse(d.filePath, meta.currentSchemaId)).toSeq.sortBy(_._1)
+    val reads = dels.groupBy(d => schemaIds.getOrElse(d.filePath, meta.currentSchemaId)).toSeq.sortBy(_._1)
       .map { case (schemaId, group) =>
         val writeSchema = meta.schemaById(schemaId).getOrElse(meta.currentSchema)
         val writeFields = idFields.map(f => writeSchema.fieldById(f.id).getOrElse(
           throw new IllegalStateException(s"equality-delete key field ${f.id} (${f.name}) " +
             s"is not in schema $schemaId that wrote ${group.head.filePath}")))
-        ManifestFileIndex.read(spark, group,
-            SparkSchemaConverter.toSpark(Schema(0, writeFields)), constants)
-          .select(idFields.zip(writeFields).map { case (cf, wf) =>
-            col(wf.name).cast(SparkSchemaConverter.toSparkType(cf.fieldType)).as(s"__d_${cf.name}")
-          } ++ constants.map(c => col(c.name)): _*)
-      }.reduce(_ unionAll _)
+        val relation = ManifestFileIndex.relation(spark, group,
+          SparkSchemaConverter.toSpark(Schema(0, writeFields)), constants)
+        def column(name: String): Attribute = relation.output.find(_.name == name).get
+        Project(idFields.zip(writeFields).map { case (cf, wf) =>
+          Alias(castTo(column(wf.name), SparkSchemaConverter.toSparkType(cf.fieldType)), s"__d_${cf.name}")()
+        } ++ constants.map(c => column(c.name)), relation)
+      }
+    if (reads.size == 1) reads.head else Union(reads)
   }
 
   /**
@@ -443,8 +490,8 @@ final class TableScan(
   def toDFWithRowIds(spark: SparkSession): DataFrame = {
     import spark.implicits._
     val tasks = planFilesDistributed(spark)
-    val all = materializeTasks(spark, tasks, withPositions = true)
-    val filtered = predicates.foldLeft(all)((d, p) => d.filter(predicateToColumn(p)))
+    val filtered = CatalystBridge.dataFrame(spark,
+      readPlan(spark, tasks, withPositions = true, filter = predicateFilter))
     val mapping = tasks.map(t => (t.filePath,
         t.file.firstRowId.map(java.lang.Long.valueOf).orNull))
       .distinct.toDF("__file", "__first_row_id")
@@ -471,6 +518,24 @@ final class TableScan(
 object TableScan {
   /** Data-manifest count beyond which planning fans out as a Spark job. */
   val DistributedPlanThreshold = 64
+
+  private val confBroadcasts =
+    new java.util.WeakHashMap[Configuration, (SparkContext, Broadcast[SerializableHadoopConf])]()
+
+  /** `conf` as tasks read it: one broadcast per conf and SparkContext, so
+    * every scan of a catalog's tables shares one copy per executor instead
+    * of serializing the whole conf per scan. The broadcast holds a copy
+    * taken when it is first made (a conf is not changed once a catalog
+    * holds it), so the entry lapses with the conf. */
+  private[graft] def taskConf(spark: SparkSession, conf: Configuration): Broadcast[SerializableHadoopConf] =
+    confBroadcasts.synchronized {
+      val sc = spark.sparkContext
+      Option(confBroadcasts.get(conf)).collect { case (c, b) if c eq sc => b }.getOrElse {
+        val b = sc.broadcast(new SerializableHadoopConf(new Configuration(conf)))
+        confBroadcasts.put(conf, (sc, b))
+        b
+      }
+    }
 }
 
 /** Manifest-level file pruning, separated from [[TableScan]] so the

@@ -7,13 +7,36 @@ import org.apache.spark.sql.classic
 
 /** More `private[sql]` re-exports (see [[ColumnBridge]] for why this
   * file lives in the spark namespace): materializing a resolved logical
-  * plan as a DataFrame (the MERGE source, manifest-listed file reads),
+  * plan as a DataFrame (the MERGE source, manifest-listed file reads) or
+  * as the plan a planner strategy splices in, adding such a strategy,
   * a nullable copy of a file schema, and converting a Catalyst
   * literal's internal value (UTF8String, day-int, micros-long) to the
   * external Scala value our scan predicates carry. */
 object CatalystBridge {
   def dataFrame(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** `plan` after the session's analyzer, which runs once. */
+  def analyzed(spark: SparkSession, plan: LogicalPlan): LogicalPlan = {
+    val session = spark.asInstanceOf[classic.SparkSession]
+    session.withActive {
+      val qe = session.sessionState.executePlan(plan)
+      qe.assertAnalyzed()
+      qe.analyzed
+    }
+  }
+
+  def optimized(df: DataFrame): LogicalPlan =
+    df.asInstanceOf[classic.Dataset[_]].queryExecution.optimizedPlan
+
+  /** Put `strategy` first among `spark`'s planner strategies, once. */
+  def addStrategy(spark: SparkSession, strategy: org.apache.spark.sql.execution.SparkStrategy): Unit = {
+    val methods = spark.asInstanceOf[classic.SparkSession].sessionState.experimentalMethods
+    methods.synchronized {
+      if (!methods.extraStrategies.contains(strategy))
+        methods.extraStrategies = strategy +: methods.extraStrategies
+    }
+  }
 
   /** A file relation's data schema with every field nullable, as
     * `DataFrameReader` builds it (private[spark] `asNullable`): a file
