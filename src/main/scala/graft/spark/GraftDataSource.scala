@@ -27,7 +27,8 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
  * resolve and read the table — the analogue of the reference's
  * `storage_options:` passthrough (`lib/iceberg/table.rb:151-159`), for
  * per-read filesystem settings (endpoints, credentials providers) without
- * touching the session-wide conf.
+ * touching the session-wide conf. They reach every read: the metadata,
+ * the manifests, and the data and delete files the scan's tasks open.
  *
  * A directory resolves through `metadata/version-hint.text` (the Hadoop
  * catalog layout), falling back to the highest `v*.metadata.json`. Tables

@@ -1,10 +1,11 @@
 package graft.spark
 
 import graft.UnsupportedFeatureError
-import graft.table.{SerializableHadoopConf, StaticTable, Table => GTable}
+import graft.table.{SerializableHadoopConf, StaticTable, TableScan, Table => GTable}
 import graft.types._
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.GenericArrayData
@@ -190,12 +191,12 @@ class GraftMicroBatchStream(
     val snaps = ancestry
       .filter(s => s.sequenceNumber > fromSeq && s.sequenceNumber <= toSeq)
     val meta = t.metadata
-    val confSer = new SerializableHadoopConf(conf)
+    val confBc = TableScan.taskConf(org.apache.spark.sql.SparkSession.active, conf)
     if (readChanges) {
       val fromId =
         if (fromSeq == Long.MinValue) None
         else ancestry.find(_.sequenceNumber == fromSeq).map(_.snapshotId)
-      return planChangePartitions(t, snaps, fromId, confSer)
+      return planChangePartitions(t, snaps, fromId, confBc)
     }
     snaps.flatMap { s =>
       s.operation.getOrElse("append") match {
@@ -203,7 +204,7 @@ class GraftMicroBatchStream(
           t.scan(Some(s.snapshotId)).addedFiles().map { task =>
             val writeSchema = meta.schemaById(task.schemaId).getOrElse(meta.currentSchema)
             GraftStreamInputPartition(task.filePath,
-              GraftMicroBatchStream.schemaJson(writeSchema), confSer)
+              GraftMicroBatchStream.schemaJson(writeSchema), confBc)
           }
         case other if skipNonAppends => Nil
         case other => throw new UnsupportedFeatureError(
@@ -226,7 +227,7 @@ class GraftMicroBatchStream(
     * pinned stream schema. */
   private def planChangePartitions(t: GTable, snaps: Seq[graft.meta.Snapshot],
                                    startId: Option[Long],
-                                   confSer: SerializableHadoopConf): Array[InputPartition] = {
+                                   confBc: Broadcast[SerializableHadoopConf]): Array[InputPartition] = {
     val meta = t.metadata
     val cdcJson = GraftMicroBatchStream.schemaJson(streamSchema)
     var prevId: Option[Long] = startId
@@ -239,7 +240,7 @@ class GraftMicroBatchStream(
         t.scan(Some(s.snapshotId)).addedFiles().foreach { task =>
           val writeSchema = meta.schemaById(task.schemaId).getOrElse(meta.currentSchema)
           parts += GraftStreamInputPartition(task.filePath,
-            GraftMicroBatchStream.schemaJson(writeSchema), confSer,
+            GraftMicroBatchStream.schemaJson(writeSchema), confBc,
             cdcMeta = Some(CdcMeta("insert", s.snapshotId, s.sequenceNumber)))
         }
       } else {
@@ -257,7 +258,7 @@ class GraftMicroBatchStream(
             fs
         }
         files.foreach(f =>
-          parts += GraftStreamInputPartition(f, cdcJson, confSer))
+          parts += GraftStreamInputPartition(f, cdcJson, confBc))
       }
       prevId = Some(s.snapshotId)
     }
@@ -351,7 +352,7 @@ case class CdcMeta(changeType: String, snapshotId: Long, sequence: Long)
 case class GraftStreamInputPartition(
     filePath: String,
     writeSchemaJson: String,
-    conf: SerializableHadoopConf,
+    conf: Broadcast[SerializableHadoopConf],
     cdcMeta: Option[CdcMeta] = None) extends InputPartition
 
 case class GraftStreamReaderFactory(streamSchemaJson: String) extends PartitionReaderFactory {
@@ -389,7 +390,7 @@ class GraftGroupReader(part: GraftStreamInputPartition, streamSchema: Schema,
   import scala.jdk.CollectionConverters._
 
   private val writeSchema = GraftMicroBatchStream.schemaOf(part.writeSchemaJson)
-  private val conf = part.conf.value
+  private val conf = part.conf.value.value
   private val path = new Path(part.filePath)
 
   // current stream field -> the column name it had when this file was written

@@ -122,6 +122,9 @@ class GraftSparkTable(
       // a DECLINED aggregate must not re-run the manifest walk when Spark
       // probes both supportCompletePushDown and pushAggregation
       private var aggTried = false
+      // the tasks the aggregate planned: the scan of a declined aggregate
+      // reads them rather than planning the snapshot again
+      private var planned: Option[Seq[graft.table.FileScanTask]] = None
       private var limitHint: Option[Int] = None
 
       override def pushFilters(filters: Array[Filter]): Array[Filter] = {
@@ -156,8 +159,11 @@ class GraftSparkTable(
       private def tryAggregation(agg: aggregate.Aggregation): Boolean = {
         if (!aggTried) {
           aggTried = true
-          aggResult = MetadataAggregates.compute(
-            graftTable, SparkSession.active, pinnedSnapshotId, pushed, agg)
+          aggResult = MetadataAggregates.compute(graftTable, pushed, agg, {
+            val tasks = graftTable.scan(pinnedSnapshotId).planFilesDistributed(SparkSession.active)
+            planned = Some(tasks)
+            tasks
+          })
         }
         aggResult.isDefined
       }
@@ -178,7 +184,7 @@ class GraftSparkTable(
             b.result()
           }
           new GraftScan(graftTable, pinnedSnapshotId, pushed, required,
-            limitHint, streamOptions ++ scanOpts)
+            limitHint, streamOptions ++ scanOpts, planned)
       }
     }
   }
@@ -325,7 +331,8 @@ private[spark] class GraftScan(
     pushed: Array[Filter],
     required: StructType,
     limitHint: Option[Int] = None,
-    streamOptions: Map[String, String] = Map.empty)
+    streamOptions: Map[String, String] = Map.empty,
+    planned: Option[Seq[graft.table.FileScanTask]] = None)
   extends GraftPlannedScan with org.apache.spark.sql.connector.read.SupportsReportStatistics {
 
   /** Micro-batch streaming entry (MicroBatchExecution builds this scan with
@@ -361,11 +368,12 @@ private[spark] class GraftScan(
 
   /** The graft scan, pinned once; pruning predicates reach its manifest
     * planning. ONE planning pass (distributed past 64 manifests) is shared
-    * by statistics, the limit prefix, and the actual read. */
+    * by statistics, the limit prefix, and the actual read: `planned`, when
+    * a declined metadata aggregate already ran it. */
   private val graftScan =
     gt.scan(snapshotId, pushed.flatMap(FilterBridge.toPredicate).toSeq)
   private lazy val plannedTasks =
-    graftScan.planFilesDistributed(SparkSession.active)
+    planned.getOrElse(graftScan.planFilesDistributed(SparkSession.active))
 
   override def estimateStatistics(): org.apache.spark.sql.connector.read.Statistics =
     new org.apache.spark.sql.connector.read.Statistics {

@@ -2,7 +2,7 @@ package graft.spark
 
 import graft.UnsupportedFeatureError
 import graft.manifest.DataFile
-import graft.table.{DataFileWriter, SerializableHadoopConf, Table => GTable}
+import graft.table.{DataFileWriter, TableScan, Table => GTable}
 import graft.transforms.Transform
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
@@ -41,7 +41,7 @@ private[spark] object GraftV2Write {
     DataFileWriter.Factory(
       dir = DataFileWriter.qualify(new Path(dataDir), gt.hadoopConf),
       schema = writeSchema,
-      sconf = new SerializableHadoopConf(gt.hadoopConf),
+      sconf = TableScan.taskConf(org.apache.spark.sql.SparkSession.active, gt.hadoopConf),
       targetFileRows = gt.properties.get("write.target-file-rows").map(_.toLong).getOrElse(5000000L),
       partition = partition)
   }

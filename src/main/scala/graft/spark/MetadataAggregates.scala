@@ -1,6 +1,6 @@
 package graft.spark
 
-import graft.table.{Table => GTable}
+import graft.table.{FileScanTask, Table => GTable}
 import graft.types._
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.catalyst.InternalRow
@@ -37,7 +37,9 @@ import org.apache.spark.sql.types._
  *
  * Planning reuses the scan's own manifest walk, distributed past the
  * 64-manifest threshold — a COUNT(*) on a 10⁵-manifest table must not
- * serialize a driver-side manifest read at optimization time.
+ * serialize a driver-side manifest read at optimization time. A declined
+ * aggregate hands its planned tasks to the scan that replaces it, so the
+ * snapshot is planned once.
  */
 private[spark] object MetadataAggregates {
 
@@ -45,12 +47,14 @@ private[spark] object MetadataAggregates {
     * bound at or past the cap cannot be proven untruncated. */
   private[spark] val StringBoundTruncateLen = 64
 
-  def compute(gt: GTable, spark: org.apache.spark.sql.SparkSession,
-              snapshotId: Option[Long], pushed: Array[Filter],
-              agg: Aggregation): Option[(StructType, Seq[Any])] = {
+  /** The aggregate's (schema, values), or None to decline. `plan` is the
+    * unfiltered scan's planning, run at most once and only when the rules
+    * above do not decline first. */
+  def compute(gt: GTable, pushed: Array[Filter], agg: Aggregation,
+              plan: => Seq[FileScanTask]): Option[(StructType, Seq[Any])] = {
     if (pushed.nonEmpty || agg.groupByExpressions().nonEmpty) return None
     val schema = gt.currentSchema
-    val tasks = gt.scan(snapshotId).planFilesDistributed(spark)
+    val tasks = plan
     if (tasks.exists(_.deleteFiles.nonEmpty)) return None
     val files = tasks.map(_.file)
     val totalRows = files.map(_.recordCount).sum

@@ -871,7 +871,7 @@ object StreamingOps extends Serializable {
       val added = currentFiles.filterNot(f => baseFiles(f.filePath)).distinctBy(_.filePath)
         .sortBy(_.filePath)
       if (added.isEmpty) emptyDf
-      else graft.table.ManifestFileIndex.read(spark, added, schema)
+      else graft.table.ManifestFileIndex.read(spark, added, schema, table.hadoopConf)
     }
   }
 
@@ -1152,7 +1152,7 @@ object StreamingOps extends Serializable {
           val added = nowFiles.filterNot(f => prevFiles(f.filePath)).distinctBy(_.filePath)
             .sortBy(_.filePath)
           if (added.isEmpty) emptyDf
-          else graft.table.ManifestFileIndex.read(spark, added, schema)
+          else graft.table.ManifestFileIndex.read(spark, added, schema, table.hadoopConf)
         }
       process(batch, sid)
       last = Some(sid)

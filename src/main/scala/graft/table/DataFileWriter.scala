@@ -12,6 +12,7 @@ import org.apache.parquet.hadoop.api.WriteSupport
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.parquet.hadoop.util.HadoopStreams
 import org.apache.parquet.io.{OutputFile, PositionOutputStream}
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, UnsafeProjection, UnsafeRow}
@@ -130,7 +131,7 @@ object DataFileWriter {
   final case class Factory(
       dir: String,
       schema: StructType,
-      sconf: SerializableHadoopConf,
+      sconf: Broadcast[SerializableHadoopConf],
       targetFileRows: Long,
       partition: Seq[PartitionValue] = Nil,
       columns: Option[Seq[Int]] = None,
@@ -171,7 +172,7 @@ object DataFileWriter {
     val factory = Factory(
       dir = qualify(dir, conf),
       schema = StructType(df.schema.fields.take(width)),
-      sconf = new SerializableHadoopConf(conf),
+      sconf = TableScan.taskConf(df.sparkSession, conf),
       targetFileRows = targetFileRows,
       partition = partitionColumns.zipWithIndex.map { case (n, i) => Precomputed(n, width + i) },
       columns = if (partitionColumns.isEmpty) None else Some(0 until width),
@@ -190,8 +191,8 @@ object DataFileWriter {
   }
 
   /** Hadoop conf wired for [[ParquetWriteSupport]] writing `schema`. */
-  private def parquetConf(sconf: SerializableHadoopConf, schema: StructType): Configuration = {
-    val c = new Configuration(sconf.value)
+  private def parquetConf(sconf: Broadcast[SerializableHadoopConf], schema: StructType): Configuration = {
+    val c = new Configuration(sconf.value.value)
     ParquetWriteSupport.setSchema(schema, c)
     c.set("spark.sql.parquet.writeLegacyFormat", "false")
     c.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")

@@ -1,13 +1,15 @@
 package graft.table
 
 import graft.manifest.DataFile
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, BoundReference, Expression, Predicate}
-import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, LogicalRelation, PartitionDirectory}
+import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, LogicalRelation, PartitionDirectory, PartitionedFile}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.graftbridge.CatalystBridge
+import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.{DataType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -20,7 +22,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * With `constants`, each file is its own partition whose values are the
   * file's constants (its manifest path, its data sequence number, …):
   * every row carries them as per-file values rather than per-row
-  * rewrites of `_metadata`. */
+  * rewrites of `_metadata`. Its relations read the files with the table's
+  * catalog conf ([[ManifestFileIndex.relation]]). */
 private[graft] final class ManifestFileIndex(files: Seq[DataFile],
                                              constants: Seq[ManifestFileIndex.Constant])
     extends FileIndex {
@@ -69,27 +72,41 @@ private[graft] object ManifestFileIndex {
   final case class Constant(name: String, dataType: DataType, value: DataFile => Any,
                             nullable: Boolean = false)
 
-  /** Parquet `files` read as `schema` (columns bind by name), plus the
-    * `constants` columns. Hidden `_metadata` columns (`row_index`, …)
-    * resolve as on any parquet read. */
-  def read(spark: SparkSession, files: Seq[DataFile], schema: StructType,
+  /** Parquet `files` read as `schema` (columns bind by name) with the
+    * catalog's `conf`, plus the `constants` columns. Hidden `_metadata`
+    * columns (`row_index`, …) resolve as on any parquet read. */
+  def read(spark: SparkSession, files: Seq[DataFile], schema: StructType, conf: Configuration,
            constants: Seq[Constant] = Nil): DataFrame =
-    CatalystBridge.dataFrame(spark, relation(spark, files, schema, constants))
+    CatalystBridge.dataFrame(spark, relation(spark, files, schema, conf, constants))
 
-  /** The relation [[read]] wraps; with `label`, plans name its scan by the
-    * label in place of "parquet". Its `_metadata` column joins the output
-    * through `withMetadataColumns()`. */
-  def relation(spark: SparkSession, files: Seq[DataFile], schema: StructType,
+  /** The relation [[read]] wraps. Its scans read the files with the
+    * catalog's `conf` (see [[TableParquet]]); with `label`, plans name them
+    * by the label in place of "parquet". Its `_metadata` column joins the
+    * output through `withMetadataColumns()`. */
+  def relation(spark: SparkSession, files: Seq[DataFile], schema: StructType, conf: Configuration,
                constants: Seq[Constant] = Nil, label: Option[String] = None): LogicalRelation = {
     val index = new ManifestFileIndex(files, constants)
-    val format = label.fold(new ParquetFileFormat)(new LabelledParquet(_))
     LogicalRelation(HadoopFsRelation(index, index.partitionSchema, CatalystBridge.asNullable(schema),
-      bucketSpec = None, format, Map.empty)(spark))
+      bucketSpec = None, new TableParquet(conf, label), Map.empty)(spark))
   }
 
-  /** Parquet whose scans show `label` (the graft table and snapshot they
-    * read) as their name in EXPLAIN and the SQL UI. */
-  private final class LabelledParquet(label: String) extends ParquetFileFormat {
-    override def shortName(): String = label
+  /** Parquet read with the table's own I/O settings (ref `scan.rs:82-109`,
+    * `storage_options`). Spark's reader gets [[TableScan.readerConf]]: the
+    * session's [[TableScan.trimmed]] entries with the catalog's on top, so a
+    * catalog-only file system or `hadoop.*` option reaches the data files,
+    * and the per-scan broadcast and per-file copy Spark makes of that conf
+    * hold tens of entries rather than over a thousand. With `label` (the
+    * graft table and snapshot read), scans show it as their name in
+    * EXPLAIN and the SQL UI. */
+  private final class TableParquet(@transient conf: Configuration, label: Option[String])
+      extends ParquetFileFormat {
+    override def shortName(): String = label.getOrElse(super.shortName())
+
+    override def buildReaderWithPartitionValues(
+        sparkSession: SparkSession, dataSchema: StructType, partitionSchema: StructType,
+        requiredSchema: StructType, filters: Seq[Filter], options: Map[String, String],
+        hadoopConf: Configuration): PartitionedFile => Iterator[InternalRow] =
+      super.buildReaderWithPartitionValues(sparkSession, dataSchema, partitionSchema,
+        requiredSchema, filters, options, TableScan.readerConf(sparkSession, hadoopConf, conf))
   }
 }

@@ -40,7 +40,7 @@ private[graft] object Reachability {
   def referenced(spark: SparkSession, conf: Configuration, snaps: Seq[Snapshot],
                  manifests: Seq[String], liveOnly: Boolean): Dataset[String] = {
     import spark.implicits._
-    val confSer = new SerializableHadoopConf(conf)
+    val confBc = TableScan.taskConf(spark, conf)
     val contentRefs: Dataset[String] =
       if (manifests.isEmpty) spark.emptyDataset[String]
       else {
@@ -49,7 +49,7 @@ private[graft] object Reachability {
         spark.createDataset(spark.sparkContext.parallelize(manifests, slices)
           .flatMap { mp =>
             val p = new Path(mp)
-            val f = p.getFileSystem(confSer.value)
+            val f = p.getFileSystem(confBc.value.value)
             val entries = Manifests.readManifest(f, p)
             (if (liveOnly) entries.filter(_.isLive) else entries)
               .map(_.dataFile.filePath)

@@ -891,7 +891,7 @@ final class Table(
       affected.flatMap(_.deleteFiles).filter(_.isDeletionVector)
         .flatMap(d => d.referencedDataFile.map(_ -> ((d.filePath,
           d.contentOffset, d.contentSizeInBytes.getOrElse(d.fileSizeInBytes))))).toMap
-    val confSer = new SerializableHadoopConf(hadoopConf)
+    val confBc = TableScan.taskConf(spark, hadoopConf)
     val dvDir = new Path(meta.location, "data").toString
     // (puffin path, puffin file length, referenced data file,
     //  blob offset, blob length, merged cardinality, newly hidden rows)
@@ -916,7 +916,7 @@ final class Table(
             liveDvByFile.get(file).foreach { case (oldPath, oldOff, oldLen) =>
               val p0 = new Path(oldPath)
               bitmap.or(DeletionVector.deserialize(Puffin.readBlob(
-                p0.getFileSystem(confSer.value), p0, oldOff.getOrElse(0L), oldLen)))
+                p0.getFileSystem(confBc.value.value), p0, oldOff.getOrElse(0L), oldLen)))
             }
             bitmap.runOptimize()
             // snapshot-id/sequence-number are -1: DVs are written BEFORE
@@ -929,7 +929,7 @@ final class Table(
           }
           val dvPath = new Path(dvDir, s"$commitUuid-dv-p$part-a$attempt.puffin")
           val (fileLen, blobMetas) = Puffin.write(
-            dvPath.getFileSystem(confSer.value), dvPath, blobs)
+            dvPath.getFileSystem(confBc.value.value), dvPath, blobs)
           blobMetas.iterator.map { bm =>
             val ref = bm.properties("referenced-data-file")
             (dvPath.toString, fileLen, ref, bm.offset, bm.length,
@@ -1420,12 +1420,12 @@ final class Table(
     // same liveOnly=true semantics as the driver path's filesOf
     val dead = Reachability.referenced(spark, hadoopConf, expired, deadInv, liveOnly = true)
     val live = Reachability.referenced(spark, hadoopConf, remaining, liveInv, liveOnly = true)
-    val confSer = new SerializableHadoopConf(hadoopConf)
+    val confBc = TableScan.taskConf(spark, hadoopConf)
     dead.except(live).foreachPartition { (it: Iterator[String]) =>
       var f: org.apache.hadoop.fs.FileSystem = null
       it.foreach { s =>
         val p = new Path(s)
-        if (f == null) f = p.getFileSystem(confSer.value)
+        if (f == null) f = p.getFileSystem(confBc.value.value)
         f.delete(p, false)
       }
     }
@@ -1607,13 +1607,13 @@ final class Table(
           def readGroup(group: Seq[ManifestFile]): Seq[ManifestEntry] =
             distributed match {
               case Some((spark, threshold)) if group.size >= threshold =>
-                val confSer = new SerializableHadoopConf(hadoopConf)
+                val confBc = TableScan.taskConf(spark, hadoopConf)
                 val slices = math.max(1, math.min(group.size,
                   spark.sparkContext.defaultParallelism * 4))
                 spark.sparkContext.parallelize(group.map(_.manifestPath), slices)
                   .flatMap { mp =>
                     val p = new Path(mp)
-                    val f = p.getFileSystem(confSer.value)
+                    val f = p.getFileSystem(confBc.value.value)
                     Manifests.readManifest(f, p).filter(_.isLive)
                       .map(_.copy(status = ManifestEntry.StatusExisting))
                   }.collect().toSeq
@@ -1772,7 +1772,7 @@ final class Table(
     val fs = new Path(meta.location).getFileSystem(hadoopConf)
     val manifests = Reachability.manifestInventory(fs, meta.snapshots)
     if (manifests.size < distributedThreshold) return removeOrphanFiles(olderThanMs)
-    val confSer = new SerializableHadoopConf(hadoopConf)
+    val confBc = TableScan.taskConf(spark, hadoopConf)
     // referenced paths, qualified on the executors exactly like the
     // driver path's norm (metadata records "/w/x", "file:/w/x",
     // "file:///w/x" interchangeably)
@@ -1782,7 +1782,7 @@ final class Table(
         var f: org.apache.hadoop.fs.FileSystem = null
         it.map { s =>
           val p = new Path(s.replaceFirst("^file:/+", "/"))
-          if (f == null) f = p.getFileSystem(confSer.value)
+          if (f == null) f = p.getFileSystem(confBc.value.value)
           f.makeQualified(p).toString
         }
       }.toDF("ref").distinct()
@@ -1802,7 +1802,7 @@ final class Table(
       .repartition(math.min(work.size, spark.sparkContext.defaultParallelism * 4))
       .flatMap { case (root, avroOnly) =>
         val p = new Path(root)
-        val f = p.getFileSystem(confSer.value)
+        val f = p.getFileSystem(confBc.value.value)
         val stats =
           if (!f.exists(p)) Iterator.empty
           else if (f.getFileStatus(p).isFile) Iterator(f.getFileStatus(p))
@@ -1822,7 +1822,7 @@ final class Table(
       var f: org.apache.hadoop.fs.FileSystem = null
       it.flatMap { s =>
         val p = new Path(s)
-        if (f == null) f = p.getFileSystem(confSer.value)
+        if (f == null) f = p.getFileSystem(confBc.value.value)
         if (f.delete(p, false)) Some(s) else None
       }
     }.collect().toSeq

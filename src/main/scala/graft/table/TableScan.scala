@@ -325,7 +325,7 @@ final class TableScan(
     val reads = tasks.groupBy(_.schemaId).toSeq.sortBy(_._1).map { case (schemaId, group) =>
       val writeSchema = meta.schemaById(schemaId).getOrElse(current)
       val files = ManifestFileIndex.relation(spark, group.map(_.file),
-        SparkSchemaConverter.toSpark(writeSchema), constants, Some(label))
+        SparkSchemaConverter.toSpark(writeSchema), table.hadoopConf, constants, Some(label))
       // the hidden `_metadata` column narrowed to `row_index`, so the scan
       // produces no other file metadata per row
       val relation = if (!positioned) files else {
@@ -471,7 +471,7 @@ final class TableScan(
           throw new IllegalStateException(s"equality-delete key field ${f.id} (${f.name}) " +
             s"is not in schema $schemaId that wrote ${group.head.filePath}")))
         val relation = ManifestFileIndex.relation(spark, group,
-          SparkSchemaConverter.toSpark(Schema(0, writeFields)), constants)
+          SparkSchemaConverter.toSpark(Schema(0, writeFields)), table.hadoopConf, constants)
         def column(name: String): Attribute = relation.output.find(_.name == name).get
         Project(idFields.zip(writeFields).map { case (cf, wf) =>
           Alias(castTo(column(wf.name), SparkSchemaConverter.toSparkType(cf.fieldType)), s"__d_${cf.name}")()
@@ -519,23 +519,64 @@ object TableScan {
   /** Data-manifest count beyond which planning fans out as a Spark job. */
   val DistributedPlanThreshold = 64
 
-  private val confBroadcasts =
-    new java.util.WeakHashMap[Configuration, (SparkContext, Broadcast[SerializableHadoopConf])]()
+  private val confBroadcasts = new java.util.WeakHashMap[Configuration,
+    (SparkContext, Map[String, String], Broadcast[SerializableHadoopConf])]()
 
-  /** `conf` as tasks read it: one broadcast per conf and SparkContext, so
-    * every scan of a catalog's tables shares one copy per executor instead
-    * of serializing the whole conf per scan. The broadcast holds a copy
-    * taken when it is first made (a conf is not changed once a catalog
-    * holds it), so the entry lapses with the conf. */
-  private[graft] def taskConf(spark: SparkSession, conf: Configuration): Broadcast[SerializableHadoopConf] =
+  /** `conf` as every graft task reads it: its [[trimmed]] entries,
+    * broadcast once per conf, SparkContext and content. Scans, writer
+    * factories, streamed input partitions and maintenance closures all
+    * carry this broadcast in place of a conf of their own. Each call trims
+    * `conf` again and makes a new broadcast when the entries changed, so a
+    * setting changed on a catalog's conf (a rotated token, say) reaches
+    * the next job's tasks as it reaches the driver's metadata I/O; the
+    * entry lapses with the conf. */
+  private[graft] def taskConf(spark: SparkSession, conf: Configuration): Broadcast[SerializableHadoopConf] = {
+    import scala.jdk.CollectionConverters._
+    val sc = spark.sparkContext
+    val entries = trimmed(conf)
+    val content = entries.iterator.asScala.map(e => e.getKey -> e.getValue).toMap
     confBroadcasts.synchronized {
-      val sc = spark.sparkContext
-      Option(confBroadcasts.get(conf)).collect { case (c, b) if c eq sc => b }.getOrElse {
-        val b = sc.broadcast(new SerializableHadoopConf(new Configuration(conf)))
-        confBroadcasts.put(conf, (sc, b))
+      Option(confBroadcasts.get(conf)).collect { case (c, m, b) if (c eq sc) && m == content => b }.getOrElse {
+        val b = sc.broadcast(new SerializableHadoopConf(entries))
+        confBroadcasts.put(conf, (sc, content, b))
         b
       }
     }
+  }
+
+  /** The entries of `conf` that a task needs beside Hadoop's own defaults,
+    * in a conf that loads no defaults: every entry that some source other
+    * than a `*-default.xml` file set, a site file (`core-site.xml`,
+    * `hdfs-site.xml`, ...) or a program, whatever its value, with `${…}`
+    * references expanded. Entries only the `*-default.xml` files set are
+    * left out; a reader gets them again by loading defaults (see
+    * [[SerializableHadoopConf]]). Tens of entries rather than over a
+    * thousand. */
+  private[graft] def trimmed(conf: Configuration): Configuration = {
+    val out = new Configuration(false)
+    conf.forEach { e =>
+      val sources = conf.getPropertySources(e.getKey)
+      val value = conf.get(e.getKey)
+      if (value != null && (sources == null || !sources.forall(_.endsWith("-default.xml"))))
+        out.set(e.getKey, value)
+    }
+    out
+  }
+
+  /** The conf Spark's parquet reader gets for a scan of a table whose
+    * catalog holds `catalogConf`: `session` (the conf Spark built for the
+    * scan) [[trimmed]], with the catalog's trimmed entries on top. Fresh
+    * per call, since Spark sets its read keys on the conf it is handed.
+    * Spark ships it to executors in its own wrapper, which loads no
+    * defaults there: an executor's data-file reads see every site-file and
+    * programmatic entry, over Hadoop's code defaults rather than its
+    * `*-default.xml` values. */
+  private[graft] def readerConf(spark: SparkSession, session: Configuration,
+                                catalogConf: Configuration): Configuration = {
+    val out = trimmed(session)
+    taskConf(spark, catalogConf).value.entries.forEach(e => out.set(e.getKey, e.getValue))
+    out
+  }
 }
 
 /** Manifest-level file pruning, separated from [[TableScan]] so the
@@ -941,18 +982,28 @@ private[graft] object ScanPruning extends Serializable {
   }
 }
 
-/** Hadoop `Configuration` is not `Serializable`; this carries it through a
-  * Spark closure by writing its key/value state (the same trick Spark's own
-  * internal wrapper uses). */
-private[graft] class SerializableHadoopConf(@transient var value: Configuration)
+/** Hadoop `Configuration` is not `Serializable`; this carries a
+  * [[TableScan.trimmed]] conf's entries through a Spark broadcast by
+  * writing their key/value state (the same trick Spark's own internal
+  * wrapper uses). Graft makes one only in [[TableScan.taskConf]]: tasks
+  * read it through that broadcast, never from their own closure. Tasks
+  * read [[value]], the entries over the Hadoop defaults of the JVM that
+  * reads them, so an executor sees the `*-default.xml` values the
+  * entries leave out, and the entries win over its own site files. */
+private[graft] class SerializableHadoopConf(@transient var entries: Configuration)
     extends Serializable {
+  @transient lazy val value: Configuration = {
+    val c = new Configuration()
+    entries.forEach(e => c.set(e.getKey, e.getValue))
+    c
+  }
   private def writeObject(out: java.io.ObjectOutputStream): Unit = {
     out.defaultWriteObject()
-    value.write(out)
+    entries.write(out)
   }
   private def readObject(in: java.io.ObjectInputStream): Unit = {
     in.defaultReadObject()
-    value = new Configuration(false)
-    value.readFields(in)
+    entries = new Configuration(false)
+    entries.readFields(in)
   }
 }

@@ -66,6 +66,18 @@ class GraftDataSourceSpec extends AnyFunSuite {
     assert(e.getMessage != null)
   }
 
+  test("a hadoop.fs.<scheme>.impl read option alone makes the data files readable") {
+    val wh = CatalogOnlyFileSystem.tempDir("graft-ds-catonly")
+    val t = new HadoopCatalog(wh, hadoopConf = CatalogOnlyFileSystem.conf()).createTable("default.ev",
+      Schema(0, Seq(NestedField(1, "id", ILong), NestedField(2, "name", IString))))
+    t.append(Seq((1L, "one"), (2L, "two")).toDF("id", "name"))
+    val reader = CatalogOnlyFileSystem.entries.foldLeft(spark.read.format("graft")) {
+      case (r, (k, v)) => r.option(s"hadoop.$k", v)
+    }
+    assert(reader.load(s"$wh/default/ev").orderBy("id").collect().map(_.getLong(0)).toSeq == Seq(1L, 2L))
+    intercept[Exception](spark.read.format("graft").load(s"$wh/default/ev").collect())
+  }
+
   test("writes are rejected: no catalog, read-only") {
     val e = intercept[Exception] {
       Seq((4L, "four")).toDF("id", "name")

@@ -174,6 +174,34 @@ class MetadataAggSpec extends AnyFunSuite {
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
+  test("a COUNT(*) declined for a deletion vector plans the snapshot once past 64 manifests") {
+    init
+    import spark.implicits._
+    sql(s"""CREATE TABLE $C.default.dv (id BIGINT)
+           |TBLPROPERTIES ('format-version' = '3', 'write.delete.mode' = 'merge-on-read')""".stripMargin)
+    val tbl = cat.loadTable("dv")
+    for (i <- 1 to 66) tbl.append(Seq(i.toLong).toDF("id").coalesce(1))
+    tbl.deleteWhere(spark, "id = 3")
+    assert(tbl.refresh().scan().planFiles().exists(_.deleteFiles.exists(_.isDeletionVector)))
+    @volatile var jobs = 0
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = jobs += 1
+    }
+    org.apache.spark.TestListenerBus.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val df = sql(s"SELECT count(*) FROM $C.default.dv")
+      // planning only: the declined aggregate's manifest walk is the one
+      // distributed planning job, and the scan reuses its tasks
+      val plan = df.queryExecution.executedPlan.toString
+      assert(!plan.contains("GraftMetadataAggScan"), plan)
+      org.apache.spark.TestListenerBus.drain(spark.sparkContext)
+      assert(jobs == 1)
+      assert(df.head().getLong(0) == 65)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   test("SUM and GROUP BY are not pushed and stay correct") {
     init
     val r1 = sql(s"SELECT sum(id) FROM $C.default.t").head()
