@@ -2,7 +2,7 @@ package graft.catalog
 
 import graft._
 import graft.meta._
-import graft.table.Table
+import graft.table.{Table, TableFiles}
 import graft.types.Schema
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
@@ -13,8 +13,11 @@ import org.json4s.jackson.JsonMethods
  * Filesystem-warehouse catalog: each table directory carries
  * `metadata/v{N}.metadata.json` plus `metadata/version-hint.text`, and a
  * commit is a create-if-absent of the next version file (rename-free CAS —
- * `fs.create(path, overwrite = false)` is the atomic gate). This is the FS
- * analogue of the reference's SQL/Glue pointer-swap backends
+ * `TableFiles.create(fs, path, overwrite = false)` is the gate). On the local
+ * file system that create is one `O_EXCL` open, so two catalog instances or
+ * processes over one warehouse cannot both claim a version; on other file
+ * systems it is as atomic as their `fs.create(path, overwrite = false)`.
+ * This is the FS analogue of the reference's SQL/Glue pointer-swap backends
  * (`ext/iceberg/src/catalog.rs:309-441` semantics).
  *
  * Namespaces are directories marked with a `.graft_ns.json` properties file
@@ -29,10 +32,10 @@ final class HadoopCatalog(
   private val NsMarker = ".graft_ns.json"
   private val root = new Path(warehouse)
   private def fs = root.getFileSystem(hadoopConf)
-  // serializes local commits; cross-process safety comes from create-if-absent
+  // serializes this instance's commits; other instances and processes are
+  // kept out by the create-if-absent of the next version file
   private val lock = new Object
 
-  fs.mkdirs(root)
   if (!fs.exists(nsMarkerPath(defaultNamespace))) createNamespace(defaultNamespace, ifNotExists = true)
 
   private def nsPath(ns: Seq[String]): Path = ns.foldLeft(root)((p, s) => new Path(p, s))
@@ -44,7 +47,7 @@ final class HadoopCatalog(
     new Path(metadataDir(ident), s"v$v.metadata.json")
 
   private def writeFile(p: Path, content: String, overwrite: Boolean): Unit = {
-    val out = fs.create(p, overwrite)
+    val out = TableFiles.create(fs, p, overwrite)
     try out.write(content.getBytes("UTF-8")) finally out.close()
   }
   private def readFile(p: Path): String = {
@@ -102,7 +105,6 @@ final class HadoopCatalog(
       if (!ifNotExists)
         throw new NamespaceAlreadyExistsError(s"Namespace already exists: ${ns.mkString(".")}")
     } else {
-      fs.mkdirs(nsPath(ns))
       writeFile(nsMarkerPath(ns), propsToJson(properties), overwrite = true)
     }
   }
@@ -159,7 +161,6 @@ final class HadoopCatalog(
     CatalogUtil.validateSpec(schema, partitionSpec)
     val loc = location.getOrElse(tablePath(ident).toString)
     val meta = TableMetadata.create(loc, schema, partitionSpec, sortOrder, properties)
-    fs.mkdirs(metadataDir(ident))
     CatalogUtil.writeMetadataFile(versionPath(ident, 1), meta, hadoopConf, overwrite = false)
     writeFile(hintPath(ident), "1", overwrite = true)
     new Table(Some(this), ident, meta, hadoopConf)
@@ -215,7 +216,6 @@ final class HadoopCatalog(
     if (tableExists(name))
       throw new TableAlreadyExistsError(s"Table already exists: $ident")
     val meta = CatalogUtil.readMetadataFile(metadataLocation, hadoopConf)
-    fs.mkdirs(metadataDir(ident))
     CatalogUtil.writeMetadataFile(versionPath(ident, 1), meta, hadoopConf, overwrite = false)
     writeFile(hintPath(ident), "1", overwrite = true)
     new Table(Some(this), ident, meta, hadoopConf)

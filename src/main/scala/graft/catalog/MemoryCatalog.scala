@@ -2,7 +2,7 @@ package graft.catalog
 
 import graft._
 import graft.meta._
-import graft.table.Table
+import graft.table.{Table, TableFiles}
 import graft.types.Schema
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
@@ -244,7 +244,7 @@ private[graft] object CatalogUtil {
                         overwrite: Boolean): Unit = {
     val fs = p.getFileSystem(conf)
     val out =
-      try fs.create(p, overwrite)
+      try TableFiles.create(fs, p, overwrite)
       catch { case _: java.io.IOException if !overwrite =>
         throw new CommitConflictError(s"metadata version already exists: $p")
       }

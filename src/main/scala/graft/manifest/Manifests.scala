@@ -1,6 +1,7 @@
 package graft.manifest
 
 import graft.meta.{PartitionField, PartitionSpec}
+import graft.table.TableFiles
 import graft.types._
 import org.apache.avro.{LogicalTypes, Schema => AvroSchema}
 import org.apache.avro.file.{DataFileReader, DataFileWriter}
@@ -414,7 +415,7 @@ object Manifests {
     writer.setMeta("format-version", "2")
     writer.setMeta("content",
       if (entries.exists(_.dataFile.content != 0)) "deletes" else "data")
-    val out = fs.create(path, true)
+    val out = TableFiles.create(fs, path, overwrite = true)
     try {
       writer.create(avro, out)
       entries.foreach { e =>
@@ -576,7 +577,7 @@ object Manifests {
     parentSnapshotId.foreach(p => writer.setMeta("parent-snapshot-id", p.toString))
     if (sequenceNumber >= 0) writer.setMeta("sequence-number", sequenceNumber.toString)
     writer.setMeta("format-version", "2")
-    val out = fs.create(path, true)
+    val out = TableFiles.create(fs, path, overwrite = true)
     try {
       writer.create(manifestFileSchema, out)
       manifests.foreach { m =>

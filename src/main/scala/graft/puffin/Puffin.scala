@@ -1,5 +1,6 @@
 package graft.puffin
 
+import graft.table.TableFiles
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.json4s._
 import org.json4s.jackson.JsonMethods
@@ -52,7 +53,7 @@ object Puffin {
   /** Write a Puffin file; returns (file length, blob metadata with offsets). */
   def write(fs: FileSystem, path: Path, blobs: Seq[Blob],
             fileProperties: Map[String, String] = Map.empty): (Long, Seq[BlobMetadata]) = {
-    val out = fs.create(path, true)
+    val out = TableFiles.create(fs, path, overwrite = true)
     try {
       out.write(Magic)
       var offset = Magic.length.toLong

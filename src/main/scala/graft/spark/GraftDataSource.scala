@@ -10,6 +10,8 @@ import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
+import scala.jdk.CollectionConverters._
+
 /**
  * Path-based reads without a catalog — the reference's StaticTable
  * (`lib/iceberg/static_table.rb`) surfaced as a Spark data source:
@@ -89,10 +91,7 @@ class GraftDataSource extends org.apache.spark.sql.connector.catalog.TableProvid
                             schema: Option[StructType], providerName: String,
                             parameters: Map[String, String]): (String, StructType) =
     ("graft", schema.getOrElse {
-      val conf = new Configuration()
-      parameters.foreach { case (k, v) =>
-        if (k.startsWith("hadoop.")) conf.set(k.substring("hadoop.".length), v)
-      }
+      val conf = GraftDataSource.hadoopConf(parameters)
       val t = StaticTable.load(
         GraftDataSource.metadataPathFor(streamPath(parameters), conf), conf)
       val base = graft.types.SparkSchemaConverter.toSpark(t.currentSchema)
@@ -115,10 +114,7 @@ class GraftDataSource extends org.apache.spark.sql.connector.catalog.TableProvid
     resolve(new CaseInsensitiveStringMap(properties))
 
   private def resolve(options: CaseInsensitiveStringMap): GraftSparkTable = {
-    val conf = new Configuration()
-    options.asCaseSensitiveMap().forEach { (k, v) =>
-      if (k.startsWith("hadoop.")) conf.set(k.substring("hadoop.".length), v)
-    }
+    val conf = GraftDataSource.hadoopConf(options.asCaseSensitiveMap().asScala)
     // two addressing modes: a table/metadata path (read-only StaticTable),
     // or warehouse+table naming a Hadoop-catalog table (catalog-backed —
     // the form the streaming sink uses, so its schema resolves here too)
@@ -163,6 +159,16 @@ class GraftDataSource extends org.apache.spark.sql.connector.catalog.TableProvid
 }
 
 object GraftDataSource {
+  /** The Hadoop conf of a read: `conf` (a default conf unless given)
+    * overlaid with the options prefixed `hadoop.`, the prefix dropped. */
+  private[spark] def hadoopConf(options: scala.collection.Map[String, String],
+                                conf: Configuration = new Configuration()): Configuration = {
+    options.foreach { case (k, v) =>
+      if (k.startsWith("hadoop.")) conf.set(k.substring("hadoop.".length), v)
+    }
+    conf
+  }
+
   /** A `*.metadata.json` path passes through; a table directory resolves
     * via `metadata/version-hint.text`, else the highest version file.
     * The hint rewrite is not atomic, so a concurrent reader (a streaming

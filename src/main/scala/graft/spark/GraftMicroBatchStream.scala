@@ -69,13 +69,8 @@ class GraftMicroBatchStream(
     with SupportsAdmissionControl
     with SupportsTriggerAvailableNow with ReportsSourceMetrics {
 
-  private val conf: Configuration = {
-    val c = new Configuration(baseConf)
-    parameters.foreach { case (k, v) =>
-      if (k.startsWith("hadoop.")) c.set(k.substring("hadoop.".length), v)
-    }
-    c
-  }
+  private val conf: Configuration =
+    GraftDataSource.hadoopConf(parameters, new Configuration(baseConf))
   private val skipNonAppends =
     parameters.get("skip-non-appends").exists(_.toBoolean)
   private val readChanges =
@@ -278,10 +273,7 @@ object GraftMicroBatchStream {
     * .load(dir)` takes). */
   def forPath(tableDir: String, parameters: Map[String, String],
               streamSchema: Schema): GraftMicroBatchStream = {
-    val conf = new Configuration()
-    parameters.foreach { case (k, v) =>
-      if (k.startsWith("hadoop.")) conf.set(k.substring("hadoop.".length), v)
-    }
+    val conf = GraftDataSource.hadoopConf(parameters)
     new GraftMicroBatchStream(
       () => StaticTable.load(GraftDataSource.metadataPathFor(tableDir, conf), conf),
       tableDir, parameters, streamSchema, conf)

@@ -51,13 +51,7 @@ import org.apache.spark.sql.types.StructType
 class GraftStreamSource(sqlContext: SQLContext, tableDir: String,
                         parameters: Map[String, String]) extends Source {
 
-  private val conf: Configuration = {
-    val c = new Configuration()
-    parameters.foreach { case (k, v) =>
-      if (k.startsWith("hadoop.")) c.set(k.substring("hadoop.".length), v)
-    }
-    c
-  }
+  private val conf: Configuration = GraftDataSource.hadoopConf(parameters)
   private val skipNonAppends =
     parameters.get("skip-non-appends").exists(_.toBoolean)
   private val readChanges =

@@ -253,7 +253,7 @@ final class DataFileWriter(taskUid: String, f: DataFileWriter.Factory)
   private def newOpen(tuple: Seq[String]): Open = {
     val p = new Path(f.dir, s"${f.prefix}-$taskUid-$fileNo.parquet")
     fileNo += 1
-    val out = p.getFileSystem(conf).create(p, false)
+    val out = TableFiles.create(p.getFileSystem(conf), p, overwrite = false)
     val w = new RowWriterBuilder(new StreamFile(p, out))
       .withConf(conf)
       .withCompressionCodec(CompressionCodecName.SNAPPY)

@@ -31,7 +31,13 @@ private[graft] object PositionDeleteRef {
 
   /** A position delete file may name a local file "file:///x" while the
     * manifest (Hadoop `Path.toString`) says "file:/x". */
-  def normalize(path: String): String = path.replaceFirst("^file:/+", "file:/")
+  def normalize(path: String): String =
+    if (!path.startsWith("file://")) path
+    else {
+      var i = 7
+      while (i < path.length && path.charAt(i) == '/') i += 1
+      "file:/" + path.substring(i)
+    }
 }
 
 /**

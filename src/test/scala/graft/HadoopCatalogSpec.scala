@@ -1,14 +1,19 @@
 package graft
 
-import graft.catalog.HadoopCatalog
-import graft.meta.MetadataJson
+import java.util.concurrent.{Callable, CyclicBarrier, Executors}
+
+import graft.catalog.{CatalogUtil, HadoopCatalog}
+import graft.meta.{MetadataJson, PartitionSpec, SortOrder, TableMetadata}
 import graft.types._
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Filesystem catalog behavior: version-hint CAS, crash recovery
-  * (roll-forward past an orphan metadata version, survive a lost hint),
-  * cross-catalog-instance visibility, rename, namespace persistence. */
+/** Filesystem catalog behavior: version-hint CAS (atomic create-if-absent,
+  * across catalog instances too), crash recovery (roll-forward past an
+  * orphan metadata version, survive a lost hint), cross-catalog-instance
+  * visibility, rename, namespace persistence, and tables whose files were
+  * written with `.crc` siblings. */
 class HadoopCatalogSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
@@ -107,5 +112,85 @@ class HadoopCatalogSpec extends AnyFunSuite {
     val c2 = new HadoopCatalog(dir)
     assert(c2.namespaceProperties(Seq("ns1")) == Map("owner" -> "me"))
     assert(c2.listTables(Some(Seq("ns1"))) == Seq(Seq("ns1", "t2")))
+  }
+
+  test("create-if-absent is atomic: of two racing creates of one version file, one wins") {
+    val dir = wh()
+    val meta = TableMetadata.create(dir, schema, PartitionSpec.Unpartitioned,
+      SortOrder.Unsorted, Map.empty)
+    val conf = new Configuration()
+    val pool = Executors.newFixedThreadPool(2)
+    try {
+      (1 to 200).foreach { round =>
+        val p = new Path(dir, s"race/v$round.metadata.json")
+        val barrier = new CyclicBarrier(2)
+        val won = Seq.fill(2)(pool.submit(new Callable[Boolean] {
+          def call(): Boolean = {
+            barrier.await()
+            try { CatalogUtil.writeMetadataFile(p, meta, conf, overwrite = false); true }
+            catch { case _: CommitConflictError => false }
+          }
+        })).map(_.get())
+        assert(won.count(identity) == 1, s"round $round: $won")
+      }
+    } finally pool.shutdown()
+  }
+
+  test("two catalog instances over one warehouse, appending from their own threads, lose no row") {
+    import spark.implicits._
+    val dir = wh()
+    new HadoopCatalog(dir).createTable("both", schema)
+    val perWriter = 12
+    val pool = Executors.newFixedThreadPool(2)
+    try {
+      Seq(0, 1).map { w =>
+        pool.submit(new Callable[Unit] {
+          def call(): Unit = {
+            val t = new HadoopCatalog(dir).loadTable("both")
+            (0 until perWriter).foreach(i =>
+              t.append(Seq((w * 1000L + i, s"w$w")).toDF("id", "k")))
+          }
+        })
+      }.foreach(_.get())
+    } finally pool.shutdown()
+    val t = new HadoopCatalog(dir).loadTable("both")
+    assert(t.toDF(spark).select("id").collect().map(_.getLong(0)).toSet ==
+      ((0L until perWriter) ++ (1000L until 1000L + perWriter)).toSet)
+    assert(t.snapshots.size == 2 * perWriter)
+  }
+
+  test("a table whose hint and namespace marker have .crc siblings commits, reloads and reads") {
+    import spark.implicits._
+    val dir = wh()
+    val c1 = new HadoopCatalog(dir)
+    val t = c1.createTable("old", schema)
+    t.append(Seq((1L, "a")).toDF("id", "k"))
+    // rewrite both through Hadoop's checksummed create, as earlier versions did
+    val fs = new Path(dir).getFileSystem(new Configuration())
+    def hadoopWrite(p: Path, s: String): Unit = {
+      val out = fs.create(p, true)
+      try out.write(s.getBytes("UTF-8")) finally out.close()
+    }
+    def hadoopRead(p: Path): String = {
+      val in = fs.open(p)
+      try new String(in.readAllBytes(), "UTF-8") finally in.close()
+    }
+    val hint = new Path(t.location, "metadata/version-hint.text")
+    val marker = new Path(dir, "default/.graft_ns.json")
+    hadoopWrite(hint, "2")
+    hadoopWrite(marker, """{"owner":"old"}""")
+    assert(fs.exists(new Path(hint.getParent, ".version-hint.text.crc")) &&
+      fs.exists(new Path(marker.getParent, "..graft_ns.json.crc")))
+
+    // same lengths, new bytes: a stale checksum would fail the reads below
+    c1.updateNamespace(Seq("default"), Map("owner" -> "new"))
+    t.append(Seq((2L, "b")).toDF("id", "k"))
+    assert(hadoopRead(hint) == "3")
+    val c2 = new HadoopCatalog(dir)
+    assert(c2.namespaceProperties(Seq("default")) == Map("owner" -> "new"))
+    val reloaded = c2.loadTable("old")
+    reloaded.append(Seq((3L, "c")).toDF("id", "k"))
+    assert(reloaded.toDF(spark).select("id").collect().map(_.getLong(0)).toSet == Set(1L, 2L, 3L))
+    assert(hadoopRead(hint) == "4")
   }
 }

@@ -3,7 +3,7 @@ package graft
 import graft.catalog.MemoryCatalog
 import graft.manifest.{DataFile, ManifestEntry, ManifestFile, Manifests}
 import graft.meta.{PartitionField, PartitionSpec, Snapshot, SnapshotLogEntry, SnapshotRef}
-import graft.table.Table
+import graft.table.{PositionDeleteRef, Table}
 import graft.types.{ILong, IString, NestedField, Schema}
 import org.apache.hadoop.fs.Path
 import org.scalatest.funsuite.AnyFunSuite
@@ -350,6 +350,22 @@ class MorSpec extends AnyFunSuite {
         assert(withIds.map(_._1).sorted.toSeq == live)
         assert(withIds.map(_._2).distinct.length == live.size)
       }
+    }
+  }
+
+  test("PositionDeleteRef.normalize collapses the slashes after file: only") {
+    val cases = Seq(
+      "file:/x" -> "file:/x",
+      "file://x" -> "file:/x",
+      "file:///x" -> "file:/x",
+      "file:///" -> "file:/",
+      "file:x" -> "file:x",
+      "s3://b/x" -> "s3://b/x",
+      "/tmp/x" -> "/tmp/x",
+      "x/file:///y" -> "x/file:///y")
+    cases.foreach { case (in, out) =>
+      assert(PositionDeleteRef.normalize(in) == out, in)
+      assert(PositionDeleteRef.normalize(in) == in.replaceFirst("^file:/+", "file:/"), in)
     }
   }
 }
