@@ -1,7 +1,7 @@
 package graft.spark
 
 import graft.InvalidDataError
-import graft.table.{StaticTable, Table => GTable}
+import graft.table.StaticTable
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.connector.catalog.{Table => SparkTable}
@@ -36,10 +36,14 @@ import scala.jdk.CollectionConverters._
  * catalog layout), falling back to the highest `v*.metadata.json`. Tables
  * loaded this way have no catalog, so they are read-only — writes fail
  * with the read-only error, matching StaticTable semantics.
+ *
+ * `spark.readStream.format("graft")`, with a path or with warehouse+table
+ * options, resolves the same [[GraftSparkTable]], whose scan is the V2
+ * [[GraftMicroBatchStream]]; there is no V1 stream source. The V1
+ * [[GraftStreamSink]] serves `writeStream.format("graft")`.
  */
 class GraftDataSource extends org.apache.spark.sql.connector.catalog.TableProvider
     with DataSourceRegister
-    with org.apache.spark.sql.sources.StreamSourceProvider
     with org.apache.spark.sql.sources.StreamSinkProvider {
 
   override def shortName(): String = "graft"
@@ -70,41 +74,6 @@ class GraftDataSource extends org.apache.spark.sql.connector.catalog.TableProvid
           "updated rows re-emit and must upsert on a key, not append")
     new GraftStreamSink(parameters)
   }
-
-  // ---- streaming source: spark.readStream.format("graft").load(dir) ----
-
-  /** The table directory a stream resolves through: an explicit path, or
-    * the Hadoop-catalog layout derived from warehouse+table (Spark builds
-    * the V1 fallback relation EAGERLY even when the V2 stream will be
-    * chosen, so this must resolve for every addressing mode the V2 path
-    * accepts). */
-  private def streamPath(parameters: Map[String, String]): String =
-    parameters.get("path").orElse {
-      (parameters.get("warehouse"), parameters.get("table")) match {
-        case (Some(wh), Some(name)) => Some((wh +: name.split('.').toSeq).mkString("/"))
-        case _ => None
-      }
-    }.getOrElse(throw new InvalidDataError(
-      "readStream format(\"graft\") requires a path, or warehouse+table options"))
-
-  override def sourceSchema(sqlContext: org.apache.spark.sql.SQLContext,
-                            schema: Option[StructType], providerName: String,
-                            parameters: Map[String, String]): (String, StructType) =
-    ("graft", schema.getOrElse {
-      val conf = GraftDataSource.hadoopConf(parameters)
-      val t = StaticTable.load(
-        GraftDataSource.metadataPathFor(streamPath(parameters), conf), conf)
-      val base = graft.types.SparkSchemaConverter.toSpark(t.currentSchema)
-      if (parameters.get("read-changes").exists(_.toBoolean))
-        GraftStreamSource.withChangeColumns(base)
-      else base
-    })
-
-  override def createSource(sqlContext: org.apache.spark.sql.SQLContext,
-                            metadataPath: String, schema: Option[StructType],
-                            providerName: String,
-                            parameters: Map[String, String]): org.apache.spark.sql.execution.streaming.Source =
-    new GraftStreamSource(sqlContext, streamPath(parameters), parameters)
 
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
     resolve(options).schema()

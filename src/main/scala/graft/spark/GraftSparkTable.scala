@@ -56,16 +56,16 @@ class GraftSparkTable(
   private[graft] def pinned: GraftSparkTable = new GraftSparkTable(graftTable,
     pinnedSnapshotId.orElse(graftTable.currentSnapshotId), streamOptions)
 
-  /** CDC path loads (`format("graft").option("read-changes", true)
-    * .load(dir)`) resolve with the change-metadata columns appended, so
-    * the V2 stream's rows type-check against the relation. Such an
-    * instance only ever backs that streaming read. */
-  override def schema(): StructType = {
-    val base = SparkSchemaConverter.toSpark(graftTable.currentSchema)
-    if (streamOptions.get("read-changes").exists(_.toBoolean))
-      GraftStreamSource.withChangeColumns(base)
-    else base
-  }
+  /** A CDC provider load (`format("graft").option("read-changes", true)`
+    * with a path, or with warehouse+table) resolves with the
+    * change-metadata columns appended, so the stream's rows type-check
+    * against the relation. Such an instance only ever backs that streaming
+    * read. */
+  private val readsChanges = streamOptions.get("read-changes").exists(_.toBoolean)
+
+  override def schema(): StructType = SparkSchemaConverter.toSpark(
+    if (readsChanges) GraftMicroBatchStream.cdcSchema(graftTable.currentSchema)
+    else graftTable.currentSchema)
 
   override def capabilities(): java.util.Set[TableCapability] = {
     // BATCH_WRITE rides alongside V1_BATCH_WRITE only to satisfy the
@@ -76,19 +76,12 @@ class GraftSparkTable(
       TableCapability.BATCH_WRITE, TableCapability.V1_BATCH_WRITE,
       TableCapability.TRUNCATE, TableCapability.OVERWRITE_BY_FILTER,
       TableCapability.OVERWRITE_DYNAMIC)
-    // micro-batch streaming goes native V2 when the table can re-resolve
-    // per trigger — by path (format("graft").load(dir)) or through its own
-    // catalog (spark.readStream.table("cat.db.t")) — and the executor-side
-    // row reader covers the schema. CDC mode (read-changes) is V2 for
-    // path-resolved reads (the form it documents); the v1-source escape
-    // hatch stays on the V1 Source, which Spark falls back to
-    // automatically when this capability is absent
-    val resolvable = streamOptions.contains("path") || graftTable.catalog.isDefined
-    val cdc = streamOptions.get("read-changes").exists(_.toBoolean)
-    if (resolvable &&
-        (!cdc || streamOptions.contains("path")) &&
-        !streamOptions.get("v1-source").exists(_.toBoolean) &&
-        GraftMicroBatchStream.streamable(graftTable.currentSchema))
+    // micro-batch streaming, whatever the schema, whenever the table can
+    // re-resolve per trigger: by path (format("graft").load(dir)) or
+    // through its own catalog (format("graft") with warehouse+table, or
+    // spark.readStream.table("cat.db.t")). It is the one stream source:
+    // without this capability readStream fails at once
+    if (streamOptions.contains("path") || graftTable.catalog.isDefined)
       caps.add(TableCapability.MICRO_BATCH_READ)
     // writeStream.toTable: per-epoch commits re-resolve through the
     // table's own catalog (a read-only/static table cannot commit).
@@ -184,7 +177,7 @@ class GraftSparkTable(
             b.result()
           }
           new GraftScan(graftTable, pinnedSnapshotId, pushed, required,
-            limitHint, streamOptions ++ scanOpts, planned)
+            limitHint, streamOptions ++ scanOpts, planned, readsChanges)
       }
     }
   }
@@ -332,7 +325,8 @@ private[spark] class GraftScan(
     required: StructType,
     limitHint: Option[Int] = None,
     streamOptions: Map[String, String] = Map.empty,
-    planned: Option[Seq[graft.table.FileScanTask]] = None)
+    planned: Option[Seq[graft.table.FileScanTask]] = None,
+    changeColumns: Boolean = false)
   extends GraftPlannedScan with org.apache.spark.sql.connector.read.SupportsReportStatistics {
 
   /** Micro-batch streaming entry (MicroBatchExecution builds this scan with
@@ -347,11 +341,15 @@ private[spark] class GraftScan(
       throw new UnsupportedFeatureError(
         "cannot stream a time-travel table: a pinned snapshot has no commit " +
           "sequence to consume; use starting-snapshot-id or branch")
+    // the change columns join the schema when the table resolves; a
+    // catalog table (readStream.table) has resolved before the scan's
+    // options arrive
     val cdc = streamOptions.get("read-changes").exists(_.toBoolean)
-    if (cdc && !streamOptions.contains("path"))
+    if (cdc && !changeColumns)
       throw new UnsupportedFeatureError(
-        "CDC streaming (read-changes) runs through the path-based reader: " +
-          "spark.readStream.format(\"graft\").option(\"read-changes\", \"true\").load(dir)")
+        "CDC streaming (read-changes) needs the option at table resolution: " +
+          "spark.readStream.format(\"graft\").option(\"read-changes\", \"true\").load(dir), " +
+          "or with warehouse and table options")
     def streamSchema(s: graft.types.Schema): graft.types.Schema =
       if (cdc) GraftMicroBatchStream.cdcSchema(s) else s
     streamOptions.get("path") match {
@@ -495,8 +493,13 @@ private[spark] class GraftMetadataSparkTable(
     tableName: String,
     load: SparkSession => DataFrame) extends SparkTable with SupportsRead {
 
+  /** The frame, built once per resolved table: its schema and its scan
+    * read the same build, so one query refreshes the table and, for
+    * `files`, walks the manifests once. */
+  private lazy val frame = load(SparkSession.active)
+
   override def name(): String = tableName
-  override def schema(): StructType = load(SparkSession.active).schema
+  override def schema(): StructType = frame.schema
   override def capabilities(): java.util.Set[TableCapability] =
     java.util.EnumSet.of(TableCapability.BATCH_READ)
 
@@ -513,7 +516,7 @@ private[spark] class GraftMetadataSparkTable(
           override def description(): String = tableName
           // the metadata frame's own optimized plan, pruned to the read
           override lazy val plan: LogicalPlan = {
-            val df = load(SparkSession.active)
+            val df = frame
             CatalystBridge.optimized(
               if (req.isEmpty) df.select()
               else df.select(req.fieldNames.toIndexedSeq.map(df(_)): _*))

@@ -110,7 +110,7 @@ object StreamingOps extends Serializable {
    * then computes its per-suite shared-gram count MAP-ONLY
    * (`count_in_set` over its own distinct gram array — the join+per-doc
    * aggregate of the batch op collapses into an expression, which is what
-   * makes this streamable: a document's flags depend only on the document
+   * lets it run on a stream: a document's flags depend only on the document
    * and the static suites). Each doc emits one row per suite, so the ONE
    * stateful operator is a per-suite counter fold — `count(*)` is the
    * corpus total, flagged/heavy are conditional sums, all combinable,
@@ -903,13 +903,7 @@ object StreamingOps extends Serializable {
     import graft.types.SparkSchemaConverter
     val metaCols = Seq("_change_type", "_commit_snapshot_id", "_commit_sequence")
     val schema = SparkSchemaConverter.toSpark(table.currentSchema)
-    val outSchema = org.apache.spark.sql.types.StructType(schema.fields ++ Seq(
-      org.apache.spark.sql.types.StructField("_change_type",
-        org.apache.spark.sql.types.StringType, nullable = false),
-      org.apache.spark.sql.types.StructField("_commit_snapshot_id",
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField("_commit_sequence",
-        org.apache.spark.sql.types.LongType, nullable = false)))
+    val outSchema = SparkSchemaConverter.toSpark(graft.spark.GraftMicroBatchStream.cdcSchema(table.currentSchema))
     def emptyOut = spark.createDataFrame(
       new java.util.ArrayList[org.apache.spark.sql.Row](), outSchema)
 

@@ -6,7 +6,8 @@ import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, BoundReference, Expression, Predicate}
-import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, LogicalRelation, PartitionDirectory, PartitionedFile}
+import org.apache.spark.paths.SparkPath
+import org.apache.spark.sql.execution.datasources.{FileFormat, FileIndex, FilePartition, HadoopFsRelation, LogicalRelation, PartitionDirectory, PartitionedFile}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.graftbridge.CatalystBridge
 import org.apache.spark.sql.sources.Filter
@@ -31,14 +32,10 @@ private[graft] final class ManifestFileIndex(files: Seq[DataFile],
   private val statuses = files.map(f =>
     new FileStatus(f.fileSizeInBytes, false, 0, 0, 0, new Path(f.filePath)))
 
-  override val partitionSchema: StructType =
-    StructType(constants.map(c => StructField(c.name, c.dataType, c.nullable)))
+  override val partitionSchema: StructType = ManifestFileIndex.partitionSchema(constants)
 
   private lazy val directories = files.zip(statuses).map { case (f, s) =>
-    PartitionDirectory(InternalRow.fromSeq(constants.map(c => c.value(f) match {
-      case v: String => UTF8String.fromString(v)
-      case v => v
-    })), Array(s))
+    PartitionDirectory(ManifestFileIndex.values(f, constants), Array(s))
   }
 
   override def rootPaths: Seq[Path] = statuses.map(_.getPath)
@@ -72,6 +69,17 @@ private[graft] object ManifestFileIndex {
   final case class Constant(name: String, dataType: DataType, value: DataFile => Any,
                             nullable: Boolean = false)
 
+  /** The columns of `constants`, as a relation's partition schema. */
+  def partitionSchema(constants: Seq[Constant]): StructType =
+    StructType(constants.map(c => StructField(c.name, c.dataType, c.nullable)))
+
+  /** `file`'s values of `constants`, as a partition row. */
+  private def values(file: DataFile, constants: Seq[Constant]): InternalRow =
+    InternalRow.fromSeq(constants.map(c => c.value(file) match {
+      case v: String => UTF8String.fromString(v)
+      case v => v
+    }))
+
   /** Parquet `files` read as `schema` (columns bind by name) with the
     * catalog's `conf`, plus the `constants` columns. Hidden `_metadata`
     * columns (`row_index`, …) resolve as on any parquet read. */
@@ -88,6 +96,34 @@ private[graft] object ManifestFileIndex {
     val index = new ManifestFileIndex(files, constants)
     LogicalRelation(HadoopFsRelation(index, index.partitionSchema, CatalystBridge.asNullable(schema),
       bucketSpec = None, new TableParquet(conf, label), Map.empty)(spark))
+  }
+
+  /** Spark's parquet row reader over files written as `schema`, built
+    * once on the driver as the scans of [[relation]] build theirs: it reads
+    * a file's `required` columns (bound by name) with the catalog's `conf`
+    * (see [[TableParquet]]), each row followed by the file's values of
+    * `constants` (see [[file]]). The function ships to the tasks, with the
+    * conf's broadcast inside. */
+  def rowReader(spark: SparkSession, schema: StructType, required: StructType, constants: Seq[Constant],
+                conf: Configuration): PartitionedFile => Iterator[InternalRow] =
+    new TableParquet(conf, None).buildReaderWithPartitionValues(spark, CatalystBridge.asNullable(schema),
+      partitionSchema(constants), CatalystBridge.asNullable(required), Nil,
+      Map(FileFormat.OPTION_RETURNING_BATCH -> "false"), CatalystBridge.hadoopConf(spark))
+
+  /** The whole of `file` as one input of a [[rowReader]], with its values
+    * of `constants`. */
+  def file(file: DataFile, constants: Seq[Constant]): PartitionedFile =
+    PartitionedFile(values(file, constants), SparkPath.fromPath(new Path(file.filePath)), 0,
+      file.fileSizeInBytes, Array.empty, 0, file.fileSizeInBytes)
+
+  /** `files` packed into the tasks a Spark file scan would read them in:
+    * larger files first, each task up to the split size the session's
+    * conf gives for their total size ([[FilePartition]]), so a batch of
+    * many small files runs as a few tasks. */
+  def pack(spark: SparkSession, files: Seq[PartitionedFile]): Seq[Array[PartitionedFile]] = {
+    val statuses = files.map(f => new FileStatus(f.fileSize, false, 0, 0, 0, f.toPath)).toArray
+    val maxSplitBytes = FilePartition.maxSplitBytes(spark, Seq(PartitionDirectory(InternalRow.empty, statuses)))
+    FilePartition.getFilePartitions(spark, files.sortBy(-_.length), maxSplitBytes).map(_.files)
   }
 
   /** Parquet read with the table's own I/O settings (ref `scan.rs:82-109`,

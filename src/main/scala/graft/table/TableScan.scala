@@ -10,7 +10,7 @@ import org.apache.spark.SparkContext
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-import org.apache.spark.sql.catalyst.expressions.{Alias, And, Attribute, Cast, EqualNullSafe, EqualTo, Expression, GetStructField, IsNull, LessThanOrEqual, Or}
+import org.apache.spark.sql.catalyst.expressions.{Alias, And, Attribute, Cast, EqualNullSafe, EqualTo, Expression, GetStructField, IsNull, LessThanOrEqual, NamedExpression, Or}
 import org.apache.spark.sql.catalyst.plans.LeftAnti
 import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, Filter, HintInfo, Join, JoinHint, LocalRelation, LogicalPlan, Project, Union}
 import org.apache.spark.sql.functions._
@@ -337,17 +337,7 @@ final class TableScan(
         })
       }
       def column(name: String): Attribute = relation.output.find(_.name == name).get
-      // field-id projection: current field -> column name at write time
-      val byId = writeSchema.fields.map(f => f.id -> f).toMap
-      val projection = fields.map { cf =>
-        val value = byId.get(cf.id) match {
-          case Some(wf) => column(wf.name)
-          // column added after these files were written: rows read the
-          // initial-default (spec v3 semantics), else null
-          case None => ColumnBridge.expression(spark, cf.initialDefault.map(lit).getOrElse(lit(null)))
-        }
-        Alias(castTo(value, SparkSchemaConverter.toSparkType(cf.fieldType)), cf.name)()
-      }
+      val projection = TableScan.fieldIdProjection(spark, fields, writeSchema, relation.output)
       val pos = if (!positioned) Nil
         else Seq(Alias(GetStructField(column("_metadata"), 0, Some("row_index")), "__pos")())
       val read = Project(projection ++ constants.map(c => column(c.name)) ++ pos, relation)
@@ -361,10 +351,6 @@ final class TableScan(
     }
     Project(wanted.map(n => live.output.find(_.name == n).get), live)
   }
-
-  /** `e` as type `to`, with no cast when it already is. */
-  private def castTo(e: Expression, to: DataType): Expression =
-    if (e.dataType == to) e else Cast(e, to, Some(SQLConf.get.sessionLocalTimeZone))
 
   /** The deleted positions of the data files in `pairs`: each data file's
     * come from exactly the position deletes and deletion vectors planning
@@ -474,7 +460,7 @@ final class TableScan(
           SparkSchemaConverter.toSpark(Schema(0, writeFields)), table.hadoopConf, constants)
         def column(name: String): Attribute = relation.output.find(_.name == name).get
         Project(idFields.zip(writeFields).map { case (cf, wf) =>
-          Alias(castTo(column(wf.name), SparkSchemaConverter.toSparkType(cf.fieldType)), s"__d_${cf.name}")()
+          Alias(TableScan.castTo(column(wf.name), SparkSchemaConverter.toSparkType(cf.fieldType)), s"__d_${cf.name}")()
         } ++ constants.map(c => column(c.name)), relation)
       }
     if (reads.size == 1) reads.head else Union(reads)
@@ -518,6 +504,29 @@ final class TableScan(
 object TableScan {
   /** Data-manifest count beyond which planning fans out as a Spark job. */
   val DistributedPlanThreshold = 64
+
+  /** The field-id projection of rows read from files written as
+    * `writeSchema`, whose columns `input` holds by their write-time names,
+    * to the current schema's `fields`: each field reads its column by id
+    * (so a renamed column keeps its data), cast to its current type; a
+    * field added after the files were written reads its initial-default
+    * (spec v3 semantics), else null. Batch reads ([[TableScan.readPlan]])
+    * and streamed micro-batches both map their rows through it. */
+  private[graft] def fieldIdProjection(spark: SparkSession, fields: Seq[NestedField], writeSchema: Schema,
+                                       input: Seq[Attribute]): Seq[NamedExpression] = {
+    val byId = writeSchema.fields.map(f => f.id -> f).toMap
+    fields.map { cf =>
+      val value = byId.get(cf.id) match {
+        case Some(wf) => input.find(_.name == wf.name).get
+        case None => ColumnBridge.expression(spark, cf.initialDefault.map(lit).getOrElse(lit(null)))
+      }
+      Alias(castTo(value, SparkSchemaConverter.toSparkType(cf.fieldType)), cf.name)()
+    }
+  }
+
+  /** `e` as type `to`, with no cast when it already is. */
+  private def castTo(e: Expression, to: DataType): Expression =
+    if (e.dataType == to) e else Cast(e, to, Some(SQLConf.get.sessionLocalTimeZone))
 
   private val confBroadcasts = new java.util.WeakHashMap[Configuration,
     (SparkContext, Map[String, String], Broadcast[SerializableHadoopConf])]()

@@ -9,9 +9,9 @@ import org.apache.spark.sql.classic
   * file lives in the spark namespace): materializing a resolved logical
   * plan as a DataFrame (the MERGE source, manifest-listed file reads) or
   * as the plan a planner strategy splices in, adding such a strategy,
-  * a nullable copy of a file schema, and converting a Catalyst
-  * literal's internal value (UTF8String, day-int, micros-long) to the
-  * external Scala value our scan predicates carry. */
+  * a nullable copy of a file schema, the Hadoop conf of a file scan, and
+  * converting a Catalyst literal's internal value (UTF8String, day-int,
+  * micros-long) to the external Scala value our scan predicates carry. */
 object CatalystBridge {
   def dataFrame(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
@@ -52,19 +52,13 @@ object CatalystBridge {
   def catalogManager(spark: SparkSession): org.apache.spark.sql.connector.catalog.CatalogManager =
     spark.asInstanceOf[classic.SparkSession].sessionState.catalogManager
 
-  /** Re-tag a batch DataFrame as streaming (private[sql]
-    * internalCreateDataFrame) — what a V1 streaming Source must return
-    * from getBatch. The physical rows are the batch plan's own RDD, taken
-    * lazily. */
-  def asStreamingDataFrame(spark: SparkSession, df: DataFrame): DataFrame = {
-    val cs = spark.asInstanceOf[classic.SparkSession]
-    cs.internalCreateDataFrame(
-      df.asInstanceOf[classic.Dataset[org.apache.spark.sql.Row]].queryExecution.toRdd,
-      df.schema, isStreaming = true)
-  }
+  /** The Hadoop conf Spark builds for a file scan: the session's, with
+    * the SQL conf's entries (private[sql] `newHadoopConf`). */
+  def hadoopConf(spark: SparkSession): org.apache.hadoop.conf.Configuration =
+    spark.asInstanceOf[classic.SparkSession].sessionState.newHadoopConf()
 
-  /** The inverse: a V1 Sink's addBatch frame arrives streaming-tagged and
-    * refuses batch writes; rebind its micro-batch rows as a batch frame. */
+  /** A V1 Sink's addBatch frame arrives streaming-tagged and refuses batch
+    * writes; rebind its micro-batch rows as a batch frame. */
   def asBatchDataFrame(df: DataFrame): DataFrame = {
     val cs = df.sparkSession.asInstanceOf[classic.SparkSession]
     cs.internalCreateDataFrame(

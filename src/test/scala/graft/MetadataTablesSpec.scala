@@ -158,4 +158,28 @@ class MetadataTablesSpec extends AnyFunSuite {
     assert(!tbl.partitionsDF(spark).collect()
       .exists(_.getMap[String, String](0).get("k").contains("a")))
   }
+
+  test("a metadata-table query builds its frame once") {
+    import spark.implicits._
+    // every frame build refreshes the table through its catalog
+    val refreshes = new java.util.concurrent.atomic.AtomicInteger()
+    val cat = new ForwardingCatalog(new MemoryCatalog(name = "metaonce")) {
+      private[graft] override def currentMetadata(ident: graft.catalog.TableIdent): graft.meta.TableMetadata = {
+        refreshes.incrementAndGet()
+        super.currentMetadata(ident)
+      }
+    }
+    graft.spark.GraftSparkCatalog.register(spark, "metaonce", cat)
+    val tbl = cat.createTable("default.t", Schema(0, Seq(
+      NestedField(1, "id", ILong, required = false),
+      NestedField(2, "v", IString, required = false))))
+    tbl.append(Seq(1L -> "a", 2L -> "b").toDF("id", "v"))
+    for (query <- Seq("SELECT * FROM metaonce.default.t.files",
+                      "SELECT count(*) FROM metaonce.default.t.files",
+                      "SELECT * FROM metaonce.default.t.snapshots")) {
+      refreshes.set(0)
+      assert(spark.sql(query).collect().nonEmpty)
+      assert(refreshes.get == 1, s"$query built its frame ${refreshes.get} times")
+    }
+  }
 }

@@ -12,10 +12,11 @@ object AvailableNowProbe {
 }
 
 /**
- * The DataSource V2 micro-batch streaming path (`GraftMicroBatchStream`):
- * engagement (vs the V1 `Source` fallback), checkpoint interop between the
- * two implementations, schema-pinned field-id reads with initial-defaults,
- * and the loud-failure contract on an expired resume point.
+ * The DataSource V2 micro-batch stream (`GraftMicroBatchStream`), the one
+ * streaming read path: engagement for every addressing mode and schema,
+ * resuming a checkpoint the former V1 source wrote, schema-pinned field-id
+ * reads with initial-defaults, type parity with the batch read, and the
+ * loud-failure contract on an expired resume point.
  */
 class StreamingV2Spec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -32,7 +33,7 @@ class StreamingV2Spec extends AnyFunSuite {
   private def sourceDescription(q: org.apache.spark.sql.streaming.StreamingQuery): String =
     q.lastProgress.sources.head.description
 
-  test("readStream format(graft) engages the V2 micro-batch stream; v1-source opts out") {
+  test("readStream format(graft) engages the V2 micro-batch stream") {
     import spark.implicits._
     val (dir, tbl) = mkTable("graft-v2-engage", idSchema)
     tbl.append(Seq(1L, 2L).toDF("id"))
@@ -46,19 +47,9 @@ class StreamingV2Spec extends AnyFunSuite {
       assert(spark.table("v2_engage").collect().map(_.getLong(0)).sorted.toSeq ==
         Seq(1L, 2L))
     } finally q.stop()
-
-    val q1 = spark.readStream.format("graft").option("v1-source", "true").load(dir)
-      .writeStream.format("memory").queryName("v2_optout").outputMode("append").start()
-    try {
-      q1.processAllAvailable()
-      assert(sourceDescription(q1).startsWith("GraftStreamSource"),
-        s"v1-source=true must fall back to the V1 source, got: ${sourceDescription(q1)}")
-      assert(spark.table("v2_optout").collect().map(_.getLong(0)).sorted.toSeq ==
-        Seq(1L, 2L))
-    } finally q1.stop()
   }
 
-  test("CDC mode (read-changes) engages the V2 stream; v1-source falls back") {
+  test("CDC mode (read-changes) engages the V2 stream, by path or warehouse+table") {
     import spark.implicits._
     val (dir, tbl) = mkTable("graft-v2-cdc", idSchema)
     tbl.append(Seq(1L).toDF("id"))
@@ -72,14 +63,16 @@ class StreamingV2Spec extends AnyFunSuite {
         .map(_.getString(0)).toSeq == Seq("insert"))
     } finally q.stop()
 
+    // the catalog-resolved provider form streams CDC through V2 as well
+    val wh = new java.io.File(dir).getParentFile.getParent
     val q1 = spark.readStream.format("graft").option("read-changes", "true")
-      .option("v1-source", "true").load(dir)
-      .writeStream.format("memory").queryName("v2_cdc_v1").outputMode("append").start()
+      .option("warehouse", wh).option("table", "default.t").load()
+      .writeStream.format("memory").queryName("v2_cdc_wh").outputMode("append").start()
     try {
       q1.processAllAvailable()
-      assert(sourceDescription(q1).startsWith("GraftStreamSource"),
-        s"v1-source=true must keep CDC on the V1 source, got: ${sourceDescription(q1)}")
-      assert(spark.table("v2_cdc_v1").select("_change_type").collect()
+      assert(sourceDescription(q1).startsWith("GraftMicroBatchStream"),
+        s"warehouse+table CDC must ride the V2 stream, got: ${sourceDescription(q1)}")
+      assert(spark.table("v2_cdc_wh").select("_change_type").collect()
         .map(_.getString(0)).toSeq == Seq("insert"))
     } finally q1.stop()
   }
@@ -118,7 +111,7 @@ class StreamingV2Spec extends AnyFunSuite {
       s"scratch not cleaned: ${Option(scratch.listFiles()).map(_.toSeq).getOrElse(Nil)}")
   }
 
-  test("a schema the V2 row reader cannot produce falls back to V1 and still streams") {
+  test("a struct column streams through the V2 stream") {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
     val (dir, tbl) = mkTable("graft-v2-struct", Schema(0, Seq(
@@ -137,8 +130,8 @@ class StreamingV2Spec extends AnyFunSuite {
       .writeStream.format("memory").queryName("v2_struct").outputMode("append").start()
     try {
       q.processAllAvailable()
-      assert(sourceDescription(q).startsWith("GraftStreamSource"),
-        "struct columns are outside the V2 reader; the fallback must be automatic")
+      assert(sourceDescription(q).startsWith("GraftMicroBatchStream"),
+        s"every schema streams through V2, got: ${sourceDescription(q)}")
       val r = spark.table("v2_struct").collect().head
       assert(r.getLong(0) == 1L && r.getStruct(1).getDouble(0) == 1.5)
     } finally q.stop()
@@ -150,32 +143,29 @@ class StreamingV2Spec extends AnyFunSuite {
     val wh = new java.io.File(dir).getParentFile.getParent
     val cat = new graft.catalog.HadoopCatalog(wh)
     cat.createTable("default.out", idSchema)
-    val cp = java.nio.file.Files.createTempDirectory("graft-v2-interop-cp").toString
+    // the checkpoint (offsets, commits, metadata) of a V1-source query
+    // that consumed this table's first commit (sequence 1) into a graft
+    // sink, as the former V1 source wrote it
+    val cp = java.nio.file.Files.createTempDirectory("graft-v2-interop-cp")
+    for (f <- Seq("metadata", "offsets/0", "commits/0")) {
+      val target = cp.resolve(f)
+      java.nio.file.Files.createDirectories(target.getParent)
+      val in = getClass.getResourceAsStream(s"/v1-stream-checkpoint/$f")
+      try java.nio.file.Files.copy(in, target) finally in.close()
+    }
     tbl.append(Seq(1L, 2L).toDF("id"))
+    tbl.refresh().append(Seq(3L).toDF("id"))
 
-    def startQuery(v1: Boolean) = spark.readStream.format("graft")
-      .option("v1-source", v1.toString).load(dir)
+    val q = spark.readStream.format("graft").load(dir)
       .writeStream.format("graft")
       .option("warehouse", wh).option("table", "default.out")
-      .option("checkpointLocation", cp).start()
-    def outRows = cat.loadTable("default.out").toDF(spark).collect()
-      .map(_.getLong(0)).sorted.toSeq
-
-    val q1 = startQuery(v1 = true)
+      .option("checkpointLocation", cp.toString).start()
     try {
-      q1.processAllAvailable()
-      assert(sourceDescription(q1).startsWith("GraftStreamSource"))
-      assert(outRows == Seq(1L, 2L))
-    } finally q1.stop()
-
-    tbl.refresh().append(Seq(3L).toDF("id"))
-    val q2 = startQuery(v1 = false)
-    try {
-      q2.processAllAvailable()
-      assert(sourceDescription(q2).startsWith("GraftMicroBatchStream"))
-      assert(outRows == Seq(1L, 2L, 3L),
+      q.processAllAvailable()
+      assert(sourceDescription(q).startsWith("GraftMicroBatchStream"))
+      assert(cat.loadTable("default.out").toDF(spark).collect().map(_.getLong(0)).toSeq == Seq(3L),
         "the V2 resume must deliver ONLY the new commit — no replay, no gap")
-    } finally q2.stop()
+    } finally q.stop()
   }
 
   test("V2 reads old files under the pinned schema: rename keeps data, added column reads its default") {
@@ -330,7 +320,7 @@ class StreamingV2Spec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("branch option streams the audit branch's ancestry (V2 and V1), tracking fastForward") {
+  test("branch option streams the audit branch's ancestry, tracking fastForward") {
     import spark.implicits._
     val (dir, tbl) = mkTable("graft-v2-branch", idSchema)
     tbl.append(Seq(1L).toDF("id"))
@@ -353,17 +343,6 @@ class StreamingV2Spec extends AnyFunSuite {
       q.processAllAvailable()
       assert(ids == Seq(1L, 99L, 100L), "fastForward adds no new branch commits")
     } finally q.stop()
-
-    // same option through the V1 source
-    val q1 = spark.readStream.format("graft")
-      .option("branch", "audit").option("v1-source", "true").load(dir)
-      .writeStream.format("memory").queryName("v1_branch").outputMode("append").start()
-    try {
-      q1.processAllAvailable()
-      assert(sourceDescription(q1).startsWith("GraftStreamSource"))
-      assert(spark.table("v1_branch").collect().map(_.getLong(0)).sorted.toSeq ==
-        Seq(1L, 99L, 100L))
-    } finally q1.stop()
   }
 
   test("streaming rejects pinned-snapshot options (snapshot-id / as-of-timestamp-ms)") {
@@ -439,7 +418,7 @@ class StreamingV2Spec extends AnyFunSuite {
     val cat = new graft.catalog.HadoopCatalog(wh)
     val tbl = cat.createTable("default.t", idSchema)
     tbl.append(Seq(1L).toDF("id"))
-    // the V1 source requires a path; the catalog-resolved V2 stream does not
+    // the catalog-resolved stream needs no path
     val q = spark.readStream.format("graft")
       .option("warehouse", wh).option("table", "default.t").load()
       .writeStream.format("memory").queryName("v2_whopt").outputMode("append").start()
@@ -480,7 +459,6 @@ class StreamingV2Spec extends AnyFunSuite {
   test("V2 row reader equals the batch (vectorized) reader across every streamable type") {
     import graft.types._
     import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types._
     val schema = Schema(0, Seq(
       NestedField(1, "b", IBoolean, required = false),
       NestedField(2, "i", IInt, required = false),
@@ -493,35 +471,84 @@ class StreamingV2Spec extends AnyFunSuite {
       NestedField(9, "bin", IBinary, required = false),
       NestedField(10, "dec9", IDecimal(9, 2), required = false),
       NestedField(11, "dec18", IDecimal(18, 4), required = false),
-      NestedField(12, "arr", IList(13, ILong, elementRequired = false), required = false)))
-    val (dir, tbl) = mkTable("graft-v2-types", schema)
+      NestedField(12, "arr", IList(13, ILong, elementRequired = false), required = false),
+      NestedField(14, "st", IStruct(Seq(
+        NestedField(15, "x", IInt, required = false),
+        NestedField(16, "y", IString, required = false))), required = false),
+      NestedField(17, "m", IMap(18, IString, 19, ILong, valueRequired = false), required = false),
+      NestedField(20, "ls", IList(21, IStruct(Seq(
+        NestedField(22, "a", ILong, required = false),
+        NestedField(23, "z", IDouble, required = false))), elementRequired = false), required = false),
+      NestedField(24, "u", IUuid, required = false),
+      NestedField(25, "fx", IFixed(4), required = false),
+      NestedField(26, "tm", ITime, required = false),
+      NestedField(27, "tsn", ITimestampNano, required = false)))
     val sparkSchema = graft.types.SparkSchemaConverter.toSpark(schema)
     val rows = java.util.List.of(
       Row(true, 1, 10L, 1.5f, 2.5, "alpha", java.sql.Date.valueOf("2026-01-02"),
         java.time.LocalDateTime.parse("2026-01-02T03:04:05.123456"),
         Array[Byte](1, 2, 3), new java.math.BigDecimal("1234567.89"),
-        new java.math.BigDecimal("12345678901234.5678"), Seq(1L, 2L, 3L)),
+        new java.math.BigDecimal("12345678901234.5678"), Seq(1L, 2L, 3L),
+        Row(5, "five"), Map("k1" -> 1L, "k2" -> null), Seq(Row(1L, 0.5), null, Row(null, -1.0)),
+        "f79c3e09-677c-4bbd-a479-3f349cb785e7", Array[Byte](9, 8, 7, 6), 3723000001L,
+        java.time.LocalDateTime.parse("2026-01-02T03:04:05.987654")),
       Row(false, -7, -70L, -0.25f, -0.5, "", java.sql.Date.valueOf("1969-12-31"),
         java.time.LocalDateTime.parse("1969-12-31T23:59:59.999999"),
         Array[Byte](), new java.math.BigDecimal("-0.01"),
-        new java.math.BigDecimal("-0.0001"), Seq()),
-      Row(null, null, null, null, null, null, null, null, null, null, null, null))
-    tbl.append(spark.createDataFrame(rows, sparkSchema))
+        new java.math.BigDecimal("-0.0001"), Seq(),
+        Row(null, null), Map(), Seq(),
+        "00000000-0000-0000-0000-000000000000", Array[Byte](0, 0, 0, 0), 0L,
+        java.time.LocalDateTime.parse("1969-12-31T23:59:59.000001")),
+      Row(Seq.fill(19)(null): _*))
+    def canon(r: Row): String = r.toSeq.map {
+      case b: Array[Byte] => b.toSeq.toString
+      case x => String.valueOf(x)
+    }.mkString("|")
+    def streamed(df: org.apache.spark.sql.DataFrame, name: String): Seq[String] = {
+      val q = df.writeStream.format("memory").queryName(name).outputMode("append").start()
+      try {
+        q.processAllAvailable()
+        assert(sourceDescription(q).startsWith("GraftMicroBatchStream"))
+        spark.table(name).collect().map(canon).sorted.toSeq
+      } finally q.stop()
+    }
+    def assertSame(stream: Seq[String], batch: Seq[String]): Unit =
+      assert(stream == batch, s"streamed rows must equal the batch read\nstream: $stream\nbatch:  $batch")
 
-    val q = spark.readStream.format("graft").load(dir)
-      .writeStream.format("memory").queryName("v2_types").outputMode("append").start()
-    try {
-      q.processAllAvailable()
-      assert(sourceDescription(q).startsWith("GraftMicroBatchStream"))
-      def canon(r: org.apache.spark.sql.Row): String = r.toSeq.map {
-        case b: Array[Byte] => b.toSeq.toString
-        case x => String.valueOf(x)
-      }.mkString("|")
-      val streamed = spark.table("v2_types").collect().map(canon).sorted.toSeq
-      val batch = tbl.refresh().toDF(spark).collect().map(canon).sorted.toSeq
-      assert(streamed == batch,
-        s"streamed rows must equal the batch read\nstream: $streamed\nbatch:  $batch")
-    } finally q.stop()
+    // by path
+    val (dir, tbl) = mkTable("graft-v2-types", schema)
+    tbl.append(spark.createDataFrame(rows, sparkSchema))
+    assertSame(streamed(spark.readStream.format("graft").load(dir), "v2_types"),
+      tbl.refresh().toDF(spark).collect().map(canon).sorted.toSeq)
+
+    // through a catalog: readStream.table over an in-memory catalog
+    val cat = new graft.catalog.MemoryCatalog(name = "streamtypes")
+    graft.spark.GraftSparkCatalog.register(spark, "gtypes", cat)
+    cat.createNamespace(Seq("db"), ifNotExists = true)
+    val ctbl = cat.createTable("db.types", schema)
+    ctbl.append(spark.createDataFrame(rows, sparkSchema))
+    assertSame(streamed(spark.readStream.table("gtypes.db.types"), "v2_types_cat"),
+      ctbl.refresh().toDF(spark).collect().map(canon).sorted.toSeq)
+    // the catalog resolves the schema before the scan's options arrive, so
+    // a CDC read of a catalog table fails loudly, typed
+    val e = intercept[Exception] {
+      val q = spark.readStream.option("read-changes", "true").table("gtypes.db.types")
+        .writeStream.format("memory").queryName("v2_types_cat_cdc").outputMode("append").start()
+      try { q.processAllAvailable(); q.awaitTermination(30000) } finally q.stop()
+    }
+    def causes(t: Throwable): Seq[Throwable] = if (t == null) Nil else t +: causes(t.getCause)
+    assert(causes(e).exists(_.isInstanceOf[UnsupportedFeatureError]), s"got: ${causes(e)}")
+
+    // CDC: an append (read as change rows of its data files) and an
+    // upsert (through the scratch diff) against changesBetween
+    val changed = java.util.List.of(Row.fromSeq(rows.get(0).toSeq.updated(5, "beta")))
+    tbl.refresh().upsert(spark, spark.createDataFrame(changed, sparkSchema), Seq("l"))
+    val head = tbl.refresh()
+    val changes = graft.streaming.StreamingOps.changesBetween(spark, head, None, head.currentSnapshotId)
+      .collect().map(canon).sorted.toSeq
+    assert(changes.exists(_.contains("|delete|")) && changes.exists(_.contains("|beta|")))
+    assertSame(streamed(spark.readStream.format("graft").option("read-changes", "true").load(dir),
+      "v2_types_cdc"), changes)
   }
 
   test("V2 non-append commit: loud error by default, skip-non-appends streams appends only") {

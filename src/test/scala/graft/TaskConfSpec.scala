@@ -3,7 +3,7 @@ package graft.spark
 import graft.{CatalogOnlyFileSystem, SiteFileSystem, TestSpark}
 import graft.catalog.MemoryCatalog
 import graft.table.{SerializableHadoopConf, Table, TableScan}
-import graft.types.{ILong, IString, NestedField, Schema}
+import graft.types.{ILong, IString, IStruct, NestedField, Schema}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{Path, UnsupportedFileSystemException}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerBlockUpdated, SparkListenerStageSubmitted}
@@ -79,14 +79,19 @@ class TaskConfSpec extends AnyFunSuite {
   }
 
   test("a catalog-only file system: readStream with Trigger.AvailableNow") {
-    val t = cat.createTable("streamed", schema)
-    t.append(rows(0L, 100L, 2))
-    t.append(rows(100L, 100L, 2))
+    val t = cat.createTable("streamed", Schema(0, schema.fields :+ NestedField(3, "pair",
+      IStruct(Seq(NestedField(4, "id", ILong, required = false), NestedField(5, "name", IString, required = false))),
+      required = false)))
+    def withPair(df: DataFrame) = df.selectExpr("*", "named_struct('id', id, 'name', name) AS pair")
+    t.append(withPair(rows(0L, 100L, 2)))
+    t.append(withPair(rows(100L, 100L, 2)))
     val q = spark.readStream.table("catonly.default.streamed")
       .writeStream.format("memory").queryName("catonly_streamed")
       .trigger(Trigger.AvailableNow()).start()
     try q.awaitTermination() finally q.stop()
-    assert(ids(spark.table("catonly_streamed")) == (0L until 200L).toSet)
+    val streamed = spark.table("catonly_streamed")
+    assert(ids(streamed) == (0L until 200L).toSet)
+    assert(streamed.where("pair.id = id AND pair.name = name").count() == 200)
   }
 
   test("a catalog-only file system: distributed orphan removal, manifest rewrite and expire cleanup") {
@@ -146,6 +151,34 @@ class TaskConfSpec extends AnyFunSuite {
     val withCatalog = TableScan.readerConf(spark, session, cat.hadoopConf)
     CatalogOnlyFileSystem.entries.foreach { case (k, v) => assert(withCatalog.get(k) == v) }
     assert(withCatalog.size == plain.size + CatalogOnlyFileSystem.entries.size)
+
+    // a streamed micro-batch's reader ships the same conf
+    val streamPlain = streamReaderConf(new MemoryCatalog().createTable("streamconf", schema))
+    assert(streamPlain.size < 100, streamPlain.size)
+    assert(streamPlain.get("spark.sql.session.timeZone") == "UTC")
+    val streamCatalog = streamReaderConf(cat.createTable("streamconf", schema))
+    CatalogOnlyFileSystem.entries.foreach { case (k, v) => assert(streamCatalog.get(k) == v) }
+    assert(streamCatalog.size == streamPlain.size + CatalogOnlyFileSystem.entries.size)
+  }
+
+  /** The partitions of a stream over all of `t`'s commits. */
+  private def streamPartitions(t: Table): Seq[GraftStreamInputPartition] =
+    GraftMicroBatchStream.forCatalogTable(t, Map.empty, t.currentSchema)
+      .planInputPartitions(GraftStreamOffset(Long.MinValue), GraftStreamOffset(t.currentSnapshot.get.sequenceNumber))
+      .toSeq.map(_.asInstanceOf[GraftStreamInputPartition])
+
+  /** The Hadoop conf the reader of a stream over `t`, after one append,
+    * ships to its tasks: the conf broadcast its reader function holds. */
+  private def streamReaderConf(t: Table): Configuration = {
+    t.append(rows(0L, 10L, 1))
+    val read = streamPartitions(t).head.reader.read
+    val replace = read.getClass.getDeclaredMethod("writeReplace")
+    replace.setAccessible(true)
+    val lambda = replace.invoke(read).asInstanceOf[java.lang.invoke.SerializedLambda]
+    (0 until lambda.getCapturedArgCount).map(lambda.getCapturedArg).collectFirst {
+      case b: org.apache.spark.broadcast.Broadcast[_] if b.value.getClass.getSimpleName == "SerializableConfiguration" =>
+        b.value.getClass.getMethod("value").invoke(b.value).asInstanceOf[Configuration]
+    }.get
   }
 
   /** `o`'s size as Spark's closure serializer writes it. */
@@ -179,8 +212,9 @@ class TaskConfSpec extends AnyFunSuite {
   }
 
   /** The task binaries of each maintenance and write operation on a new
-    * table of `c`, by operation, plus the writer factory's and the stream
-    * input partitions' serialized sizes. */
+    * table of `c`, by operation, plus the serialized sizes of the writer
+    * factory, the stream reader and the stream input partitions (each
+    * holding the reader). */
   private def footprint(c: MemoryCatalog): Map[String, Seq[Long]] = {
     // the catalog conf's one broadcast, made before anything is measured
     TableScan.taskConf(spark, c.hadoopConf)
@@ -188,9 +222,9 @@ class TaskConfSpec extends AnyFunSuite {
     val append = taskBinaries((0 until 4).foreach(i => t.append(rows(i * 100L, 100L, 1))))
     val writeSchema = graft.types.SparkSchemaConverter.toSpark(t.currentSchema)
     val factory = closureBytes(GraftV2Write.factory(t, writeSchema, GraftV2Write.freshDataDir(t)))
-    val partitions = GraftMicroBatchStream.forCatalogTable(t, Map.empty, t.currentSchema)
-      .planInputPartitions(GraftStreamOffset(Long.MinValue), GraftStreamOffset(t.currentSnapshot.get.sequenceNumber))
-    assert(partitions.length == 4)
+    val partitions = streamPartitions(t)
+    // the four files of four commits, under one reader
+    assert(partitions.map(_.files.length).sum == 4 && partitions.map(_.reader).distinct.size == 1)
     val dv = taskBinaries(t.deleteWhere(spark, "id % 7 = 0"))
     assert(t.refresh().scan().planFiles().forall(_.deleteFiles.exists(_.isDeletionVector)))
     // a threshold of 0 takes the Spark-job path of each operation
@@ -200,7 +234,8 @@ class TaskConfSpec extends AnyFunSuite {
     val expire = taskBinaries(t.expireSnapshots(spark, System.currentTimeMillis() + 1000L, 1, 0))
     assert(ids(t.toDF(spark)) == (0L until 400L).filter(_ % 7 != 0).toSet)
     Map("append" -> append, "writer factory" -> Seq(factory.toLong),
-      "stream partitions" -> partitions.map(p => closureBytes(p).toLong).toSeq,
+      "stream reader" -> Seq(closureBytes(partitions.head.reader).toLong),
+      "stream partitions" -> partitions.map(p => closureBytes(p).toLong),
       "deletion-vector writer" -> dv, "orphan removal" -> orphans,
       "manifest rewrite" -> rewrite, "expire cleanup" -> expire)
   }
@@ -213,7 +248,7 @@ class TaskConfSpec extends AnyFunSuite {
     val plain = footprint(new MemoryCatalog())
     for ((what, sizes) <- padded) withClue(s"$what: $sizes vs ${plain(what)}: ") {
       assert(sizes.nonEmpty)
-      if (what == "writer factory" || what == "stream partitions") assert(sizes.forall(_ < 16 * 1024))
+      if (Set("writer factory", "stream reader", "stream partitions")(what)) assert(sizes.forall(_ < 16 * 1024))
       // a task binary also holds the stage's plan; the padding alone would
       // add over 256 KB to it
       assert(sizes.max < plain(what).max + 1024)
