@@ -37,43 +37,17 @@ import scala.jdk.CollectionConverters._
  * loaded this way have no catalog, so they are read-only — writes fail
  * with the read-only error, matching StaticTable semantics.
  *
- * `spark.readStream.format("graft")`, with a path or with warehouse+table
- * options, resolves the same [[GraftSparkTable]], whose scan is the V2
- * [[GraftMicroBatchStream]]; there is no V1 stream source. The V1
- * [[GraftStreamSink]] serves `writeStream.format("graft")`.
+ * `spark.readStream.format("graft")` and `df.writeStream.format("graft")`
+ * resolve the same [[GraftSparkTable]] as a batch read. A stream reads
+ * through the V2 [[GraftMicroBatchStream]] and writes through the V2 epoch
+ * write ([[GraftEpochWrite]]), as `readStream.table` and
+ * `writeStream.toTable` do. A streaming write names its table with
+ * warehouse+table: a path-resolved table has no catalog to commit through.
  */
 class GraftDataSource extends org.apache.spark.sql.connector.catalog.TableProvider
-    with DataSourceRegister
-    with org.apache.spark.sql.sources.StreamSinkProvider {
+    with DataSourceRegister {
 
   override def shortName(): String = "graft"
-
-  override def createSink(sqlContext: org.apache.spark.sql.SQLContext,
-                          parameters: Map[String, String],
-                          partitionColumns: Seq[String],
-                          outputMode: org.apache.spark.sql.streaming.OutputMode)
-      : org.apache.spark.sql.execution.streaming.Sink = {
-    if (partitionColumns.nonEmpty)
-      throw new InvalidDataError(
-        "partitionBy on the graft sink is ignored state — partitioning comes " +
-          "from the TABLE's spec; remove partitionBy")
-    // The sink COMMITS what each trigger hands it. Complete mode re-emits
-    // every result row every trigger — appending that duplicates the table
-    // each micro-batch. Update mode re-emits changed rows, which is only
-    // sound when each batch upserts on a key (merge-keys); appended, the
-    // old versions of updated rows would survive alongside the new.
-    import org.apache.spark.sql.streaming.OutputMode
-    if (outputMode == OutputMode.Complete())
-      throw new graft.UnsupportedFeatureError(
-        "the graft sink does not support Complete output mode: each trigger " +
-          "re-emits ALL rows and an appending sink would duplicate the table " +
-          "every micro-batch; use Append, or Update with merge-keys")
-    if (outputMode == OutputMode.Update() && !parameters.get("merge-keys").exists(_.trim.nonEmpty))
-      throw new InvalidDataError(
-        "Update output mode on the graft sink requires the merge-keys option: " +
-          "updated rows re-emit and must upsert on a key, not append")
-    new GraftStreamSink(parameters)
-  }
 
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
     resolve(options).schema()
@@ -85,8 +59,8 @@ class GraftDataSource extends org.apache.spark.sql.connector.catalog.TableProvid
   private def resolve(options: CaseInsensitiveStringMap): GraftSparkTable = {
     val conf = GraftDataSource.hadoopConf(options.asCaseSensitiveMap().asScala)
     // two addressing modes: a table/metadata path (read-only StaticTable),
-    // or warehouse+table naming a Hadoop-catalog table (catalog-backed —
-    // the form the streaming sink uses, so its schema resolves here too)
+    // or warehouse+table naming a Hadoop-catalog table (catalog-backed,
+    // so a streaming write can commit to it)
     val t = Option(options.get("path")) match {
       case Some(path) =>
         StaticTable.load(GraftDataSource.metadataPathFor(path, conf), conf)

@@ -20,6 +20,13 @@ case class GraftStreamOffset(seq: Long) extends Offset {
   override def json(): String = seq.toString
 }
 
+object GraftStreamOffset {
+  /** The sequence number of an offset the engine hands back: this class, or
+    * its checkpointed form (Spark's `SerializedOffset`, which a restart into
+    * a batch that has no commit mark passes on). */
+  def seqOf(o: Offset): Long = o.json().toLong
+}
+
 /**
  * DataSource V2 micro-batch stream over a graft table — the one
  * `spark.readStream` path, reached by `format("graft").load(dir)`, by
@@ -117,7 +124,7 @@ class GraftMicroBatchStream(
     }
 
   override def commit(end: Offset): Unit =
-    dropScratch(end.asInstanceOf[GraftStreamOffset].seq)
+    dropScratch(GraftStreamOffset.seqOf(end))
   override def stop(): Unit = dropScratch(Long.MaxValue)
 
   override def latestOffset(): Offset =
@@ -143,7 +150,7 @@ class GraftMicroBatchStream(
       : java.util.Map[String, String] = {
     val consumed =
       if (latestConsumedOffset.isPresent)
-        latestConsumedOffset.get.asInstanceOf[GraftStreamOffset].seq
+        GraftStreamOffset.seqOf(latestConsumedOffset.get)
       else startSeq
     val t = loadTable()
     val headSeq = graft.streaming.StreamingOps.streamHead(t, branch)
@@ -163,7 +170,7 @@ class GraftMicroBatchStream(
     val t = loadTable()
     val head = graft.streaming.StreamingOps.streamHead(t, branch)
       .getOrElse(return start)
-    val from = start.asInstanceOf[GraftStreamOffset].seq
+    val from = GraftStreamOffset.seqOf(start)
     val uncapped = math.max(head.sequenceNumber, startSeq)
     val target = availableNowCap.fold(uncapped)(math.min(uncapped, _))
     val capped = graft.streaming.StreamingOps.cappedEndSeq(
@@ -179,7 +186,7 @@ class GraftMicroBatchStream(
   @volatile private var planned: Option[((Long, Long), Array[InputPartition])] = None
 
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val range = (start.asInstanceOf[GraftStreamOffset].seq, end.asInstanceOf[GraftStreamOffset].seq)
+    val range = (GraftStreamOffset.seqOf(start), GraftStreamOffset.seqOf(end))
     planned.collect { case (`range`, parts) => parts }.getOrElse {
       val parts = plan(range._1, range._2)
       planned = Some(range -> parts)

@@ -71,11 +71,14 @@ class GraftSparkTable(
     // BATCH_WRITE rides alongside V1_BATCH_WRITE only to satisfy the
     // dynamic-overwrite capability check; the physical plan still picks
     // the V1 exec whenever build() returns a V1Write (append/truncate/
-    // filter overwrite), and the V2 exec for the dynamic-overwrite Write
+    // filter overwrite), and the V2 exec for the dynamic-overwrite Write.
+    // Every streaming write (toTable, or format("graft") with
+    // warehouse+table) is the epoch write; a table with no catalog to
+    // commit through fails there with a typed error
     val caps = java.util.EnumSet.of(TableCapability.BATCH_READ,
       TableCapability.BATCH_WRITE, TableCapability.V1_BATCH_WRITE,
       TableCapability.TRUNCATE, TableCapability.OVERWRITE_BY_FILTER,
-      TableCapability.OVERWRITE_DYNAMIC)
+      TableCapability.OVERWRITE_DYNAMIC, TableCapability.STREAMING_WRITE)
     // micro-batch streaming, whatever the schema, whenever the table can
     // re-resolve per trigger: by path (format("graft").load(dir)) or
     // through its own catalog (format("graft") with warehouse+table, or
@@ -83,15 +86,6 @@ class GraftSparkTable(
     // without this capability readStream fails at once
     if (streamOptions.contains("path") || graftTable.catalog.isDefined)
       caps.add(TableCapability.MICRO_BATCH_READ)
-    // writeStream.toTable: per-epoch commits re-resolve through the
-    // table's own catalog (a read-only/static table cannot commit).
-    // Provider-resolved sink tables (format("graft") with warehouse/table
-    // options) deliberately do NOT advertise it: advertising would make
-    // DataStreamWriter prefer V2 over the V1 GraftStreamSink, whose
-    // whole-DataFrame batches are what merge-keys upsert needs
-    if (graftTable.catalog.isDefined &&
-        !streamOptions.contains("warehouse") && !streamOptions.contains("table"))
-      caps.add(TableCapability.STREAMING_WRITE)
     caps
   }
 
@@ -257,7 +251,8 @@ class GraftSparkTable(
               }
             }
 
-          /** writeStream.toTable: Append mode arrives plain, Complete mode
+          /** A streaming write (`toTable`, or `format("graft")` with
+            * warehouse+table): Append mode arrives plain, Complete mode
             * arrives through truncate() (replace-per-epoch). Merge-keys
             * upserts never reach here — build() returns
             * [[GraftStreamingUpsertWrite]] directly so its distribution

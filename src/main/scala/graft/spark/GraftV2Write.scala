@@ -1,10 +1,12 @@
 package graft.spark
 
-import graft.UnsupportedFeatureError
+import graft.{InvalidDataError, UnsupportedFeatureError}
 import graft.manifest.DataFile
-import graft.table.{DataFileWriter, TableScan, Table => GTable}
+import graft.table.{AppendUtil, DataFileWriter, TableScan, Table => GTable}
 import graft.transforms.Transform
+import graft.types.{Schema, SparkSchemaConverter}
 import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
 import org.apache.spark.sql.connector.expressions.{Expression, Expressions, SortDirection, SortOrder}
 import org.apache.spark.sql.connector.write._
@@ -13,8 +15,9 @@ import org.apache.spark.sql.types._
 
 /**
  * The DSv2 writes Spark drives itself: dynamic-partition `INSERT
- * OVERWRITE` (Spark has no V1 fallback exec for it) and both
- * `writeStream.toTable` sinks. Their tasks run [[DataFileWriter]] — the
+ * OVERWRITE` (Spark has no V1 fallback exec for it) and every streaming
+ * write, appends and upserts, whether the stream names its table with
+ * `toTable` or with `format("graft")`. Their tasks run [[DataFileWriter]] — the
  * same writer every batch append, overwrite, DML and compaction uses
  * through `AppendUtil.writeData` — so every table write produces files
  * and stats the same way. Plain appends and overwrites stay on the V1
@@ -28,6 +31,7 @@ private[spark] object GraftV2Write {
   /** Build the serializable writer factory for one write of `gt`. */
   def factory(gt: GTable, writeSchema: StructType, dataDir: String): DataFileWriter.Factory = {
     val schema = gt.currentSchema
+    checkWriteSchema(writeSchema, schema)
     val spec = gt.defaultPartitionSpec
     DataFileWriter.checkWritableSpec(spec, schema)
     val ordinalByName = writeSchema.fieldNames.zipWithIndex.toMap
@@ -44,6 +48,22 @@ private[spark] object GraftV2Write {
       sconf = TableScan.taskConf(org.apache.spark.sql.SparkSession.active, gt.hadoopConf),
       targetFileRows = gt.properties.get("write.target-file-rows").map(_.toLong).getOrElse(5000000L),
       partition = partition)
+  }
+
+  /** The tasks write rows in `writeSchema` as it stands, so reject on the
+    * driver what a file must not carry: a column the table lacks, a column
+    * of another type (nullability aside), or a left-out column that needs a
+    * value (required, or with a write-default). */
+  private def checkWriteSchema(writeSchema: StructType, schema: Schema): Unit = {
+    AppendUtil.missingColumns(writeSchema.fieldNames.toSeq, schema)
+      .find(_.writeDefault.isDefined).foreach(f => throw new InvalidDataError(
+        s"missing column with a write-default: ${f.name}"))
+    writeSchema.fields.foreach { wf =>
+      val want = SparkSchemaConverter.toSparkType(schema.fieldByName(wf.name).get.fieldType)
+      if (!DataTypeUtils.equalsIgnoreNullability(wf.dataType, want))
+        throw new InvalidDataError(s"column ${wf.name} is ${wf.dataType.simpleString}, " +
+          s"the table's is ${want.simpleString}")
+    }
   }
 
   /** The files named by (possibly partial or null) commit messages. */
@@ -105,7 +125,7 @@ private[spark] trait PartitionClustered extends RequiresDistributionAndOrdering 
  * carries into every restart) land in the snapshot summary, so a replayed
  * epoch after recovery is detected and its files deleted — the same
  * `streaming-query-id`/`streaming-batch-id` bookkeeping (and therefore
- * the same dedup scope) as the V1 `format("graft")` sink.
+ * the same dedup scope) as [[graft.streaming.StreamingOps.appendStream]].
  */
 private[spark] abstract class GraftEpochWrite(protected val gt: GTable, queryId: String)
   extends Write with StreamingWrite {
@@ -130,7 +150,8 @@ private[spark] abstract class GraftEpochWrite(protected val gt: GTable, queryId:
 }
 
 /**
- * `df.writeStream.toTable("cat.db.t")`: Append mode appends (optionally
+ * `df.writeStream.toTable("cat.db.t")`, or `format("graft")` with
+ * warehouse+table options: Append mode appends (optionally
  * staging on a WAP `branch`); Complete mode replaces the table's whole
  * content each epoch (the V2 truncate contract). Merge-key upserts go to
  * [[GraftStreamingUpsertWrite]].
@@ -157,8 +178,8 @@ private[spark] final class GraftStreamingWrite(
 }
 
 /**
- * Native V2 streaming UPSERT sink (`writeStream.option("merge-keys", …)
- * .toTable("cat.db.t")`, Append or Update output mode): each micro-batch
+ * Native V2 streaming UPSERT sink (`writeStream.option("merge-keys", …)`,
+ * by `toTable` or `format("graft")`, Append or Update output mode): each micro-batch
  * epoch lands as ONE atomic MOR row delta — executors fan data rows out
  * to partition files AND write the epoch's merge keys as global
  * equality-delete files, the driver commits metadata only. Same sequence

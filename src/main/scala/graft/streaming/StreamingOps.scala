@@ -609,7 +609,7 @@ object StreamingOps extends Serializable {
         // be scoped per query id or its first batches would be dropped as
         // "already committed" (the txnAppId/txnVersion pattern of real
         // Iceberg/Delta streaming sinks).
-        val scope = queryScope(batch.sparkSession, checkpointDir)
+        val scope = queryScope(batch.sparkSession)
         table.refresh()
         if (!lastCommittedBatchId(table, scope).exists(_ >= batchId)) {
           val summary = Map(
@@ -669,7 +669,7 @@ object StreamingOps extends Serializable {
     stream.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val scope = queryScope(batch.sparkSession, checkpointDir)
+        val scope = queryScope(batch.sparkSession)
         postingsTable.refresh()
         statsTable.refresh()
         val summary = Map(
@@ -702,7 +702,7 @@ object StreamingOps extends Serializable {
     stream.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val scope = queryScope(batch.sparkSession, checkpointDir)
+        val scope = queryScope(batch.sparkSession)
         table.refresh()
         if (!lastCommittedBatchId(table, scope).exists(_ >= batchId)) {
           table.upsert(batch.sparkSession, batch, keys, extraSummary = Map(
@@ -713,22 +713,15 @@ object StreamingOps extends Serializable {
       .start()
   }
 
-  /** The stable id scoping a stream's batch ids: the query id Spark persists
-    * at `<checkpoint>/metadata` (stable across restarts from the same
-    * checkpoint; fresh per new checkpoint). Falls back to the checkpoint
-    * path itself, which has the same lifecycle. */
-  private[graft] def queryScope(spark: SparkSession, checkpointDir: String): String = {
-    try {
-      val p = new org.apache.hadoop.fs.Path(checkpointDir, "metadata")
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(p)) {
-        val in = fs.open(p)
-        val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-        """"id"\s*:\s*"([^"]+)"""".r.findFirstMatchIn(txt)
-          .map(_.group(1)).getOrElse(checkpointDir)
-      } else checkpointDir
-    } catch { case _: java.io.IOException => checkpointDir }
-  }
+  /** The stable id scoping a stream's batch ids: the query id Spark
+    * persists at `<checkpoint>/metadata`, stable across restarts from the
+    * same checkpoint and fresh per new checkpoint. The stream thread carries
+    * it as a local property, so this is called from a batch function. */
+  private[graft] def queryScope(spark: SparkSession): String =
+    Option(spark.sparkContext.getLocalProperty(
+      org.apache.spark.sql.execution.streaming.runtime.StreamExecution.QUERY_ID_KEY)).getOrElse(
+      throw new graft.UnsupportedFeatureError(
+        "a streaming replay scope is only known inside a running stream's batch"))
 
   /** Highest `streaming-batch-id` recorded by [[appendStream]] commits for
     * the given query scope. */
@@ -906,6 +899,27 @@ object StreamingOps extends Serializable {
     val outSchema = SparkSchemaConverter.toSpark(graft.spark.GraftMicroBatchStream.cdcSchema(table.currentSchema))
     def emptyOut = spark.createDataFrame(
       new java.util.ArrayList[org.apache.spark.sql.Row](), outSchema)
+    // set operations reject MAP columns: a top-level map is diffed as its
+    // key-sorted entries and turned back after; a nested one cannot be
+    import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
+    def hasMap(t: DataType): Boolean = t match {
+      case _: MapType => true
+      case a: ArrayType => hasMap(a.elementType)
+      case st: StructType => st.fields.exists(f => hasMap(f.dataType))
+      case _ => false
+    }
+    val maps = schema.fields.collect { case f if f.dataType.isInstanceOf[MapType] => f.name }
+    def diffable(df: DataFrame): DataFrame = {
+      schema.fields.find(f => f.dataType match {
+        case m: MapType => hasMap(m.keyType) || hasMap(m.valueType)
+        case t => hasMap(t)
+      }).foreach(f => throw new graft.UnsupportedFeatureError(
+        s"row-level changes of a commit that removes files cannot diff column ${f.name}: " +
+          "it holds a nested map"))
+      maps.foldLeft(df)((d, c) => d.withColumn(c, array_sort(map_entries(col(c)))))
+    }
+    def undiff(df: DataFrame): DataFrame =
+      maps.foldLeft(df)((d, c) => d.withColumn(c, map_from_entries(col(c))))
 
     def seqOf(id: Long): Long = table.snapshotById(id)
       .getOrElse(throw new graft.InvalidDataError(s"no snapshot with id $id"))
@@ -1008,12 +1022,12 @@ object StreamingOps extends Serializable {
               .withColumn("_change_type", lit("insert"))
             Some(stamp(del.unionAll(ins)))
           } else {
-            val oldAffected = scanP.materializeTasks(spark,
-              removed ++ tasksP.filter(t => moreDeleted.exists(_.filePath == t.filePath)))
-            val newAffected = scanS.materializeTasks(spark, added ++ moreDeleted)
-            val del = oldAffected.exceptAll(newAffected)
+            val oldAffected = diffable(scanP.materializeTasks(spark,
+              removed ++ tasksP.filter(t => moreDeleted.exists(_.filePath == t.filePath))))
+            val newAffected = diffable(scanS.materializeTasks(spark, added ++ moreDeleted))
+            val del = undiff(oldAffected.exceptAll(newAffected))
               .withColumn("_change_type", lit("delete"))
-            val ins = newAffected.exceptAll(oldAffected)
+            val ins = undiff(newAffected.exceptAll(oldAffected))
               .withColumn("_change_type", lit("insert"))
             Some(stamp(del.unionAll(ins)))
           }

@@ -18,25 +18,27 @@ import scala.jdk.CollectionConverters._
 object AppendUtil {
 
   /** Bind df columns to the table schema by NAME (column order independent —
-    * ref `test/polars_test.rb:58-63`), cast to the table types, null-fill
-    * missing optional columns, reject extras and missing required ones. */
+    * ref `test/polars_test.rb:58-63`), cast to the table types, fill missing
+    * columns with their write-default or null; [[missingColumns]] rejects
+    * extras and missing required ones. */
   def align(df: DataFrame, schema: Schema): DataFrame = {
-    val dfCols = df.columns.toSet
-    val schemaCols = schema.fields.map(_.name).toSet
-    val extra = dfCols -- schemaCols
+    val missing = missingColumns(df.columns.toSeq, schema).map(_.name).toSet
+    df.select(schema.fields.map { f =>
+      val value = if (missing(f.name)) lit(f.writeDefault.orNull) else col(f.name)
+      value.cast(SparkSchemaConverter.toSparkType(f.fieldType)).as(f.name)
+    }: _*)
+  }
+
+  /** The table columns a write of `columns` leaves out. Rejects a column
+    * the table lacks, and a left-out required column with no write-default. */
+  def missingColumns(columns: Seq[String], schema: Schema): Seq[NestedField] = {
+    val extra = columns.toSet -- schema.fields.map(_.name)
     if (extra.nonEmpty)
       throw new InvalidDataError(s"unknown columns: ${extra.mkString(", ")}")
-    val projected = schema.fields.map { f =>
-      val target = SparkSchemaConverter.toSparkType(f.fieldType)
-      if (dfCols.contains(f.name)) col(f.name).cast(target).as(f.name)
-      else f.writeDefault match {
-        case Some(v) => lit(v).cast(target).as(f.name) // required-with-default ok
-        case None if f.required =>
-          throw new InvalidDataError(s"missing required column: ${f.name}")
-        case None => lit(null).cast(target).as(f.name)
-      }
-    }
-    df.select(projected: _*)
+    val missing = schema.fields.filterNot(f => columns.contains(f.name))
+    missing.find(f => f.required && f.writeDefault.isEmpty).foreach(f =>
+      throw new InvalidDataError(s"missing required column: ${f.name}"))
+    missing
   }
 
   /** Spark Column computing a partition transform over its source column.

@@ -57,18 +57,8 @@ object CatalystBridge {
   def hadoopConf(spark: SparkSession): org.apache.hadoop.conf.Configuration =
     spark.asInstanceOf[classic.SparkSession].sessionState.newHadoopConf()
 
-  /** A V1 Sink's addBatch frame arrives streaming-tagged and refuses batch
-    * writes; rebind its micro-batch rows as a batch frame. */
-  def asBatchDataFrame(df: DataFrame): DataFrame = {
-    val cs = df.sparkSession.asInstanceOf[classic.SparkSession]
-    cs.internalCreateDataFrame(
-      df.asInstanceOf[classic.Dataset[org.apache.spark.sql.Row]].queryExecution.toRdd,
-      df.schema)
-  }
-
-  /** Plan-truncating leaf over the INTERNAL row RDD — the same LogicalRDD
-    * wrap as [[asBatchDataFrame]], named for its other use: replacing an
-    * iterative round's Catalyst plan with a leaf. The public equivalent
+  /** Plan-truncating leaf over the INTERNAL row RDD: a LogicalRDD that
+    * replaces an iterative round's Catalyst plan. The public equivalent
     * `createDataFrame(df.rdd, schema)` pays a full per-row decode to
     * external Row plus a re-encode back to InternalRow on every
     * materialization; `toRdd` keeps rows internal end-to-end (the

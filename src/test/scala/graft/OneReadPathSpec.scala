@@ -3,15 +3,19 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Batch, SQL and streaming reads decode table files with one reader:
-  * Spark's parquet reader, over the files the manifests list. This guards
-  * the library's sources against a second row decoder (parquet-mr's
-  * example `Group` API) and against a V1 stream source, with the bridge
-  * that re-tags a batch frame as streaming for one. */
+  * Spark's parquet reader, over the files the manifests list; every
+  * streaming write commits through the V2 epoch write. This guards the
+  * library's sources against a second row decoder (parquet-mr's example
+  * `Group` API), against a V1 stream source or sink, and against the
+  * bridges that re-tag a frame between streaming and batch for them. */
 class OneReadPathSpec extends AnyFunSuite {
   private val forbidden = Seq(
     "org.apache.parquet.example" -> "a second parquet decoder",
     "StreamSourceProvider" -> "a V1 stream source",
-    "asStreamingDataFrame" -> "a batch frame re-tagged as streaming")
+    "asStreamingDataFrame" -> "a batch frame re-tagged as streaming",
+    "StreamSinkProvider" -> "a V1 stream sink",
+    "GraftStreamSink" -> "a V1 stream sink",
+    "asBatchDataFrame" -> "a streaming frame re-tagged as batch")
 
   test("src/main has no second parquet decoder and no V1 stream source") {
     val root = new java.io.File("src/main")

@@ -458,6 +458,18 @@ class StreamingSpec extends AnyFunSuite {
     val rows = cat.loadTable("default.sunk").toDF(spark).collect()
       .map(r => (r.getLong(0), r.getString(1))).toMap
     assert(rows == Map(1L -> "a", 2L -> "B2", 3L -> "c", 9L -> "z"))
+
+    // a path names a table with no catalog to commit an epoch through
+    val mem3 = MemoryStream[(Long, String)]
+    val q3 = mem3.toDF().toDF("id", "k").writeStream.format("graft")
+      .option("checkpointLocation", java.nio.file.Files.createTempDirectory("graft-sink-cp3").toString)
+      .start(s"$wh/default/sunk")
+    val ex = try {
+      mem3.addData((4L, "d"))
+      intercept[org.apache.spark.sql.streaming.StreamingQueryException](q3.processAllAvailable())
+    } finally q3.stop()
+    assert(Iterator.iterate(ex: Throwable)(_.getCause).takeWhile(_ != null)
+      .exists(_.isInstanceOf[UnsupportedFeatureError]), ex)
   }
 
   test("streaming ingestion: writeStream appends micro-batches as commits") {
@@ -480,6 +492,11 @@ class StreamingSpec extends AnyFunSuite {
       .map(_.getLong(0)).sorted.toSeq == Seq(1L, 2L, 3L))
     assert(StreamingOps.lastCommittedBatchId(tbl).contains(1L))
     assert(tbl.snapshots.forall(_.summary.contains("streaming-batch-id")))
+    // the replay scope is the query id Spark persists in the checkpoint,
+    // known only inside the stream
+    assert(tbl.snapshots.flatMap(_.summary.get("streaming-query-id")).toSet ==
+      Set(q.id.toString))
+    intercept[UnsupportedFeatureError] { StreamingOps.queryScope(spark) }
   }
 
   test("streaming range alert: drain equals batch rangeSearch across batch splits") {
@@ -1053,27 +1070,48 @@ class StreamingSpec extends AnyFunSuite {
       .map(_.getLong(0)).sorted.toSeq == Seq(1L, 2L, 3L),
       "fresh query on a reused checkpoint path must not lose batches")
 
-    // no checkpointLocation = no stable query identity to scope replay by
-    intercept[InvalidDataError] {
-      new graft.spark.GraftStreamSink(
-        Map("warehouse" -> wh, "table" -> "default.scoped"))
+    // no checkpointLocation = no stable query identity to scope replay by:
+    // Spark refuses to start the stream
+    intercept[org.apache.spark.sql.AnalysisException] {
+      MemoryStream[Long].toDF().toDF("id").writeStream.format("graft")
+        .option("warehouse", wh).option("table", "default.scoped").start()
     }
   }
 
-  test("graft sink rejects Complete mode, and Update mode without merge-keys") {
-    import org.apache.spark.sql.streaming.OutputMode
-    val ds = new graft.spark.GraftDataSource()
-    val params = Map("warehouse" -> "/tmp/wh", "table" -> "default.t",
-      "checkpointLocation" -> "/tmp/cp")
-    intercept[UnsupportedFeatureError] {
-      ds.createSink(spark.sqlContext, params, Nil, OutputMode.Complete())
+  test("changesBetween diffs MAP columns across copy-on-write rewrites; a nested map fails loudly") {
+    import spark.implicits._
+    import graft.types.{IMap, IStruct}
+    val cat = new MemoryCatalog()
+    val tbl = cat.createTable("cdc_map", Schema(0, Seq(
+      NestedField(1, "id", ILong, required = false),
+      NestedField(2, "m", IMap(3, IString, 4, ILong, valueRequired = false), required = false))))
+    tbl.append(Seq[(Long, Map[String, Long])](
+      (1L, Map("a" -> 1L, "b" -> 2L)), (2L, Map("c" -> 3L)), (3L, null)).toDF("id", "m"))
+    def changesSince(from: Long): Set[(Long, Option[Map[String, Long]], String)] =
+      StreamingOps.changesBetween(spark, tbl.refresh(), Some(from))
+        .select("id", "m", "_change_type").collect()
+        .map(r => (r.getLong(0), Option(r.getMap[String, Long](1)).map(_.toMap), r.getString(2)))
+        .toSet
+    val s1 = tbl.currentSnapshotId.get
+    tbl.delete(spark, Seq(graft.table.EqPred("id", 1L)))
+    assert(changesSince(s1) == Set((1L, Some(Map("a" -> 1L, "b" -> 2L)), "delete")))
+    val s2 = tbl.refresh().currentSnapshotId.get
+    tbl.overwriteWhere(spark, Seq(graft.table.EqPred("id", 2L)),
+      Seq[(Long, Map[String, Long])]((2L, Map("d" -> 5L, "c" -> 4L))).toDF("id", "m"))
+    assert(changesSince(s2) == Set(
+      (2L, Some(Map("c" -> 3L)), "delete"), (2L, Some(Map("c" -> 4L, "d" -> 5L)), "insert")))
+
+    val nested = cat.createTable("cdc_nested_map", Schema(0, Seq(
+      NestedField(1, "id", ILong, required = false),
+      NestedField(2, "s", IStruct(Seq(NestedField(3, "m",
+        IMap(4, IString, 5, ILong, valueRequired = false), required = false))), required = false))))
+    nested.append(spark.sql("SELECT 1L AS id, named_struct('m', map('a', 1L)) AS s"))
+    val n1 = nested.currentSnapshotId.get
+    nested.delete(spark, Seq(graft.table.EqPred("id", 1L)))
+    val ex = intercept[UnsupportedFeatureError] {
+      StreamingOps.changesBetween(spark, nested.refresh(), Some(n1))
     }
-    intercept[InvalidDataError] {
-      ds.createSink(spark.sqlContext, params, Nil, OutputMode.Update())
-    }
-    // Update WITH merge-keys upserts; Append is always accepted
-    ds.createSink(spark.sqlContext, params + ("merge-keys" -> "id"), Nil, OutputMode.Update())
-    ds.createSink(spark.sqlContext, params, Nil, OutputMode.Append())
+    assert(ex.getMessage.contains("column s"))
   }
 
   test("changesBetween: row-level CDC across append, upsert, MOR delete, compaction") {
